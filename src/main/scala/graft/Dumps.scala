@@ -5,12 +5,16 @@ import org.apache.spark.sql.DataFrame
 /** Cross-engine oracle dumps (the discipline from QueriesCorpus, factored):
   * engine-local intermediates that DuckDB cannot recompute (xxhash64
   * signatures, counter-based PRNG draws, hyperplane weights) are written to
-  * a fixed path during `graft.Verify`, and the oracle SQL replays ALL
+  * [[Dir]] during `graft.Verify`, and the oracle SQL replays ALL
   * downstream semantics (bucketing topology, joins, verification math) over
   * the dumps. Disabled outside Verify so benchmarks never pay the write.
   */
 object Dumps {
-  val Dir = "/root/repo/target/graft_dumps"
+  /** The one directory every oracle dump lives under: `target/graft_dumps`
+    * of the working directory, absolute because the oracle SQL interpolates
+    * it and runs in another process.
+    */
+  val Dir: String = java.nio.file.Paths.get("target", "graft_dumps").toAbsolutePath.toString
 
   @volatile var enabled = false
 

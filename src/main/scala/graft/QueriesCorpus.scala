@@ -15,7 +15,7 @@ import graft.operators.AsOf
   * Oracle strategy (mirrors the reference's cross-implementation
   * replication discipline, `code/crossvalidate.R:31-43`): the synthesized
   * INPUT tables (events minus payload bytes, probes, dim, entity dim) are
-  * dumped once to parquet under a fixed path, and the flagship outputs —
+  * dumped once to parquet under [[Dumps.Dir]], and the flagship outputs —
   * scalar+temporal feature vectors and the as-of attach — are recomputed
   * START-TO-FINISH in DuckDB SQL over those dumps (window functions, list
   * lambdas for token features, ASOF LEFT JOIN). Only the hash-based
@@ -25,8 +25,8 @@ object QueriesCorpus {
 
   private val P = Corpus.Params(rows = 2000L, entities = 20)
 
-  /** Fixed absolute dump path — referenced literally by the oracle SQL. */
-  private val D = "/root/repo/target/graft_corpus"
+  /** Dump path of the input tables — interpolated into the oracle SQL. */
+  private val D = s"${Dumps.Dir}/corpus"
 
   @volatile private var dumped = false
 

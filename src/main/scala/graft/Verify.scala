@@ -23,21 +23,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally graft.operators.Caches.releaseAll()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
   }
+
+  /** `outDir/oracle_sql.json`: query name -> oracle SQL, one JSON object.
+    * Every control character in the SQL is escaped; a raw tab or CR would
+    * make a strict reader reject the file and lose every oracle at once.
+    */
+  def writeOracleSql(outDir: String, sql: Map[String, String]): Unit =
+    Files.write(Paths.get(outDir, "oracle_sql.json"), Json.mapper.writeValueAsBytes(sql))
 }

@@ -1,9 +1,9 @@
 package graft.tables
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JacksonException
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,10 +35,15 @@ import org.apache.spark.sql.functions._
   *    lost (Iceberg's optimistic-concurrency contract on a plain
   *    filesystem).
   *
+  * Manifests have ONE format, [[Snapshot]] written through Spark's bundled
+  * Jackson ([[graft.Json]]). Reading is strict: a manifest that is torn
+  * (cut short) or lacks a field fails loudly, naming the file, instead of
+  * parsing as a smaller table.
+  *
   * Layout:
   * {{{
   *   root/CURRENT                    # "v<id>\n" (hint; claim is truth)
-  *   root/snapshots/v<id>.json      # manifest (see Manifest)
+  *   root/snapshots/v<id>.json      # manifest (see Snapshot)
   *   root/data/s<id>_<pid>c<n>/pbucket=<k>/ (parquet files)
   * }}}
   */
@@ -57,6 +62,20 @@ object SnapshotTable {
     when(col(entityCol).isNotNull,
       pmod(xxhash64(col(entityCol)), lit(buckets)).cast("int"))
 
+  private val NullEntities =
+    "SnapshotTable: the entity column contains nulls — a null key has no " +
+      "bucket; filter or recode null entities before commit"
+
+  /** The bucket ids `df`'s entity keys hash into — a distinct over the
+    * bucket expression, one tiny job. A null key fails fast.
+    */
+  private def bucketsOf(df: DataFrame, entityCol: String, buckets: Int): Set[Int] =
+    df.select(bucketExpr(entityCol, buckets).as("b")).distinct().collect()
+      .map { r =>
+        if (r.isNullAt(0)) throw new IllegalArgumentException(NullEntities)
+        r.getInt(0)
+      }.toSet
+
   /** One SLICE of a bucket's data: a directory of parquet files plus its
     * lineage stats. A bucket may have several slices (initial load + each
     * appended delta — Iceberg's manifest-lists-files shape); the bucket's
@@ -66,13 +85,12 @@ object SnapshotTable {
     *
     * `tmin` is the slice's MIN event time — with `watermark` (the max) it
     * gives [[readRange]] an Iceberg-style min/max skipping interval per
-    * slice. `Long.MinValue` means "no lower-bound claim" (a manifest
-    * written before this field existed, or a slice whose time column is
-    * entirely null): such a slice is never skipped on its lower bound —
-    * pruning degrades, correctness doesn't.
+    * slice. `Long.MinValue` means "no lower-bound claim" (a slice whose
+    * time column is entirely null): such a slice is never skipped on its
+    * lower bound — pruning degrades, correctness doesn't.
     */
   final case class BucketManifest(bucket: Int, dir: String, rows: Long,
-      watermark: Long, digest: Long, tmin: Long = Long.MinValue)
+      watermark: Long, digest: Long, tmin: Long)
   /** `mixedSchema`: true once any slice was written under an older (pre-
     * additive-evolution) column set; read paths pay parquet schema-merging
     * (a footer read per file at planning) ONLY then — the homogeneous
@@ -82,13 +100,13 @@ object SnapshotTable {
   final case class Snapshot(id: Long, parent: Long,
       entityCol: String, timeCol: String, nbuckets: Int, batchId: Long,
       columns: Seq[String], buckets: Seq[BucketManifest],
-      mixedSchema: Boolean = false,
+      mixedSchema: Boolean,
       /** Typed schema (Spark DDL) — lets a mixed-schema read pad columns a
         * pre-evolution slice lacks with correctly-TYPED nulls even when no
         * slice in the scan carries them (a pruned point lookup may touch
-        * only old slices). Empty = legacy manifest, no padding possible.
+        * only old slices).
         */
-      schemaDdl: String = "") {
+      schemaDdl: String) {
     /** Per-bucket folded (rows, watermark, digest) over slices. */
     def folded: Map[Int, (Long, Long, Long)] =
       buckets.groupBy(_.bucket).map { case (k, ss) =>
@@ -97,110 +115,53 @@ object SnapshotTable {
       }
   }
 
-  // --- tiny hand-rolled JSON (no extra deps; schema is fixed) --------------
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
+  /** Per-bucket (rows, watermark, digest, tmin) of one staged write. */
+  private type Stats = (Long, Long, Long, Long)
 
-  /** Inverse of [[esc]]: strings must ROUND-TRIP through the manifest —
-    * a root path or column name containing `"` or `\` would otherwise be
-    * written escaped but read back truncated at the first escape.
+  private def sliceOf(stage: Path, k: Int, st: Stats): BucketManifest =
+    BucketManifest(k, s"$stage/$BucketCol=$k", st._1, st._2, st._3, st._4)
+
+  /** Parse the manifest at `p`. Strict: a manifest cut short (a torn
+    * O_EXCL claim, see [[claimManifest]]), or one missing a field, fails
+    * here naming the file — it never parses as a smaller table.
     */
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
+  private def readManifest(p: Path): Snapshot =
+    try graft.Json.mapper.readValue(Files.readAllBytes(p), classOf[Snapshot])
+    catch {
+      case e: JacksonException =>
+        throw new IllegalStateException(
+          s"unreadable manifest $p: ${e.getOriginalMessage}", e)
     }
-    sb.toString
-  }
 
-  /** `"..."` with escape-aware interior (backslash-pair or any non-quote). */
-  private val JsonStr = "\"(?:[^\"\\\\]|\\\\.)*\""
-
-  private def toJson(s: Snapshot): String = {
-    val bs = s.buckets.sortBy(b => (b.bucket, b.dir)).map { b =>
-      s"""{"bucket":${b.bucket},"dir":"${esc(b.dir)}","rows":${b.rows},""" +
-        s""""watermark":${b.watermark},"digest":${b.digest},"tmin":${b.tmin}}"""
-    }.mkString("[", ",", "]")
-    val cols = s.columns.map(c => s""""${esc(c)}"""").mkString("[", ",", "]")
-    s"""{"id":${s.id},"parent":${s.parent},"entity_col":"${esc(s.entityCol)}",""" +
-      s""""time_col":"${esc(s.timeCol)}","nbuckets":${s.nbuckets},""" +
-      s""""batch_id":${s.batchId},"mixed_schema":${s.mixedSchema},""" +
-      s""""schema_ddl":"${esc(s.schemaDdl)}","columns":$cols,"buckets":$bs}"""
-  }
-
-  private def stripQuotes(v: String): String =
-    if (v.startsWith("\"")) unesc(v.stripPrefix("\"").stripSuffix("\"")) else v
-
-  private def field(json: String, name: String): String = {
-    val m = (s""""$name":($JsonStr|-?\\d+|true|false)""").r.findFirstMatchIn(json)
-      .getOrElse(throw new IllegalStateException(s"missing field $name in manifest"))
-    stripQuotes(m.group(1))
-  }
-
-  private def fieldOpt(json: String, name: String): Option[String] =
-    (s""""$name":($JsonStr|-?\\d+|true|false)""").r.findFirstMatchIn(json)
-      .map(m => stripQuotes(m.group(1)))
-
-  /** Parse a manifest. `nbuckets`/`batch_id`/`columns` arrived with the
-    * round-3 slice format; manifests written by the earlier format stay
-    * readable with semantics-preserving defaults: nbuckets = -1 ("unknown"
-    * — manifests list only NON-EMPTY buckets, so the highest bucket id
-    * present can under-count; the next append's caller-supplied count is
-    * authoritative, exactly the pre-upgrade contract), batchId = -1 ("not
-    * a streaming commit"), columns empty (= skip the schema check on
-    * append).
+  /** Manifest bytes, slices sorted by (bucket, dir) so a manifest reads
+    * back in a stable order whatever order the commit built them in.
     */
-  /** Substring of the `[...]` array following offset `from`, delimited by
-    * the first `]` NOT inside a string literal (column names and dir paths
-    * may legally contain `]`, `{`, `}`, quotes and backslashes).
-    */
-  private def arrayBody(json: String, from: Int): String = {
-    var i = json.indexOf('[', from) + 1
-    val start = i
-    var inStr = false
-    while (i < json.length && (inStr || json.charAt(i) != ']')) {
-      json.charAt(i) match {
-        case '\\' if inStr => i += 1 // skip the escaped char
-        case '"'           => inStr = !inStr
-        case _             =>
-      }
-      i += 1
-    }
-    json.substring(start, i)
-  }
+  private def manifestBytes(s: Snapshot): Array[Byte] =
+    graft.Json.mapper.writeValueAsBytes(
+      s.copy(buckets = s.buckets.sortBy(b => (b.bucket, b.dir))))
 
-  private def fromJson(json: String): Snapshot = {
-    val cols = json.indexOf("\"columns\":") match {
-      case -1 => Seq.empty[String]
-      case i  => JsonStr.r.findAllIn(arrayBody(json, i)).map(stripQuotes).toSeq
+  /** Entries of `dir`; empty when it does not exist. */
+  private def children(dir: Path): Seq[Path] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val st = Files.list(dir)
+      try st.iterator().asScala.toList
+      finally st.close()
     }
-    val bucketsPart = arrayBody(json, json.indexOf("\"buckets\":"))
-    val items = (s"""\\{(?:$JsonStr|[^{}"])*\\}""").r.findAllIn(bucketsPart).toSeq
-    val buckets = items.map(it =>
-      BucketManifest(field(it, "bucket").toInt, field(it, "dir"),
-        field(it, "rows").toLong, field(it, "watermark").toLong,
-        field(it, "digest").toLong,
-        // absent before the range-pruning format: no lower-bound claim
-        fieldOpt(it, "tmin").map(_.toLong).getOrElse(Long.MinValue)))
-    val nbuckets = fieldOpt(json, "nbuckets").map(_.toInt).getOrElse(-1)
-    Snapshot(
-      field(json, "id").toLong, field(json, "parent").toLong,
-      field(json, "entity_col"), field(json, "time_col"),
-      nbuckets, fieldOpt(json, "batch_id").map(_.toLong).getOrElse(-1L),
-      cols, buckets,
-      // absent in pre-evolution manifests = homogeneous (they couldn't mix)
-      fieldOpt(json, "mixed_schema").contains("true"),
-      fieldOpt(json, "schema_ddl").getOrElse(""))
-  }
+
+  private def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.deleteIfExists(f): Unit)
+      finally walk.close()
+    }
+
+  /** Every manifest of the table, in no particular order. */
+  private def snapshots(root: String): Seq[Snapshot] =
+    children(Paths.get(root, "snapshots"))
+      .filter(_.getFileName.toString.matches("v\\d+\\.json"))
+      .map(readManifest)
 
   // --- pointer --------------------------------------------------------------
   /** Head snapshot id. The CURRENT pointer is only a hint: a writer that
@@ -222,10 +183,15 @@ object SnapshotTable {
   }
 
   def snapshot(root: String, id: Long): Snapshot =
-    fromJson(Files.readString(Paths.get(root, "snapshots", s"v$id.json")))
+    readManifest(Paths.get(root, "snapshots", s"v$id.json"))
 
   def currentSnapshot(root: String): Option[Snapshot] =
     currentId(root).map(snapshot(root, _))
+
+  /** Snapshot `id`, or the head when None; fails when the table has none. */
+  private def resolve(root: String, id: Option[Long]): Snapshot =
+    id.map(snapshot(root, _)).orElse(currentSnapshot(root))
+      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
 
   private def swapPointer(root: String, id: Long): Unit = {
     val dir = Paths.get(root)
@@ -250,7 +216,7 @@ object SnapshotTable {
     * Long.MinValue ("no lower-bound claim").
     */
   private def bucketStats(df: DataFrame, dataCols: Seq[String],
-      timeCol: String): Map[Int, (Long, Long, Long, Long)] = {
+      timeCol: String): Map[Int, Stats] = {
     val rowHash = xxhash64(to_json(struct(dataCols.sorted.map(col): _*),
       Map("timeZone" -> "UTC").asJava))
     df.withColumn("__h", rowHash)
@@ -260,9 +226,7 @@ object SnapshotTable {
         min(col(timeCol)).cast("long").as("tmn"))
       .collect()
       .map { r =>
-        if (r.isNullAt(0)) throw new IllegalArgumentException(
-          "SnapshotTable: the entity column contains nulls — a null key " +
-            "has no bucket; filter or recode null entities before commit")
+        if (r.isNullAt(0)) throw new IllegalArgumentException(NullEntities)
         val wm = if (r.isNullAt(2)) Long.MinValue else r.getLong(2)
         val tmn = if (r.isNullAt(4)) Long.MinValue else r.getLong(4)
         r.getInt(0) -> ((r.getLong(1), wm, r.getLong(3), tmn))
@@ -289,26 +253,25 @@ object SnapshotTable {
     * another writer holds the claim. Filesystems without hard links fall
     * back to an O_EXCL (CREATE_NEW) write: still a true compare-and-swap —
     * a crash mid-write can leave a truncated claim there, which fails
-    * LOUDLY at the next parse, whereas a rename-based fallback would
-    * silently replace a racing writer's committed manifest (a lost commit;
-    * the one failure mode this layer exists to rule out).
+    * LOUDLY at the next parse ([[readManifest]]), whereas a rename-based
+    * fallback would silently replace a racing writer's committed manifest
+    * (a lost commit; the one failure mode this layer exists to rule out).
     */
   private def claimManifest(root: String, snap: Snapshot): Boolean = {
     val snapsDir = Paths.get(root, "snapshots")
     Files.createDirectories(snapsDir)
     val target = snapsDir.resolve(s"v${snap.id}.json")
     if (Files.exists(target)) return false // fast path: already claimed
-    val json = toJson(snap)
+    val json = manifestBytes(snap)
     val tmp = Files.createTempFile(snapsDir, s"v${snap.id}.", ".tmp")
     try {
-      Files.writeString(tmp, json)
+      Files.write(tmp, json)
       try { Files.createLink(target, tmp); true }
       catch {
         case _: java.nio.file.FileAlreadyExistsException => false
         case _: UnsupportedOperationException =>
           try {
-            Files.writeString(target, json,
-              java.nio.file.StandardOpenOption.CREATE_NEW)
+            Files.write(target, json, java.nio.file.StandardOpenOption.CREATE_NEW)
             true
           } catch { case _: java.nio.file.FileAlreadyExistsException => false }
       }
@@ -324,25 +287,50 @@ object SnapshotTable {
 
   private val MaxCommitAttempts = 10
 
+  /** The optimistic-concurrency loop every writer shares. `attempt` reads
+    * the head, stages what it must and publishes: Some(id) when done
+    * (committed, or nothing to commit), None when a concurrent writer won
+    * the claim — then the head is re-read and the attempt rerun.
+    */
+  private def retrying(what: String, root: String)(attempt: => Option[Long]): Long =
+    Iterator.fill(MaxCommitAttempts)(attempt).collectFirst { case Some(id) => id }
+      .getOrElse(throw new IllegalStateException(
+        s"$what lost the optimistic claim $MaxCommitAttempts times at $root " +
+          "— a writer is committing faster than this one can retry"))
+
+  /** Every writer must use the table's own bucketing and key columns: a
+    * count or key-column typo would silently re-bucket the table.
+    */
+  private def requireLayout(p: Snapshot, root: String, entityCol: String,
+      timeCol: String, buckets: Int): Unit = {
+    require(p.nbuckets == buckets,
+      s"bucket count $buckets != table's ${p.nbuckets} at $root")
+    require(p.entityCol == entityCol && p.timeCol == timeCol,
+      s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol}) at $root")
+  }
+
   /** Type-aware schema rail: the name-equality checks alone let a column's
     * TYPE change slip through (e.g. v: Int re-appended as v: Long), mixing
     * physically-incompatible parquet slices inside one bucket — which the
     * non-merging read path then mis-decodes or rejects. Every column the
-    * table recorded (legacy manifests recorded none) must keep its exact
-    * type; evolution may only ADD columns, never mutate one.
+    * table recorded must keep its exact type; evolution may only ADD
+    * columns, never mutate one.
     */
-  private def requireTypesMatch(p: Snapshot, df: DataFrame, what: String): Unit =
-    if (p.schemaDdl.nonEmpty) {
-      val recorded = org.apache.spark.sql.types.StructType.fromDDL(p.schemaDdl)
-        .fields.map(f => f.name -> f.dataType).toMap
-      df.schema.fields.foreach { f =>
-        recorded.get(f.name).foreach { t =>
-          require(f.dataType == t,
-            s"$what column '${f.name}' has type ${f.dataType.sql}, the table " +
-              s"recorded ${t.sql} — column types cannot change")
-        }
+  private def requireTypesMatch(p: Snapshot, df: DataFrame, what: String): Unit = {
+    val recorded = org.apache.spark.sql.types.StructType.fromDDL(p.schemaDdl)
+      .fields.map(f => f.name -> f.dataType).toMap
+    df.schema.fields.foreach { f =>
+      recorded.get(f.name).foreach { t =>
+        require(f.dataType == t,
+          s"$what column '${f.name}' has type ${f.dataType.sql}, the table " +
+            s"recorded ${t.sql} — column types cannot change")
       }
     }
+  }
+
+  /** Spark DDL of `df`'s columns in the manifest's (sorted) order. */
+  private def sortedDdl(df: DataFrame): String =
+    df.select(df.columns.sorted.toSeq.map(col): _*).schema.toDDL
 
   /** Commit the FULL content `df` as a new snapshot of the table at `root`
     * (overwrite semantics: the new snapshot's content is exactly `df`).
@@ -362,85 +350,57 @@ object SnapshotTable {
       buckets: Int = 16, batchId: Long = -1L,
       evolveSchema: Boolean = false): Long = {
     val df = df0.withColumn(BucketCol, bucketExpr(entityCol, buckets))
+    val cols = df0.columns.sorted.toSeq
     // ONE stats scan of df, reused across optimistic retries (the diff and
     // the changed-bucket write depend on the parent, so those rerun)
-    var man: Map[Int, (Long, Long, Long, Long)] = null
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
+    lazy val man = bucketStats(df, df0.columns.toSeq, timeCol)
+    retrying("commit", root) {
       val parent = currentSnapshot(root)
       parent.foreach { p =>
-        // nbuckets < 0 = pre-slice-format manifest with no recorded count:
-        // accept the caller's, which the new manifest then records
-        require(p.nbuckets < 0 || p.nbuckets == buckets,
-          s"bucket count $buckets != table's ${p.nbuckets} at $root")
-        // empty = pre-slice-format manifest without a recorded schema: skip
-        require(evolveSchema || p.columns.isEmpty ||
-          p.columns == df0.columns.sorted.toSeq,
-          s"schema ${df0.columns.sorted.toSeq} != table's ${p.columns} at " +
-            s"$root (pass evolveSchema = true to change it)")
+        requireLayout(p, root, entityCol, timeCol, buckets)
+        require(evolveSchema || p.columns == cols,
+          s"schema $cols != table's ${p.columns} at $root " +
+            "(pass evolveSchema = true to change it)")
         // an evolving full commit rewrites every slice, so new types are
         // fine there; a plain commit must not mutate a column's type (the
         // resume path can carry old slices)
         if (!evolveSchema) requireTypesMatch(p, df0, "commit")
-        // a key-column typo must not silently re-bucket the whole table
-        // (same rail commitDelta has always had)
-        require(p.entityCol == entityCol && p.timeCol == timeCol,
-          s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol}) at $root")
       }
       if (batchId >= 0 && parent.exists(_.batchId == batchId))
-        return parent.get.id // idempotent replay of an already-committed batch
+        parent.map(_.id) // idempotent replay of an already-committed batch
+      else {
+        val parentFolded = parent.map(_.folded).getOrElse(Map.empty)
+        val parentSlices = parent.map(_.buckets.groupBy(_.bucket)).getOrElse(Map.empty)
+        val newId = parent.map(_.id + 1).getOrElse(0L)
 
-      if (man == null) man = bucketStats(df, df0.columns.toSeq, timeCol)
+        // a bucket is unchanged only if digest AND row count AND watermark
+        // all match the parent's folded manifest: bit_xor alone cancels
+        // pairs, so adding two identical rows (exact duplicates are central
+        // to this corpus) would otherwise leave the digest unchanged and
+        // silently drop the new rows
+        val changed = man.filter { case (k, (rows, wm, dg, _)) =>
+          !parentFolded.get(k).contains((rows, wm, dg))
+        }.keys.toSeq.sorted
 
-      val parentFolded: Map[Int, (Long, Long, Long)] =
-        parent.map(_.folded).getOrElse(Map.empty)
-      val parentSlices: Map[Int, Seq[BucketManifest]] =
-        parent.map(_.buckets.groupBy(_.bucket)).getOrElse(Map.empty)
-      val newId = parent.map(_.id + 1).getOrElse(0L)
-
-      // a bucket is unchanged only if digest AND row count AND watermark all
-      // match the parent's folded manifest: bit_xor alone cancels pairs, so
-      // adding two identical rows (exact duplicates are central to this
-      // corpus) would otherwise leave the digest unchanged and silently drop
-      // the new rows
-      // tmin is deliberately OUTSIDE the equality (folded is (rows, wm,
-      // digest)): a parent slice carried from a pre-tmin manifest would
-      // otherwise never compare equal and the resume path would rewrite it
-      // on every commit
-      val changed = man.filter { case (k, (rows, wm, dg, _)) =>
-        !parentFolded.get(k).contains((rows, wm, dg))
-      }.keys.toSeq.sorted
-
-      val stage = newStage(root, newId)
-      if (changed.nonEmpty) {
-        df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*))
-          .sortWithinPartitions(col(entityCol), col(timeCol))
-          .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-      }
-
-      val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, (rows, wm, dg, tmn)) =>
-        if (changed.contains(k))
-          Seq(BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn))
-        else parentSlices(k)
-      }
-      // slices can disagree on schema only if some parent slice was CARRIED
-      // (resume path) and either the parent already mixed or this commit
-      // changed the column set; a full rewrite (changed == all) clears it
-      val schemaChanged = parent.exists(p =>
-        p.columns.nonEmpty && p.columns != df0.columns.sorted.toSeq)
-      val mixed = changed.size < man.size &&
-        (parent.exists(_.mixedSchema) || schemaChanged)
-      publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
-        entityCol, timeCol, buckets, batchId, df0.columns.sorted.toSeq,
-        newBuckets, mixed,
-        df0.select(df0.columns.sorted.map(col): _*).schema.toDDL)) match {
-        case Some(id) => return id
-        case None     => attempt += 1 // lost the claim: re-read head, retry
+        val stage = newStage(root, newId)
+        if (changed.nonEmpty) {
+          df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*))
+            .sortWithinPartitions(col(entityCol), col(timeCol))
+            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+        }
+        val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, st) =>
+          if (changed.contains(k)) Seq(sliceOf(stage, k, st)) else parentSlices(k)
+        }
+        // slices can disagree on schema only if some parent slice was CARRIED
+        // (resume path) and either the parent already mixed or this commit
+        // changed the column set; a full rewrite (changed == all) clears it
+        val mixed = changed.size < man.size &&
+          parent.exists(p => p.mixedSchema || p.columns != cols)
+        publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
+          entityCol, timeCol, buckets, batchId, cols, newBuckets, mixed,
+          sortedDdl(df0)))
       }
     }
-    throw new IllegalStateException(
-      s"commit lost the optimistic claim $MaxCommitAttempts times at $root " +
-        "— a writer is committing faster than this one can retry")
   }
 
   /** APPEND `delta` as a new snapshot costing O(delta): only the delta is
@@ -472,77 +432,86 @@ object SnapshotTable {
       timeCol: String, buckets: Int = 16, batchId: Long = -1L,
       evolveSchema: Boolean = false): Long = {
     val df = delta.withColumn(BucketCol, bucketExpr(entityCol, buckets))
+    val deltaCols = delta.columns.sorted.toSeq
     // the delta's slices are PARENT-INDEPENDENT: scanned and staged at most
     // once, then reused verbatim across optimistic retries (only the
     // manifest's id/parent change when a concurrent writer wins a claim)
-    var man: Map[Int, (Long, Long, Long, Long)] = null
-    var deltaSlices: Seq[BucketManifest] = null
-    def stageOnce(newIdHint: Long): Unit = if (man == null) {
-      man = bucketStats(df, delta.columns.toSeq, timeCol)
-      deltaSlices =
+    var staged: Option[Seq[BucketManifest]] = None
+    def slices(newIdHint: Long): Seq[BucketManifest] = staged.getOrElse {
+      val man = bucketStats(df, delta.columns.toSeq, timeCol)
+      val ss =
         if (man.isEmpty) Seq.empty
         else {
           val stage = newStage(root, newIdHint)
           df.sortWithinPartitions(col(entityCol), col(timeCol))
             .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-          man.toSeq.sortBy(_._1).map { case (k, (rows, wm, dg, tmn)) =>
-            BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn)
-          }
+          man.toSeq.sortBy(_._1).map { case (k, st) => sliceOf(stage, k, st) }
         }
+      staged = Some(ss)
+      ss
     }
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
+    retrying("commitDelta", root) {
       currentSnapshot(root) match {
         case None =>
           // empty table: try to create v0 holding exactly the delta. Losing
           // this claim means a concurrent writer created the table — the
-          // next iteration takes the APPEND path against it (delegating to
+          // next attempt takes the APPEND path against it (delegating to
           // commit here would retry with overwrite semantics and erase the
           // winner's rows)
-          stageOnce(0L)
           publish(root, Snapshot(0L, -1L, entityCol, timeCol, buckets,
-            batchId, delta.columns.sorted.toSeq, deltaSlices, false,
-            delta.select(delta.columns.sorted.map(col): _*).schema.toDDL)) match {
-            case Some(id) => return id
-            case None     => attempt += 1
-          }
+            batchId, deltaCols, slices(0L), false, sortedDdl(delta)))
+        case Some(p) if batchId >= 0 && p.batchId == batchId => Some(p.id)
         case Some(p) =>
-          if (batchId >= 0 && p.batchId == batchId) return p.id
-          require(p.nbuckets < 0 || p.nbuckets == buckets,
-            s"bucket count $buckets != table's ${p.nbuckets} at $root")
-          require(p.entityCol == entityCol && p.timeCol == timeCol,
-            s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol})")
-          val deltaCols = delta.columns.sorted.toSeq
+          requireLayout(p, root, entityCol, timeCol, buckets)
           if (evolveSchema)
             require(p.columns.forall(deltaCols.contains),
               s"schema evolution on append is ADDITIVE only: delta $deltaCols " +
                 s"is missing recorded columns ${p.columns.filterNot(deltaCols.contains)}")
           else
-            require(p.columns.isEmpty || p.columns == deltaCols,
+            require(p.columns == deltaCols,
               s"delta schema $deltaCols != table's ${p.columns} " +
                 "(pass evolveSchema = true to add columns)")
           requireTypesMatch(p, delta, "delta")
-          stageOnce(p.id + 1)
-          if (man.isEmpty) return p.id // empty delta: nothing to commit
-          val cols = if (p.columns.isEmpty) p.columns else deltaCols
-          val mixed = p.mixedSchema ||
-            (p.columns.nonEmpty && p.columns != deltaCols)
-          // legacy manifests (no recorded columns) keep their (empty) DDL;
-          // otherwise the delta's — equal on a plain append, WIDENED under
-          // evolution, which is exactly what mixed reads must pad to
-          val ddl =
-            if (p.columns.isEmpty) p.schemaDdl
-            else delta.select(deltaCols.map(col): _*).schema.toDDL
-          publish(root, Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets,
-            batchId, cols, p.buckets ++ deltaSlices, mixed, ddl)) match {
-            case Some(id) => return id
-            case None     => attempt += 1
-          }
+          val ds = slices(p.id + 1)
+          if (ds.isEmpty) Some(p.id) // empty delta: nothing to commit
+          else
+            // the delta's DDL: equal on a plain append, WIDENED under
+            // evolution, which is exactly what mixed reads must pad to
+            publish(root, Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets,
+              batchId, deltaCols, p.buckets ++ ds,
+              p.mixedSchema || p.columns != deltaCols, sortedDdl(delta)))
       }
     }
-    throw new IllegalStateException(
-      s"commitDelta lost the optimistic claim $MaxCommitAttempts times at " +
-        s"$root — a writer is committing faster than this one can retry")
+  }
+
+  /** Rewrite the `touched` buckets of `p` as `content` — ONE consolidated
+    * sorted slice each — and publish the result as `p`'s child with the
+    * given `batchId`. Every other bucket's slices carry over verbatim; a
+    * touched bucket left without rows disappears from the manifest. The
+    * new slices' stats come from one scan of the staged parquet, never of
+    * the untouched buckets.
+    */
+  private def publishRewrite(root: String, p: Snapshot, touched: Set[Int],
+      content: DataFrame, batchId: Long): Option[Long] = {
+    val stage = newStage(root, p.id + 1)
+    content.repartition(math.max(1, touched.size), col(BucketCol))
+      .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
+      .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+    // an all-rows-deleted stage has no bucket dirs to scan
+    val stats =
+      if (children(stage).exists(_.getFileName.toString.startsWith(s"$BucketCol=")))
+        bucketStats(content.sparkSession.read.parquet(stage.toString), p.columns, p.timeCol)
+      else Map.empty[Int, Stats]
+    val bySlices = p.buckets.groupBy(_.bucket)
+    val newBuckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
+      if (touched.contains(k)) stats.get(k).map(sliceOf(stage, k, _)).toSeq
+      else bySlices(k)
+    }
+    // touched buckets were rewritten on the full recorded schema (conform)
+    // — only untouched ones can still hold old-schema slices
+    val mixed = p.mixedSchema && bySlices.keySet.exists(!touched.contains(_))
+    publish(root, p.copy(id = p.id + 1, parent = p.id, batchId = batchId,
+      buckets = newBuckets, mixedSchema = mixed))
   }
 
   /** UPSERT `updates` by the table's (entity, time) key — Iceberg's MERGE
@@ -561,85 +530,43 @@ object SnapshotTable {
   def commitUpsert(updates: DataFrame, root: String, entityCol: String,
       timeCol: String, buckets: Int = 16, batchId: Long = -1L): Long = {
     val spark = updates.sparkSession
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
+    retrying("commitUpsert", root) {
       currentSnapshot(root) match {
         case None =>
           // empty table: an upsert is just a first commit of the updates
-          return commitDelta(updates, root, entityCol, timeCol, buckets, batchId)
+          Some(commitDelta(updates, root, entityCol, timeCol, buckets, batchId))
+        case Some(p) if batchId >= 0 && p.batchId == batchId => Some(p.id)
         case Some(p) =>
-          if (batchId >= 0 && p.batchId == batchId) return p.id
-          // a MERGE is only correct against the table's own bucketing: a
-          // legacy manifest without a recorded count cannot be upserted
-          // (an append records the count, after which upserts work)
-          require(p.nbuckets > 0,
-            s"bucket count unrecorded at $root (pre-slice-format manifest): " +
-              "one append records it, then upsert")
-          require(p.nbuckets == buckets,
-            s"bucket count $buckets != table's ${p.nbuckets} at $root")
-          require(p.entityCol == entityCol && p.timeCol == timeCol,
-            s"key columns ($entityCol, $timeCol) != table's (${p.entityCol}, ${p.timeCol})")
-          require(p.columns.isEmpty || p.columns == updates.columns.sorted.toSeq,
+          requireLayout(p, root, entityCol, timeCol, buckets)
+          require(p.columns == updates.columns.sorted.toSeq,
             s"updates schema ${updates.columns.sorted.toSeq} != table's ${p.columns}")
           requireTypesMatch(p, updates, "updates")
 
           val df = updates.withColumn(BucketCol, bucketExpr(entityCol, buckets))
           // only the bucket IDS are needed up front (stats of what is
-          // actually written come from the staged merge) — a distinct over
-          // the bucket expression, not a full hash-digest aggregation
-          val touched = df.select(col(BucketCol).as("b")).distinct()
-            .collect().map { r =>
-              if (r.isNullAt(0)) throw new IllegalArgumentException(
-                "SnapshotTable: the entity column contains nulls — filter " +
-                  "or recode null entities before upsert")
-              r.getInt(0)
-            }.toSet
-          if (touched.isEmpty) return p.id
-          val bySlices = p.buckets.groupBy(_.bucket)
-          val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
-
-          // merged content of the touched buckets: surviving old rows + all
-          // updates (old side conformed so a pre-evolution slice can't drop
-          // the union schema)
-          val old = readSlices(spark, oldSlices, p.mixedSchema)
-            .map(conform(_, p)).getOrElse(df.limit(0))
-          val merged = old
-            .join(df.select(col(entityCol), col(timeCol)).distinct(),
-              Seq(entityCol, timeCol), "left_anti")
-            .unionByName(df, allowMissingColumns = true)
-
-          val stage = newStage(root, p.id + 1)
-          merged.repartition(math.max(1, touched.size), col(BucketCol))
-            .sortWithinPartitions(col(BucketCol), col(entityCol), col(timeCol))
-            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-          // stats of what was actually written (post-merge), one scan of the
-          // already-staged parquet — never the untouched buckets
-          val mergedStats = bucketStats(
-            spark.read.parquet(stage.toString), updates.columns.toSeq, timeCol)
-
-          val newBuckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
-            if (touched.contains(k))
-              mergedStats.get(k).map { case (rows, wm, dg, tmn) =>
-                BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn)
-              }.toSeq
-            else bySlices(k)
-          }
-          // touched buckets were rewritten on the full recorded schema
-          // (conform) — only untouched ones can still hold old-schema slices
-          val mixed = p.mixedSchema && bySlices.keySet.exists(!touched.contains(_))
-          // a maintenance upsert (no batchId) must CARRY the parent's
-          // streaming replay marker, like compact does — overwriting it
-          // with -1 would let a crash-replayed micro-batch re-append
-          val bid = if (batchId >= 0) batchId else p.batchId
-          publish(root, Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets,
-            bid, p.columns, newBuckets, mixed, p.schemaDdl)) match {
-            case Some(id) => return id
-            case None     => attempt += 1 // merged vs a stale parent: redo
+          // actually written come from the staged merge)
+          val touched = bucketsOf(updates, entityCol, buckets)
+          if (touched.isEmpty) Some(p.id)
+          else {
+            val bySlices = p.buckets.groupBy(_.bucket)
+            val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
+            // merged content of the touched buckets: surviving old rows + all
+            // updates (old side conformed so a pre-evolution slice can't drop
+            // the union schema)
+            val old = readSlices(spark, oldSlices, p.mixedSchema)
+              .map(conform(_, p)).getOrElse(df.limit(0))
+            val merged = old
+              .join(df.select(col(entityCol), col(timeCol)).distinct(),
+                Seq(entityCol, timeCol), "left_anti")
+              .unionByName(df, allowMissingColumns = true)
+            // a maintenance upsert (no batchId) must CARRY the parent's
+            // streaming replay marker, like compact does — overwriting it
+            // with -1 would let a crash-replayed micro-batch re-append
+            publishRewrite(root, p, touched, merged,
+              if (batchId >= 0) batchId else p.batchId)
           }
       }
     }
-    throw new IllegalStateException(
-      s"commitUpsert lost the optimistic claim $MaxCommitAttempts times at $root")
   }
 
   /** DELETE every row of the given entities (the right-to-be-forgotten
@@ -656,62 +583,22 @@ object SnapshotTable {
       implicit enc: org.apache.spark.sql.Encoder[T]): Long = {
     require(keys.nonEmpty && !keys.contains(null.asInstanceOf[T]),
       "commitDelete: keys must be a non-empty, null-free list")
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val p = currentSnapshot(root)
-        .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
-      require(p.nbuckets > 0,
-        s"bucket count unrecorded at $root (pre-slice-format manifest): " +
-          "one commit records it")
+    retrying("commitDelete", root) {
+      val p = resolve(root, None)
       val keyDf = spark.createDataset(keys).toDF(p.entityCol)
       // a mistyped key prunes the WRONG buckets and the delete silently
       // leaves the data in place — fail fast instead
       requireTypesMatch(p, keyDf, "delete key")
-      val touched = keyDf
-        .select(bucketExpr(p.entityCol, p.nbuckets).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
+      val touched = bucketsOf(keyDf, p.entityCol, p.nbuckets)
       val bySlices = p.buckets.groupBy(_.bucket)
       val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
-      if (oldSlices.isEmpty) return p.id // keys hash only into empty buckets
-
-      val kept = readSlices(spark, oldSlices, p.mixedSchema)
-        .map(conform(_, p)).get
-        .filter(!col(p.entityCol).isInCollection(keys))
-      val stage = newStage(root, p.id + 1)
-      kept.repartition(math.max(1, touched.size), col(BucketCol))
-        .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-      val dataCols =
-        if (p.columns.nonEmpty) p.columns
-        else kept.columns.filterNot(_ == BucketCol).toSeq
-      val hasData = {
-        // an all-rows-deleted stage has no bucket dirs to scan
-        val st = Files.list(stage)
-        try st.anyMatch(q => q.getFileName.toString.startsWith(s"$BucketCol="))
-        finally st.close()
-      }
-      val keptStats =
-        if (hasData)
-          bucketStats(spark.read.parquet(stage.toString), dataCols, p.timeCol)
-        else Map.empty[Int, (Long, Long, Long, Long)]
-
-      val newBuckets = bySlices.keySet.toSeq.sorted.flatMap { k =>
-        if (touched.contains(k))
-          keptStats.get(k).map { case (rows, wm, dg, tmn) =>
-            BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm, dg, tmn)
-          }.toSeq // empty bucket: gone from the manifest
-        else bySlices(k)
-      }
-      val mixed = p.mixedSchema && bySlices.keySet.exists(!touched.contains(_))
-      publish(root, Snapshot(p.id + 1, p.id, p.entityCol, p.timeCol,
-        p.nbuckets, p.batchId, p.columns, newBuckets, mixed,
-        p.schemaDdl)) match {
-        case Some(id) => return id
-        case None     => attempt += 1
-      }
+      if (oldSlices.isEmpty) Some(p.id) // keys hash only into empty buckets
+      else
+        publishRewrite(root, p, touched,
+          readSlices(spark, oldSlices, p.mixedSchema).map(conform(_, p)).get
+            .filter(!col(p.entityCol).isInCollection(keys)),
+          p.batchId)
     }
-    throw new IllegalStateException(
-      s"commitDelete lost the optimistic claim $MaxCommitAttempts times at $root")
   }
 
   /** Compact buckets that have accumulated more than `maxSlices` slices
@@ -723,53 +610,42 @@ object SnapshotTable {
     * are untouched. Returns the new snapshot id, or the current one if
     * nothing needed compaction.
     */
-  def compact(spark: SparkSession, root: String, maxSlices: Int = 8): Long = {
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val p = currentSnapshot(root)
-        .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+  def compact(spark: SparkSession, root: String, maxSlices: Int = 8): Long =
+    // a lost claim means a concurrent append changed the slice set: the
+    // next attempt recomputes the compaction plan whole
+    retrying("compact", root) {
+      val p = resolve(root, None)
       val bySlices = p.buckets.groupBy(_.bucket)
       val toCompact = bySlices.filter(_._2.size > maxSlices).keys.toSeq.sorted
-      if (toCompact.isEmpty) return p.id
-
-      val stage = newStage(root, p.id + 1)
-      val folded = p.folded
-      // ONE job for all compacted buckets (not a driver loop of per-bucket
-      // jobs): union per bucket, one shuffle hash-partitioned by bucket, one
-      // sorted file per bucket out of partitionBy
-      readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.mixedSchema)
-        .foreach { df =>
-          df.repartition(toCompact.size, col(BucketCol))
-            .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
-            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+      if (toCompact.isEmpty) Some(p.id)
+      else {
+        val stage = newStage(root, p.id + 1)
+        val folded = p.folded
+        // ONE job for all compacted buckets (not a driver loop of per-bucket
+        // jobs): union per bucket, one shuffle hash-partitioned by bucket,
+        // one sorted file per bucket out of partitionBy
+        readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.mixedSchema)
+          .foreach { df =>
+            df.repartition(toCompact.size, col(BucketCol))
+              .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
+              .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+          }
+        val newBuckets = bySlices.toSeq.sortBy(_._1).flatMap { case (k, ss) =>
+          if (toCompact.contains(k)) {
+            val (rows, wm, dg) = folded(k)
+            // tmin folds by min — a slice without a claim (MinValue) keeps
+            // the compacted slice claim-free, same conservative semantics
+            Seq(sliceOf(stage, k, (rows, wm, dg, ss.map(_.tmin).min)))
+          } else ss
         }
-      val newBuckets = bySlices.toSeq.sortBy(_._1).flatMap { case (k, ss) =>
-        if (toCompact.contains(k)) {
-          val (rows, wm, dg) = folded(k)
-          // tmin folds by min — a slice without a claim (MinValue) keeps
-          // the compacted slice claim-free, same conservative semantics
-          Seq(BucketManifest(k, s"${stage.toString}/$BucketCol=$k", rows, wm,
-            dg, ss.map(_.tmin).min))
-        } else ss
-      }
-      // batchId carries over: compaction must not defeat the replay-skip of
-      // the delta commit it follows (a crash between them would otherwise
-      // re-append the batch on restart). mixedSchema carries too —
-      // UNCOMPACTED buckets may still hold pre-evolution slices (compacted
-      // ones are rewritten under the merged schema)
-      publish(root, Snapshot(p.id + 1, p.id, p.entityCol, p.timeCol,
-        p.nbuckets, p.batchId, p.columns, newBuckets, p.mixedSchema,
-        p.schemaDdl)) match {
-        case Some(id) => return id
-        case None     =>
-          // a concurrent append landed between our read and claim: the
-          // slice set changed, so the compaction plan is recomputed whole
-          attempt += 1
+        // batchId carries over: compaction must not defeat the replay-skip
+        // of the delta commit it follows (a crash between them would
+        // otherwise re-append the batch on restart). mixedSchema carries
+        // too — UNCOMPACTED buckets may still hold pre-evolution slices
+        // (compacted ones are rewritten under the merged schema)
+        publish(root, p.copy(id = p.id + 1, parent = p.id, buckets = newBuckets))
       }
     }
-    throw new IllegalStateException(
-      s"compact lost the optimistic claim $MaxCommitAttempts times at $root")
-  }
 
   /** One multi-path scan per BUCKET (not per slice): the union tree is
     * O(buckets) wide regardless of how many append slices accumulated, so
@@ -796,7 +672,7 @@ object SnapshotTable {
     * evolution), leaving no slice to contribute the newer columns.
     */
   private def conform(df: DataFrame, snap: Snapshot): DataFrame =
-    if (!snap.mixedSchema || snap.schemaDdl.isEmpty) df
+    if (!snap.mixedSchema) df
     else {
       val have = df.columns.toSet
       org.apache.spark.sql.types.StructType.fromDDL(snap.schemaDdl).fields
@@ -808,8 +684,7 @@ object SnapshotTable {
     * the committed content, including the bucket column.
     */
   def read(spark: SparkSession, root: String, id: Option[Long] = None): DataFrame = {
-    val snap = id.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    val snap = resolve(root, id)
     readSlices(spark, snap.buckets, snap.mixedSchema)
       .map(conform(_, snap))
       .getOrElse(spark.emptyDataFrame)
@@ -837,36 +712,26 @@ object SnapshotTable {
     require(keys.nonEmpty && !keys.contains(null.asInstanceOf[T]),
       "readEntities: keys must be a non-empty, null-free list")
     requireWindow("readEntities", from, until)
-    val snap = id.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
-    require(snap.nbuckets > 0,
-      s"bucket count unrecorded at $root (pre-slice-format manifest): " +
-        "one commit records it, or use read() with a filter")
+    val snap = resolve(root, id)
     val keyDf = spark.createDataset(keys).toDF(snap.entityCol)
     // a mistyped key hashes to the WRONG bucket and silently returns
     // nothing (e.g. Long 5 vs the table's string "5") — fail fast instead
     requireTypesMatch(snap, keyDf, "lookup key")
-    val wanted = keyDf
-      .select(bucketExpr(snap.entityCol, snap.nbuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
+    val wanted = bucketsOf(keyDf, snap.entityCol, snap.nbuckets)
     val keep = snap.buckets.filter(b =>
       wanted.contains(b.bucket) && sliceInWindow(b, from, until))
-    readSlices(spark, keep, snap.mixedSchema)
-      // keys may hash to buckets that never held rows: keep the schema
-      .orElse(schemaOnly(spark, snap)) match {
-      case Some(df) =>
-        val pred = (Seq(col(snap.entityCol).isInCollection(keys)) ++
-          windowPredicates(snap.timeCol, from, until)).reduce(_ && _)
-        conform(df, snap).filter(pred)
-      case None => spark.emptyDataFrame // empty table: no schema to give
-    }
+    val pred = (Seq(col(snap.entityCol).isInCollection(keys)) ++
+      windowPredicates(snap.timeCol, from, until)).reduce(_ && _)
+    // keys may hash to buckets that never held rows: keep the schema
+    conform(readSlices(spark, keep, snap.mixedSchema)
+      .getOrElse(schemaOnly(spark, snap)), snap).filter(pred)
   }
 
   /** Can this slice's [tmin, watermark] stats interval intersect the
     * inclusive [from, until] window? The single definition both windowed
     * read paths ([[readEntities]], [[readRange]]) prune with — slices
-    * making no tmin claim (legacy manifests, all-null-time slices) carry
-    * tmin = Long.MinValue and are never skipped on the lower bound.
+    * making no tmin claim (all-null-time slices) carry tmin =
+    * Long.MinValue and are never skipped on the lower bound.
     */
   private def sliceInWindow(b: BucketManifest, from: Option[Long],
       until: Option[Long]): Boolean =
@@ -887,17 +752,14 @@ object SnapshotTable {
       require(lo <= hi, s"$what: empty interval [$lo, $hi]")
     }
 
-  /** Zero-row frame carrying the table's schema: from the recorded DDL
-    * with zero I/O when available, else a zero-row read over the table's
-    * slices (legacy manifests only). None when the table is empty AND
-    * recorded no schema.
+  /** Zero-row frame carrying the table's schema, from the recorded DDL
+    * with zero I/O.
     */
-  private def schemaOnly(spark: SparkSession, snap: Snapshot): Option[DataFrame] =
-    if (snap.schemaDdl.nonEmpty) Some(spark.createDataFrame(
+  private def schemaOnly(spark: SparkSession, snap: Snapshot): DataFrame =
+    spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(snap.schemaDdl)
-        .add(BucketCol, org.apache.spark.sql.types.IntegerType)))
-    else readSlices(spark, snap.buckets, snap.mixedSchema).map(_.limit(0))
+        .add(BucketCol, org.apache.spark.sql.types.IntegerType))
 
   /** Time-range read (bounds inclusive, in the long unit the manifests
     * record): opens ONLY the slices whose stats interval [tmin, watermark]
@@ -911,9 +773,9 @@ object SnapshotTable {
     * makes the skip rate proportional to history length.
     *
     * Rows with a null event time never match a range (SQL comparison
-    * semantics), and slices that make no tmin claim (legacy manifests,
-    * all-null-time slices) are never skipped on the lower bound — pruning
-    * degrades to a scan, correctness is unchanged.
+    * semantics), and slices that make no tmin claim (all-null-time slices)
+    * are never skipped on the lower bound — pruning degrades to a scan,
+    * correctness is unchanged.
     */
   def readRange(spark: SparkSession, root: String, from: Option[Long],
       until: Option[Long], id: Option[Long] = None): DataFrame = {
@@ -921,14 +783,11 @@ object SnapshotTable {
       "readRange: at least one bound (from/until) is required — use read() " +
         "for a full scan")
     requireWindow("readRange", from, until)
-    val snap = id.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    val snap = resolve(root, id)
     val keep = snap.buckets.filter(sliceInWindow(_, from, until))
     val pred = windowPredicates(snap.timeCol, from, until).reduce(_ && _)
-    readSlices(spark, keep, snap.mixedSchema)
-      .orElse(schemaOnly(spark, snap))
-      .map(df => conform(df, snap).filter(pred))
-      .getOrElse(spark.emptyDataFrame) // empty table: no schema to give
+    conform(readSlices(spark, keep, snap.mixedSchema)
+      .getOrElse(schemaOnly(spark, snap)), snap).filter(pred)
   }
 
   /** Read ONLY the rows appended between `fromId` (exclusive) and `toId`
@@ -942,8 +801,7 @@ object SnapshotTable {
   def readIncremental(spark: SparkSession, root: String, fromId: Long,
       toId: Option[Long] = None): DataFrame = {
     val from = snapshot(root, fromId)
-    val to = toId.map(snapshot(root, _)).orElse(currentSnapshot(root))
-      .getOrElse(throw new IllegalStateException(s"no snapshot at $root"))
+    val to = resolve(root, toId)
     val fromDirs = from.buckets.map(_.dir).toSet
     require(fromDirs.subsetOf(to.buckets.map(_.dir).toSet),
       s"snapshot $fromId's slices were compacted away after id ${from.id}; " +
@@ -961,37 +819,20 @@ object SnapshotTable {
     * kept. Returns (manifests deleted, data dirs deleted).
     */
   def expireSnapshots(root: String, keepFrom: Long): (Int, Int) = {
-    val snapsDir = Paths.get(root, "snapshots")
-    if (!Files.exists(snapsDir)) return (0, 0)
-    val all = {
-      val stream = Files.list(snapsDir)
-      try stream.iterator().asScala
-        .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-        .map(p => fromJson(Files.readString(p))).toSeq
-      finally stream.close()
-    }
     val cur = currentId(root).getOrElse(-1L)
     val bound = math.min(keepFrom, cur) // never expire CURRENT
-    val (dead, alive) = all.partition(_.id < bound)
-    val referenced = alive.flatMap(_.buckets.map(_.dir)).toSet
+    val (dead, alive) = snapshots(root).partition(_.id < bound)
     // a slice dir is <stage>/pbucket=k; reclaim whole stage dirs only when
     // NO slice under them is referenced by a surviving snapshot. Compare by
     // path PARENT, not string prefix: stage "s3_1" is a string prefix of
     // "s3_10/pbucket=0", and prefix matching would retain s3_1 forever
     // (silent over-retention, never data loss — but still a leak)
-    val referencedStages = referenced.map(r => Paths.get(r).getParent)
+    val referencedStages = alive.flatMap(_.buckets.map(b => Paths.get(b.dir).getParent)).toSet
     val deadStageDirs = dead.flatMap(_.buckets.map(b => Paths.get(b.dir).getParent))
       .distinct
       .filterNot(referencedStages.contains)
-    deadStageDirs.foreach { stage =>
-      if (Files.exists(stage)) {
-        val walk = Files.walk(stage)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
-    dead.foreach(s => Files.deleteIfExists(snapsDir.resolve(s"v${s.id}.json")))
+    deadStageDirs.foreach(deleteRecursively)
+    dead.foreach(s => Files.deleteIfExists(Paths.get(root, "snapshots", s"v${s.id}.json")))
     (dead.size, deadStageDirs.size)
   }
 
@@ -1008,46 +849,16 @@ object SnapshotTable {
   def removeOrphans(root: String,
       olderThanMs: Long = 24L * 3600 * 1000): (Int, Int) = {
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val snapsDir = Paths.get(root, "snapshots")
-    val dataDir = Paths.get(root, "data")
-    val referenced: Set[Path] =
-      if (!Files.exists(snapsDir)) Set.empty
-      else {
-        val st = Files.list(snapsDir)
-        try st.iterator().asScala
-          .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-          .flatMap(p => fromJson(Files.readString(p)).buckets
-            .map(b => Paths.get(b.dir).getParent))
-          .toSet
-        finally st.close()
-      }
-    var stages = 0
-    if (Files.exists(dataDir)) {
-      val st = Files.list(dataDir)
-      val candidates =
-        try st.iterator().asScala.filter(Files.isDirectory(_)).toSeq
-        finally st.close()
-      candidates
-        .filterNot(referenced.contains)
-        .filter(d => Files.getLastModifiedTime(d).toMillis < cutoff)
-        .foreach { d =>
-          val walk = Files.walk(d)
-          try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p): Unit)
-          finally walk.close()
-          stages += 1
-        }
-    }
-    var tmps = 0
-    if (Files.exists(snapsDir)) {
-      val st = Files.list(snapsDir)
-      try st.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".tmp"))
-        .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-        .foreach { p => Files.deleteIfExists(p); tmps += 1 }
-      finally st.close()
-    }
-    (stages, tmps)
+    def old(p: Path) = Files.getLastModifiedTime(p).toMillis < cutoff
+    val referenced =
+      snapshots(root).flatMap(_.buckets.map(b => Paths.get(b.dir).getParent)).toSet
+    val stages = children(Paths.get(root, "data"))
+      .filter(d => Files.isDirectory(d) && !referenced.contains(d) && old(d))
+    stages.foreach(deleteRecursively)
+    val tmps = children(Paths.get(root, "snapshots"))
+      .filter(p => p.getFileName.toString.endsWith(".tmp") && old(p))
+    tmps.foreach(Files.deleteIfExists(_))
+    (stages.size, tmps.size)
   }
 
   /** Per-partition lineage across ALL snapshots as a queryable DataFrame
@@ -1060,17 +871,7 @@ object SnapshotTable {
   def lineage(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
     val cur = currentId(root)
-    val snapsDir = Paths.get(root, "snapshots")
-    val snaps =
-      if (!Files.exists(snapsDir)) Seq.empty[Snapshot]
-      else {
-        val stream = Files.list(snapsDir)
-        try stream.iterator().asScala
-          .filter(_.getFileName.toString.matches("v\\d+\\.json"))
-          .map(p => fromJson(Files.readString(p))).toSeq
-        finally stream.close()
-      }
-    snaps.sortBy(_.id)
+    snapshots(root).sortBy(_.id)
       .flatMap(s => s.buckets.map(b => (s.id, s.parent, b.bucket, b.dir,
         b.rows, b.watermark, b.digest, b.tmin, cur.contains(s.id))))
       .toDF("snapshot_id", "parent_id", "bucket", "dir", "rows", "watermark",
@@ -1083,8 +884,7 @@ object SnapshotTable {
     * snapshot is empty (a commit of zero rows is legal — e.g. an empty
     * first micro-batch — and an empty table makes no completeness claim).
     */
-  def watermark(root: String, id: Option[Long] = None): Option[Long] = {
-    val snap = id.map(snapshot(root, _)).orElse(currentSnapshot(root))
-    snap.filter(_.buckets.nonEmpty).map(_.folded.values.map(_._2).min)
-  }
+  def watermark(root: String, id: Option[Long] = None): Option[Long] =
+    id.orElse(currentId(root)).map(snapshot(root, _))
+      .filter(_.buckets.nonEmpty).map(_.folded.values.map(_._2).min)
 }

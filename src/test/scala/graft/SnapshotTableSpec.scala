@@ -293,7 +293,8 @@ class SnapshotTableSpec extends AnyFunSuite {
       s"""{"id":$id,"parent":$parent,"entity_col":"e","time_col":"t",""" +
         s""""nbuckets":1,"batch_id":-1,"columns":["e","t"],""" +
         s""""buckets":[{"bucket":0,"dir":"${dir.resolve("pbucket=0")}","rows":1,""" +
-        s""""watermark":1,"digest":7}]}"""
+        s""""watermark":1,"digest":7,"tmin":1}],""" +
+        s""""mixed_schema":false,"schema_ddl":"e BIGINT,t BIGINT"}"""
     Files.createDirectories(Paths.get(root, "snapshots"))
     Files.writeString(Paths.get(root, "snapshots", "v0.json"), manifest(0, -1, deadStage))
     Files.writeString(Paths.get(root, "snapshots", "v1.json"), manifest(1, 0, liveStage))
@@ -305,44 +306,10 @@ class SnapshotTableSpec extends AnyFunSuite {
       "referenced stage s0_10 must survive")
   }
 
-  test("pre-slice-format manifests (no nbuckets/batch_id/columns) stay readable") {
-    val root = tmpRoot("legacy")
-    val ev = Corpus.events(spark, Corpus.Params(rows = 200, entities = 8)).drop("bytes")
-    SnapshotTable.commit(ev.filter(col("seq") < 100), root, "entity_id", "event_ms",
-      buckets = 2)
-    // rewrite the manifest as the pre-round-3 format: strip the three fields
-    val mPath = Paths.get(root, "snapshots", "v0.json")
-    val legacy = Files.readString(mPath)
-      .replaceAll("\"nbuckets\":\\d+,", "")
-      .replaceAll("\"batch_id\":-?\\d+,", "")
-      .replaceAll("\"columns\":\\[[^\\]]*\\],", "")
-    assert(!legacy.contains("nbuckets"))
-    Files.writeString(mPath, legacy)
-    // defaults: nbuckets -1 = unknown (manifests list only NON-EMPTY
-    // buckets, so inferring from the ids present would under-count — e.g.
-    // a 16-bucket table whose bucket 15 held no rows), batchId -1, columns
-    // empty (schema check skipped — the pre-upgrade contract)
-    val s = SnapshotTable.snapshot(root, 0L)
-    assert(s.nbuckets == -1 && s.batchId == -1L && s.columns.isEmpty)
-    // appends on top of the legacy manifest still work with the caller's
-    // (original) bucket count — which the new manifest then records — and
-    // fold correctly
-    SnapshotTable.commitDelta(ev.filter(col("seq") >= 100), root,
-      "entity_id", "event_ms", buckets = 2)
-    assert(SnapshotTable.snapshot(root, 1L).nbuckets == 2)
-    assert(SnapshotTable.read(spark, root).count() == 200)
-    // once recorded, a mismatched count is rejected again
-    intercept[IllegalArgumentException] {
-      SnapshotTable.commitDelta(ev.limit(1), root, "entity_id", "event_ms",
-        buckets = 4)
-    }
-  }
-
   test("manifest strings with quotes/braces round-trip; special-char roots work") {
     import spark.implicits._
-    // a quote in the root exercises esc() on write and unesc() on read for
-    // every dir field; the unmatched braces/brackets exercise the
-    // string-aware array scanner in fromJson
+    // a quote in the root must be escaped on write and unescaped on read in
+    // every dir field; unmatched braces/brackets must stay string content
     val root = tmpRoot("esc") + "/we\"ird pa}t]h"
     val df = Seq((1L, 100L, "a"), (2L, 200L, "b")).toDF("entity_id", "event_ms", "v")
     SnapshotTable.commit(df, root, "entity_id", "event_ms", buckets = 4)
@@ -352,6 +319,38 @@ class SnapshotTableSpec extends AnyFunSuite {
     val Seq(s0, s1) = Seq(0L, 1L).map(SnapshotTable.snapshot(root, _))
     assert(s1.buckets.map(b => (b.bucket, b.digest, b.dir)) ==
       s0.buckets.map(b => (b.bucket, b.digest, b.dir)))
+  }
+
+  test("a manifest cut inside its buckets array, or missing tmin, fails loudly") {
+    import spark.implicits._
+    val root = tmpRoot("torn")
+    val df = (0L until 30L).map(i => (s"e${i % 6}", i, s"v$i"))
+      .toDF("entity_id", "event_ms", "v")
+    SnapshotTable.commit(df.filter(col("event_ms") < 15), root,
+      "entity_id", "event_ms", buckets = 2)
+    SnapshotTable.commitDelta(df.filter(col("event_ms") >= 15), root,
+      "entity_id", "event_ms", buckets = 2)
+    val path = Paths.get(root, "snapshots", "v1.json")
+    val whole = Files.readString(path)
+    val last = whole.lastIndexOf("{\"bucket\":")
+    assert(last > whole.indexOf("\"buckets\":["))
+    val noTmin = whole.replaceFirst(",\"tmin\":-?\\d+", "")
+    assert(noTmin != whole)
+    // cut after a complete slice, inside the last slice, and just before
+    // the closing bracket: each would parse as a smaller table if tolerated
+    val bad = Seq(whole.take(last), whole.take(last + 5),
+      whole.take(whole.indexOf("]", last)), noTmin)
+    bad.foreach { text =>
+      Files.writeString(path, text)
+      val errs = Seq(
+        intercept[IllegalStateException](SnapshotTable.snapshot(root, 1L)),
+        intercept[IllegalStateException](SnapshotTable.read(spark, root)),
+        intercept[IllegalStateException](
+          SnapshotTable.readEntities[String](spark, root, Seq("e1"))))
+      errs.foreach(e => assert(e.getMessage.contains(path.toString), e.getMessage))
+    }
+    Files.writeString(path, whole)
+    assert(SnapshotTable.read(spark, root).count() == 30)
   }
 
   test("empty commit: legal, watermark None, no empty.min crash") {
@@ -782,24 +781,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     val none = SnapshotTable.readRange(spark, root, Some(2000L), Some(3000L))
     assert(none.isEmpty && none.columns.contains("event_ms"))
     assert(none.inputFiles.isEmpty)
-  }
-
-  test("readRange: legacy manifests without tmin stay readable, prune only on watermark") {
-    val (root, df) = rangeTable("rnglegacy")
-    // strip the tmin field from every manifest = the pre-range format
-    Seq(0L, 1L, 2L).foreach { id =>
-      val p = Paths.get(root, "snapshots", s"v$id.json")
-      Files.writeString(p,
-        Files.readString(p).replaceAll(""","tmin":-?\d+""", ""))
-    }
-    assert(SnapshotTable.snapshot(root, 2L).buckets.forall(_.tmin == Long.MinValue))
-    // correctness unchanged (no lower-bound claim -> no skip on it)...
-    val got = SnapshotTable.readRange(spark, root, Some(350L), Some(449L))
-    assert(got.count() == 100)
-    // ...and the WATERMARK side still prunes: chunks whose max < from skip
-    val tail = SnapshotTable.readRange(spark, root, Some(600L), None)
-    assert(tail.count() == 300)
-    assert(tail.inputFiles.forall(f => stageOf(root, 2L).exists(f.contains)))
   }
 
   test("readRange: all-null-time slices make no claim and match no range") {
