@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.corpus.Corpus
 import graft.features.FeaturePipeline
@@ -46,7 +46,7 @@ import graft.features.FeaturePipeline
   */
 object Bench {
 
-  private val HeadlineQueries = Seq(
+  private[graft] val HeadlineQueries = Seq(
     "q1_pricing_summary", "j1_inner_join", "j8_asof_join", "w_sessionize",
     "w_backfill", "w1_topk_per_group", "a1_replicate_summary", "a10_spearman",
     "f10_zscore_trainonly", "txt_token_stats", "txt_langid", "dd_exact",
@@ -77,7 +77,7 @@ object Bench {
     * partitions to the data and give the small level proportionally fewer
     * scheduling waves than the big one).
     */
-  private def session(cores: Int, coalesce: Boolean = false): SparkSession = {
+  private[graft] def session(cores: Int, coalesce: Boolean = false): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = SparkSession.builder()
@@ -115,7 +115,7 @@ object Bench {
     * (rows) size; reused across reps and levels. Full input_hint schema —
     * the timed job's column pruning over it is part of what's measured.
     */
-  private def corpusTable(spark: SparkSession, rows: Long): String = {
+  private[graft] def corpusTable(spark: SparkSession, rows: Long): String = {
     val path = s"/dev/shm/graft-bench/corpus_$rows"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       val p = Corpus.Params(rows = rows,
@@ -131,7 +131,6 @@ object Bench {
     * (the spark-submit multi-JVM harness).
     */
   private[graft] def corpusRun(spark: SparkSession, path: String, rows: Long): (Double, Long, Long) = {
-    import org.apache.spark.sql.functions._
     val p = Corpus.Params(rows = rows, entities = math.max(64, (rows / 2000).toInt))
     // time bounds are a pure function of the generator params — the
     // local-mode stand-in for reading them from table/partition metadata
@@ -143,14 +142,22 @@ object Bench {
     val dim = Corpus.dimFeatures(spark, p.seed)
     val ed = FeaturePipeline.entityDim(spark, p.entities)
     val f = FeaturePipeline.featuresSkewSafe(ev, dim, ed, bounds = Some(bounds))
-    // honest sink: hash-aggregate over EVERY output column so no feature
-    // computation can be pruned away
-    val rowHash = f.columns.map(c => xxhash64(col(c))).reduce(_ bitwiseXOR _)
-    val agg = f.select(rowHash.as("__h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("digest")).head()
+    val (n, digest) = hashSink(f)
     val dt = (System.nanoTime() - t0) / 1e9
     FeaturePipeline.releaseCaches()
-    (dt, agg.getLong(0), agg.getLong(1))
+    (dt, n, digest)
+  }
+
+  /** The bench sink: (rows, bit_xor of a per-row xxhash64 over EVERY output
+    * column; 0 when empty). Hashing every column keeps Catalyst from pruning
+    * any computation away (round-2 fix: a bare count() benched
+    * projection-only queries as scan+count).
+    */
+  private[graft] def hashSink(df: DataFrame): (Long, Long) = {
+    import org.apache.spark.sql.functions._
+    val h = df.columns.map(c => xxhash64(col(c))).reduce(_ bitwiseXOR _)
+    val r = df.select(h.as("__h")).agg(count(lit(1)), expr("bit_xor(__h)")).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
   /** One session visit at one level: fresh session, one untimed warm-up run
@@ -462,19 +469,10 @@ object Bench {
     val results = headline.map { name =>
       val fn = SparkEntry.queries(name)
       def once(): Double = {
-        import org.apache.spark.sql.functions._
         val t0 = System.nanoTime()
         // each run pays its own operator-internal cache population (released
-        // after), so the timing is the query's honest standalone cost; the
-        // sink hash-aggregates EVERY output column (round-2 fix: a bare
-        // count() let Catalyst prune deterministic projections, so
-        // projection-only queries benched as scan+count)
-        try {
-          val df = fn(spark, sfDir)
-          val h = df.columns.map(c => xxhash64(col(c))).reduce(_ bitwiseXOR _)
-          df.select(h.as("__h"))
-            .agg(count(lit(1)), expr("bit_xor(__h)")).head()
-        }
+        // after), so the timing is the query's honest standalone cost
+        try hashSink(fn(spark, sfDir))
         finally graft.operators.Caches.releaseAll()
         (System.nanoTime() - t0) / 1e9
       }

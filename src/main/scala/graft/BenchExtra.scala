@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Round-6 optimization harness — SEPARATE from the frozen [[Bench]] (the
-  * driver contract): per-query isolation with the identical session config
-  * and the identical hash-agg-over-every-output-column sink as Bench part 1,
-  * plus `.explain("formatted")` plan dumps for the plans/r06 evidence files.
+/** Round-6 optimization harness beside [[Bench]]:
+  * per-query isolation through Bench's own session, headline list, corpus
+  * table and hash sink, plus `.explain("formatted")` plan dumps for the
+  * plans/r06 evidence files.
   *
   * Usage (sbt):
   *   runMain graft.BenchExtra explain <outdir> [suffix] [q1,q2,...]
@@ -20,36 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object BenchExtra {
 
-  private def session(cores: Int, coalesce: Boolean = true): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-extra-$cores")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", coalesce.toString)
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private val DefaultQueries = Seq(
-    "q1_pricing_summary", "j1_inner_join", "j8_asof_join", "w_sessionize",
-    "w_backfill", "w1_topk_per_group", "a1_replicate_summary", "a10_spearman",
-    "f10_zscore_trainonly", "txt_token_stats", "txt_langid", "dd_exact",
-    "dd_ngram_jaccard", "dd_minhash_lsh", "dd_simhash", "ann_brute_topk",
-    "ann_ivf_topk", "sim_lsh_neardup",
-    "dd_line_dedup", "dd_decontaminate", "dd_semantic", "txt_tfidf_topk",
-    "txt_unigram_nll", "txt_quality_classifier",
-    "txt_c4_clean", "txt_gopher_gate", "txt_pii_redact",
-    "m_token_budget_skew", "m_pack_sequences", "m_temperature_sample",
-    "curation_funnel")
-
   def main(args: Array[String]): Unit = {
     val mode = if (args.nonEmpty) args(0) else "time"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -57,10 +25,10 @@ object BenchExtra {
     val draws = sys.env.getOrElse("SPARK_GRAFT_BENCH_DRAWS", "3").toInt
     // corpus mode matches Bench's headline session (coalescing OFF);
     // query modes match Bench part 1 (coalescing ON)
-    val spark = session(cores, coalesce = args.headOption.forall(_ != "corpus"))
+    val spark = Bench.session(cores, coalesce = args.headOption.forall(_ != "corpus"))
 
     def queriesOf(arg: Option[String]): Seq[String] =
-      arg.map(_.split(",").toSeq).getOrElse(DefaultQueries)
+      arg.map(_.split(",").toSeq).getOrElse(Bench.HeadlineQueries)
 
     mode match {
       case "explain" =>
@@ -90,11 +58,7 @@ object BenchExtra {
               val df = fn(spark, sfDir)
               if (mode == "noop")
                 df.write.format("noop").mode("overwrite").save()
-              else {
-                val h = df.columns.map(c => xxhash64(col(c))).reduce(_ bitwiseXOR _)
-                df.select(h.as("__h"))
-                  .agg(count(lit(1)), expr("bit_xor(__h)")).head()
-              }
+              else Bench.hashSink(df)
             } finally graft.operators.Caches.releaseAll()
             (System.nanoTime() - t0) / 1e9
           }
@@ -117,12 +81,7 @@ object BenchExtra {
 
       case "corpus" =>
         val rows = if (args.length > 1) args(1).toLong else 12000000L
-        val path = s"/dev/shm/graft-bench/corpus_$rows"
-        if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
-          val p = graft.corpus.Corpus.Params(rows = rows,
-            entities = math.max(64, (rows / 2000).toInt), partitions = 128)
-          graft.corpus.Corpus.events(spark, p).write.mode("overwrite").parquet(path)
-        }
+        val path = Bench.corpusTable(spark, rows)
         // same timed job + session config as Bench's part-2 headline
         spark.sparkContext.setJobDescription("bench-extra: corpus feature job")
         val ts = (1 to (draws + 1)).map { _ =>

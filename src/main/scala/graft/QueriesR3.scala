@@ -30,129 +30,16 @@ object QueriesR3 {
       s" + 0.254829592) * (1.0/(1.0+0.3275911*(abs($z)/sqrt(2.0))))" +
       s" * exp(-(abs($z)/sqrt(2.0))*(abs($z)/sqrt(2.0))))"
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-
+  val specs: Seq[QuerySpec] = Seq(
     // ---- A13 full: rank-sum p-value (tie-corrected normal approx) ----------
-    "a13_rank_sum_p" -> ((s, d) =>
+    QuerySpec("a13_rank_sum_p", (s, d) =>
       Stats.rankSumTest(
         t(s, d, "lineitem").filter(col("l_returnflag").isin("A", "N")),
         Seq("l_linestatus"), "l_returnflag", "A", "l_quantity")
         .select(col("l_linestatus"), col("n1"), col("n2"),
           round(col("u_stat"), 2).as("u_stat"),
           round(col("z") + 1.7e-8, 4).as("z"),
-          round(col("p_value") + 1.7e-8, 4).as("p_value"))),
-
-    // ---- A13 paired: signed-rank test over (pred, obs) pairs ----------------
-    // d = qty*(1-disc)*(1+tax) - qty: sign varies with tax vs disc, zeros
-    // (tax = disc = 0) exercise the zero-drop path
-    "a13_signed_rank" -> ((s, d) =>
-      Stats.signedRank(
-        t(s, d, "lineitem")
-          .withColumn("pred", col("l_quantity") * (lit(1.0) - col("l_discount"))
-            * (lit(1.0) + col("l_tax")))
-          .withColumn("obs", col("l_quantity")),
-        Seq("l_linestatus"), "pred", "obs")
-        .select(col("l_linestatus"), col("n_nonzero"),
-          round(col("w_stat"), 2).as("w_stat"),
-          round(col("z") + 1.7e-8, 4).as("z"),
-          round(col("p_value") + 1.7e-8, 4).as("p_value"))),
-
-    // ---- A13 exact: small-sample exact Mann-Whitney p (R's default) --------
-    // fixture: nation keys of regions 0 vs 1 — 5 v 5, tie-free, so the
-    // exact path triggers; the oracle recomputes U independently in SQL and
-    // maps it through the PUBLISHED pwilcox(5,5) two-sided table (the same
-    // textbook constants the StatsR3Spec goldens pin)
-    "a13_rank_sum_exact" -> ((s, d) =>
-      Stats.rankSumTestExact(
-        t(s, d, "nation").filter(col("n_regionkey").isin(0, 1))
-          .withColumn("g", lit("all"))
-          .withColumn("cls", when(col("n_regionkey") === 0, "A").otherwise("B"))
-          .withColumn("v", col("n_nationkey").cast("double")),
-        Seq("g"), "cls", "A", "v")
-        .select(col("g"), col("n1"), col("n2"),
-          round(col("u_stat"), 2).as("u_stat"), col("method"),
-          round(col("p_value") + 1.7e-8, 6).as("p_value"))),
-
-    // ---- A12 derived: accuracy/sensitivity/specificity/precision/kappa -----
-    "a12_confusion_stats" -> ((s, d) =>
-      Stats.confusionStats(
-        t(s, d, "orders").withColumn("seg", pmod(col("o_custkey"), lit(3)).cast("int")),
-        Seq("seg"),
-        actual = col("o_orderstatus") === "F",
-        predicted = col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
-        .select(col("seg"), col("tp"), col("fp"), col("fn"), col("tn"),
-          round(col("accuracy") + 1.7e-8, 4).as("accuracy"),
-          round(col("sensitivity") + 1.7e-8, 4).as("sensitivity"),
-          round(col("specificity") + 1.7e-8, 4).as("specificity"),
-          round(col("precision") + 1.7e-8, 4).as("precision"),
-          round(col("kappa") + 1.7e-8, 4).as("kappa"))),
-
-    // ---- A12 multi-class: k-level confusion, one-vs-rest stats, kappa ------
-    // 3-class actual (order status F/O/P) vs a 3-class priority-derived
-    // prediction — the caret-confusionMatrix-on-a-3-level-factor analog.
-    // Epsilon is the house non-grid +1.7e-8 (FeaturePipeline convention),
-    // NOT +1e-7: the round-4 driver run flipped a 4-dp kappa boundary that
-    // the on-grid epsilon mapped values onto (the pe sum itself is now
-    // exact decimal, so every derived double is parallelism-independent)
-    "a12_confusion_multi" -> ((s, d) =>
-      Stats.confusionMulti(
-        t(s, d, "orders").withColumn("seg", pmod(col("o_custkey"), lit(2)).cast("int")),
-        Seq("seg"),
-        actual = col("o_orderstatus"),
-        predicted = when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "F")
-          .when(col("o_orderpriority") === "3-MEDIUM", "P")
-          .otherwise("O"))
-        .select(col("seg"), col("cls"), col("tp"), col("n_actual"),
-          col("n_predicted"),
-          round(col("sensitivity") + 1.7e-8, 4).as("sensitivity"),
-          round(col("specificity") + 1.7e-8, 4).as("specificity"),
-          round(col("precision") + 1.7e-8, 4).as("precision"),
-          round(col("f1") + 1.7e-8, 4).as("f1"),
-          round(col("balanced_accuracy") + 1.7e-8, 4).as("balanced_accuracy"),
-          round(col("accuracy") + 1.7e-8, 4).as("accuracy"),
-          round(col("kappa") + 1.7e-8, 4).as("kappa"))),
-
-    // ---- A13 multiple testing: p.adjust (bonferroni/holm/BH) + stars -------
-    // the reference sweeps per-drug wilcox tests and feeds them through
-    // adjust_pvalue/add_significance (Fig-2C_D_plot_univariate.R:144-145);
-    // here the family is lang, the raw p a deterministic grid both engines
-    // derive identically, and all three adjustments + the rstatix star
-    // labels are replayed in SQL windows
-    "a13_p_adjust" -> ((s, d) => {
-      val t0 = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          ((col("doc_id") * 7919 % 1000) + 1).cast("double")./(1000.0)
-            .as("p_raw"))
-      val adj = Seq(("BH", "p_bh"), ("holm", "p_holm"),
-          ("bonferroni", "p_bonf"), ("hochberg", "p_hoch"), ("BY", "p_by"))
-        .foldLeft(t0) { case (df, (m, c)) =>
-          Stats.adjustPValues(df, Seq("lang"), "p_raw", m, c) }
-      adj.withColumn("signif", Stats.significance(col("p_raw")))
-        .select(col("doc_id"), col("lang"),
-          round(col("p_raw") + 1.7e-8, 4).as("p_raw"),
-          round(col("p_bh") + 1.7e-8, 4).as("p_bh"),
-          round(col("p_holm") + 1.7e-8, 4).as("p_holm"),
-          round(col("p_bonf") + 1.7e-8, 4).as("p_bonf"),
-          round(col("p_hoch") + 1.7e-8, 4).as("p_hoch"),
-          round(col("p_by") + 1.7e-8, 4).as("p_by"),
-          col("signif"))
-    }),
-
-    // ---- A9 variant: z-normalized RMSE (train-only scaling of both sides) --
-    "a9_zrmse" -> ((s, d) =>
-      Stats.zRmse(
-        t(s, d, "lineitem")
-          .withColumn("pred", col("l_quantity") * (lit(1.0) - col("l_discount")))
-          .withColumn("obs", col("l_quantity")),
-        Seq("l_returnflag"), "pred", "obs",
-        trainPred = col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("l_returnflag"), round(col("rmse_z") + 1.7e-8, 4).as("rmse_z"),
-          round(col("mae_z") + 1.7e-8, 4).as("mae_z"),
-          round(col("pearson") + 1.7e-8, 4).as("pearson"), col("n")))
-  )
-
-  val oracle: Map[String, String] = Map(
-    "a13_rank_sum_p" ->
+          round(col("p_value") + 1.7e-8, 4).as("p_value")),
       s"""WITH f AS (SELECT l_linestatus, l_returnflag, l_quantity FROM lineitem
             WHERE l_returnflag IN ('A', 'N')),
           r AS (SELECT l_linestatus, l_returnflag,
@@ -178,8 +65,22 @@ object QueriesR3 {
           SELECT l_linestatus, n1, n2, round(u_stat, 2) AS u_stat,
             round(z + 1.7e-8, 4) AS z,
             round(${pSql("z")} + 1.7e-8, 4) AS p_value
-          FROM zc""",
-    "a13_signed_rank" ->
+          FROM zc"""),
+
+    // ---- A13 paired: signed-rank test over (pred, obs) pairs ----------------
+    // d = qty*(1-disc)*(1+tax) - qty: sign varies with tax vs disc, zeros
+    // (tax = disc = 0) exercise the zero-drop path
+    QuerySpec("a13_signed_rank", (s, d) =>
+      Stats.signedRank(
+        t(s, d, "lineitem")
+          .withColumn("pred", col("l_quantity") * (lit(1.0) - col("l_discount"))
+            * (lit(1.0) + col("l_tax")))
+          .withColumn("obs", col("l_quantity")),
+        Seq("l_linestatus"), "pred", "obs")
+        .select(col("l_linestatus"), col("n_nonzero"),
+          round(col("w_stat"), 2).as("w_stat"),
+          round(col("z") + 1.7e-8, 4).as("z"),
+          round(col("p_value") + 1.7e-8, 4).as("p_value")),
       s"""WITH d0 AS (SELECT l_linestatus,
               l_quantity * (1.0 - l_discount) * (1.0 + l_tax) - l_quantity AS d
             FROM lineitem),
@@ -203,8 +104,23 @@ object QueriesR3 {
           SELECT l_linestatus, n_nonzero, round(w_stat, 2) AS w_stat,
             round(z + 1.7e-8, 4) AS z,
             round(${pSql("z")} + 1.7e-8, 4) AS p_value
-          FROM zc""",
-    "a13_rank_sum_exact" ->
+          FROM zc"""),
+
+    // ---- A13 exact: small-sample exact Mann-Whitney p (R's default) --------
+    // fixture: nation keys of regions 0 vs 1 — 5 v 5, tie-free, so the
+    // exact path triggers; the oracle recomputes U independently in SQL and
+    // maps it through the PUBLISHED pwilcox(5,5) two-sided table (the same
+    // textbook constants the StatsR3Spec goldens pin)
+    QuerySpec("a13_rank_sum_exact", (s, d) =>
+      Stats.rankSumTestExact(
+        t(s, d, "nation").filter(col("n_regionkey").isin(0, 1))
+          .withColumn("g", lit("all"))
+          .withColumn("cls", when(col("n_regionkey") === 0, "A").otherwise("B"))
+          .withColumn("v", col("n_nationkey").cast("double")),
+        Seq("g"), "cls", "A", "v")
+        .select(col("g"), col("n1"), col("n2"),
+          round(col("u_stat"), 2).as("u_stat"), col("method"),
+          round(col("p_value") + 1.7e-8, 6).as("p_value")),
       """WITH f AS (SELECT CASE WHEN n_regionkey = 0 THEN 'A' ELSE 'B' END AS cls,
              CAST(n_nationkey AS DOUBLE) AS v
            FROM nation WHERE n_regionkey IN (0, 1)),
@@ -226,8 +142,21 @@ object QueriesR3 {
               WHEN 8 THEN 0.42063492063492064 WHEN 9 THEN 0.5476190476190477
               WHEN 10 THEN 0.6904761904761905 WHEN 11 THEN 0.8412698412698413
               ELSE 1.0 END + 1.7e-8, 6) AS p_value
-          FROM k""",
-    "a12_confusion_stats" ->
+          FROM k"""),
+
+    // ---- A12 derived: accuracy/sensitivity/specificity/precision/kappa -----
+    QuerySpec("a12_confusion_stats", (s, d) =>
+      Stats.confusionStats(
+        t(s, d, "orders").withColumn("seg", pmod(col("o_custkey"), lit(3)).cast("int")),
+        Seq("seg"),
+        actual = col("o_orderstatus") === "F",
+        predicted = col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
+        .select(col("seg"), col("tp"), col("fp"), col("fn"), col("tn"),
+          round(col("accuracy") + 1.7e-8, 4).as("accuracy"),
+          round(col("sensitivity") + 1.7e-8, 4).as("sensitivity"),
+          round(col("specificity") + 1.7e-8, 4).as("specificity"),
+          round(col("precision") + 1.7e-8, 4).as("precision"),
+          round(col("kappa") + 1.7e-8, 4).as("kappa")),
       """WITH b AS (SELECT CAST(o_custkey % 3 AS INTEGER) AS seg,
             (o_orderstatus = 'F') AS act,
             (o_orderpriority IN ('1-URGENT', '2-HIGH')) AS prd FROM orders),
@@ -249,8 +178,32 @@ object QueriesR3 {
             round(tn / CAST(tn + fp AS DOUBLE) + 1.7e-8, 4) AS specificity,
             round(tp / CAST(tp + fp AS DOUBLE) + 1.7e-8, 4) AS precision,
             round((po - pe) / (1.0 - pe) + 1.7e-8, 4) AS kappa
-          FROM k""",
-    "a12_confusion_multi" ->
+          FROM k"""),
+
+    // ---- A12 multi-class: k-level confusion, one-vs-rest stats, kappa ------
+    // 3-class actual (order status F/O/P) vs a 3-class priority-derived
+    // prediction — the caret-confusionMatrix-on-a-3-level-factor analog.
+    // Epsilon is the house non-grid +1.7e-8 (FeaturePipeline convention),
+    // NOT +1e-7: the round-4 oracle run flipped a 4-dp kappa boundary that
+    // the on-grid epsilon mapped values onto (the pe sum itself is now
+    // exact decimal, so every derived double is parallelism-independent)
+    QuerySpec("a12_confusion_multi", (s, d) =>
+      Stats.confusionMulti(
+        t(s, d, "orders").withColumn("seg", pmod(col("o_custkey"), lit(2)).cast("int")),
+        Seq("seg"),
+        actual = col("o_orderstatus"),
+        predicted = when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "F")
+          .when(col("o_orderpriority") === "3-MEDIUM", "P")
+          .otherwise("O"))
+        .select(col("seg"), col("cls"), col("tp"), col("n_actual"),
+          col("n_predicted"),
+          round(col("sensitivity") + 1.7e-8, 4).as("sensitivity"),
+          round(col("specificity") + 1.7e-8, 4).as("specificity"),
+          round(col("precision") + 1.7e-8, 4).as("precision"),
+          round(col("f1") + 1.7e-8, 4).as("f1"),
+          round(col("balanced_accuracy") + 1.7e-8, 4).as("balanced_accuracy"),
+          round(col("accuracy") + 1.7e-8, 4).as("accuracy"),
+          round(col("kappa") + 1.7e-8, 4).as("kappa")),
       """WITH b AS (SELECT CAST(o_custkey % 2 AS INTEGER) AS seg,
             o_orderstatus AS a,
             CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'F'
@@ -258,8 +211,8 @@ object QueriesR3 {
                  ELSE 'O' END AS p
           FROM orders),
           cells AS (SELECT seg, a, p, count(*) AS n FROM b GROUP BY 1, 2, 3),
-          acts AS (SELECT seg, a AS cls, sum(n) AS n_actual FROM cells GROUP BY 1, 2),
-          prds AS (SELECT seg, p AS cls, sum(n) AS n_predicted FROM cells GROUP BY 1, 2),
+          acts AS (SELECT seg, a AS cls, CAST(sum(n) AS BIGINT) AS n_actual FROM cells GROUP BY 1, 2),
+          prds AS (SELECT seg, p AS cls, CAST(sum(n) AS BIGINT) AS n_predicted FROM cells GROUP BY 1, 2),
           tps AS (SELECT seg, a AS cls, n AS tp FROM cells WHERE a = p),
           tots AS (SELECT seg, sum(n) AS ntot,
               sum(CASE WHEN a = p THEN n ELSE 0 END) AS diag
@@ -295,8 +248,33 @@ object QueriesR3 {
               AS balanced_accuracy,
             round(diag / CAST(ntot AS DOUBLE) + 1.7e-8, 4) AS accuracy,
             round((diag / CAST(ntot AS DOUBLE) - pe) / (1.0 - pe) + 1.7e-8, 4) AS kappa
-          FROM k""",
-    "a13_p_adjust" ->
+          FROM k"""),
+
+    // ---- A13 multiple testing: p.adjust (bonferroni/holm/BH) + stars -------
+    // the reference sweeps per-drug wilcox tests and feeds them through
+    // adjust_pvalue/add_significance (Fig-2C_D_plot_univariate.R:144-145);
+    // here the family is lang, the raw p a deterministic grid both engines
+    // derive identically, and all three adjustments + the rstatix star
+    // labels are replayed in SQL windows
+    QuerySpec("a13_p_adjust", (s, d) => {
+      val t0 = t(s, d, "documents")
+        .select(col("doc_id"), col("lang"),
+          ((col("doc_id") * 7919 % 1000) + 1).cast("double")./(1000.0)
+            .as("p_raw"))
+      val adj = Seq(("BH", "p_bh"), ("holm", "p_holm"),
+          ("bonferroni", "p_bonf"), ("hochberg", "p_hoch"), ("BY", "p_by"))
+        .foldLeft(t0) { case (df, (m, c)) =>
+          Stats.adjustPValues(df, Seq("lang"), "p_raw", m, c) }
+      adj.withColumn("signif", Stats.significance(col("p_raw")))
+        .select(col("doc_id"), col("lang"),
+          round(col("p_raw") + 1.7e-8, 4).as("p_raw"),
+          round(col("p_bh") + 1.7e-8, 4).as("p_bh"),
+          round(col("p_holm") + 1.7e-8, 4).as("p_holm"),
+          round(col("p_bonf") + 1.7e-8, 4).as("p_bonf"),
+          round(col("p_hoch") + 1.7e-8, 4).as("p_hoch"),
+          round(col("p_by") + 1.7e-8, 4).as("p_by"),
+          col("signif"))
+    },
       """WITH t AS (SELECT doc_id, lang,
             ((doc_id * 7919) % 1000 + 1) / 1000.0 AS p_raw FROM documents),
           w AS (SELECT doc_id, lang, p_raw,
@@ -322,8 +300,19 @@ object QueriesR3 {
             CASE WHEN p_raw <= 0.0001 THEN '****' WHEN p_raw <= 0.001 THEN '***'
                  WHEN p_raw <= 0.01 THEN '**' WHEN p_raw <= 0.05 THEN '*'
                  ELSE 'ns' END AS signif
-          FROM a""",
-    "a9_zrmse" ->
+          FROM a"""),
+
+    // ---- A9 variant: z-normalized RMSE (train-only scaling of both sides) --
+    QuerySpec("a9_zrmse", (s, d) =>
+      Stats.zRmse(
+        t(s, d, "lineitem")
+          .withColumn("pred", col("l_quantity") * (lit(1.0) - col("l_discount")))
+          .withColumn("obs", col("l_quantity")),
+        Seq("l_returnflag"), "pred", "obs",
+        trainPred = col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
+        .select(col("l_returnflag"), round(col("rmse_z") + 1.7e-8, 4).as("rmse_z"),
+          round(col("mae_z") + 1.7e-8, 4).as("mae_z"),
+          round(col("pearson") + 1.7e-8, 4).as("pearson"), col("n")),
       """WITH t AS (SELECT l_returnflag,
             l_quantity * (1.0 - l_discount) AS pred, l_quantity AS obs,
             l_shipdate FROM lineitem),
@@ -336,6 +325,5 @@ object QueriesR3 {
             round(sqrt(avg((pz - oz) * (pz - oz))) + 1.7e-8, 4) AS rmse_z,
             round(avg(abs(pz - oz)) + 1.7e-8, 4) AS mae_z,
             round(corr(pz, oz) + 1.7e-8, 4) AS pearson, count(*) AS n
-          FROM z GROUP BY 1"""
-  )
+          FROM z GROUP BY 1"""))
 }

@@ -61,67 +61,19 @@ object QueriesR4 {
     }
   }
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- DD: cross-document line dedup (CCNet boilerplate removal) ---------
-    "dd_line_dedup" -> ((s, d) =>
-      Dedup.dedupLines(
-        t(s, d, "documents").select(col("doc_id"),
-          linedTextFast(col("text")).as("text")),
-        "doc_id", "text", sep = "\n", maxDocs = 1)),
-
-    // ---- DD: benchmark decontamination (n-gram overlap vs eval set) --------
-    // deterministic eval split: every 37th doc is "benchmark", the rest
-    // "train"; a train doc sharing any distinct 4-gram with the benchmark
-    // set is flagged with its hit count
-    "dd_decontaminate" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      Dedup.decontaminate(
-        docs.filter(pmod(col("doc_id"), lit(37)) =!= 0),
-        docs.filter(pmod(col("doc_id"), lit(37)) === 0),
-        "doc_id", "text", n = 4)
-    }),
-
-    // ---- DD: semantic dedup over embeddings (SemDeDup) ----------------------
-    "dd_semantic" -> ((s, d) =>
-      Similarity.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
-        nlist = 16, minCos = 0.3)),
-
-    // ---- DD: SemDeDup over TRAINED k-means centroids -------------------------
-    // the production path: centroids come from Similarity.kmeansCentroids
-    // (offline Lloyd over the corpus) instead of the smallest-id
-    // convention. The trained centroids are engine-local (float sums), so
-    // they are DUMPED — like the LSH plane weights — and the oracle replays
-    // the whole downstream (cell assignment argmax, within-cell pair join,
-    // min-id survivor) over the dump, pinning the trained-centroid path
-    // cross-engine, not just the convention
-    "dd_semantic_kmeans" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-        k = 16, iters = 3)
-      Dumps.write(cents, "kmeans_cents")
-      Similarity.semanticDedup(emb, "vec_id", "embedding",
-        nlist = 16, minCos = 0.3, centroids = Some(cents))
-    }),
-
-    // ---- TXT: top-k TF-IDF terms per document --------------------------------
-    "txt_tfidf_topk" -> ((s, d) =>
-      Terms.tfidfTopK(t(s, d, "documents"), "doc_id", "text", k = 5)),
-
-    // ---- TXT: unigram-LM quality proxy (CCNet perplexity bucketing) ---------
-    "txt_unigram_nll" -> ((s, d) =>
-      Terms.unigramLogProb(t(s, d, "documents"), "doc_id", "text"))
-  )
-
   /** Shared SQL fragment: whitespace tokens per document. */
   private val ToksCte: String =
     """toks AS (SELECT doc_id,
       |  list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
       |  FROM documents)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-
-    "dd_line_dedup" ->
+  val specs: Seq[QuerySpec] = Seq(
+    // ---- DD: cross-document line dedup (CCNet boilerplate removal) ---------
+    QuerySpec("dd_line_dedup", (s, d) =>
+      Dedup.dedupLines(
+        t(s, d, "documents").select(col("doc_id"),
+          linedTextFast(col("text")).as("text")),
+        "doc_id", "text", sep = "\n", maxDocs = 1),
       s"""WITH $ToksCte,
          |l2 AS (SELECT doc_id,
          |    unnest(generate_series(0, CAST(floor((len(tk)-1)/4.0) AS INT))) AS pos,
@@ -142,9 +94,19 @@ object QueriesR4 {
          |  coalesce(reb.clean_text, '') AS clean_text,
          |  coalesce(reb.n_kept, 0) AS n_kept,
          |  c.n_lines - coalesce(reb.n_kept, 0) AS n_removed
-         |FROM cnt c LEFT JOIN reb USING (doc_id)""".stripMargin,
+         |FROM cnt c LEFT JOIN reb USING (doc_id)""".stripMargin),
 
-    "dd_decontaminate" ->
+    // ---- DD: benchmark decontamination (n-gram overlap vs eval set) --------
+    // deterministic eval split: every 37th doc is "benchmark", the rest
+    // "train"; a train doc sharing any distinct 4-gram with the benchmark
+    // set is flagged with its hit count
+    QuerySpec("dd_decontaminate", (s, d) => {
+      val docs = t(s, d, "documents")
+      Dedup.decontaminate(
+        docs.filter(pmod(col("doc_id"), lit(37)) =!= 0),
+        docs.filter(pmod(col("doc_id"), lit(37)) === 0),
+        "doc_id", "text", n = 4)
+    },
       s"""WITH $ToksCte,
          |grams AS (SELECT DISTINCT doc_id,
          |    unnest(list_transform(generate_series(1, len(tk) - 3),
@@ -154,9 +116,12 @@ object QueriesR4 {
          |SELECT g.doc_id, count(*) AS n_hit_grams
          |FROM grams g JOIN bench USING (gram)
          |WHERE g.doc_id % 37 <> 0
-         |GROUP BY 1 HAVING count(*) >= 1""".stripMargin,
+         |GROUP BY 1 HAVING count(*) >= 1""".stripMargin),
 
-    "dd_semantic" ->
+    // ---- DD: semantic dedup over embeddings (SemDeDup) ----------------------
+    QuerySpec("dd_semantic", (s, d) =>
+      Similarity.semanticDedup(t(s, d, "embeddings"), "vec_id", "embedding",
+        nlist = 16, minCos = 0.3),
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings),
         |cents AS (SELECT vec_id AS cent_id, v AS cv FROM e
@@ -180,9 +145,24 @@ object QueriesR4 {
         |       sqrt(list_dot_product(eb.v, eb.v))), 6) >= 0.3
         |  GROUP BY 1)
         |SELECT c.vec_id, c.cell, d.dup_of, d.dup_of IS NULL AS kept
-        |FROM cell c LEFT JOIN dup d USING (vec_id)""".stripMargin,
+        |FROM cell c LEFT JOIN dup d USING (vec_id)""".stripMargin),
 
-    "dd_semantic_kmeans" ->
+    // ---- DD: SemDeDup over TRAINED k-means centroids -------------------------
+    // the production path: centroids come from Similarity.kmeansCentroids
+    // (offline Lloyd over the corpus) instead of the smallest-id
+    // convention. The trained centroids are engine-local (float sums), so
+    // they are DUMPED — like the LSH plane weights — and the oracle replays
+    // the whole downstream (cell assignment argmax, within-cell pair join,
+    // min-id survivor) over the dump, pinning the trained-centroid path
+    // cross-engine, not just the convention
+    QuerySpec("dd_semantic_kmeans", (s, d) => {
+      val emb = t(s, d, "embeddings")
+      val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
+        k = 16, iters = 3)
+      Dumps.write(cents, "kmeans_cents")
+      Similarity.semanticDedup(emb, "vec_id", "embedding",
+        nlist = 16, minCos = 0.3, centroids = Some(cents))
+    },
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          |  FROM embeddings),
          |cents AS (SELECT cent_id, CAST(cent_v AS DOUBLE[]) AS cv
@@ -206,9 +186,11 @@ object QueriesR4 {
          |       sqrt(list_dot_product(eb.v, eb.v))), 6) >= 0.3
          |  GROUP BY 1)
          |SELECT c.vec_id, c.cell, d.dup_of, d.dup_of IS NULL AS kept
-         |FROM cell c LEFT JOIN dup d USING (vec_id)""".stripMargin,
+         |FROM cell c LEFT JOIN dup d USING (vec_id)""".stripMargin),
 
-    "txt_tfidf_topk" ->
+    // ---- TXT: top-k TF-IDF terms per document --------------------------------
+    QuerySpec("txt_tfidf_topk", (s, d) =>
+      Terms.tfidfTopK(t(s, d, "documents"), "doc_id", "text", k = 5),
       s"""WITH $ToksCte,
          |tok AS (SELECT doc_id, unnest(tk) AS term FROM toks),
          |tfc AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -218,14 +200,16 @@ object QueriesR4 {
          |    round(tf * (ln((nd + 1) / (df + 1)) + 1), 6) AS tfidf
          |  FROM tfc JOIN dfc USING (term) CROSS JOIN n)
          |SELECT doc_id, term, tf, df, tfidf,
-         |  row_number() OVER (PARTITION BY doc_id
-         |    ORDER BY tfidf DESC, term) AS rk
-         |FROM scored QUALIFY rk <= 5""".stripMargin,
+         |  CAST(row_number() OVER (PARTITION BY doc_id
+         |    ORDER BY tfidf DESC, term) AS INTEGER) AS rk
+         |FROM scored QUALIFY rk <= 5""".stripMargin),
 
-    // q mirrors the engine's per-term fixed-point quantization (1e-9 grid,
-    // HALF_UP == DuckDB round-away-from-zero); the doc sum is then exact
-    // integer arithmetic in both engines, so summation order cannot move it
-    "txt_unigram_nll" ->
+    // ---- TXT: unigram-LM quality proxy (CCNet perplexity bucketing) ---------
+    QuerySpec("txt_unigram_nll", (s, d) =>
+      Terms.unigramLogProb(t(s, d, "documents"), "doc_id", "text"),
+      // q mirrors the engine's per-term fixed-point quantization (1e-9 grid,
+      // HALF_UP == DuckDB round-away-from-zero); the doc sum is then exact
+      // integer arithmetic in both engines, so summation order cannot move it
       s"""WITH $ToksCte,
          |tok AS (SELECT doc_id, unnest(tk) AS term FROM toks),
          |tfc AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -236,8 +220,7 @@ object QueriesR4 {
          |SELECT doc_id,
          |  round(-CAST(sum(CAST(tf AS HUGEINT) * q) AS DOUBLE) / 1e9
          |    / CAST(sum(tf) AS DOUBLE) + 1.7e-8, 6) AS nll,
-         |  sum(tf) AS n_tokens
+         |  CAST(sum(tf) AS BIGINT) AS n_tokens
          |FROM tfc JOIN lq USING (term)
-         |GROUP BY 1""".stripMargin
-  )
+         |GROUP BY 1""".stripMargin))
 }

@@ -1,6 +1,13 @@
 package graft
+import scala.collection.immutable.VectorMap
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+
+/** One registered query: its Spark form (session, testdata dir) and the
+  * DuckDB SQL that must return the same rows over the same parquet tables. */
+final case class QuerySpec(name: String, run: (SparkSession, String) => DataFrame,
+    oracle: String)
+
+/** Entry points: the flagship job and the query registry (SURVEY.md §7). */
 object SparkEntry {
   /** Flagship: synthesize the image+caption corpus, build per-entity×timestamp
     * feature vectors (lag/backfill/session/dim-broadcast), attach them to
@@ -9,15 +16,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.features.FeaturePipeline.flagship(
       spark, graft.corpus.Corpus.Params(rows = 2000L, entities = 20))
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    QueriesRel.all ++ QueriesAgg.all ++ QueriesText.all ++ QueriesCorpus.all ++
-      QueriesMisc.all ++ QueriesExt.all ++ QueriesR3.all ++ QueriesR4.all ++
-      QueriesR5.all
+
+  /** The query registry: one entry per implemented operator from SURVEY.md
+    * §2, each with its oracle, in run order. */
+  val specs: Seq[QuerySpec] = checked(
+    QueriesRel.specs ++ QueriesAgg.specs ++ QueriesText.specs ++
+      QueriesCorpus.specs ++ QueriesMisc.specs ++ QueriesExt.specs ++
+      QueriesR3.specs ++ QueriesR4.specs ++ QueriesR5.specs)
+
+  /** `specs` unchanged, or an IllegalStateException naming every query whose
+    * name is taken twice or whose oracle is empty. */
+  private[graft] def checked(specs: Seq[QuerySpec]): Seq[QuerySpec] = {
+    val names = specs.map(_.name)
+    val problems = names.diff(names.distinct).distinct.map(n => s"duplicate query name $n") ++
+      specs.filter(q => q.oracle == null || q.oracle.trim.isEmpty)
+        .map(q => s"query ${q.name} has an empty oracle")
+    if (problems.nonEmpty)
+      throw new IllegalStateException("query registry: " + problems.mkString("; "))
+    specs
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    VectorMap.from(specs.map(q => q.name -> q.run))
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    QueriesRel.oracle ++ QueriesAgg.oracle ++ QueriesText.oracle ++
-      QueriesMisc.oracle ++ QueriesCorpus.oracle ++ QueriesExt.oracle ++
-      QueriesR3.oracle ++ QueriesR4.oracle ++ QueriesR5.oracle
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] = VectorMap.from(specs.map(q => q.name -> q.oracle))
 }

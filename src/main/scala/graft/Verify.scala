@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.collection.immutable.VectorMap
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare (tools/compare.py) and
+  * verify_errors.json for the queries that failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -16,15 +18,30 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     Dumps.enabled = true // oracle dumps are part of the Verify contract only
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally graft.operators.Caches.releaseAll()
-    }
+    runQueries(spark, sfDir, outDir, SparkEntry.queries)
     writeOracleSql(outDir, SparkEntry.oracleSql)
     spark.stop()
+  }
+
+  /** Runs each query, in map order, into `outDir/<name>` (one parquet file)
+    * and writes `outDir/verify_errors.json`: name -> message of every query
+    * that threw, `{}` when all pass. Returns that record.
+    */
+  def runQueries(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Map[String, String] = {
+    val errors = queries.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[verify] $name failed: $msg")
+        Some(name -> msg)
+      } finally graft.operators.Caches.releaseAll()
+    }
+    val record = VectorMap.from(errors)
+    Files.write(Paths.get(outDir, "verify_errors.json"), Json.mapper.writeValueAsBytes(record))
+    record
   }
 
   /** `outDir/oracle_sql.json`: query name -> oracle SQL, one JSON object.

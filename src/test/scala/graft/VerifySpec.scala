@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 class VerifySpec extends AnyFunSuite {
@@ -16,5 +18,24 @@ class VerifySpec extends AnyFunSuite {
     val tree = Json.mapper.readTree(text)
     assert(tree.size == sql.size)
     sql.foreach { case (k, v) => assert(tree.get(k).asText == v) }
+  }
+
+  test("runQueries records each failing query in verify_errors.json ({} if none) and writes the rest") {
+    val spark = SparkTestSession.spark
+    val dir = Files.createTempDirectory("graft-verify-run").toString
+    val queries = VectorMap[String, (SparkSession, String) => DataFrame](
+      "ok" -> ((s, _) => s.range(3).toDF("id")),
+      "boom" -> ((_, _) => throw new IllegalStateException("planted failure")))
+    val errors = Verify.runQueries(spark, "unused", dir, queries)
+    assert(errors == Map("boom" -> "planted failure"))
+    val tree = Json.mapper.readTree(Files.readString(Paths.get(dir, "verify_errors.json")))
+    assert(tree.size == 1 && tree.get("boom").asText == "planted failure")
+    val out = spark.read.parquet(s"$dir/ok")
+    assert(out.inputFiles.length == 1)
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+    assert(!Files.exists(Paths.get(dir, "boom")))
+    val okDir = Files.createTempDirectory("graft-verify-ok").toString
+    assert(Verify.runQueries(spark, "unused", okDir, queries.take(1)).isEmpty)
+    assert(Files.readString(Paths.get(okDir, "verify_errors.json")) == "{}")
   }
 }

@@ -6,7 +6,10 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 Runs every oracle SQL from <verifyOutDir>/oracle_sql.json against DuckDB
 views over <sfDir>/*.parquet and compares to the Spark parquet dumps under
 <verifyOutDir>/<name>/. Reports EXACT (hash-safe), CLOSE (float-tolerance
-only — would likely fail a strict hash), or MISMATCH per query.
+only — would likely fail a strict hash), or MISMATCH per query. Column types
+count too: a column whose DuckDB type differs from the Spark parquet's (e.g.
+HUGEINT from an uncast sum of BIGINT) is TYPE-MISMATCH, even when its values
+are equal.
 
 Dev tool only — the engine itself is pure Scala/Spark.
 """
@@ -59,18 +62,25 @@ def main():
             n_bad += 1
             continue
         try:
-            duck = con.execute(sql)
-            dcols = [c[0] for c in duck.description]
+            duck = con.sql(sql)
+            dcols, dtypes = duck.columns, duck.types
             drows = duck.fetchall()
         except Exception as e:
             print(f"{name:28s} ORACLE-ERROR {e}")
             n_bad += 1
             continue
-        sq = con.execute(f"SELECT * FROM read_parquet('{outdir}/{name}/*.parquet')")
-        scols = [c[0] for c in sq.description]
+        sq = con.sql(f"SELECT * FROM read_parquet('{outdir}/{name}/*.parquet')")
+        scols, stypes = sq.columns, sq.types
         srows = sq.fetchall()
         if sorted(scols) != sorted(dcols):
             print(f"{name:28s} SCHEMA-MISMATCH spark={sorted(scols)} duck={sorted(dcols)}")
+            n_bad += 1
+            continue
+        dtype = dict(zip(dcols, map(str, dtypes)))
+        badtypes = [f"{c}: spark={t} duck={dtype[c]}"
+                    for c, t in zip(scols, map(str, stypes)) if t != dtype[c]]
+        if badtypes:
+            print(f"{name:28s} TYPE-MISMATCH " + "; ".join(badtypes))
             n_bad += 1
             continue
         s, _ = canon(srows, scols)
