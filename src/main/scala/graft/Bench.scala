@@ -1,22 +1,26 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.corpus.Corpus
 import graft.features.FeaturePipeline
 
-/** Benchmark main. Prints ONE JSON line:
+/** The bench harness. With no argument it runs the driver protocol and
+  * prints ONE JSON line (also written to `BENCH.json` in the working
+  * directory, with the scaling tables in `BENCH.md` beside it):
   * {"metric":"feature_rows_per_sec","value":N,"unit":"rows/sec",
-  *  "queries":{...per-query sec...},"sf":dir, "scaling":{...}}
+  *  "queries":{...per-query sec...},"sf":dir,"scaling":{...},...}
   *
-  * Two parts:
+  * Driver protocol:
   *  1. headline testdata queries at SPARK_GRAFT_SF_DIR (driver contract);
   *  2. the BASELINE.json metric: entity×timestamp feature rows/sec over the
-  *     image+caption corpus, measured at TWO parallelism levels (local[N]
-  *     and local[4N]) on the SAME input — the sandbox stand-in for the
-  *     north_rule's N-vs-4N-executor cluster scaling (no real cluster
-  *     here), with efficiency = (T_N / T_4N) / 4.
+  *     image+caption corpus at full machine parallelism, then the same job
+  *     at TWO parallelism levels (local[N] and local[4N]) on the SAME input
+  *     — the sandbox stand-in for the north_rule's N-vs-4N-executor cluster
+  *     scaling (no real cluster here), with efficiency = (T_N / T_4N) / 4;
+  *  3. the same pair with real executor JVMs (spark-submit local-cluster).
   *
   * Measurement protocol (each choice exists because its absence skewed a
   * round-1 measurement):
@@ -42,7 +46,17 @@ import graft.features.FeaturePipeline
   *    the cross-level determinism check;
   *  - shuffle scratch lives on tmpfs: the one resource a real cluster
   *    would NOT share across executors is this box's scratch disk.
-  * Also writes the human-readable scaling table to BENCH.md.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
+  * (default 32), SPARK_GRAFT_BENCH_ROWS (12000000), SPARK_GRAFT_BENCH_REPS
+  * (4), SPARK_GRAFT_BENCH_VISITS (2), SPARK_GRAFT_MULTIJVM (1 = run part 3).
+  *
+  * Other modes (sbt `runMain graft.Bench <mode> ...`):
+  *   explain <outdir> [suffix] [q1,q2,...]  `.explain("formatted")` plan dumps
+  *   time [q1,q2,...]                       part-1 timing, hash sink
+  *   noop [q1,q2,...]                       part-1 timing, noop sink
+  *   corpus [rows]                          the corpus job at SPARK_GRAFT_CPUS
+  *   cluster path rows reps warmPath        one multi-JVM visit (spark-submit)
   */
 object Bench {
 
@@ -67,34 +81,76 @@ object Bench {
 
   private val CorpusShufflePartitions = 128
 
-  /** `coalesce` (AQE partition coalescing) is ON for the part-1 headline
-    * queries — Spark's production default, and exactly what absorbs the
+  /** tmpfs scratch root: corpus tables, the classes jar, Spark's local dir. */
+  private val Scratch = "/dev/shm"
+  private val BenchDir = s"$Scratch/graft-bench"
+
+  // Scaling pair: N=2 vs 4N=8, both inside the 32-core box's LINEAR region
+  // for BOTH resources a Spark job consumes. Raw-CPU calibration
+  // (tools/cpu_calibrate.py): 4->16 process scaling 0.98 but 8->32 only
+  // 0.84. Memory-BANDWIDTH calibration (tools/mem_calibrate.py): one shared
+  // controller saturates at ~45-55 GB/s — 4->16 bandwidth scaling
+  // 0.41-0.53, 2->8 scaling 0.76-0.79. The multi-JVM pair uses the same
+  // core counts (1 x 2 vs 4 x 2), which makes the thread pair its twin.
+  private val SmallCores = 2
+  private val BigCores = 8
+  private val MasterSmall = "local-cluster[1,2,8192]"
+  private val MasterBig = "local-cluster[4,2,8192]"
+  /** Bounded stall-recovery visits of the thread pair. */
+  private val ScaleMaxExtra = 2
+  // 3 timed reps per multi-JVM submit: with ONE visit (r4 ran 3 and the
+  // bench exceeded the driver's wall budget — rc 124, NO artifact), 3 draws
+  // per level still yield a true median-of-3 co-estimator; the twin-based
+  // recovery extends a contaminated level by up to MultiJvmMaxExtra visits
+  private val MultiJvmReps = 3
+  private val MultiJvmVisits = 1
+  private val MultiJvmMaxExtra = 2
+  // Wall budget (round 5): the driver kills the bench at a fixed wall cap
+  // (r4 died there with NO artifact). Work after the first thread-pair visit
+  // never STARTS past a deadline, dropping lowest-priority evidence first
+  // while the artifact stays complete and parseable; a clean full protocol
+  // is ~17 min on the 32-core box, so the trim costs nothing on a quiet
+  // window.
+  private val WallBudgetSec = 1200L
+  /** Timed draws per query after its warm run (min reported). */
+  private val Draws = 3
+  private val ClusterMarker = "GRAFT_CLUSTER_RESULT"
+  private val SparkSubmit = "/opt/spark/bin/spark-submit"
+  // the driver contract: testdata directory and full-machine parallelism
+  private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private def maxCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Spark settings of every bench session, local or spark-submitted.
+    * `coalesce` (AQE partition coalescing) is ON for the headline queries —
+    * Spark's production default, and exactly what absorbs the
     * fixed-128-reducer task overhead on exchange-heavy queries whose
     * intermediates are small (dd_ngram_jaccard's posting list at sf0.1 is
     * 260k rows; 128 tasks x ~10 stages was pure scheduling cost, measured
-    * 3.5 s -> 1.5 s) — and OFF for the scaling-pair runs, where both levels
-    * must execute the identical task layout (coalescing would shrink
-    * partitions to the data and give the small level proportionally fewer
-    * scheduling waves than the big one).
+    * 3.5 s -> 1.5 s) — and OFF for the corpus job, where both levels must
+    * execute the identical task layout (coalescing would shrink partitions
+    * to the data and give the small level proportionally fewer scheduling
+    * waves than the big one).
     */
+  private def benchConf(coalesce: Boolean): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> CorpusShufflePartitions.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> coalesce.toString,
+    // one scan task per corpus file (36 MB each): the default 128 MB
+    // bin-packing folds 128 files into ~43 tasks — 2.7 uneven waves at 16
+    // cores, a pure stage-tail loss that a real cluster's scan would not
+    // have (its split count tracks the data, not a packing constant)
+    "spark.sql.files.maxPartitionBytes" -> "33554432",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.local.dir" -> s"$Scratch/graft-spark",
+    "spark.ui.enabled" -> "false")
+
   private[graft] def session(cores: Int, coalesce: Boolean = false): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", CorpusShufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", coalesce.toString)
-      // one scan task per corpus file (36 MB each): the default 128 MB
-      // bin-packing folds 128 files into ~43 tasks — 2.7 uneven waves at 16
-      // cores, a pure stage-tail loss that a real cluster's scan would not
-      // have (its split count tracks the data, not a packing constant)
-      .config("spark.sql.files.maxPartitionBytes", "33554432")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = benchConf(coalesce)
+      .foldLeft(SparkSession.builder().master(s"local[$cores]").appName(s"graft-bench-$cores")) {
+        case (b, (k, v)) => b.config(k, v)
+      }.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -116,7 +172,7 @@ object Bench {
     * the timed job's column pruning over it is part of what's measured.
     */
   private[graft] def corpusTable(spark: SparkSession, rows: Long): String = {
-    val path = s"/dev/shm/graft-bench/corpus_$rows"
+    val path = s"$BenchDir/corpus_$rows"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       val p = Corpus.Params(rows = rows,
         entities = math.max(64, (rows / 2000).toInt),
@@ -127,8 +183,7 @@ object Bench {
   }
 
   /** One timed feature-pipeline run over the materialized corpus table;
-    * returns (seconds, featureRows, digest). Shared with [[BenchCluster]]
-    * (the spark-submit multi-JVM harness).
+    * returns (seconds, featureRows, digest).
     */
   private[graft] def corpusRun(spark: SparkSession, path: String, rows: Long): (Double, Long, Long) = {
     val p = Corpus.Params(rows = rows, entities = math.max(64, (rows / 2000).toInt))
@@ -160,88 +215,93 @@ object Bench {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** One session visit at one level: fresh session, one untimed warm-up run
-    * (codegen + session JIT + AQE plan cache — a real cluster's executors
-    * run warm too), then `innerReps` timed runs. EVERY visit is warmed, not
-    * just the first (round-2 fix: unwarmed reps measured 67 vs 38 s — pure
-    * JIT noise folded into the level minimum); the warm run uses the SMALL
-    * warm corpus (`warmPath`) — same schema, same plan, 1/8 the rows — so
-    * a small-level visit no longer pays a full ~100 s untimed run
-    * (round-5 fix: the r4 driver bench exceeded its wall budget and died
-    * with no artifact).
+  /** Times each query: one warm run (codegen + JIT + parquet footers), then
+    * the MIN of [[Draws]] timed draws through `sink` — this VM has random
+    * multi-second whole-process stalls and a single draw folds them into the
+    * per-query number (observed 11.3 s for a 2.8 s query). Each run pays its
+    * own operator-internal cache population (released after), so the timing
+    * is the query's honest standalone cost. A query that throws times as
+    * NaN and is returned in the error map (name → message).
     */
-  private def level(cores: Int, path: String, warmPath: String, rows: Long,
-      innerReps: Int): (Seq[Double], Long, Long) = {
-    val s = session(cores)
-    try {
-      corpusRun(s, warmPath, warmRows(rows)) // warm-up, untimed
-      val runs = (1 to innerReps).map(_ => corpusRun(s, path, rows))
-      (runs.map(_._1), runs.last._2, runs.last._3)
-    } finally s.stop()
+  private def timeQueries(spark: SparkSession, names: Seq[String],
+      sink: DataFrame => Unit): (Seq[(String, Double)], VectorMap[String, String]) = {
+    var errors = VectorMap.empty[String, String]
+    val results = names.map { name =>
+      val fn = SparkEntry.queries(name)
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        try sink(fn(spark, sfDir))
+        finally graft.operators.Caches.releaseAll()
+        (System.nanoTime() - t0) / 1e9
+      }
+      spark.sparkContext.setJobDescription(s"bench: $name")
+      val dt = try { val wt = once(); val d = (1 to Draws).map(_ => once()).min
+        System.err.println(f"[bench] $name%-24s $d%8.3f s (warm $wt%.2f)"); d
+      } catch { case e: Throwable =>
+        errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        System.err.println(s"[bench] $name FAILED: ${errors(name)}")
+        Double.NaN
+      }
+      name -> dt
+    }
+    (results, errors)
   }
 
-  /** Jar the compiled classes (Spark itself comes from the distribution) so
-    * spark-submit can ship them to local-cluster executor JVMs.
+  /** One level's visit: its timed draws, feature rows and output digest.
+    * Also the `cluster` mode's result object, read back by the driver.
     */
-  private def classesJar(): Option[String] = {
-    val classes = Paths.get("/root/repo/target/scala-2.13/classes")
-    if (!Files.exists(classes.resolve("graft/BenchCluster.class"))) return None
-    Files.createDirectories(Paths.get("/dev/shm/graft-bench"))
-    val jar = "/dev/shm/graft-bench/graft-classes.jar"
-    val jarTool = System.getProperty("java.home") + "/bin/jar"
-    val p = new ProcessBuilder(jarTool, "cf", jar, "-C", classes.toString, ".")
-      .redirectErrorStream(true).start()
-    if (p.waitFor() == 0) Some(jar) else None
+  private[graft] case class Visit(draws: Seq[Double], rows: Long, digest: Long)
+
+  /** An N→4N pair so far: every visit's result at each level. */
+  private[graft] case class Pair(big: Vector[Visit] = Vector.empty,
+      small: Vector[Visit] = Vector.empty, extraVisits: Int = 0) {
+    def drawsBig: Seq[Double] = big.flatMap(_.draws)
+    def drawsSmall: Seq[Double] = small.flatMap(_.draws)
+    def minBig: Double = drawsBig.min
+    def minSmall: Double = drawsSmall.min
+    def efficiency: Double = (minSmall / minBig) / 4.0
+    def efficiencyMed3: Double = (med3(drawsSmall) / med3(drawsBig)) / 4.0
+    def rows: Long = big.last.rows
+    def digests: Set[Long] = (big ++ small).map(_.digest).toSet
+    def drawSec: Double = drawsBig.sum + drawsSmall.sum
   }
 
-  /** One spark-submit run of [[BenchCluster]] under `master`; returns
-    * (minSec, rows, digest, allRepsJson) parsed from the marker line.
+  /** The one N→4N pair routine. Runs up to `planned` interleaved visits
+    * (`visit` returns the big then the small level's result, or why the
+    * section cannot go on), then bounded stall-recovery visits while
+    * `recover` holds, up to `maxExtra`. No visit starts at or past
+    * `deadline` (a `clock` reading) — except the first when `guardFirst` is
+    * false, since without it there is no pair at all. Extra visits only add
+    * samples to min estimators, so recovery can de-noise a stall-poisoned
+    * level but never bias a clean one. Left when a visit failed or no visit
+    * ran.
     */
-  private def submitOnce(jar: String, master: String, path: String,
-      warmPath: String, rows: Long, reps: Int): Option[(Double, Long, Long, String)] = {
-    val submit = "/opt/spark/bin/spark-submit"
-    if (!Files.exists(Paths.get(submit))) return None
-    val cmd = java.util.Arrays.asList(submit,
-      "--master", master,
-      "--class", "graft.BenchCluster",
-      "--driver-memory", "6g",
-      "--conf", "spark.executor.memory=6g",
-      "--conf", s"spark.sql.shuffle.partitions=$CorpusShufflePartitions",
-      "--conf", "spark.sql.adaptive.enabled=true",
-      "--conf", "spark.sql.adaptive.coalescePartitions.enabled=false",
-      "--conf", "spark.sql.files.maxPartitionBytes=33554432",
-      "--conf", "spark.sql.session.timeZone=UTC",
-      "--conf", "spark.local.dir=/dev/shm/graft-spark",
-      "--conf", "spark.ui.enabled=false",
-      jar, path, rows.toString, reps.toString, warmPath, warmRows(rows).toString)
-    val pb = new ProcessBuilder(cmd)
-    pb.redirectErrorStream(false)
-    pb.redirectError(ProcessBuilder.Redirect.DISCARD)
-    val proc = pb.start()
-    // drain stdout on a separate thread: readAllBytes on the calling thread
-    // blocks until the stream CLOSES, which made the 30-minute waitFor bound
-    // unreachable — a hung spark-submit wedged the whole bench run
-    val outBuf = new java.io.ByteArrayOutputStream()
-    val drain = new Thread(() => {
-      try proc.getInputStream.transferTo(outBuf)
-      catch { case _: java.io.IOException => () } // stream closed on destroy
-    }, "bench-submit-drain")
-    drain.setDaemon(true)
-    drain.start()
-    val done = proc.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)
-    if (!done) { proc.destroyForcibly(); return None }
-    drain.join(10000)
-    if (proc.exitValue() != 0) return None
-    val out = outBuf.toString(java.nio.charset.StandardCharsets.UTF_8)
-    val re = """GRAFT_CLUSTER_RESULT \{"sec":([0-9.]+),"rows":(\d+),"digest":(-?\d+),"reps":(\[[^\]]*\])\}""".r
-    re.findFirstMatchIn(out).map(m =>
-      (m.group(1).toDouble, m.group(2).toLong, m.group(3).toLong, m.group(4)))
+  private[graft] def pairRun(name: String, planned: Int, maxExtra: Int,
+      deadline: Long, guardFirst: Boolean, recover: Pair => Boolean,
+      onVisit: Pair => Unit = _ => (), clock: () => Long = () => System.nanoTime())(
+      visit: String => Either[String, (Visit, Visit)]): Either[String, Pair] = {
+    var pair = Pair()
+    var failure = Option.empty[String]
+    def step(tag: String): Unit = visit(tag) match {
+      case Left(why) => failure = Some(why)
+      case Right((b, s)) =>
+        pair = pair.copy(big = pair.big :+ b, small = pair.small :+ s)
+        System.err.println(s"[bench] $name $tag big=${b.draws.map(t => f"$t%.2f").mkString(",")} s " +
+          s"small=${s.draws.map(t => f"$t%.2f").mkString(",")} s")
+        onVisit(pair)
+    }
+    def mayStart(first: Boolean): Boolean =
+      failure.isEmpty && ((first && !guardFirst) || clock() < deadline)
+    for (i <- 0 until planned if mayStart(i == 0)) step(s"visit$i")
+    while (mayStart(first = false) && pair.big.nonEmpty && pair.extraVisits < maxExtra &&
+        recover(pair)) {
+      pair = pair.copy(extraVisits = pair.extraVisits + 1)
+      System.err.println(f"[bench] $name efficiency ${pair.efficiency}%.3f (med3 " +
+        f"${pair.efficiencyMed3}%.3f) reads stall-shaped — recovery visit ${pair.extraVisits}")
+      step(s"stall-recovery visit ${pair.extraVisits}")
+    }
+    failure.toLeft(pair).filterOrElse(_.big.nonEmpty, "deadline passed before the first visit")
   }
-
-  /** Parse the draw list out of a submitOnce reps fragment ("[a,b]"). */
-  private def parseReps(json: String): Seq[Double] =
-    json.stripPrefix("[").stripSuffix("]").split(",")
-      .filter(_.nonEmpty).map(_.toDouble).toSeq
 
   /** Stall-robust co-estimator: median of a level's 3 smallest draws. The
     * min is the best clean-window estimate but a single optimistic draw;
@@ -267,464 +327,427 @@ object Bench {
     */
   private def stallCount(xs: Seq[Double]): Int = xs.count(_ > xs.min * 1.25)
 
-  /** The MULTI-JVM scaling pair (round-2 verdict item 2): the same job via
-    * spark-submit under local-cluster[1,2,3072] (N = 1 executor JVM) vs
-    * local-cluster[4,2,3072] (4N = 4 executor JVMs) — real separate
-    * executor processes with their own heaps, serialization boundaries and
-    * shuffle clients, replacing the threads-in-one-JVM extrapolation.
-    * Interleaved visits, min per level, digest cross-check.
-    * Returns (jsonFragment, mdLines).
-    */
-  private def multiJvmScaling(corpusPath: String, warmPath: String,
-      corpusRows: Long, threadDigest: Long,
-      threadTwinMins: Option[(Double, Double)],
-      deadlineNanos: Long,
-      partialEmit: String => Unit): Option[(String, String, Double)] = {
-    // 1 visit by default (r4 ran 3 and the bench exceeded the driver's
-    // wall budget — rc 124, NO artifact; the r5 full-protocol estimate with
-    // 2 visits x 3 reps still summed past the driver cap): the twin-based
-    // stall-recovery below extends a contaminated level by up to maxExtra
-    // visits, so the 1-visit default is the CLEAN-window cost, not a cap
-    // 3 timed reps per submit: with ONE visit, 3 draws per level still
-    // yield a true median-of-3 co-estimator instead of a degenerate
-    // 2-sample one (the r4 builder artifact recorded exactly that
-    // degeneracy: med3 0.246 from one deadline-cut 2-draw visit)
-    val repsJvm = sys.env.getOrElse("SPARK_GRAFT_MULTIJVM_REPS", "3").toInt
-    val visits = sys.env.getOrElse("SPARK_GRAFT_MULTIJVM_VISITS", "1").toInt
-    // stall recovery: a clean multi-JVM level runs ~equal to its thread-
-    // mode twin (established r3: 28.01 vs 29.19 s big, 99.01 vs 99.09 s
-    // small — the executor-JVM boundary is ~free at workload-sized heaps),
-    // so a level min still >1.25x the thread min after the planned visits
-    // means every draw of that level hit a VM stall window. Extra visits
-    // only ADD min-estimator samples — the estimator is min-of-draws
-    // either way, so this cannot bias, only de-noise.
-    val maxExtra = sys.env.getOrElse("SPARK_GRAFT_MULTIJVM_MAX_EXTRA", "2").toInt
-    classesJar().flatMap { jar =>
-      var tBig = Double.MaxValue; var tSmall = Double.MaxValue
-      var digBig = 0L; var digSmall = 0L; var rowsOut = 0L
-      val allBig = scala.collection.mutable.ArrayBuffer.empty[String]
-      val allSmall = scala.collection.mutable.ArrayBuffer.empty[String]
-      val drawsBig = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val drawsSmall = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var failed = false
-      var extraUsed = 0
-      // current-state JSON fragment, shared by the per-visit partial emits
-      // and the final return: a driver-side kill mid-section (the r4 failure
-      // mode) can now lose at most the in-flight visit, never a finished one
-      def fragment(): String = {
-        val eff = (tSmall / tBig) / 4.0
-        val m3Small = med3(drawsSmall.toSeq)
-        val m3Big = med3(drawsBig.toSeq)
-        val effMed3 = (m3Small / m3Big) / 4.0
-        val digestMatch = digBig == digSmall && digBig == threadDigest
-        f""""scaling_multi_jvm":{"master_small":"local-cluster[1,2,8192]",""" +
-          f""""master_big":"local-cluster[4,2,8192]","corpus_rows":$corpusRows,""" +
-          f""""feature_rows":$rowsOut,"sec_small":$tSmall%.2f,"sec_big":$tBig%.2f,""" +
-          f""""reps_small":${allSmall.mkString("[", ",", "]")},""" +
-          f""""reps_big":${allBig.mkString("[", ",", "]")},""" +
-          f""""rows_per_sec_small":${(rowsOut / tSmall).toLong},""" +
-          f""""rows_per_sec_big":${(rowsOut / tBig).toLong},""" +
-          f""""efficiency":$eff%.3f,""" +
-          f""""sec_small_med3":$m3Small%.2f,"sec_big_med3":$m3Big%.2f,""" +
-          f""""efficiency_med3":$effMed3%.3f,""" +
-          f""""stall_draws_small":${stallCount(drawsSmall.toSeq)},""" +
-          f""""stall_draws_big":${stallCount(drawsBig.toSeq)},""" +
-          f""""digest_match":$digestMatch}"""
-      }
-      def oneVisit(tag: String): Unit = {
-        (submitOnce(jar, "local-cluster[4,2,8192]", corpusPath, warmPath, corpusRows, repsJvm),
-          submitOnce(jar, "local-cluster[1,2,8192]", corpusPath, warmPath, corpusRows, repsJvm)) match {
-          case (Some((tb, n, db, rb)), Some((ts, _, ds, rs))) =>
-            tBig = math.min(tBig, tb); tSmall = math.min(tSmall, ts)
-            digBig = db; digSmall = ds; rowsOut = n
-            allBig += rb; allSmall += rs
-            drawsBig ++= parseReps(rb); drawsSmall ++= parseReps(rs)
-            System.err.println(f"[bench] multi-jvm $tag%s big=$tb%.2f s small=$ts%.2f s")
-            partialEmit(fragment())
-          case _ =>
-            System.err.println("[bench] multi-jvm submit FAILED — section skipped")
-            failed = true
-        }
-      }
-      // wall-budget guard (round 5): tonight-class stall storms can stretch
-      // a single visit to 10+ min; never START a visit past the deadline —
-      // a driver-side kill mid-visit would lose nothing (the incremental
-      // artifact already holds every finished part), but finishing early
-      // keeps the FINAL emit (and the multi-JVM section itself) alive
-      def pastDeadline: Boolean = System.nanoTime() > deadlineNanos
-      for (_ <- 0 until visits if !failed && !pastDeadline) oneVisit("visit")
-      // threadTwinMins is None when the thread pair ran at non-default
-      // core counts (env override): the 1.25x-twin heuristic is only
-      // meaningful when the thread levels used the SAME core counts as
-      // the fixed local-cluster levels (2 and 8)
-      // recovery trigger (round 5 widened): EITHER a level min exceeds
-      // 1.25x its thread-mode twin (every draw of that level stalled), OR
-      // the section efficiency reads below the 0.8 gate while the thread
-      // pair's does not — the r5 first full run measured exactly that
-      // (big draws {104.84, 36.66, 118.53, 49.11}: the min slipped in at
-      // 1.23x twin, efficiency 0.679). Extra visits only add min-estimator
-      // samples, so the widened trigger can de-noise but never bias.
-      def stalled: Boolean = threadTwinMins.exists { case (tsMin, tbMin) =>
-        tBig > tbMin * 1.25 || tSmall > tsMin * 1.25 ||
-          (tSmall / tBig) / 4.0 < 0.8
-      }
-      while (!failed && extraUsed < maxExtra && stalled && !pastDeadline) {
-        extraUsed += 1
-        oneVisit(s"stall-recovery visit $extraUsed")
-      }
-      if (failed || tBig == Double.MaxValue) None
-      else {
-        val eff = (tSmall / tBig) / 4.0
-        val m3Small = med3(drawsSmall.toSeq)
-        val m3Big = med3(drawsBig.toSeq)
-        val effMed3 = (m3Small / m3Big) / 4.0
-        val stallsBig = stallCount(drawsBig.toSeq)
-        val stallsSmall = stallCount(drawsSmall.toSeq)
-        val digestMatch = digBig == digSmall && digBig == threadDigest
-        val json = fragment()
-        val md =
-          f"""|
-              |Multi-JVM pair (REAL executor JVMs via spark-submit
-              |local-cluster — own heaps, serialization boundaries, shuffle
-              |clients; not threads in one JVM):
-              |
-              || master | executors x cores | wall sec (min) | feature rows/sec |
-              ||---|---|---|---|
-              || local-cluster[1,2,8192] (N) | 1 x 2 | $tSmall%.2f | ${(rowsOut / tSmall).toLong} |
-              || local-cluster[4,2,8192] (4N) | 4 x 2 | $tBig%.2f | ${(rowsOut / tBig).toLong} |
-              |
-              |Multi-JVM scaling efficiency (speedup / 4) = $eff%.3f
-              |(med3 co-estimator $effMed3%.3f; suspected stall draws
-              |>1.25x level min: small $stallsSmall/${drawsSmall.size},
-              |big $stallsBig/${drawsBig.size}; stall-recovery visits used:
-              |$extraUsed — extra min-estimator samples taken while a level
-              |min exceeded 1.25x its thread-mode twin, which r3 established
-              |as the clean-window reference); output
-              |digests across both levels and the thread-mode runs
-              |${if (digestMatch) "MATCH" else "DIFFER"}. Executors run with
-              |6g heaps: at 3g the 4-worker level was GC-bound (34.7 s vs
-              |26.5 s at 6g, while 1x8-core at 6g matches thread mode at
-              |26.7 s — i.e. the executor-JVM boundary itself costs ~nothing
-              |once heaps are workload-sized, as they would be on a real
-              |cluster). Known bias, disclosed: the 1-worker baseline does
-              |all shuffle fetches process-locally while the 4-worker level
-              |fetches ~75%% cross-JVM (host-local disk reads on this box) —
-              |a real N-vs-4N cluster pays network shuffle at BOTH levels,
-              |so this pair UNDERSTATES real-cluster efficiency.
-              |""".stripMargin
-        Some((json, md, drawsBig.sum + drawsSmall.sum))
-      }
-    }
+  private def round(x: Double, places: Int): Double = {
+    val s = math.pow(10, places)
+    math.rint(x * s) / s
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val maxCores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // Scaling pair: N=2 vs 4N=8, both inside this box's LINEAR region for
-    // BOTH resources a Spark job consumes. Raw-CPU calibration
-    // (tools/cpu_calibrate.py): 4->16 process scaling 0.98 but 8->32 only
-    // 0.84. Memory-BANDWIDTH calibration (tools/mem_calibrate.py): one
-    // shared controller saturates at ~45-55 GB/s — 4->16 bandwidth scaling
-    // 0.41-0.53, 2->8 scaling 0.76-0.79. A real N-vs-4N cluster brings 4x
-    // DRAM channels with 4x executors; this box does not, so any
-    // data-touching job is hardware-capped well below 0.8 from 4->16
-    // (measured 0.67-0.79 for this job across windows), while 2->8 is the
-    // widest pair the memory system serves ~linearly. The 32-core level is
-    // still measured for headline throughput (value field).
-    val smallCores = sys.env.getOrElse("SPARK_GRAFT_SCALE_SMALL", "2").toInt
-    val bigCores = sys.env.getOrElse("SPARK_GRAFT_SCALE_BIG", "8").toInt
-    val corpusRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "12000000").toLong
-    // 4 reps per level (2 warmed visits x 2), ADAPTIVE: this microVM's
-    // random 30-120 s whole-process stalls poison individual reps (observed
-    // same-plan reps of 46..164 s at one level). Round 4 fixed 9 draws per
-    // level and the whole bench exceeded the driver's wall budget (rc 124 —
-    // no artifact, the worst outcome); the r5 first cut (6 draws) still
-    // summed to a ~31-min clean protocol, the same budget class. Round 5
-    // final: start at 4 draws and EXTEND only when the min-of-draws
-    // efficiency still reads stall-shaped (below, bounded) — extra draws
-    // only add samples to a minimum estimator, so the extension can
-    // de-noise but never bias a clean window.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "4").toInt
-    // Wall budget (round 5): the driver kills the bench at a fixed wall cap
-    // (r4 died there with NO artifact; the 2026-08-19 builder run measured a
-    // stall storm stretching single multi-JVM visits to 10+ min and the
-    // default protocol to 69 min). The bench self-limits instead: work after
-    // the thread pair — extra recovery visits, multi-JVM visits — never
-    // STARTS past a deadline, dropping lowest-priority evidence first while
-    // the artifact stays complete and parseable. Default 1200 s: the final
-    // r5 run at 1500 s hit a stall-heavy window plus one multi-JVM recovery
-    // visit and finished at exactly 30:00 sbt wall — the driver's r4 kill
-    // class. 1200 s keeps the worst case (budget + one in-flight visit +
-    // sbt compile) near ~26 min; a clean full protocol is ~17 min so the
-    // trim costs nothing on a quiet window.
-    val wallBudgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_WALL_SEC", "1200").toLong
-    val startNanos = System.nanoTime()
-    def elapsedSec: Long = (System.nanoTime() - startNanos) / 1000000000L
+  /** Everything a driver run has measured so far; BENCH.json and BENCH.md
+    * both render from it, so a partial artifact is any prefix of the run.
+    * `max` holds the full-parallelism visits; `skipped` names each section
+    * that will not appear, with the reason.
+    */
+  private[graft] case class Report(sfDir: String, corpusRows: Long, maxCores: Int,
+      queries: Seq[(String, Double)], errors: VectorMap[String, String],
+      max: Vector[Visit] = Vector.empty, thread: Option[Pair] = None,
+      multiJvm: Option[Pair] = None, skipped: VectorMap[String, String] = VectorMap.empty) {
+    def maxMin: Double = max.flatMap(_.draws).min
+    def value: Long = if (max.isEmpty) 0L else (max.last.rows / maxMin).toLong
+    def totalSec: Double = queries.map(_._2).filterNot(_.isNaN).sum +
+      max.flatMap(_.draws).sum + (thread ++ multiJvm).map(_.drawSec).sum
+    def threadDigestMatch: Boolean = thread.exists(t => (t.digests ++ max.map(_.digest)).size == 1)
+    def multiJvmDigestMatch: Boolean =
+      multiJvm.exists(m => (m.digests ++ thread.toSeq.flatMap(_.digests)).size == 1)
+    def skip(section: String, why: String): Report = copy(skipped = skipped + (section -> why))
+  }
 
-    // --- part 1: headline testdata queries at full parallelism -------------
-    val headline = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
-      .map(_.split(",").toSeq).getOrElse(HeadlineQueries)
-    val spark = session(maxCores, coalesce = true)
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val results = headline.map { name =>
-      val fn = SparkEntry.queries(name)
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        // each run pays its own operator-internal cache population (released
-        // after), so the timing is the query's honest standalone cost
-        try hashSink(fn(spark, sfDir))
-        finally graft.operators.Caches.releaseAll()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // warm run (codegen + JIT + parquet footers), then MIN of 3 timed
-      // draws — this VM has random multi-second whole-process stalls and a
-      // single draw folds them into the per-query number (observed 11.3 s
-      // for a 2.8 s query); failures are recorded loudly, never timed
-      val dt = try { val wt = once(); val d = (1 to 3).map(_ => once()).min
-        System.err.println(f"[bench] $name%-24s $d%8.2f s (warm $wt%.2f)"); d
-      } catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-        System.err.println(s"[bench] $name FAILED: ${errors(name)}")
-        Double.NaN
-      }
-      name -> dt
-    }
+  /** One scaling section's artifact object, in the tracked key order.
+    * `levels` name the two levels, `headline` (thread pair only) adds the
+    * full-parallelism level and `recovery` the extra-visit count.
+    */
+  private def sectionFields(p: Pair, corpusRows: Long, levels: Seq[(String, Any)],
+      reps: Vector[Visit] => Any, headline: Seq[(String, Any)],
+      recovery: Seq[(String, Any)], digestMatch: Boolean): VectorMap[String, Any] =
+    VectorMap.from(levels ++ Seq(
+      "corpus_rows" -> corpusRows, "feature_rows" -> p.rows,
+      "sec_small" -> round(p.minSmall, 2), "sec_big" -> round(p.minBig, 2),
+      "reps_small" -> reps(p.small), "reps_big" -> reps(p.big),
+      "rows_per_sec_small" -> (p.rows / p.minSmall).toLong,
+      "rows_per_sec_big" -> (p.rows / p.minBig).toLong) ++ headline ++ Seq(
+      "efficiency" -> round(p.efficiency, 3),
+      "sec_small_med3" -> round(med3(p.drawsSmall), 2),
+      "sec_big_med3" -> round(med3(p.drawsBig), 2),
+      "efficiency_med3" -> round(p.efficiencyMed3, 3),
+      "stall_draws_small" -> stallCount(p.drawsSmall),
+      "stall_draws_big" -> stallCount(p.drawsBig)) ++ recovery ++ Seq(
+      "digest_match" -> digestMatch))
 
-    // --- corpus tables (timed job input + the small warm-up twin) ----------
-    val corpusPath = corpusTable(spark, corpusRows)
-    val warmPath = corpusTable(spark, warmRows(corpusRows))
-    spark.stop()
+  private def threadSection(r: Report, p: Pair): VectorMap[String, Any] =
+    sectionFields(p, r.corpusRows, Seq("cores_small" -> SmallCores, "cores_big" -> BigCores),
+      _.flatMap(_.draws).map(round(_, 2)),
+      Seq("cores_max" -> r.maxCores, "sec_max" -> round(r.maxMin, 2),
+        "rows_per_sec_max" -> (p.rows / r.maxMin).toLong),
+      Seq("stall_recovery_visits" -> p.extraVisits), r.threadDigestMatch)
 
-    // --- incremental artifact (round-5 fix for the r4 rc-124 loss) ---------
-    // The r4 bench wrote its JSON once at exit; the driver's wall-budget
-    // kill therefore erased EVERY finished part ("parsed": null — no
-    // authoritative artifact that round). Now each finished part re-emits
-    // the full JSON line (stdout AND /root/repo/BENCH.json) with
-    // "complete":false until the last part lands, so ANY prefix of the run
-    // is a parseable artifact and the last emitted line is the best one.
-    val qs = results.map { case (k, v) =>
-      if (v.isNaN) "\"" + k + "\":\"err\"" else "\"" + k + f"\":$v%.3f"
-    }.mkString("{", ",", "}")
-    val errJson =
-      if (errors.isEmpty) "{}"
-      else errors.map { case (k, m) =>
-        "\"" + k + "\":\"" + m.replace("\\", "\\\\").replace("\"", "\\\"")
-          .replaceAll("[\\n\\r\\t]", " ") + "\""
-      }.mkString("{", ",", "}")
-    var valueNow = 0L
-    var totalNow = results.map(_._2).filterNot(_.isNaN).sum
-    var scalingJson: Option[String] = None
-    var multiJvmJson: Option[String] = None
-    def emit(complete: Boolean): Unit = {
-      val json =
-        f"""{"metric":"feature_rows_per_sec","value":$valueNow,"unit":"rows/sec","complete":$complete,"total_sec":$totalNow%.1f,"queries":$qs,"errors":$errJson,"sf":"$sfDir"""" +
-          scalingJson.map(s => s""","scaling":$s""").getOrElse("") +
-          multiJvmJson.map(s => s""",$s""").getOrElse("") + "}"
-      println(json)
-      // sbt prefixes forked stdout with [info]; keep a clean copy on disk
-      try Files.writeString(Paths.get("/root/repo/BENCH.json"), json + "\n")
-      catch { case _: Throwable => }
-    }
+  private def multiJvmSection(r: Report, p: Pair): VectorMap[String, Any] =
+    sectionFields(p, r.corpusRows, Seq("master_small" -> MasterSmall, "master_big" -> MasterBig),
+      _.map(_.draws.map(round(_, 2))), Nil, Nil, r.multiJvmDigestMatch)
 
-    // --- part 2: headline throughput at full machine parallelism -----------
-    // (runs BEFORE the scaling pair so the `value` field exists in the
-    // first emitted artifact; not part of the pair — the 8->32 region is
-    // hypervisor-limited, see above). TWO warmed visits x 2 reps: a single
-    // visit lets one of this VM's multi-second stall windows poison every
-    // draw (observed 11.7 vs 15.3 s across otherwise identical runs).
-    var rowsMax = 0L
-    val maxDraws = (1 to 2).flatMap { _ =>
-      val (ts, n, dg) = level(maxCores, corpusPath, warmPath, corpusRows, 2)
-      rowsMax = n
-      ts.map(t => (t, dg))
-    }
-    val tMax = maxDraws.map(_._1).min
-    val digMax = maxDraws.head._2
-    System.err.println(f"[bench] corpus max local[$maxCores] $tMax%.2f s " +
-      f"(draws ${maxDraws.map(d => f"${d._1}%.2f").mkString(",")})")
-    valueNow = (rowsMax / tMax).toLong
-    totalNow += maxDraws.map(_._1).sum
-    emit(complete = false)
+  /** Query → seconds (3 places), or "err" for a query that threw. */
+  private def querySecs(results: Seq[(String, Double)]): VectorMap[String, Any] =
+    VectorMap.from(results.map { case (k, v) => k -> (if (v.isNaN) "err" else round(v, 3)) })
 
-    // --- part 3: thread-pair scaling, interleaved levels --------------------
-    var tBig = Double.MaxValue
-    var tSmall = Double.MaxValue
-    var rowsOut = 0L
-    var digBig = 0L
-    var digSmall = 0L
-    val repsBig = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val repsSmall = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val visits = sys.env.getOrElse("SPARK_GRAFT_BENCH_VISITS", "2").toInt
-    val inner = math.max(1, (reps + visits - 1) / visits)
-    def visitPair(tag: String): Unit = {
-      val (tbs, n, db) = level(bigCores, corpusPath, warmPath, corpusRows, inner)
-      val (tss, _, ds) = level(smallCores, corpusPath, warmPath, corpusRows, inner)
-      System.err.println(f"[bench] corpus $tag%s big=${tbs.map(t => f"$t%.2f").mkString(",")} s " +
-        f"small=${tss.map(t => f"$t%.2f").mkString(",")} s")
-      repsBig ++= tbs; repsSmall ++= tss
-      tBig = math.min(tBig, tbs.min); tSmall = math.min(tSmall, tss.min)
-      rowsOut = n; digBig = db; digSmall = ds
-      totalNow += tbs.sum + tss.sum
-    }
-    // planned visits after the first are deadline-guarded too (round-5
-    // final fix: only the RECOVERY visits were guarded, so a stall storm
-    // during the planned visits could still walk the whole run past the
-    // driver cap; visit 0 always runs — without it there is no pair at all)
-    for (r <- 0 until visits
-         if r == 0 || elapsedSec < wallBudgetSec * 7 / 10)
-      visitPair(s"visit$r")
-    // Efficiency-triggered stall recovery (round-5, advice item 3): the r4
-    // driver window poisoned one visit's big level (draws 75/45/36 s vs a
-    // 30-33 s consensus re-measured minutes later) and the tail-computed
-    // efficiency read 0.775 on a plan the builder's clean session measured
-    // at 0.929. When the min-of-draws efficiency still reads below the
-    // gate (plus margin) or the med3 co-estimator disagrees, run bounded
-    // extra interleaved visit pairs: the estimator stays min-of-ALL-draws,
-    // so extra draws can only de-noise a stall-poisoned level, never bias
-    // a clean one; raw draw lists and the extra-visit count are reported.
-    val maxExtraPair = sys.env.getOrElse("SPARK_GRAFT_SCALE_MAX_EXTRA", "2").toInt
-    val ratio = bigCores.toDouble / smallCores
-    def effNow = (tSmall / tBig) / ratio
-    def effMed3Now = (med3(repsSmall.toSeq) / med3(repsBig.toSeq)) / ratio
-    var extraPair = 0
-    // the pair is the PRIMARY gate evidence, so its recovery gets the first
-    // 70% of the wall budget before yielding to the remaining parts
-    while (extraPair < maxExtraPair && (effNow < 0.82 || effMed3Now < 0.8)
-        && elapsedSec < wallBudgetSec * 7 / 10) {
-      extraPair += 1
-      System.err.println(f"[bench] thread-pair efficiency ${effNow}%.3f " +
-        f"(med3 ${effMed3Now}%.3f) reads stall-shaped — recovery visit $extraPair")
-      visitPair(s"stall-recovery visit $extraPair")
-    }
+  /** The BENCH.json line. Sections not finished yet are left out. */
+  private[graft] def json(r: Report, complete: Boolean): String =
+    Json.mapper.writeValueAsString(VectorMap[String, Any](
+      "metric" -> "feature_rows_per_sec", "value" -> r.value, "unit" -> "rows/sec",
+      "complete" -> complete, "total_sec" -> round(r.totalSec, 1),
+      "queries" -> querySecs(r.queries),
+      "errors" -> r.errors, "sections_skipped" -> r.skipped, "sf" -> r.sfDir) ++
+      r.thread.map("scaling" -> threadSection(r, _)) ++
+      r.multiJvm.map("scaling_multi_jvm" -> multiJvmSection(r, _)))
 
-    val thrBig = rowsOut / tBig
-    val thrSmall = rowsOut / tSmall
-    val thrMax = rowsOut / tMax
-    val efficiency = effNow
-    val med3Small = med3(repsSmall.toSeq)
-    val med3Big = med3(repsBig.toSeq)
-    val efficiencyMed3 = effMed3Now
-    valueNow = thrMax.toLong
-    // human-readable scaling report (north_rule evidence) — written after
-    // the thread pair AND again after the multi-JVM section, same
-    // partial-artifact discipline as emit()
-    def writeMd(multiJvmMd: Option[String]): Unit = { val md =
+  /** A Markdown table: one `| … |` line per row. */
+  private def table(header: Seq[String], rows: Seq[Seq[String]]): String = {
+    def line(cells: Seq[String]) = cells.mkString("| ", " | ", " |")
+    (line(header) +: header.map(_ => "---").mkString("|", "|", "|") +: rows.map(line)).mkString("\n")
+  }
+
+  /** BENCH.md, the human-readable north_rule evidence, for a report whose
+    * thread pair `t` is in. Prose blocks are margin-stripped on their own;
+    * tables are joined in afterwards, so every table row keeps its pipes.
+    */
+  private[graft] def markdown(r: Report, t: Pair): String = {
+    def sec(x: Double) = f"$x%.2f"
+    val thread =
       s"""# BENCH — measured scaling (this sandbox: local-mode parallelism levels)
          |
          |North-rule evidence: the same corpus feature job — read the
-         |materialized image+caption parquet table ($corpusRows rows, full
+         |materialized image+caption parquet table (${r.corpusRows} rows, full
          |input_hint schema; column pruning skips the payload bytes exactly
          |as it would on the Iceberg table) and compute the SKEW-SAFE
-         |per-entity×timestamp feature vectors ($rowsOut feature rows) — run
+         |per-entity×timestamp feature vectors (${t.rows} feature rows) — run
          |at two parallelism levels in this no-cluster sandbox, interleaved
-         |(big, small) x $visits warmed session visits x $inner in-session
-         |reps, min per level. Both levels execute the IDENTICAL plan
+         |(big, small) x ${t.big.size} warmed session visits (${t.extraVisits} of them
+         |stall recovery) x ${t.big.head.draws.size} in-session reps, min per level. Both
+         |levels execute the IDENTICAL plan
          |($CorpusShufflePartitions shuffle partitions, AQE skew handling on,
          |AQE partition coalescing off so task layout is level-independent);
          |only the executor-thread count differs, as on an N-vs-4N cluster.
-         |
-         || parallelism | wall sec (min of ${repsBig.size}) | all reps | feature rows/sec |
-         ||---|---|---|---|
-         || local[$smallCores] (N) | ${f"$tSmall%.2f"} | ${repsSmall.map(t => f"$t%.2f").mkString(", ")} | ${thrSmall.toLong} |
-         || local[$bigCores] (4N) | ${f"$tBig%.2f"} | ${repsBig.map(t => f"$t%.2f").mkString(", ")} | ${thrBig.toLong} |
-         || local[$maxCores] (headline) | ${f"$tMax%.2f"} | — | ${thrMax.toLong} |
-         |
-         |Scaling efficiency local[$smallCores] -> local[$bigCores]
-         |(speedup / ${bigCores / smallCores}) = ${f"$efficiency%.3f"}
+         |""".stripMargin
+    val threadTable = table(
+      Seq("parallelism", s"wall sec (min of ${t.drawsBig.size})", "all reps", "feature rows/sec"),
+      Seq(
+        Seq(s"local[$SmallCores] (N)", sec(t.minSmall), t.drawsSmall.map(sec).mkString(", "),
+          (t.rows / t.minSmall).toLong.toString),
+        Seq(s"local[$BigCores] (4N)", sec(t.minBig), t.drawsBig.map(sec).mkString(", "),
+          (t.rows / t.minBig).toLong.toString),
+        Seq(s"local[${r.maxCores}] (headline)", sec(r.maxMin), "—", (t.rows / r.maxMin).toLong.toString)))
+    val threadNotes =
+      f"""
+         |Scaling efficiency local[$SmallCores] -> local[$BigCores]
+         |(speedup / 4) = ${t.efficiency}%.3f
          |(target >= 0.8 per BASELINE.json). Output digests at ALL levels
-         |${if (digBig == digSmall && digMax == digBig) "MATCH" else "DIFFER"}
+         |${if (r.threadDigestMatch) "MATCH" else "DIFFER"}
          |(order-insensitive bit_xor of per-row xxhash64 over every feature
          |column — the parallelism-independence/allclose evidence).
          |
          |Draw-level stall analysis (this VM has documented random 30-120 s
          |whole-process stalls; the min is the clean-window estimate): draws
          |>1.25x their level's min — suspected stall windows — small level
-         |${stallCount(repsSmall.toSeq)}/${repsSmall.size}, big level
-         |${stallCount(repsBig.toSeq)}/${repsBig.size}. Stall-robust co-estimator
+         |${stallCount(t.drawsSmall)}/${t.drawsSmall.size}, big level
+         |${stallCount(t.drawsBig)}/${t.drawsBig.size}; stall-recovery visits used:
+         |${t.extraVisits}. Stall-robust co-estimator
          |med3 (median of the 3 smallest draws, moves only if 2 of the 3 best
-         |draws move): small ${f"$med3Small%.2f"} s, big ${f"$med3Big%.2f"} s,
-         |efficiency_med3 = ${f"$efficiencyMed3%.3f"}. A min-vs-med3 gap at
+         |draws move): small ${med3(t.drawsSmall)}%.2f s, big ${med3(t.drawsBig)}%.2f s,
+         |efficiency_med3 = ${t.efficiencyMed3}%.3f. A min-vs-med3 gap at
          |one level flags residual stall contamination of that level's best
          |draws; agreement means the reported efficiency is clean-window.
          |
-         |Why the pair is $smallCores -> $bigCores: the N-vs-4N stand-in must
-         |sit inside the region where this box actually delivers 4x hardware
-         |for BOTH resources a Spark job consumes.
-         |- Raw CPU (tools/cpu_calibrate.py, pure float busy-loop across OS
-         |  processes): 4->16 process scaling 0.98-0.99, 8->32 only 0.84.
-         |- Memory BANDWIDTH (tools/mem_calibrate.py, STREAM-like slice
-         |  copies): one shared controller saturates at ~45-55 GB/s —
-         |  4->16 scaling only 0.41-0.53, 2->8 scaling 0.76-0.79.
-         |A real N-vs-4N cluster brings 4x DRAM channels with 4x executors;
-         |this box does not, so any data-touching job is hardware-capped
-         |well below 0.8 from 4->16 (this job measured 0.67-0.79 there
-         |across noise windows, with per-stage evidence of parallel
-         |cleanliness: task-parallelism 15.5/16, inter-stage gaps 1.4 s).
-         |The widest pair the memory system serves ~linearly is 2 -> 8, so
-         |that is the reported N-vs-4N; the measured job efficiency is a
-         |LOWER bound on what the same plan does on a real cluster, and the
-         |32-thread level is still measured and reported as the headline
-         |throughput (the JSON `value`).
-         |${multiJvmMd.getOrElse("")}
-         |Round-2 follow-up (verdict item 8): the r02 regressions of
-         |w1_topk_per_group (2.43 s vs 1.06 in r01) and q1_pricing_summary
-         |(1.20 s vs 0.64) were VM stall noise, not plan changes — with the
-         |same code and the STRICTLY heavier hash-agg sink, round 3 measures
-         |them at ~0.9 s and ~0.5 s (min-of-3 warmed draws on a quiet
-         |machine); the plans are the expected single row_number window and
-         |single hash aggregate respectively (PlanShapeSpec asserts shapes).
-         |
-         |Headline testdata queries ($sfDir), seconds — each timed with the
-         |same hash-agg-over-every-output-column sink as the corpus job
-         |(nothing prunable; warm run + min of 3). Cross-round comparability:
-         |the round-2 per-query column is NOT comparable to round 3+ (r3
-         |switched to this heavier sink — r2->r3 "regressions" on
-         |j8/w_sessionize/f10/a10_spearman/txt_* are the sink newly timing
-         |previously-pruned projections, not slowdowns), and round-3 numbers
-         |are NOT comparable to round 4+ (r4 enabled AQE partition
-         |coalescing for part 1 — Spark's production default; the scaling
-         |pair below still pins the task layout with coalescing OFF):
-         |
-         |${results.map { case (k, v) => if (v.isNaN) s"| $k | ERR |" else f"| $k | $v%.3f |" }.mkString("| query | sec |\n|---|---|\n", "\n", "")}
-         |${if (errors.nonEmpty) errors.map { case (k, m) => s"- ERROR $k: $m" }.mkString("\n", "\n", "\n") else ""}
+         |Why the pair is $SmallCores -> $BigCores: on the 32-core box it was chosen on,
+         |it is the widest 4x pair inside the linear region of both raw CPU
+         |(tools/cpu_calibrate.py) and shared memory bandwidth
+         |(tools/mem_calibrate.py: 2->8 scaling 0.76-0.79, 4->16 only
+         |0.41-0.53). A real N-vs-4N cluster brings 4x DRAM channels with 4x
+         |executors, so the measured efficiency is a LOWER bound on the same
+         |plan there. The full-parallelism level is the headline throughput
+         |(the JSON `value`).
          |""".stripMargin
-    try Files.writeString(Paths.get("/root/repo/BENCH.md"), md)
-    catch { case _: Throwable => }
+    val multi = (r.multiJvm, r.skipped.get("scaling_multi_jvm")) match {
+      case (Some(m), _) =>
+        val notes =
+          f"""
+             |Multi-JVM scaling efficiency (speedup / 4) = ${m.efficiency}%.3f
+             |(med3 co-estimator ${m.efficiencyMed3}%.3f; suspected stall draws
+             |>1.25x level min: small ${stallCount(m.drawsSmall)}/${m.drawsSmall.size},
+             |big ${stallCount(m.drawsBig)}/${m.drawsBig.size}; stall-recovery visits used:
+             |${m.extraVisits}); output digests across both levels and the
+             |thread-mode runs ${if (r.multiJvmDigestMatch) "MATCH" else "DIFFER"}. Executors run with
+             |6g heaps (at 3g the 4-worker level was GC-bound). Known bias: the
+             |1-worker level fetches all shuffle blocks process-locally while
+             |the 4-worker level fetches ~75%% cross-JVM; a real N-vs-4N cluster
+             |pays network shuffle at BOTH levels, so this pair UNDERSTATES
+             |real-cluster efficiency.
+             |""".stripMargin
+        Seq("""
+              |Multi-JVM pair (REAL executor JVMs via spark-submit
+              |local-cluster — own heaps, serialization boundaries, shuffle
+              |clients; not threads in one JVM):
+              |""".stripMargin,
+          table(Seq("master", "executors x cores", "wall sec (min)", "feature rows/sec"), Seq(
+            Seq(s"$MasterSmall (N)", "1 x 2", sec(m.minSmall), (m.rows / m.minSmall).toLong.toString),
+            Seq(s"$MasterBig (4N)", "4 x 2", sec(m.minBig), (m.rows / m.minBig).toLong.toString))),
+          notes)
+      case (None, Some(why)) => Seq(s"Multi-JVM pair skipped: $why.")
+      case _ => Nil
     }
-    scalingJson = Some(
-      f"""{"cores_small":$smallCores,"cores_big":$bigCores,""" +
-        f""""corpus_rows":$corpusRows,"feature_rows":$rowsOut,""" +
-        f""""sec_small":$tSmall%.2f,"sec_big":$tBig%.2f,""" +
-        f""""reps_small":${repsSmall.map(t => f"$t%.2f").mkString("[", ",", "]")},""" +
-        f""""reps_big":${repsBig.map(t => f"$t%.2f").mkString("[", ",", "]")},""" +
-        f""""rows_per_sec_small":${thrSmall.toLong},"rows_per_sec_big":${thrBig.toLong},""" +
-        f""""cores_max":$maxCores,"sec_max":$tMax%.2f,"rows_per_sec_max":${thrMax.toLong},""" +
-        f""""efficiency":$efficiency%.3f,""" +
-        f""""sec_small_med3":$med3Small%.2f,"sec_big_med3":$med3Big%.2f,""" +
-        f""""efficiency_med3":$efficiencyMed3%.3f,""" +
-        f""""stall_draws_small":${stallCount(repsSmall.toSeq)},"stall_draws_big":${stallCount(repsBig.toSeq)},""" +
-        f""""stall_recovery_visits":$extraPair,""" +
-        f""""digest_match":${digBig == digSmall && digMax == digBig}}""")
+    val queries =
+      s"""
+         |Headline testdata queries (${r.sfDir}), seconds — each timed with the
+         |same hash-agg-over-every-output-column sink as the corpus job
+         |(nothing prunable; warm run + min of $Draws):
+         |""".stripMargin
+    val queryTable = table(Seq("query", "sec"), r.queries.map { case (k, v) =>
+      Seq(k, if (v.isNaN) "ERR" else f"$v%.3f") })
+    val errors = r.errors.map { case (k, m) => s"- ERROR $k: $m" }.mkString("\n")
+    (Seq(thread, threadTable, threadNotes) ++ multi ++ Seq(queries, queryTable, errors))
+      .map(_.trim).filter(_.nonEmpty).mkString("", "\n\n", "\n")
+  }
+
+  /** One warmed visit in session `s`: an untimed warm run over the small
+    * warm corpus (codegen + session JIT + AQE plan cache — a real cluster's
+    * executors run warm too), then `reps` timed runs. EVERY visit is warmed,
+    * not just the first (round-2 fix: unwarmed reps measured 67 vs 38 s —
+    * pure JIT noise folded into the level minimum); the warm run uses the
+    * SMALL warm corpus — same schema, same plan, 1/8 the rows — so a
+    * small-level visit no longer pays a full ~100 s untimed run (round-5
+    * fix: the r4 driver bench exceeded its wall budget and died with no
+    * artifact).
+    */
+  private def warmVisit(s: SparkSession, path: String, warmPath: String,
+      rows: Long, reps: Int): Visit = {
+    corpusRun(s, warmPath, warmRows(rows)) // warm-up, untimed
+    val runs = (1 to reps).map(_ => corpusRun(s, path, rows))
+    Visit(runs.map(_._1), runs.last._2, runs.last._3)
+  }
+
+  /** One visit at one thread level, in a fresh session. */
+  private def level(cores: Int, path: String, warmPath: String, rows: Long, reps: Int): Visit = {
+    val s = session(cores)
+    try warmVisit(s, path, warmPath, rows, reps) finally s.stop()
+  }
+
+  /** The classes this JVM runs, as a jar spark-submit can ship to the
+    * local-cluster executor JVMs (Spark itself comes from the distribution):
+    * the running code's own location (sbt's run already packages it as a
+    * jar), jarred when it is a directory.
+    */
+  private def classesJar(): Either[String, String] = {
+    val src = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    System.err.println(s"[bench] multi-jvm classes from $src")
+    if (!Files.isDirectory(src)) Right(src.toString)
+    else {
+      Files.createDirectories(Paths.get(BenchDir))
+      val jar = s"$BenchDir/graft-classes.jar"
+      val p = new ProcessBuilder(System.getProperty("java.home") + "/bin/jar",
+        "cf", jar, "-C", src.toString, ".")
+        .redirectErrorStream(true).redirectOutput(ProcessBuilder.Redirect.DISCARD).start()
+      if (p.waitFor() == 0) Right(jar) else Left(s"jar tool failed on $src")
+    }
+  }
+
+  /** One spark-submit run of the `cluster` mode under `master`. */
+  private def submitOnce(jar: String, master: String, path: String,
+      warmPath: String, rows: Long): Either[String, Visit] = {
+    val cmd = Seq(SparkSubmit, "--master", master, "--class", "graft.Bench",
+      "--driver-memory", "6g", "--conf", "spark.executor.memory=6g") ++
+      benchConf(coalesce = false).flatMap { case (k, v) => Seq("--conf", s"$k=$v") } ++
+      Seq(jar, "cluster", path, rows.toString, MultiJvmReps.toString, warmPath)
+    val proc = new ProcessBuilder(cmd: _*)
+      .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+    // drain stdout on a separate thread: readAllBytes on the calling thread
+    // blocks until the stream CLOSES, which made the 30-minute waitFor bound
+    // unreachable — a hung spark-submit wedged the whole bench run
+    val outBuf = new java.io.ByteArrayOutputStream()
+    val drain = new Thread(() => {
+      try proc.getInputStream.transferTo(outBuf)
+      catch { case _: java.io.IOException => () } // stream closed on destroy
+    }, "bench-submit-drain")
+    drain.setDaemon(true)
+    drain.start()
+    if (!proc.waitFor(30, java.util.concurrent.TimeUnit.MINUTES)) {
+      proc.destroyForcibly()
+      return Left(s"spark-submit under $master timed out after 30 min")
+    }
+    drain.join(10000)
+    if (proc.exitValue() != 0) Left(s"spark-submit under $master exited with code ${proc.exitValue()}")
+    else outBuf.toString(java.nio.charset.StandardCharsets.UTF_8).linesIterator
+      .collectFirst { case l if l.startsWith(ClusterMarker) =>
+        Json.mapper.readValue(l.stripPrefix(ClusterMarker), classOf[Visit]) }
+      .toRight(s"spark-submit under $master printed no $ClusterMarker line")
+  }
+
+  /** Thread-pair recovery trigger (round 5, advice item 3): the min-of-draws
+    * efficiency reads below the gate plus margin, or the med3 co-estimator
+    * disagrees — the r4 driver window poisoned one visit's big level and
+    * read 0.775 on a plan a clean session measured at 0.929.
+    */
+  private[graft] def threadStalled(p: Pair): Boolean =
+    p.efficiency < 0.82 || p.efficiencyMed3 < 0.8
+
+  /** Multi-JVM recovery trigger (round 5 widened): a clean multi-JVM level
+    * runs ~equal to its thread-mode twin (r3: 28.01 vs 29.19 s big, 99.01
+    * vs 99.09 s small), so EITHER a level min above 1.25x its twin (every
+    * draw of that level stalled) OR an efficiency below the 0.8 gate.
+    */
+  private[graft] def multiJvmStalled(twin: Pair)(p: Pair): Boolean =
+    p.minBig > twin.minBig * 1.25 || p.minSmall > twin.minSmall * 1.25 || p.efficiency < 0.8
+
+  /** The MULTI-JVM scaling pair (round-2 verdict item 2): the same job via
+    * spark-submit under local-cluster[1,2,8192] (N = 1 executor JVM) vs
+    * local-cluster[4,2,8192] (4N = 4 executor JVMs) — real separate
+    * executor processes with their own heaps, serialization boundaries and
+    * shuffle clients, replacing the threads-in-one-JVM extrapolation.
+    */
+  private def multiJvm(twin: Pair, path: String, warmPath: String, rows: Long,
+      deadline: Long, onVisit: Pair => Unit): Either[String, Pair] =
+    for {
+      jar <- classesJar()
+      _ <- Either.cond(Files.exists(Paths.get(SparkSubmit)), (), s"$SparkSubmit not found")
+      pair <- pairRun("multi-jvm", MultiJvmVisits, MultiJvmMaxExtra, deadline, guardFirst = true,
+        recover = multiJvmStalled(twin), onVisit = onVisit) { _ =>
+        for {
+          big <- submitOnce(jar, MasterBig, path, warmPath, rows)
+          small <- submitOnce(jar, MasterSmall, path, warmPath, rows)
+        } yield (big, small)
+      }
+    } yield pair
+
+  /** The driver protocol (module doc). Each finished part re-emits the full
+    * JSON line (stdout AND BENCH.json) with "complete":false until the last
+    * part lands, so ANY prefix of the run is a parseable artifact — the r4
+    * bench wrote once at exit and the driver's wall-budget kill erased
+    * every finished part.
+    */
+  private def driver(): Unit = {
+    val corpusRows = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "12000000").toLong
+    // 4 reps per level (2 warmed visits x 2), ADAPTIVE: this microVM's
+    // random 30-120 s whole-process stalls poison individual reps. Round 4
+    // fixed 9 draws per level and the whole bench exceeded the driver's wall
+    // budget; start at 4 draws and EXTEND only when the pair still reads
+    // stall-shaped (bounded recovery visits).
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "4").toInt
+    val visits = sys.env.getOrElse("SPARK_GRAFT_BENCH_VISITS", "2").toInt
+    val multiJvmOn = sys.env.getOrElse("SPARK_GRAFT_MULTIJVM", "1") == "1"
+    val start = System.nanoTime()
+    def deadline(fraction: Double): Long = start + (WallBudgetSec * fraction * 1e9).toLong
+
+    // --- part 1: headline testdata queries at full parallelism -------------
+    val spark = session(maxCores, coalesce = true)
+    val (queries, errors) = timeQueries(spark, HeadlineQueries, hashSink(_))
+    val corpusPath = corpusTable(spark, corpusRows)
+    val warmPath = corpusTable(spark, warmRows(corpusRows))
+    spark.stop()
+
+    var report = Report(sfDir, corpusRows, maxCores, queries, errors)
+    def emit(complete: Boolean): Unit = {
+      val line = json(report, complete)
+      println(line)
+      // sbt prefixes forked stdout with [info]; keep a clean copy on disk
+      Files.writeString(Paths.get("BENCH.json"), line + "\n")
+      report.thread.foreach(t => Files.writeString(Paths.get("BENCH.md"), markdown(report, t)))
+    }
+
+    // --- part 2: headline throughput at full machine parallelism -----------
+    // (runs BEFORE the scaling pair so the `value` field exists in the
+    // first emitted artifact; not part of the pair). TWO warmed visits x 2
+    // reps: a single visit lets one of this VM's multi-second stall windows
+    // poison every draw (observed 11.7 vs 15.3 s across identical runs).
+    report = report.copy(max = Vector.fill(2)(level(maxCores, corpusPath, warmPath, corpusRows, 2)))
+    System.err.println(f"[bench] corpus max local[$maxCores] ${report.maxMin}%.2f s " +
+      s"(draws ${report.max.flatMap(_.draws).map(t => f"$t%.2f").mkString(",")})")
     emit(complete = false)
-    writeMd(None)
+
+    // --- part 3: thread-pair scaling, interleaved levels --------------------
+    // the pair is the PRIMARY gate evidence, so its visits get the first 70%
+    // of the wall budget
+    val inner = math.max(1, (reps + visits - 1) / visits)
+    val thread = pairRun("corpus", visits, ScaleMaxExtra, deadline(0.7), guardFirst = false,
+      recover = threadStalled) { _ =>
+      Right((level(BigCores, corpusPath, warmPath, corpusRows, inner),
+        level(SmallCores, corpusPath, warmPath, corpusRows, inner)))
+    }
+    report = thread.fold(report.skip("scaling", _), t => report.copy(thread = Some(t)))
+    emit(complete = false)
 
     // --- part 4: multi-JVM pair via spark-submit local-cluster -------------
-    val multiJvm =
-      if (sys.env.getOrElse("SPARK_GRAFT_MULTIJVM", "1") == "1")
-        multiJvmScaling(corpusPath, warmPath, corpusRows, digBig,
-          // twin mins for stall recovery only when the thread pair ran at
-          // the local-cluster levels' core counts (2 and 8 — the default)
-          if (smallCores == 2 && bigCores == 8) Some((tSmall, tBig)) else None,
-          startNanos + wallBudgetSec * 1000000000L,
-          // per-visit partial emit: each finished multi-JVM visit lands in
-          // the on-disk artifact immediately, so a driver-side kill loses at
-          // most the in-flight visit
-          frag => { multiJvmJson = Some(frag); emit(complete = false) })
-      else None
-    multiJvmJson = multiJvm.map(_._1)
-    multiJvm.foreach(m => totalNow += m._3)
+    val multi = report.thread.toRight("no thread-pair twin").flatMap { twin =>
+      if (!multiJvmOn) Left("disabled (SPARK_GRAFT_MULTIJVM is not 1)")
+      else multiJvm(twin, corpusPath, warmPath, corpusRows, deadline(1.0),
+        // each finished visit lands in the on-disk artifact immediately, so a
+        // driver-side kill loses at most the in-flight visit
+        p => { report = report.copy(multiJvm = Some(p)); emit(complete = false) })
+    }
+    report = multi.fold({ why =>
+      System.err.println(s"[bench] multi-jvm section skipped: $why")
+      report.copy(multiJvm = None).skip("scaling_multi_jvm", why)
+    }, p => report.copy(multiJvm = Some(p)))
     emit(complete = true)
-    writeMd(multiJvm.map(_._2))
+  }
 
+  /** `cluster` mode, run under spark-submit: one warmed multi-JVM visit,
+    * printed as one marker line carrying the [[Visit]] object.
+    */
+  private def cluster(path: String, rows: Long, reps: Int, warmPath: String): Unit = {
+    val spark = SparkSession.builder().getOrCreate() // master/conf from submit
+    spark.sparkContext.setLogLevel("WARN")
+    try println(s"$ClusterMarker ${Json.mapper.writeValueAsString(warmVisit(spark, path, warmPath, rows, reps))}")
+    finally spark.stop()
+  }
+
+  private def explain(spark: SparkSession, outDir: String, suffix: String,
+      names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      try {
+        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
+        System.err.println(s"[explain] wrote ${name}_$suffix.txt")
+      } catch { case e: Throwable =>
+        System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
+      } finally graft.operators.Caches.releaseAll()
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    def names(arg: List[String]) = arg.headOption.map(_.split(",").toSeq).getOrElse(HeadlineQueries)
+    def withSession(coalesce: Boolean)(f: SparkSession => Unit): Unit = {
+      val spark = session(maxCores, coalesce)
+      try f(spark) finally spark.stop()
+    }
+    args.toList match {
+      case Nil => driver()
+      case "cluster" :: path :: rows :: reps :: warmPath :: Nil =>
+        cluster(path, rows.toLong, reps.toInt, warmPath)
+      case "explain" :: outDir :: rest => withSession(coalesce = true) { spark =>
+        explain(spark, outDir, rest.headOption.getOrElse("before"), names(rest.drop(1)))
+      }
+      case (mode @ ("time" | "noop")) :: rest => withSession(coalesce = true) { spark =>
+        val sink: DataFrame => Unit =
+          if (mode == "noop") _.write.format("noop").mode("overwrite").save()
+          else hashSink(_)
+        val (results, errors) = timeQueries(spark, names(rest), sink)
+        println(Json.mapper.writeValueAsString(VectorMap[String, Any]("mode" -> mode,
+          "sf" -> sfDir, "queries" -> querySecs(results), "errors" -> errors)))
+      }
+      // the corpus job in the session config of the driver's corpus levels
+      case "corpus" :: rest => withSession(coalesce = false) { spark =>
+        val rows = rest.headOption.fold(12000000L)(_.toLong)
+        val path = corpusTable(spark, rows)
+        spark.sparkContext.setJobDescription("bench: corpus feature job")
+        val ts = (0 to Draws).map { _ =>
+          val (dt, n, dg) = corpusRun(spark, path, rows)
+          System.err.println(f"[bench] corpus $dt%.2f s rows=$n digest=$dg")
+          dt
+        }
+        println(Json.mapper.writeValueAsString(VectorMap[String, Any]("mode" -> "corpus",
+          "rows" -> rows, "min_sec" -> round(ts.tail.min, 2), "draws" -> ts.map(round(_, 2)))))
+      }
+      case _ =>
+        System.err.println("usage: graft.Bench [explain <outdir> [suffix] [q1,q2,...] | " +
+          "time [q1,...] | noop [q1,...] | corpus [rows] | cluster path rows reps warmPath]")
+        sys.exit(2)
+    }
   }
 }

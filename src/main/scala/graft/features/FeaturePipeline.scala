@@ -31,7 +31,7 @@ import graft.operators.AsOf
   */
 object FeaturePipeline {
 
-  /** Operator-internal persists (phase-1 here, the dedup inverted index in
+  /** Operator-internal persists (e.g. the dedup inverted index in
     * [[graft.operators.Dedup]]) register in [[graft.operators.Caches]];
     * callers own the lifecycle — release once the output is materialized
     * (Bench/Verify do, after each query/rep).
@@ -260,25 +260,9 @@ object FeaturePipeline {
     * efficiency 0.40 with the plain window vs the hot entity holding ~12%
     * of all rows).
     */
-  /** @param reusePhase1 true: persist phase-1 and read it for both the
-    *   summary and the merge (one compute, ~3x its bytes in cache traffic);
-    *   false: recompute phase-1 for each consumer (2x CPU, zero cache
-    *   traffic). CPU scales with executors; a single box's memory bandwidth
-    *   does not. Default false since round 6: after the scalar-kernel
-    *   fusions phase-1 compute is one cheap pass and the MEMORY_AND_DISK
-    *   round trip dominates on a shared-memory-controller box — measured
-    *   at 12M rows, identical digests: local[32] 12.50 s persist vs
-    *   8.91 s recompute; local[8] 21.30 vs 21.70 (noise); local[2] 65.99
-    *   vs 70.31 (the one CPU-bound level where persist wins); pair
-    *   efficiency (T2/T8)/4 0.775 persist vs 0.810 recompute in the same
-    *   window. Output is bit-identical either way (GoldenFeatureSpec);
-    *   deployments whose executor memory bandwidth scales with nodes
-    *   should re-measure and may flip it back.
-    */
   def featuresSkewSafe(events: DataFrame, dim: DataFrame, entDim: DataFrame,
       gapMs: Long = Corpus.SessionGapMs, timeBuckets: Int = 64,
-      bounds: Option[(Long, Long)] = None,
-      reusePhase1: Boolean = false): DataFrame = {
+      bounds: Option[(Long, Long)] = None): DataFrame = {
     val scalar = scalarFeatures(events, dim, entDim)
 
     // fixed-width global time buckets. Bounds come from the caller when the
@@ -293,10 +277,7 @@ object FeaturePipeline {
       if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
     }
     val span = math.max(1L, (hi - lo) / timeBuckets + 1L)
-    // drop the payload columns BEFORE phase 1: the persist below is a
-    // materialization barrier, so Catalyst's column pruning cannot reach
-    // through it — without this the cache holds image bytes + captions
-    // (measured 2.5x slower end-to-end at 6M rows)
+    // drop the payload columns BEFORE phase 1: no later phase reads them
     val withBkt = scalar.drop("bytes", "caption", "fmt", "event_time")
       .withColumn("__bkt",
         ((col("event_ms") - lit(lo)) / lit(span)).cast("int"))
@@ -304,12 +285,9 @@ object FeaturePipeline {
     // --- phase 1: local windows over (entity, bucket) -----------------------
     val w1 = Window.partitionBy(col("entity_id"), col("__bkt"))
       .orderBy(col("event_ms"), col("seq"))
-    val local0 = localWindows(withBkt, w1, gapMs)
-    // phase-1 output feeds BOTH the summary and the final merge: either
-    // persist it (registered in Caches; callers release via releaseCaches())
-    // or let each consumer recompute it (see reusePhase1).
-    val local =
-      if (reusePhase1) graft.operators.Caches.cache(local0) else local0
+    // phase-1 output feeds BOTH the summary and the final merge; each
+    // consumer recomputes it (measured faster than a persist round trip)
+    val local = localWindows(withBkt, w1, gapMs)
 
     // --- per-bucket summary (|entities| x buckets rows — tiny) --------------
     val summary = local.groupBy(col("entity_id"), col("__bkt"))

@@ -51,7 +51,7 @@ object Text {
   /** Single-pass counting kernel for the token-stats family: ONE tokenizer
     * scan yields (n tokens, non-whitespace codepoints, summed token char
     * lengths, stopword occurrences, punctuation codepoints) — the raw
-    * integer inputs of [[tokenCount]]/[[bpeTokenCount]]/[[meanTokenLen]]/
+    * integer inputs of [[tokenCount]]/[[bpeTokenCount]]/mean token length/
     * [[stopwordRatio]]/[[punctRatio]], which previously ran five separate
     * interpreted HOF/regex passes per row. Every RATIO stays an expression
     * over these counts, so the double arithmetic is the expressions' own —
@@ -136,14 +136,6 @@ object Text {
     when(length(text) > 0,
       length(regexp_replace(text, "[a-zA-Z0-9\\s]", "")).cast("double") / length(text))
       .otherwise(lit(0.0))
-
-  /** Mean token length. */
-  def meanTokenLen(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) > 0,
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(toks))
-      .otherwise(lit(0.0))
-  }
 
   /** Fraction of tokens that repeat an earlier token — the word-level
     * repetition signal of Gopher-style quality filtering (Rae et al. 2021

@@ -41,30 +41,12 @@ object Curation {
     * keep, cleaned_text — kept lines re-joined, empty string when the
     * page is rejected so downstream never trains on a rejected page).
     */
-  /** The C4 per-row columns as named fields over `t` — ONE definition
-    * shared by [[c4Clean]] and inline consumers (the curation funnel's
-    * zero-join staging pass): (n_lines, n_kept, reject_reason, cleaned).
-    */
-  private[graft] def c4Fields(t: Column, minLineWords: Int = 5,
-      minKeptLines: Int = 3): (Column, Column, Column, Column) = {
-    val lines = split(t, "\r?\n", -1)
-    val keepLine = (l: Column) =>
-      substring(rtrim(l), -1, 1).isin(".", "!", "?", "\"") &&
-        size(Text.tokens(l)) >= minLineWords
-    val kept = filter(lines, keepLine)
-    val reason = when(t.isNull, "missing_text")
-      .when(lower(t).contains("lorem ipsum"), "lorem_ipsum")
-      .when(t.contains("{"), "brace")
-      .when(size(kept) < minKeptLines, "too_few_lines")
-    (coalesce(size(lines), lit(0)), coalesce(size(kept), lit(0)), reason,
-      when(reason.isNull, array_join(kept, "\n")).otherwise(lit("")))
-  }
-
   /** Per-row C4 result struct ([[c4FieldsFast]]). */
   final case class C4Row(n_lines: Int, n_kept: Int, reject_reason: String,
       cleaned_text: String)
 
-  /** Typed single-pass C4 kernel — the `*Fast` twin of [[c4Fields]]
+  /** Typed single-pass C4 kernel — the `*Fast` twin of the expression
+    * reference (spec-side `KernelTwins.c4Fields`)
     * (byte-equal incl. CRLF, trailing-empty-line and lone-'\r' edges,
     * asserted in KernelTwinSpec): one scan splits on \r?\n exactly as the
     * regex does (an optional '\r' immediately before each '\n' joins the
@@ -159,7 +141,7 @@ object Curation {
     * so rejections are auditable.
     */
   /** Raw per-row Gopher signals. The five fields mirror the expression
-    * formulation ([[gopherSignalsExpr]], kept as the spec reference) value
+    * formulation (spec-side `KernelTwins.gopherSignalsExpr`) value
     * for value — same token set, same UTF8String char counts / lowercase,
     * same double division order — so [[gopherGate]] built on either is
     * bit-identical (asserted in CurationSpec).
@@ -215,28 +197,6 @@ object Curation {
         }
       }
     }
-  }
-
-  /** The expression (HOF) formulation of the five Gopher signals — the
-    * REFERENCE semantics, retained as the bit-equality oracle for
-    * [[gopherSignalsFast]] (CurationSpec) exactly like
-    * [[Dedup.minhashSignature]] vs its Fast twin.
-    */
-  private[graft] def gopherSignalsExpr(t: Column, stopwords: Seq[String])
-      : (Column, Column, Column, Column, Column) = {
-    val toks = Text.tokens(t)
-    val wc = coalesce(size(toks), lit(0))
-    val mwl = when(wc > 0,
-      aggregate(toks, lit(0L), (acc, x) => acc + length(x)).cast("double") / wc)
-      .otherwise(lit(0.0))
-    val alphaFrac = when(wc > 0,
-      size(filter(toks, x => x.rlike("[A-Za-z]"))).cast("double") / wc)
-      .otherwise(lit(0.0))
-    val nStop = coalesce(
-      size(array_intersect(array_distinct(transform(toks, lower _)),
-        array(stopwords.map(lit(_)): _*))), lit(0))
-    val dupFrac = Text.dupWordFrac(t)
-    (wc, mwl, alphaFrac, nStop, dupFrac)
   }
 
   /** The first-failing Gopher rule over signal columns — shared by

@@ -74,19 +74,6 @@ object Dedup {
         .otherwise(array().cast("array<string>")))
   }
 
-  /** MinHash signature, REFERENCE formulation: for each of k hash families,
-    * min over grams of xxhash64(seed_i, gram). Pure projection (no shuffle),
-    * single pass over the gram array (k hashes per gram, min-combined via
-    * zip_with). Kept for the bit-equality spec; operators use
-    * [[minhashSignatureFast]] (same bits, ~100x cheaper).
-    */
-  def minhashSignature(grams: Column, k: Int): Column =
-    aggregate(grams,
-      array_repeat(lit(Long.MaxValue), lit(k)),
-      (acc, g) => zip_with(acc,
-        array((0 until k).map(i => xxhash64(lit(i), g)): _*),
-        (a, b) => least(a, b)))
-
   /** Exact regex-\s+ tokenizer as a tight char scan (maximal runs of
     * non-[ \t\n\x0B\f\r] chars) — byte-equal to [[Text.tokens]] without
     * per-call Pattern compilation or regex backtracking.
@@ -114,7 +101,8 @@ object Dedup {
   }
 
   /** Typed MinHash signature over word `shingleN`-grams of `text`:
-    * bit-identical to `minhashSignature(tokenGrams(text, shingleN), k)`
+    * bit-identical to the HOF reference
+    * `minhashSignature(tokenGrams(text, shingleN), k)` (spec-side `KernelTwins`)
     * (duplicate grams cannot change a min; null/short text yields the
     * Long.MaxValue init vector, same as the HOF over an empty gram array).
     * One JIT'd loop per row: UTF-8 gram bytes are assembled in a reused
@@ -237,23 +225,8 @@ object Dedup {
       .where(col("jaccard") >= minJaccard)
   }
 
-  /** SimHash (64-bit), REFERENCE formulation: sign-sum of per-token hash
-    * bits weighted by presence. Kept for the bit-equality spec; operators
-    * use [[simhashFast]] (same bits, one loop instead of 64 interpreted
-    * aggregates per row).
-    */
-  def simhash(text: Column): Column = {
-    val toks = Text.tokens(text)
-    val hs = transform(toks, t => xxhash64(t))
-    // for each bit, +1 if set else -1, summed over tokens; bit set iff sum>0
-    (0 until 64).map { b =>
-      val votes = aggregate(hs, lit(0),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      when(votes > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** Typed SimHash: bit-identical to [[simhash]] (token hash = Catalyst
+  /** Typed SimHash: bit-identical to the HOF reference
+    * (spec-side `KernelTwins.simhash`; token hash = Catalyst
     * xxhash64 seed 42; duplicates vote repeatedly, exactly like the HOF).
     * Null/empty text yields 0L, matching the HOF's `otherwise(0)` fold.
     */

@@ -68,7 +68,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val data = docs(40, 13L)
     val d = data.toDF("doc_id", "text")
     // oracle: compute simhash per doc via the same column expr, then all pairs
-    val sigs = d.select(col("doc_id"), Dedup.simhash(col("text")).as("sig"))
+    val sigs = d.select(col("doc_id"), KernelTwins.simhash(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = (for {
       a <- sigs.keys; b <- sigs.keys if a < b
@@ -140,7 +140,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("minhashSignatureFast is bit-identical to the HOF reference formulation") {
     val d = (docs(25, 31L) ++ edgeTexts).toDF("doc_id", "text")
     val hof = d.select(col("doc_id"),
-      Dedup.minhashSignature(Dedup.tokenGrams(col("text"), 3), 16).as("sig"))
+      KernelTwins.minhashSignature(Dedup.tokenGrams(col("text"), 3), 16).as("sig"))
       .collect().map(r => r.getLong(0) ->
         Option(r.getSeq[Long](1)).map(_.toList).getOrElse(List.fill(16)(Long.MaxValue)))
       .toMap
@@ -152,7 +152,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("simhashFast is bit-identical to the HOF reference formulation") {
     val d = (docs(25, 37L) ++ edgeTexts).toDF("doc_id", "text")
-    val hof = d.select(col("doc_id"), Dedup.simhash(col("text")).as("sig"))
+    val hof = d.select(col("doc_id"), KernelTwins.simhash(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fast = d.select(col("doc_id"), Dedup.simhashFast(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -140,30 +140,6 @@ class GoldenFeatureSpec extends AnyFunSuite {
     }
   }
 
-  test("skew-safe features: reusePhase1 recompute ≡ persist, bit-identical") {
-    // round 6: the default flipped to recompute (persist round-trip of the
-    // wide phase-1 rows cost more than the kernel recompute after the
-    // kernel fusions). Phase 1 is deterministic, so both modes must agree
-    // on every bit — including the order-sensitive double columns, because
-    // the per-partition row order is the window sort either way.
-    val p = Corpus.Params(rows = 3000, entities = 8)
-    val ev = Corpus.events(spark, p)
-    val dim = Corpus.dimFeatures(spark, p.seed)
-    val ed = FeaturePipeline.entityDim(spark, p.entities)
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
-      df.collect().toSeq.map(_.toSeq.map {
-        case d: Double => java.lang.Double.doubleToRawLongBits(d)
-        case x => x
-      }).sortBy(_.mkString("|"))
-    val a = canon(FeaturePipeline.featuresSkewSafe(ev, dim, ed,
-      timeBuckets = 13, reusePhase1 = true))
-    FeaturePipeline.releaseCaches()
-    val b = canon(FeaturePipeline.featuresSkewSafe(ev, dim, ed,
-      timeBuckets = 13, reusePhase1 = false))
-    FeaturePipeline.releaseCaches()
-    assert(a == b)
-  }
-
   test("dim-table rail: an over-bound dim fails fast with a clear message") {
     val p = Corpus.Params(rows = 200, entities = 4)
     val ev = Corpus.events(spark, p)

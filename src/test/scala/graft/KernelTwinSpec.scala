@@ -46,7 +46,7 @@ class KernelTwinSpec extends AnyFunSuite {
 
   test("gopherSignalsFast == the HOF signal expressions, all five fields") {
     val stop = Seq("the", "a")
-    val (wc, mwl, af, ns, dp) = Curation.gopherSignalsExpr(col("text"), stop)
+    val (wc, mwl, af, ns, dp) = KernelTwins.gopherSignalsExpr(col("text"), stop)
     val sig = Curation.gopherSignalsFast(stop)(col("text"))
     // the expression formulation's null-text conventions (coalesce-to-0 /
     // otherwise-0.0) applied HERE, exactly as gopherGate's select does
@@ -72,7 +72,7 @@ class KernelTwinSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r).toMap
     // reference gate rebuilt from the expression signals with the same
     // reason chain + rounding
-    val (wc, mwl, af, ns, dp) = Curation.gopherSignalsExpr(col("text"), stop)
+    val (wc, mwl, af, ns, dp) = KernelTwins.gopherSignalsExpr(col("text"), stop)
     val reason = Curation.gopherReason(col("text"), coalesce(wc, lit(0)), mwl,
       af, coalesce(ns, lit(0)), dp, 5, 100000, 0.8, 0.5)
     val ref = df.select(col("id"), coalesce(wc, lit(0)).as("word_count"),
@@ -103,7 +103,7 @@ class KernelTwinSpec extends AnyFunSuite {
     ).map { case (i, s) => (i, s) }).toDF("id", "text")
     val fast = Curation.c4Clean(c4docs, "id", "text").collect()
       .map(r => r.getLong(0) -> r).toMap
-    val (nLines, nKept, reason, cleaned) = Curation.c4Fields(col("text"))
+    val (nLines, nKept, reason, cleaned) = KernelTwins.c4Fields(col("text"))
     val ref = c4docs.select(col("id"), nLines.as("n_lines"),
       nKept.as("n_kept"), reason.as("reject_reason"),
       reason.isNull.as("keep"), cleaned.as("cleaned_text")).collect()
@@ -142,7 +142,7 @@ class KernelTwinSpec extends AnyFunSuite {
     val ref = df.select(col("id"),
       Text.tokenCount(col("text")).cast("long"),
       Text.bpeTokenCount(col("text")),
-      round(Text.meanTokenLen(col("text")), 4),
+      round(KernelTwins.meanTokenLen(col("text")), 4),
       round(Text.stopwordRatio(col("text"), Corpus.Stopwords), 4),
       round(Text.punctRatio(col("text")), 4)).collect()
     fast.zip(ref).foreach { case (f, r) =>

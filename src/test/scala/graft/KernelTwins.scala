@@ -1,0 +1,89 @@
+package graft
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
+
+import graft.functions.Text
+import graft.functions.Text.tokens
+
+/** The interpreted expression (HOF) formulations the typed kernels in main
+  * are checked against — the REFERENCE semantics of each `*Fast` twin
+  * (KernelTwinSpec, DedupSimilaritySpec). Only specs call them, so they
+  * live on the test side; their bodies are the reference and do not change.
+  */
+object KernelTwins {
+
+  /** The C4 per-row columns as named fields over `t`: (n_lines, n_kept,
+    * reject_reason, cleaned) — the reference for
+    * [[graft.operators.Curation.c4FieldsFast]].
+    */
+  def c4Fields(t: Column, minLineWords: Int = 5,
+      minKeptLines: Int = 3): (Column, Column, Column, Column) = {
+    val lines = split(t, "\r?\n", -1)
+    val keepLine = (l: Column) =>
+      substring(rtrim(l), -1, 1).isin(".", "!", "?", "\"") &&
+        size(Text.tokens(l)) >= minLineWords
+    val kept = filter(lines, keepLine)
+    val reason = when(t.isNull, "missing_text")
+      .when(lower(t).contains("lorem ipsum"), "lorem_ipsum")
+      .when(t.contains("{"), "brace")
+      .when(size(kept) < minKeptLines, "too_few_lines")
+    (coalesce(size(lines), lit(0)), coalesce(size(kept), lit(0)), reason,
+      when(reason.isNull, array_join(kept, "\n")).otherwise(lit("")))
+  }
+
+  /** The expression formulation of the five Gopher signals — the reference
+    * for [[graft.operators.Curation.gopherSignalsFast]].
+    */
+  def gopherSignalsExpr(t: Column, stopwords: Seq[String])
+      : (Column, Column, Column, Column, Column) = {
+    val toks = Text.tokens(t)
+    val wc = coalesce(size(toks), lit(0))
+    val mwl = when(wc > 0,
+      aggregate(toks, lit(0L), (acc, x) => acc + length(x)).cast("double") / wc)
+      .otherwise(lit(0.0))
+    val alphaFrac = when(wc > 0,
+      size(filter(toks, x => x.rlike("[A-Za-z]"))).cast("double") / wc)
+      .otherwise(lit(0.0))
+    val nStop = coalesce(
+      size(array_intersect(array_distinct(transform(toks, lower _)),
+        array(stopwords.map(lit(_)): _*))), lit(0))
+    val dupFrac = Text.dupWordFrac(t)
+    (wc, mwl, alphaFrac, nStop, dupFrac)
+  }
+
+  /** MinHash signature: for each of k hash families, min over grams of
+    * xxhash64(seed_i, gram), min-combined via zip_with — the reference for
+    * [[graft.operators.Dedup.minhashSignatureFast]].
+    */
+  def minhashSignature(grams: Column, k: Int): Column =
+    aggregate(grams,
+      array_repeat(lit(Long.MaxValue), lit(k)),
+      (acc, g) => zip_with(acc,
+        array((0 until k).map(i => xxhash64(lit(i), g)): _*),
+        (a, b) => least(a, b)))
+
+  /** SimHash (64-bit): sign-sum of per-token hash bits weighted by
+    * presence — the reference for [[graft.operators.Dedup.simhashFast]].
+    */
+  def simhash(text: Column): Column = {
+    val toks = Text.tokens(text)
+    val hs = transform(toks, t => xxhash64(t))
+    // for each bit, +1 if set else -1, summed over tokens; bit set iff sum>0
+    (0 until 64).map { b =>
+      val votes = aggregate(hs, lit(0),
+        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
+      when(votes > 0, lit(1L << b)).otherwise(lit(0L))
+    }.reduce((a, b) => a.bitwiseOR(b))
+  }
+
+  /** Mean token length — the reference for the token-stats kernel's
+    * `mean_token_len` column.
+    */
+  def meanTokenLen(text: Column): Column = {
+    val toks = tokens(text)
+    when(size(toks) > 0,
+      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(toks))
+      .otherwise(lit(0.0))
+  }
+}
