@@ -46,7 +46,7 @@ object QueriesR4 {
   private[graft] val linedTextFast = udf { (t: String) =>
     if (t == null) ""
     else {
-      val toks = graft.operators.Dedup.fastTokens(t)
+      val toks = Text.fastTokens(t)
       if (toks.isEmpty) "\n" // sequence(0, -1) yields two empty groups
       else {
         val sb = new java.lang.StringBuilder(t.length + 8)

@@ -1,6 +1,6 @@
 package graft.features
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -45,11 +45,10 @@ object FeaturePipeline {
     * (topic, token, rank, score) rows ≈ low hundreds of MB on the driver —
     * far above any real dimension feature table (the reference's rank
     * tables are ~1k rows/topic) and far below driver OOM. Overridable per
-    * process (system property first so tests can exercise the rail) for
-    * deliberate outliers.
+    * process with the `graft.maxDimRows` system property, for deliberate
+    * outliers and for the spec that exercises the rail.
     */
   def maxDimRows: Int = sys.props.get("graft.maxDimRows")
-    .orElse(sys.env.get("SPARK_GRAFT_MAX_DIM_ROWS"))
     .map(_.toInt).getOrElse(1000000)
 
   /** Tiny per-entity metadata table: entity → topic assignment (broadcast). */
@@ -110,7 +109,7 @@ object FeaturePipeline {
     val tfUdf = udf((topic: String, caption: String) => {
       // fastTokens = exact \s+ tokenizer without per-call Pattern
       // compilation (golden-spec'd equal to Text.tokens)
-      val toks = graft.operators.Dedup.fastTokens(caption)
+      val toks = Text.fastTokens(caption)
       var n = 0; var sw = 0; var dm = 0; var dmr = Int.MaxValue; var dss = 0.0
       val tm = if (topic == null) null else byTopic.get(topic)
       var i = 0
@@ -128,18 +127,13 @@ object FeaturePipeline {
       // the Text.punctRatio expression ran a full regexp_replace building a
       // stripped COPY of every caption just to count [^a-zA-Z0-9\s] chars —
       // a second corpus-sized string pass. This counts codepoints exactly
-      // as the regex does (Java \s = the six ASCII ws chars; codepoints
-      // over U+007F never match the class).
+      // as the regex does (codepoints over U+007F never match the class).
       var pc = 0
       if (caption != null) {
         var ci = 0
         while (ci < caption.length) {
           val cp = caption.codePointAt(ci)
-          val matched = cp < 128 && ((cp >= 'a' && cp <= 'z') ||
-            (cp >= 'A' && cp <= 'Z') || (cp >= '0' && cp <= '9') ||
-            cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
-            cp == '\f' || cp == '\r')
-          if (!matched) pc += 1
+          if (!(Text.isAsciiAlnum(cp) || Text.isWs(cp))) pc += 1
           ci += Character.charCount(cp)
         }
       }
@@ -206,6 +200,35 @@ object FeaturePipeline {
       .withColumn("__lqsum", sum(col("quality")).over(wRun))
       .withColumn("__lfilled", last(col("sparse_quality"), ignoreNulls = true).over(wRun))
   }
+
+  /** Repairs [[localWindows]]' columns across the boundary to the earlier
+    * rows a carry summarizes, then drops the local columns. The carry is
+    * the last carried event's time and phash, the carried session count,
+    * `bnew` (1 if the boundary gap opens a new session, else 0), the length
+    * of the session still open at the boundary, the last non-null sparse
+    * value, and the carried quality sum and row count. ONE definition of
+    * the repair algebra for [[featuresSkewSafe]]'s bucket merge (the carry
+    * is all earlier buckets) and [[featuresIncremental]] (the carry is the
+    * state table), for the same reason [[localWindows]] is one.
+    */
+  private def repairBoundary(df: DataFrame, lastMs: Column, lastPhash: Column,
+      sessCnt: Column, bnew: Column, openLen: Column, lastSparse: Column,
+      qsum: Column, n: Column): DataFrame =
+    df.withColumn("dt_prev_ms",
+        when(col("__lrn") > 1, col("__lgap")).otherwise(col("event_ms") - lastMs))
+      .withColumn("__prev_phash",
+        when(col("__lrn") > 1, col("__lphash_prev")).otherwise(lastPhash))
+      .withColumn("phash_prev_hamming",
+        graft.functions.HammingDistance.hamming(col("phash"), col("__prev_phash")))
+      .withColumn("session_idx", sessCnt + col("__lsess") - 1L - (lit(1L) - bnew))
+      .withColumn("session_pos",
+        (col("__lpos") + when(col("__lsess") === 1L && bnew === 0L, openLen)
+          .otherwise(lit(0L))).cast("int"))
+      .withColumn("quality_filled", coalesce(col("__lfilled"), lastSparse))
+      .withColumn("running_quality_mean",
+        round((qsum + col("__lqsum")) / (n + col("__lrn")) + lit(1.7e-8), 6))
+      .drop("__lrn", "__lgap", "__lphash_prev", "__lnew", "__lsess", "__lpos",
+        "__lqsum", "__lfilled", "__prev_phash")
 
   /** Compute the feature vector table from an event-shaped corpus.
     *
@@ -344,27 +367,13 @@ object FeaturePipeline {
     // the fact side, no driver collect. At 10^12 rows the carries table is
     // |entities|·|buckets| rows (can reach 10^8), far beyond broadcast range.
     val merged = local.join(carries.hint("SHUFFLE_HASH"), Seq("entity_id", "__bkt"))
-    merged
-      .withColumn("dt_prev_ms",
-        when(col("__lrn") > 1, col("__lgap"))
-          .otherwise(col("event_ms") - col("prev_last_ms")))
-      .withColumn("__prev_phash",
-        when(col("__lrn") > 1, col("__lphash_prev")).otherwise(col("prev_last_phash")))
-      .withColumn("phash_prev_hamming",
-        graft.functions.HammingDistance.hamming(col("phash"), col("__prev_phash")))
-      .withColumn("session_idx",
-        col("carry_sess") + col("__lsess") - 1L - (lit(1L) - col("bnew")))
-      .withColumn("session_pos",
-        (col("__lpos") + when(col("__lsess") === 1L && col("bnew") === 0L,
-          col("prev_open")).otherwise(lit(0L))).cast("int"))
-      .withColumn("quality_filled", coalesce(col("__lfilled"), col("carry_sparse")))
-      .withColumn("running_quality_mean",
-        round((col("carry_qsum") + col("__lqsum")) / (col("carry_cnt") + col("__lrn"))
-          + lit(1.7e-8), 6))
-      .drop("__bkt", "__lrn", "__lgap", "__lphash_prev", "__lnew", "__lsess",
-        "__lpos", "__lqsum", "__lfilled", "__prev_phash", "prev_last_ms",
-        "prev_last_phash", "bnew", "carry_cnt", "carry_qsum", "carry_sess",
-        "carry_sparse", "prev_open")
+    repairBoundary(merged, lastMs = col("prev_last_ms"),
+        lastPhash = col("prev_last_phash"), sessCnt = col("carry_sess"),
+        bnew = col("bnew"), openLen = col("prev_open"),
+        lastSparse = col("carry_sparse"), qsum = col("carry_qsum"),
+        n = col("carry_cnt"))
+      .drop("__bkt", "prev_last_ms", "prev_last_phash", "bnew", "carry_cnt",
+        "carry_qsum", "carry_sess", "carry_sparse", "prev_open")
   }
 
   /** Compact per-entity resume state extracted from a feature table — the
@@ -399,7 +408,7 @@ object FeaturePipeline {
     *
     * Scale shape: the historical feature table is never read — the carry is
     * the |entities|-row state table, broadcast into one projection after the
-    * slice's own windows (same boundary-repair algebra as
+    * slice's own windows ([[repairBoundary]], shared with
     * [[featuresSkewSafe]]'s bucket merge). Precondition: every new event is
     * strictly later than its entity's `st_last_ms` (append-only ingest, the
     * snapshot watermark contract).
@@ -410,9 +419,7 @@ object FeaturePipeline {
     val scalar = scalarFeatures(newEvents, dim, entDim)
     val w = Window.partitionBy(col("entity_id")).orderBy(col("event_ms"), col("seq"))
     val local = localWindows(scalar, w, gapMs)
-    local.join(broadcast(state), Seq("entity_id"), "left")
-      // boundary repair — identical algebra to featuresSkewSafe's merge,
-      // with the state table playing the role of "all earlier buckets".
+    val joined = local.join(broadcast(state), Seq("entity_id"), "left")
       // bnew is a per-entity property of the BOUNDARY (gap between the
       // slice's first row and the carried last event), constant across rows
       .withColumn("__first_ms",
@@ -420,27 +427,15 @@ object FeaturePipeline {
       .withColumn("__bnew",
         when(col("st_last_ms").isNull ||
           col("__first_ms") - col("st_last_ms") > gapMs, 1L).otherwise(0L))
-      .withColumn("dt_prev_ms",
-        when(col("__lrn") > 1, col("__lgap"))
-          .otherwise(col("event_ms") - col("st_last_ms")))
-      .withColumn("__prev_phash",
-        when(col("__lrn") > 1, col("__lphash_prev")).otherwise(col("st_last_phash")))
-      .withColumn("phash_prev_hamming",
-        graft.functions.HammingDistance.hamming(col("phash"), col("__prev_phash")))
-      .withColumn("session_idx",
-        coalesce(col("st_sess_cnt"), lit(0L)) + col("__lsess") - 1L
-          - (lit(1L) - col("__bnew")))
-      .withColumn("session_pos",
-        (col("__lpos") + when(col("__lsess") === 1L && col("__bnew") === 0L,
-          col("st_open_len")).otherwise(lit(0L))).cast("int"))
-      .withColumn("quality_filled", coalesce(col("__lfilled"), col("st_last_sparse")))
-      .withColumn("running_quality_mean",
-        round((coalesce(col("st_qsum"), lit(0.0)) + col("__lqsum"))
-          / (coalesce(col("st_n"), lit(0L)) + col("__lrn")) + lit(1.7e-8), 6))
-      .drop("__lrn", "__lgap", "__lphash_prev", "__lnew", "__lsess", "__lpos",
-        "__lqsum", "__lfilled", "__prev_phash", "__bnew", "__first_ms",
-        "st_n", "st_qsum", "st_last_ms", "st_last_phash", "st_sess_cnt",
-        "st_open_len", "st_last_sparse", "bytes", "caption", "fmt", "event_time")
+    repairBoundary(joined, lastMs = col("st_last_ms"),
+        lastPhash = col("st_last_phash"),
+        sessCnt = coalesce(col("st_sess_cnt"), lit(0L)), bnew = col("__bnew"),
+        openLen = col("st_open_len"), lastSparse = col("st_last_sparse"),
+        qsum = coalesce(col("st_qsum"), lit(0.0)),
+        n = coalesce(col("st_n"), lit(0L)))
+      .drop("__bnew", "__first_ms", "st_n", "st_qsum", "st_last_ms",
+        "st_last_phash", "st_sess_cnt", "st_open_len", "st_last_sparse",
+        "bytes", "caption", "fmt", "event_time")
   }
 
   /** Attach the point-in-time feature vector to arbitrary (entity, t) probes

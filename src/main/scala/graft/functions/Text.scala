@@ -1,13 +1,86 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import java.nio.charset.StandardCharsets
 
-/** Text-analysis column functions for caption/document processing — all
-  * built from codegen'd Catalyst built-ins (no UDFs in the hot path), per
-  * SURVEY.md §2.8/§2.12 policy ("expressions first").
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.Platform
+
+/** Text-analysis column functions for caption/document processing, and the
+  * ONE definition of the whitespace tokenizer and the token hash every
+  * typed kernel uses. The Column functions are codegen'd Catalyst
+  * built-ins, per SURVEY.md §2.8/§2.12 policy ("expressions first"); the
+  * `*Fast` UDFs are their spec-asserted typed twins for the hot paths where
+  * the interpreted HOF/regex form measured too slow.
+  *
+  * Tokenizer rules (those of [[tokens]], which every kernel follows): a
+  * token is a maximal run of non-[[isWs]] chars, where whitespace is
+  * exactly Java regex `\s` without UNICODE_CHARACTER_CLASS — the six ASCII
+  * chars space, \t, \n, U+000B, \f, \r. U+00A0, U+0085, U+2028, U+3000
+  * and every other non-ASCII char are token chars, as they are for
+  * `split(_, "\\s+")`.
   */
 object Text {
+
+  /** The whitespace class of `split(_, "\\s+")` (Java regex `\s`). Takes a
+    * char or a codepoint; no codepoint above U+007F is whitespace.
+    */
+  def isWs(c: Int): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == 0x0B || c == '\f' || c == '\r'
+
+  /** `[a-zA-Z0-9]` — the non-whitespace part of [[punctRatio]]'s class. */
+  def isAsciiAlnum(c: Int): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
+
+  /** First index >= `i` holding a non-whitespace char (`s.length` if none):
+    * the start of the next token.
+    */
+  def skipWs(s: String, i: Int): Int = {
+    var j = i
+    while (j < s.length && isWs(s.charAt(j))) j += 1
+    j
+  }
+
+  /** End (exclusive) of the token starting at `i`. With [[skipWs]] this is
+    * the allocation-free index scan for kernels that need token bounds
+    * without materializing the tokens.
+    */
+  def tokenEnd(s: String, i: Int): Int = {
+    var j = i + 1
+    while (j < s.length && !isWs(s.charAt(j))) j += 1
+    j
+  }
+
+  /** [[tokens]] as a tight char scan: byte-equal to the expression without
+    * per-call Pattern compilation or regex backtracking. Null text has no
+    * tokens (the expression's null array).
+    */
+  def fastTokens(text: String): Array[String] = {
+    if (text == null) return Array.empty[String]
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var i = skipWs(text, 0)
+    while (i < text.length) {
+      val j = tokenEnd(text, i)
+      out += text.substring(i, j)
+      i = skipWs(text, j)
+    }
+    out.toArray
+  }
+
+  /** Seed of every XXH64 term/gram/line hash: the seed Catalyst's
+    * `xxhash64(...)` expression uses, so kernel hashes equal expression
+    * hashes bit for bit.
+    */
+  val HashSeed = 42L
+
+  /** `xxhash64(token)` of the expression side: Catalyst XXH64 with
+    * [[HashSeed]] over the token's UTF-8 bytes.
+    */
+  def tokenHash(s: String): Long = {
+    val b = s.getBytes(StandardCharsets.UTF_8)
+    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, HashSeed)
+  }
 
   /** Whitespace tokenization; empty tokens removed. */
   def tokens(text: Column): Column =
@@ -16,11 +89,9 @@ object Text {
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** Typed single-pass twin of [[tokenCount]]: counts maximal runs of
-    * non-whitespace chars (the exact `\s` class of split("\\s+")) without
-    * materializing the token array — µs/row vs the interpreted
-    * split+filter HOF pair, the same `*Fast` policy as
-    * [[graft.operators.Dedup.fastTokens]] (spec-asserted equal, including
+  /** Typed single-pass twin of [[tokenCount]]: counts tokens with the
+    * [[skipWs]]/[[tokenEnd]] scan without materializing them — µs/row vs
+    * the interpreted split+filter HOF pair (spec-asserted equal, including
     * the null → null convention of size-over-null-array).
     */
   val tokenCountFast: org.apache.spark.sql.expressions.UserDefinedFunction =
@@ -28,21 +99,10 @@ object Text {
       if (text == null) null.asInstanceOf[java.lang.Integer]
       else {
         var n = 0
-        var i = 0
-        val len = text.length
-        while (i < len) {
-          val c = text.charAt(i)
-          if (c == ' ' || c == '\t' || c == '\n' || c == '' || c == '\f' || c == '\r') {
-            i += 1
-          } else {
-            n += 1
-            var j = i + 1
-            while (j < len && {
-              val d = text.charAt(j)
-              !(d == ' ' || d == '\t' || d == '\n' || d == '' || d == '\f' || d == '\r')
-            }) j += 1
-            i = j
-          }
+        var i = skipWs(text, 0)
+        while (i < text.length) {
+          n += 1
+          i = skipWs(text, tokenEnd(text, i))
         }
         java.lang.Integer.valueOf(n)
       }
@@ -57,9 +117,10 @@ object Text {
     * over these counts, so the double arithmetic is the expressions' own —
     * the kernel only counts (KernelTwinSpec asserts each derived column
     * equal to its expression twin). Char counts are codepoint counts
-    * (UTF8String numChars semantics); the \s class is the exact six ASCII
-    * chars of Java regex \s. Null text returns a null struct — the
-    * expression forms' null algebra then applies unchanged.
+    * (UTF8String numChars semantics); every non-whitespace codepoint is a
+    * token codepoint, so the second and third fields are one count. Null
+    * text returns a null struct — the expression forms' null algebra then
+    * applies unchanged.
     */
   def tokenStatsFast(stopwords: Seq[String])
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
@@ -67,41 +128,24 @@ object Text {
     udf { (text: String) =>
       if (text == null) null
       else {
-        var n = 0            // tokens
-        var nwsChars = 0     // non-whitespace codepoints
-        var lenSum = 0L      // summed per-token codepoint lengths
-        var sw = 0           // stopword token occurrences
-        var punct = 0        // non-[a-zA-Z0-9\s] codepoints
-        val len = text.length
-        var i = 0
-        var tokStart = -1
-        var tokChars = 0
-        def endToken(end: Int): Unit = {
-          if (tokStart >= 0) {
-            n += 1
-            lenSum += tokChars
-            if (stopSet.contains(text.substring(tokStart, end))) sw += 1
-            tokStart = -1
-            tokChars = 0
+        var n = 0      // tokens
+        var chars = 0  // token codepoints
+        var sw = 0     // stopword token occurrences
+        var punct = 0  // non-[a-zA-Z0-9\s] codepoints
+        var i = skipWs(text, 0)
+        while (i < text.length) {
+          val end = tokenEnd(text, i)
+          n += 1
+          if (stopSet.contains(text.substring(i, end))) sw += 1
+          while (i < end) {
+            val cp = text.codePointAt(i)
+            chars += 1
+            if (!isAsciiAlnum(cp)) punct += 1
+            i += Character.charCount(cp)
           }
+          i = skipWs(text, end)
         }
-        while (i < len) {
-          val cp = text.codePointAt(i)
-          val isWs = cp == ' ' || cp == '\t' || cp == '\n' || cp == 0x0B ||
-            cp == '\f' || cp == '\r'
-          if (isWs) endToken(i)
-          else {
-            if (tokStart < 0) tokStart = i
-            tokChars += 1
-            nwsChars += 1
-            val alnum = cp < 128 && ((cp >= 'a' && cp <= 'z') ||
-              (cp >= 'A' && cp <= 'Z') || (cp >= '0' && cp <= '9'))
-            if (!alnum) punct += 1
-          }
-          i += Character.charCount(cp)
-        }
-        endToken(len)
-        (n, nwsChars, lenSum, sw, punct)
+        (n, chars, chars.toLong, sw, punct)
       }: (Int, Int, Long, Int, Int)
     }
   }
@@ -119,10 +163,6 @@ object Text {
     val extra = greatest(lit(0.0), floor((chars - words * lit(6)) / lit(4.0)))
     (words + extra).cast("long")
   }
-
-  /** Occurrence count of a literal substring (portable replace-counting). */
-  def countOccurrences(text: Column, sub: String): Column =
-    ((length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(sub), ""))) / sub.length).cast("long")
 
   /** Ratio of stopword tokens to all tokens (quality signal). */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
@@ -249,36 +289,25 @@ object Text {
         val counts = new Array[Int](langsSorted.length)
         val n = text.length
         val buf = new Array[Char](maxMarkerLen)
-        var i = 0
+        var i = skipWs(text, 0)
         while (i < n) {
-          val c = text.charAt(i)
-          // the \s class of split("\\s+"): exactly these six ASCII chars
-          if (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r') {
-            i += 1
-          } else {
-            var j = i + 1
-            while (j < n && {
-              val d = text.charAt(j)
-              !(d == ' ' || d == '\t' || d == '\n' || d == '\u000B' || d == '\f' || d == '\r')
-            }) j += 1
-            val len = j - i
-            if (len <= maxMarkerLen) {
-              var k = 0
-              while (k < len) { buf(k) = Character.toLowerCase(text.charAt(i + k)); k += 1 }
-              // missing key -> 0 (no marker bits), explicitly: Scala unboxes
-              // HashMap[String, Int].get's null to 0 anyway, but silently
-              val mask = markerMask.getOrDefault(new String(buf, 0, len), 0)
-              if (mask != 0) {
-                var b = 0
-                val mv = mask
-                while (b < counts.length) {
-                  if ((mv & (1 << b)) != 0) counts(b) += 1
-                  b += 1
-                }
+          val j = tokenEnd(text, i)
+          val len = j - i
+          if (len <= maxMarkerLen) {
+            var k = 0
+            while (k < len) { buf(k) = Character.toLowerCase(text.charAt(i + k)); k += 1 }
+            // missing key -> 0 (no marker bits), explicitly: Scala unboxes
+            // HashMap[String, Int].get's null to 0 anyway, but silently
+            val mask = markerMask.getOrDefault(new String(buf, 0, len), 0)
+            if (mask != 0) {
+              var b = 0
+              while (b < counts.length) {
+                if ((mask & (1 << b)) != 0) counts(b) += 1
+                b += 1
               }
             }
-            i = j
           }
+          i = skipWs(text, j)
         }
         var best = -1
         var bestScore = 0

@@ -89,7 +89,9 @@ object AsOf {
       val b = probes.select(col(probeTime).cast("long").as("t"))
         .unionByName(events.select(col(eventTime).cast("long").as("t")))
         .agg(min(col("t")).as("lo"), max(col("t")).as("hi")).head()
-      (b.getLong(0), b.getLong(1))
+      // both sides empty aggregates to (null, null); any bounds work then
+      // (the output is empty)
+      if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
     }
     val span = math.max(1L, (hi - lo) / timeBuckets + 1L)
     def bucketOf(t: Column): Column = ((t.cast("long") - lit(lo)) / lit(span)).cast("int")

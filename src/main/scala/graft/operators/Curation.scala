@@ -84,21 +84,10 @@ object Curation {
           if (!(c == '.' || c == '!' || c == '?' || c == '"')) return false
           // token count >= minLineWords, count-only scan
           var n = 0
-          var j = 0
+          var j = Text.skipWs(l, 0)
           while (j < l.length && n < minLineWords) {
-            val ch = l.charAt(j)
-            if (ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' ||
-                ch == '\f' || ch == '\r') j += 1
-            else {
-              n += 1
-              var k = j + 1
-              while (k < l.length && {
-                val d = l.charAt(k)
-                !(d == ' ' || d == '\t' || d == '\n' || d == '\u000B' ||
-                  d == '\f' || d == '\r')
-              }) k += 1
-              j = k
-            }
+            n += 1
+            j = Text.skipWs(l, Text.tokenEnd(l, j))
           }
           n >= minLineWords
         }
@@ -163,7 +152,7 @@ object Curation {
     udf { (t: String) =>
       if (t == null) GopherSignals(0, 0.0, 0.0, 0, 0.0)
       else {
-        val toks = Dedup.fastTokens(t)
+        val toks = Text.fastTokens(t)
         val n = toks.length
         if (n == 0) GopherSignals(0, 0.0, 0.0, 0, 0.0)
         else {

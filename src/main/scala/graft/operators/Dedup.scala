@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Text
 
@@ -47,19 +48,6 @@ object Dedup {
       .groupBy("fingerprint")
       .agg(min(col(id)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Character shingles of length n over the whitespace-normalized text.
-    * NOTE: char shingles are only discriminative over large vocabularies;
-    * on small/overlapping vocabularies use [[tokenGrams]] (word n-grams) or
-    * every pair looks like a near-dup and candidate sets go quadratic.
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val norm = regexp_replace(trim(text), "\\s+", " ")
-    array_distinct(filter(
-      transform(sequence(lit(1), greatest(length(norm) - (n - 1), lit(1))),
-        i => norm.substr(i, lit(n))),
-      s => length(s) === n))
-  }
-
   /** Distinct word n-grams of the whitespace-tokenized text. Short docs
     * (< n tokens) yield an empty array — the `when` guard is load-bearing:
     * `sequence(1, 0)` is DESCENDING in Spark ([1,0]) and `slice(arr, 0, n)`
@@ -74,32 +62,6 @@ object Dedup {
         .otherwise(array().cast("array<string>")))
   }
 
-  /** Exact regex-\s+ tokenizer as a tight char scan (maximal runs of
-    * non-[ \t\n\x0B\f\r] chars) — byte-equal to [[Text.tokens]] without
-    * per-call Pattern compilation or regex backtracking.
-    */
-  private[graft] def fastTokens(text: String): Array[String] = {
-    if (text == null) return Array.empty[String]
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val len = text.length
-    var i = 0
-    while (i < len) {
-      val c = text.charAt(i)
-      if (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r') {
-        i += 1
-      } else {
-        var j = i + 1
-        while (j < len && {
-          val d = text.charAt(j)
-          !(d == ' ' || d == '\t' || d == '\n' || d == '\u000B' || d == '\f' || d == '\r')
-        }) j += 1
-        out += text.substring(i, j)
-        i = j
-      }
-    }
-    out.toArray
-  }
-
   /** Typed MinHash signature over word `shingleN`-grams of `text`:
     * bit-identical to the HOF reference
     * `minhashSignature(tokenGrams(text, shingleN), k)` (spec-side `KernelTwins`)
@@ -107,36 +69,20 @@ object Dedup {
     * Long.MaxValue init vector, same as the HOF over an empty gram array).
     * One JIT'd loop per row: UTF-8 gram bytes are assembled in a reused
     * buffer and hashed with the same Catalyst XXH64 the `xxhash64(lit(i), g)`
-    * expression uses (seed chain: hashInt(i, 42) then the gram bytes).
+    * expression uses (seed chain: hashInt(i, [[Text.HashSeed]]) then the gram
+    * bytes).
     */
   def minhashSignatureFast(shingleN: Int, k: Int): UserDefinedFunction = {
-    val seeds: Array[Long] = Array.tabulate(k)(i => XXH64.hashInt(i, 42L))
+    val seeds: Array[Long] = Array.tabulate(k)(i => XXH64.hashInt(i, Text.HashSeed))
     udf { (text: String) =>
       val sig = Array.fill(k)(Long.MaxValue)
-      val toks = fastTokens(text)
+      val toks = Text.fastTokens(text)
       if (toks.length >= shingleN) {
-        val tokBytes = new Array[Array[Byte]](toks.length)
-        var maxLen = 0
-        var t = 0
-        while (t < toks.length) {
-          val b = toks(t).getBytes(StandardCharsets.UTF_8)
-          tokBytes(t) = b
-          if (b.length > maxLen) maxLen = b.length
-          t += 1
-        }
-        val buf = new Array[Byte](shingleN * (maxLen + 1))
+        val tokBytes = utf8(toks)
+        val buf = gramBuffer(tokBytes, shingleN)
         var i = 0
-        val last = toks.length - shingleN
-        while (i <= last) {
-          var blen = 0
-          var j = 0
-          while (j < shingleN) {
-            if (j > 0) { buf(blen) = ' '; blen += 1 }
-            val tb = tokBytes(i + j)
-            System.arraycopy(tb, 0, buf, blen, tb.length)
-            blen += tb.length
-            j += 1
-          }
+        while (i <= toks.length - shingleN) {
+          val blen = assembleGram(tokBytes, i, shingleN, buf)
           var s = 0
           while (s < k) {
             val h = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, blen, seeds(s))
@@ -148,6 +94,41 @@ object Dedup {
       }
       sig
     }
+  }
+
+  /** UTF-8 bytes of each token: the gram parts of [[assembleGram]]. */
+  private def utf8(toks: Array[String]): Array[Array[Byte]] = {
+    val out = new Array[Array[Byte]](toks.length)
+    var t = 0
+    while (t < toks.length) { out(t) = toks(t).getBytes(StandardCharsets.UTF_8); t += 1 }
+    out
+  }
+
+  /** A buffer that holds any `n`-gram of `tokBytes` with its separators. */
+  private def gramBuffer(tokBytes: Array[Array[Byte]], n: Int): Array[Byte] = {
+    var maxLen = 0
+    var t = 0
+    while (t < tokBytes.length) { maxLen = math.max(maxLen, tokBytes(t).length); t += 1 }
+    new Array[Byte](n * (maxLen + 1))
+  }
+
+  /** Writes the UTF-8 bytes of the space-joined gram `tokBytes[i, i + n)` —
+    * what `xxhash64(array_join(slice(tokens, i + 1, n), " "))` hashes — into
+    * `buf`, and returns its length. The one gram assembly of
+    * [[minhashSignatureFast]] and [[gramHashesFast]].
+    */
+  private def assembleGram(tokBytes: Array[Array[Byte]], i: Int, n: Int,
+      buf: Array[Byte]): Int = {
+    var blen = 0
+    var j = 0
+    while (j < n) {
+      if (j > 0) { buf(blen) = ' '; blen += 1 }
+      val tb = tokBytes(i + j)
+      System.arraycopy(tb, 0, buf, blen, tb.length)
+      blen += tb.length
+      j += 1
+    }
+    blen
   }
 
   /** One-pass merge intersection size of two SORTED long arrays (the shape
@@ -226,19 +207,18 @@ object Dedup {
   }
 
   /** Typed SimHash: bit-identical to the HOF reference
-    * (spec-side `KernelTwins.simhash`; token hash = Catalyst
-    * xxhash64 seed 42; duplicates vote repeatedly, exactly like the HOF).
+    * (spec-side `KernelTwins.simhash`; token hash = [[Text.tokenHash]];
+    * duplicates vote repeatedly, exactly like the HOF).
     * Null/empty text yields 0L, matching the HOF's `otherwise(0)` fold.
     */
   def simhashFast: UserDefinedFunction = udf { (text: String) =>
-    val toks = fastTokens(text)
+    val toks = Text.fastTokens(text)
     if (toks.isEmpty) 0L
     else {
       val votes = new Array[Int](64)
       var t = 0
       while (t < toks.length) {
-        val b = toks(t).getBytes(StandardCharsets.UTF_8)
-        val h = XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+        val h = Text.tokenHash(toks(t))
         var bit = 0
         while (bit < 64) {
           if (((h >>> bit) & 1L) == 1L) votes(bit) += 1 else votes(bit) -= 1
@@ -309,43 +289,19 @@ object Dedup {
     * yields an empty array.
     */
   def gramHashesFast(n: Int): UserDefinedFunction = udf { (text: String) =>
-    val toks = fastTokens(text)
+    val toks = Text.fastTokens(text)
     if (toks.length < n) Array.empty[Long]
     else {
-      val tokBytes = new Array[Array[Byte]](toks.length)
-      var maxLen = 0
-      var t = 0
-      while (t < toks.length) {
-        val b = toks(t).getBytes(StandardCharsets.UTF_8)
-        tokBytes(t) = b
-        if (b.length > maxLen) maxLen = b.length
-        t += 1
-      }
-      val buf = new Array[Byte](n * (maxLen + 1))
+      val tokBytes = utf8(toks)
+      val buf = gramBuffer(tokBytes, n)
       val out = new Array[Long](toks.length - n + 1)
       var i = 0
       while (i < out.length) {
-        var blen = 0
-        var j = 0
-        while (j < n) {
-          if (j > 0) { buf(blen) = ' '; blen += 1 }
-          val tb = tokBytes(i + j)
-          System.arraycopy(tb, 0, buf, blen, tb.length)
-          blen += tb.length
-          j += 1
-        }
-        out(i) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, blen, 42L)
+        val blen = assembleGram(tokBytes, i, n, buf)
+        out(i) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, blen, Text.HashSeed)
         i += 1
       }
-      // sort + in-place dedup (distinct-gram set semantics)
-      java.util.Arrays.sort(out)
-      var w = 0
-      var r = 1
-      while (r < out.length) {
-        if (out(r) != out(w)) { w += 1; out(w) = out(r) }
-        r += 1
-      }
-      if (w + 1 == out.length) out else java.util.Arrays.copyOf(out, w + 1)
+      sortedDistinct(out)
     }
   }
 
@@ -425,6 +381,62 @@ object Dedup {
     df.join(drop, df(id) === col("__drop"), "left_anti")
   }
 
+  /** Per-document DISTINCT trimmed-line hashes in one typed pass — the
+    * kernel twin of `array_distinct(transform(filter(split(text, sep),
+    * len(trim) > 0), xxhash64(trim)))` (which evaluates four interpreted
+    * expression trees per line; the same HOF-vs-kernel trade as
+    * [[gramHashesFast]]). Bit-equality with the expression formulation
+    * (which the [[dedupLinesShuffle]] fallback still uses) is by
+    * construction ([[trimmedLine]], [[lineHash]]) and asserted in
+    * PipelineR4Spec.
+    */
+  private def lineHashesFast(sep: String): UserDefinedFunction = udf { (t: String) =>
+    if (t == null) Array.empty[Long]
+    else {
+      val out = new scala.collection.mutable.ArrayBuilder.ofLong
+      var from = 0
+      var end = -1
+      while (end < t.length) {
+        end = lineEnd(t, sep, from)
+        val u = trimmedLine(t, from, end)
+        if (u.numBytes > 0) out += lineHash(u)
+        from = end + sep.length
+      }
+      sortedDistinct(out.result())
+    }
+  }
+
+  // The one line scan of `lineHashesFast` and the `dedupLines` rebuild:
+  // Spark's own `UTF8String.trim` and Catalyst XXH64, so blank lines and
+  // hashes match the expressions. Static helpers: a cursor object is not
+  // scalar-replaced by the JIT here and costs an allocation per row.
+
+  /** End of the `sep`-separated line of `t` starting at `from`. */
+  private def lineEnd(t: String, sep: String, from: Int): Int = {
+    val nxt = t.indexOf(sep, from)
+    if (nxt < 0) t.length else nxt
+  }
+
+  /** `trim(line)` of the line `t[from, end)`; zero bytes when blank. */
+  private def trimmedLine(t: String, from: Int, end: Int): UTF8String =
+    UTF8String.fromString(t.substring(from, end)).trim()
+
+  /** `xxhash64(trim(line))` of a [[trimmedLine]]. */
+  private def lineHash(u: UTF8String): Long =
+    XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, Text.HashSeed)
+
+  /** Sorts `a` in place and returns its distinct values, ascending. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var w = 0
+    var r = 1
+    while (r < a.length) {
+      if (a(r) != a(w)) { w += 1; a(w) = a(r) }
+      r += 1
+    }
+    if (a.length <= w + 1) a else java.util.Arrays.copyOf(a, w + 1)
+  }
+
   /** Cross-document line-level dedup — the CCNet/RefinedWeb shape (a line
     * that recurs across many documents is boilerplate: navigation, license
     * headers, cookie banners — and is removed from ALL documents, not just
@@ -458,47 +470,6 @@ object Dedup {
     *     reassembly — still no quadratic step, but the kept line text
     *     crosses one exchange.
     */
-  /** Per-document DISTINCT trimmed-line hashes in one typed pass — the
-    * kernel twin of `array_distinct(transform(filter(split(text, sep),
-    * len(trim) > 0), xxhash64(trim)))` (which evaluates four interpreted
-    * expression trees per line; the same HOF-vs-kernel trade as
-    * [[gramHashesFast]]). Bit-equality is by construction — the kernel
-    * splits on the literal separator and uses the very
-    * `UTF8String.trim` + Catalyst `XXH64(seed=42)` the expressions run —
-    * and is asserted against the expression formulation (which the
-    * [[dedupLinesShuffle]] fallback still uses) in PipelineR4Spec.
-    */
-  private def lineHashesFast(sep: String): UserDefinedFunction = udf { (t: String) =>
-    if (t == null) Array.empty[Long]
-    else {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val sl = sep.length
-      var from = 0
-      var done = false
-      while (!done) {
-        val nxt = t.indexOf(sep, from)
-        val end = if (nxt < 0) t.length else nxt
-        val u = org.apache.spark.unsafe.types.UTF8String
-          .fromString(t.substring(from, end)).trim()
-        if (u.numBytes > 0)
-          out += XXH64.hashUnsafeBytes(
-            u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-        if (nxt < 0) done = true else from = nxt + sl
-      }
-      val a = out.toArray
-      java.util.Arrays.sort(a)
-      var w = 0
-      var r = 1
-      while (r < a.length) {
-        if (a(r) != a(w)) { w += 1; a(w) = a(r) }
-        r += 1
-      }
-      if (a.isEmpty) a
-      else if (w + 1 == a.length) a
-      else java.util.Arrays.copyOf(a, w + 1)
-    }
-  }
-
   def dedupLines(df: DataFrame, id: String, text: String,
       sep: String = "\n", maxDocs: Long = 1,
       maxBroadcastLines: Int = 4 << 20): DataFrame = {
@@ -521,25 +492,20 @@ object Dedup {
           val keep = new java.lang.StringBuilder
           var nKept = 0L
           var nLines = 0L
-          val sl = sepLocal.length
           var from = 0
-          var done = false
-          while (!done) {
-            val nxt = t.indexOf(sepLocal, from)
-            val end = if (nxt < 0) t.length else nxt
-            val u = org.apache.spark.unsafe.types.UTF8String
-              .fromString(t.substring(from, end)).trim()
+          var end = -1
+          while (end < t.length) {
+            end = lineEnd(t, sepLocal, from)
+            val u = trimmedLine(t, from, end)
             if (u.numBytes > 0) {
               nLines += 1
-              val h = XXH64.hashUnsafeBytes(
-                u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-              if (java.util.Arrays.binarySearch(drop, h) < 0) {
+              if (java.util.Arrays.binarySearch(drop, lineHash(u)) < 0) {
                 if (nKept > 0) keep.append(sepLocal)
                 keep.append(t, from, end)
                 nKept += 1
               }
             }
-            if (nxt < 0) done = true else from = nxt + sl
+            from = end + sepLocal.length
           }
           (keep.toString, nKept, nLines)
         }

@@ -1,11 +1,7 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.unsafe.Platform
 
 import graft.functions.Text
 
@@ -71,8 +67,8 @@ object Quality {
     // ONE corpus-sized pass: per-doc DISTINCT terms (binarized features)
     // -> bucket counts per class, map-side combined, D-bounded exchange.
     // The per-doc bucket list comes from the typed kernel (tokenize,
-    // dedupe, hash, floorMod in one loop — the same arithmetic the scoring
-    // UDF below runs) instead of the interpreted
+    // dedupe, hash, floorMod in one loop — the loop the scoring UDF below
+    // runs too) instead of the interpreted
     // explode(array_distinct(tokens)) + xxhash64-expression chain, which
     // evaluated four HOF trees per row AND exploded term STRINGS into the
     // aggregation (round-6: 2.5x the whole query's cost on the
@@ -96,25 +92,15 @@ object Quality {
     }
     val bias = quantize(math.log(nPos.toDouble / nNeg.toDouble))
     val bc = Caches.broadcast(df.sparkSession.sparkContext, weights)
-    val dimLocal = dim
+    val dimLocal = dim.toLong
     val score = udf { (t: String) =>
-      val toks = Dedup.fastTokens(t)
-      val seen = new java.util.HashSet[String]()
+      val buckets = distinctBuckets(t, dimLocal)
       var s = bias
-      var n = 0L
       var i = 0
-      while (i < toks.length) {
-        if (seen.add(toks(i))) {
-          val b = toks(i).getBytes(StandardCharsets.UTF_8)
-          val h = XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-          s += bc.value(Math.floorMod(h, dimLocal.toLong).toInt)
-          n += 1L
-        }
-        i += 1
-      }
+      while (i < buckets.length) { s += bc.value(buckets(i).toInt); i += 1 }
       val z = java.math.BigDecimal.valueOf(s.toDouble / 1e6 + 1.7e-8)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      (n, z, z > 0.0)
+      (buckets.length.toLong, z, z > 0.0)
     }
     df.select(col(id), score(col(text)).as("__c"))
       .select(col(id), col("__c._1").as("n_terms"),
@@ -123,31 +109,37 @@ object Quality {
 
   /** One hash bucket per DISTINCT in-document term, as one typed pass:
     * the kernel twin of `explode(array_distinct(Text.tokens(text)))` +
-    * `pmod(xxhash64(term), dim)` — same tokenizer (fastTokens), same
-    * Catalyst XXH64(seed 42) over UTF-8 bytes, same floorMod. Emits one
-    * element PER DISTINCT TERM (not per distinct bucket): two terms
-    * sharing a bucket must count twice, exactly as the expression form
-    * does. Null text yields an empty array (explode of a null-token doc
-    * emits no rows either way).
+    * `pmod(xxhash64(term), dim)` — same tokenizer and term hash
+    * ([[Text.skipWs]]/[[Text.tokenEnd]], [[Text.tokenHash]]), same
+    * floorMod. Emits one element PER DISTINCT TERM (not per distinct
+    * bucket): two terms sharing a bucket must count twice, exactly as the
+    * expression form does. Null text yields an empty array (explode of a
+    * null-token doc emits no rows either way).
     */
   private[graft] def distinctBucketsFast(dim: Int)
       : org.apache.spark.sql.expressions.UserDefinedFunction = {
     val dimLocal = dim.toLong
-    udf { (t: String) =>
-      val toks = Dedup.fastTokens(t)
-      val seen = new java.util.HashSet[String](toks.length * 2)
-      val out = new scala.collection.mutable.ArrayBuffer[Long](toks.length)
-      var i = 0
-      while (i < toks.length) {
-        if (seen.add(toks(i))) {
-          val b = toks(i).getBytes(StandardCharsets.UTF_8)
-          val h = XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-          out += Math.floorMod(h, dimLocal)
-        }
-        i += 1
+    udf { (t: String) => distinctBuckets(t, dimLocal) }
+  }
+
+  /** The distinct-term hash loop of training ([[distinctBucketsFast]]) and
+    * scoring: buckets in first-occurrence order of their terms. It walks
+    * the token bounds rather than [[Text.fastTokens]], so no token array is
+    * built per row.
+    */
+  private def distinctBuckets(t: String, dim: Long): Array[Long] = {
+    val out = new scala.collection.mutable.ArrayBuilder.ofLong
+    if (t != null) {
+      val seen = new java.util.HashSet[String]()
+      var i = Text.skipWs(t, 0)
+      while (i < t.length) {
+        val j = Text.tokenEnd(t, i)
+        val term = t.substring(i, j)
+        if (seen.add(term)) out += Math.floorMod(Text.tokenHash(term), dim)
+        i = Text.skipWs(t, j)
       }
-      out.toArray
     }
+    out.result()
   }
 
   /** The corpus' distinct (term, bucket) map — what a cross-engine oracle

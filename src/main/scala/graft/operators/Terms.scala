@@ -1,12 +1,8 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Text
@@ -51,11 +47,6 @@ object Terms {
     java.math.BigDecimal.valueOf(x)
       .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  private def hashTerm(s: String): Long = {
-    val b = s.getBytes(StandardCharsets.UTF_8)
-    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
-  }
-
   /** Vocabulary aggregate over per-document DISTINCT terms (document
     * frequency) or raw occurrences (collection frequency), keyed by the
     * 8-byte term hash, map-side combined.
@@ -90,7 +81,7 @@ object Terms {
     val bc = Caches.broadcast(df.sparkSession.sparkContext, (hashes, dfs))
     val kLocal = k
     val score = udf { (t: String) =>
-      val toks = Dedup.fastTokens(t)
+      val toks = Text.fastTokens(t)
       if (toks.isEmpty) Seq.empty[TfidfTerm]
       else {
         val (hs, ds) = bc.value
@@ -101,7 +92,7 @@ object Terms {
         var i = 0
         while (it.hasNext) {
           val e = it.next()
-          val idx = java.util.Arrays.binarySearch(hs, hashTerm(e.getKey))
+          val idx = java.util.Arrays.binarySearch(hs, Text.tokenHash(e.getKey))
           if (idx < 0) throw new IllegalStateException(
             s"tfidfTopK kernel: term '${e.getKey}' missing from the " +
               "broadcast vocabulary — tokenizer twin divergence")
@@ -187,14 +178,14 @@ object Terms {
       roundHalfUp(math.log(p._2.toDouble / totD) * 1e9, 0).toLong)
     val bc = Caches.broadcast(df.sparkSession.sparkContext, (hashes, qs))
     val nllOf = udf { (t: String) =>
-      val toks = Dedup.fastTokens(t)
+      val toks = Text.fastTokens(t)
       if (toks.isEmpty) Option.empty[(Double, Long)]
       else {
         val (hs, q) = bc.value
         // sort hashes + run-length encode: per-term tf without boxing
         val th = new Array[Long](toks.length)
         var i = 0
-        while (i < toks.length) { th(i) = hashTerm(toks(i)); i += 1 }
+        while (i < toks.length) { th(i) = Text.tokenHash(toks(i)); i += 1 }
         java.util.Arrays.sort(th)
         // Σ tf·q exactly: long accumulation with overflow promotion to
         // BigInteger (|q| ≲ 6e10, so a ≳10^8-token document could

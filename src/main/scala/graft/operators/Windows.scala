@@ -1,13 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Dataset-native windowed feature operators (SURVEY.md §2.5, graft-added
-  * row): lag/lead, rolling backfill, gap-based sessionization, per-group
-  * top-k, running aggregates — all leakage-safe by construction (frames end
-  * at the current row; nothing reads the future).
+  * row): gap-based sessionization and per-group top-k — leakage-safe by
+  * construction (frames end at the current row; nothing reads the future).
   *
   * Every operator shares one window layout (PARTITION BY entity ORDER BY
   * time, tie), so chained calls reuse a single shuffle+sort.
@@ -16,27 +15,6 @@ object Windows {
 
   def entityWindow(entity: String, time: String, tie: Seq[String] = Nil): WindowSpec =
     Window.partitionBy(col(entity)).orderBy((Seq(time) ++ tie).map(col): _*)
-
-  /** lag/lead of `value` within each entity's time order. */
-  def lagLead(df: DataFrame, entity: String, time: String, value: String,
-      tie: Seq[String] = Nil, n: Int = 1): DataFrame = {
-    val w = entityWindow(entity, time, tie)
-    df.withColumn(s"${value}_lag$n", lag(col(value), n).over(w))
-      .withColumn(s"${value}_lead$n", lead(col(value), n).over(w))
-  }
-
-  /** Rolling backfill: carry the last non-null value forward
-    * (`last_value IGNORE NULLS` over an unbounded-preceding frame) — the
-    * "apply stored stats to newer rows" shape of `crossvalidate.R:84` /
-    * SURVEY.md M6, generalized to event time.
-    */
-  def backfill(df: DataFrame, entity: String, time: String, value: String,
-      tie: Seq[String] = Nil, as: String = ""): DataFrame = {
-    val w = entityWindow(entity, time, tie)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val name = if (as.nonEmpty) as else s"${value}_filled"
-    df.withColumn(name, last(col(value), ignoreNulls = true).over(w))
-  }
 
   /** Gap-based sessionization: a new session starts when the gap since the
     * previous event exceeds `gapMs`. session_idx is a running sum of
@@ -65,14 +43,5 @@ object Windows {
     val w = Window.partitionBy(group.map(col): _*).orderBy(ord: _*)
     df.withColumn("__rn", row_number().over(w)).where(col("__rn") <= k)
       .withColumnRenamed("__rn", "rank_in_group")
-  }
-
-  /** Running (cumulative, past-only) aggregate of `value` per entity. */
-  def running(df: DataFrame, entity: String, time: String, value: String,
-      aggr: Column => Column = sum, tie: Seq[String] = Nil, as: String = ""): DataFrame = {
-    val w = entityWindow(entity, time, tie)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val name = if (as.nonEmpty) as else s"${value}_running"
-    df.withColumn(name, aggr(col(value)).over(w))
   }
 }

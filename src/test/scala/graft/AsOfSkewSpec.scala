@@ -35,7 +35,7 @@ class AsOfSkewSpec extends AnyFunSuite {
   }
 
   test("skew-safe as-of: randomized equivalence incl. edge cases") {
-    for (trial <- 0 until 10) {
+    val random = (0 until 10).map { trial =>
       val seed = 500L + trial
       val events = (0 until 120).map { i =>
         ("e" + Rng.int(Rng.hash(seed, i), 3), // few entities -> dup timestamps
@@ -46,17 +46,24 @@ class AsOfSkewSpec extends AnyFunSuite {
         ("e" + Rng.int(Rng.hash(seed, 3000 + j), 4), // incl. entity w/o events
           (90L + Rng.int(Rng.hash(seed, 4000 + j), 80)))
       }
+      (s"trial $trial", events, probes)
+    }
+    // both sides empty, no timeBounds: the bounds scan aggregates to nulls
+    val empty = ("empty", Seq.empty[(String, Long, Long, Double)],
+      Seq.empty[(String, Long)])
+    for ((name, events, probes) <- random :+ empty) {
       val evDf = events.toDF("entity_id", "event_ms", "seq", "v")
       val prDf = probes.toDF("entity_id", "probe_ms")
       val plain = AsOf.join(prDf, evDf, "entity_id", "probe_ms", "event_ms",
         tie = Some("seq"))
       val safe = AsOf.joinSkewSafe(prDf, evDf, "entity_id", "probe_ms", "event_ms",
         tie = Some("seq"), timeBuckets = 7)
+      assert(safe.schema == plain.schema, s"$name schema")
       assert(canon(plain.select(col("entity_id"), col("probe_ms"),
           col("asof_time").cast("long").as("t"), col("asof_v"), col("asof_seq"))) ==
         canon(safe.select(col("entity_id"), col("probe_ms"),
           col("asof_time").cast("long").as("t"), col("asof_v"), col("asof_seq"))),
-        s"trial $trial mismatch")
+        s"$name mismatch")
     }
   }
 

@@ -105,14 +105,20 @@ class DedupSimilaritySpec extends AnyFunSuite {
     (0L, null), (1L, ""), (2L, "   \t  "), (3L, "one"), (4L, "one two"),
     (5L, "one two three"), (6L, "one two three"), // planted single-gram dup
     (7L, "a b a b a b a b"), (8L, "héllo wörld çafe naïve tokens here"),
-    (9L, "w1  w2\tw3\nw4 w5 w6 w7"))
+    (9L, "w1  w2\tw3\nw4 w5 w6 w7"),
+    // separators: U+000B is \s; U+00A0, U+0085, U+2028, U+3000 are token
+    // chars; a surrogate pair is one codepoint; leading/trailing runs
+    (10L, "la\u000Bla\u000Bel one"), (11L, "no\u00A0break la le one"),
+    (12L, "nel\u0085 ls\u2028 ideo\u3000 the"),
+    (13L, "\uD835\uDD4F wide \uD835\uDD4F\uD835\uDD4F pair"),
+    (14L, "\u000B\t\f lead and trail \r\n\u000B"), (15L, "\u3000\u00A0 \u2028"))
 
   test("fastTokens matches Text.tokens on edge cases") {
     val d = edgeTexts.toDF("doc_id", "text")
     val viaExpr = d.select(col("doc_id"), graft.functions.Text.tokens(col("text")).as("tk"))
       .collect().map(r => r.getLong(0) -> Option(r.getSeq[String](1)).map(_.toList)).toMap
     edgeTexts.foreach { case (id, t) =>
-      val fast = Dedup.fastTokens(t).toList
+      val fast = graft.functions.Text.fastTokens(t).toList
       val expr = viaExpr(id).getOrElse(Nil) // null text -> null array == no tokens
       assert(fast == expr, s"doc $id: fast=$fast expr=$expr")
     }
@@ -125,7 +131,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val extra = Seq(
       (9001L, "THE Der la la une est"), (9002L, "la"), (9003L, "le la"),
       (9004L, "der die und the and of"), (9005L, "xyz qwerty asdf"),
-      (9006L, "elque\tlos\nuna"), (9007L, "is with for the and of"))
+      (9006L, "el\u000Bque\tlos\nuna"), (9007L, "is with for the and of"))
     val d = (docs(40, 77L) ++ edgeTexts ++ extra).toDF("doc_id", "text")
     val both = d.select(col("doc_id"),
         graft.functions.Text.langId(col("text")).as("viaExpr"),

@@ -19,13 +19,18 @@ class KernelTwinSpec extends AnyFunSuite {
   /** Edge inputs + pseudo-corpus docs (deterministic). */
   private val docs: Seq[(Long, String)] = {
     val edge = Seq(
-      null.asInstanceOf[String], "", " ", "   \t\n ", "\f\r",
+      null.asInstanceOf[String], "", " ", "   \t\n ", "\u000B\f\r",
       "a", "a b", "a b c", "a b c d", "a b c d e", "a b c d e f g h i",
       "  leading and trailing   ", "tab\tsep\nnewline mix\r\nhere now ok",
       "the a the a THE A tHe", "héllo wörld ÉÀ ßharp",
       "𝕏 wide char a b", "!!! ??? ... (x) {y}",
       "word " * 30, "supercalifragilisticexpialidocious tiny a the",
-      "número uno dos tres the a,b c.d")
+      "número uno dos tres the a,b c.d",
+      // separators: U+000B is \s; U+00A0, U+0085, U+2028, U+3000 are token
+      // chars; a surrogate pair is one codepoint; leading/trailing runs
+      "vt\u000Bsep\u000Bthe", "nbsp\u00A0joins a b", "nel\u0085x ls\u2028y the",
+      "ideo\u3000space a", "\uD835\uDD4F\uD835\uDD4F pair\uD835\uDD4F. a",
+      "\u000B\t\f lead and trail \r\n\u000B", "\u3000\u00A0 \u2028")
     val gen = (0 until 200).map { i =>
       val words = (0 until (i % 13)).map(j =>
         s"w${(i * 31 + j * 7) % 23}" + (if ((i + j) % 5 == 0) "." else ""))

@@ -66,7 +66,7 @@ class PipelineR4Spec extends AnyFunSuite {
     // separators, within-doc repeats, docs losing everything, null text
     val d = Seq(
       (1L, "SHARED\n\tSHARED\nSHARED \n   \nuniqueé 世界"),
-      (2L, "SHARED\n\nx\ny\n"),
+      (2L, "SHARED\n\u0007\nx\ny\n"),
       (3L, " SHARED \n\nonly3"),
       (4L, null.asInstanceOf[String]),
       (5L, "x\nx\nSHARED")

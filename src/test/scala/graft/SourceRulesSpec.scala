@@ -1,0 +1,55 @@
+package graft
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source rules the compiler cannot check. What a token is and how it is
+  * hashed is decided once, in `graft.functions.Text`: a kernel that spells
+  * out the whitespace class or the seed-42 XXH64 itself can drift from it
+  * unseen, and a port of the tokenizer (e.g. to a native Catalyst
+  * expression) would have to find every copy. And no source holds a raw
+  * control byte other than '\n': editors and diffs do not show it, so a
+  * fixture or comparison with one reads as something else (write the
+  * escape, e.g. "\u000B").
+  */
+class SourceRulesSpec extends AnyFunSuite {
+
+  private def scalaFiles(root: String): Seq[Path] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+    finally s.close()
+  }
+
+  private val tokenizerHome = Paths.get("src/main/scala/graft/functions/Text.scala")
+
+  /** A comparison with a char only the `\s` class needs (tab, VT, FF). */
+  private val wsComparison = """==\s*('\\t'|'\\f'|'\\u000[bB]'|0x0[bB]\b)""".r
+
+  /** An XXH64 call with the literal seed 42. */
+  private val seed42Hash = """XXH64\.\w+\(.*\b42L?\b""".r
+
+  test("the whitespace class and the seed-42 token hash are written only in Text") {
+    val main = scalaFiles("src/main/scala")
+    assert(main.contains(tokenizerHome))
+    val hits = for {
+      f <- main if f != tokenizerHome
+      (line, i) <- Files.readAllLines(f, StandardCharsets.UTF_8).asScala.zipWithIndex
+      if wsComparison.findFirstIn(line).nonEmpty || seed42Hash.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no .scala file in src/main or src/test holds a raw control byte but \\n") {
+    val hits = for {
+      f <- scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala")
+      (line, i) <- new String(Files.readAllBytes(f), StandardCharsets.UTF_8)
+        .split("\n", -1).toSeq.zipWithIndex
+      c <- line if c < 0x20 || c == 0x7F
+    } yield f"$f:${i + 1}: U+${c.toInt}%04X"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+}
