@@ -48,8 +48,9 @@ import graft.features.FeaturePipeline
   *    would NOT share across executors is this box's scratch disk.
   *
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-  * (default 32), SPARK_GRAFT_BENCH_ROWS (12000000), SPARK_GRAFT_BENCH_REPS
-  * (4), SPARK_GRAFT_BENCH_VISITS (2), SPARK_GRAFT_MULTIJVM (1 = run part 3).
+  * (default: the JVM's available processors, [[SparkEntry.cpus]]),
+  * SPARK_GRAFT_BENCH_ROWS (12000000), SPARK_GRAFT_BENCH_REPS (4),
+  * SPARK_GRAFT_BENCH_VISITS (2), SPARK_GRAFT_MULTIJVM (1 = run part 3).
   *
   * Other modes (sbt `runMain graft.Bench <mode> ...`):
   *   explain <outdir> [suffix] [q1,q2,...]  `.explain("formatted")` plan dumps
@@ -116,9 +117,8 @@ object Bench {
   private val Draws = 3
   private val ClusterMarker = "GRAFT_CLUSTER_RESULT"
   private val SparkSubmit = "/opt/spark/bin/spark-submit"
-  // the driver contract: testdata directory and full-machine parallelism
+  // the driver contract: the testdata directory
   private def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  private def maxCores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** Spark settings of every bench session, local or spark-submitted.
     * `coalesce` (AQE partition coalescing) is ON for the headline queries —
@@ -633,13 +633,13 @@ object Bench {
     def deadline(fraction: Double): Long = start + (WallBudgetSec * fraction * 1e9).toLong
 
     // --- part 1: headline testdata queries at full parallelism -------------
-    val spark = session(maxCores, coalesce = true)
+    val spark = session(SparkEntry.cpus, coalesce = true)
     val (queries, errors) = timeQueries(spark, HeadlineQueries, hashSink(_))
     val corpusPath = corpusTable(spark, corpusRows)
     val warmPath = corpusTable(spark, warmRows(corpusRows))
     spark.stop()
 
-    var report = Report(sfDir, corpusRows, maxCores, queries, errors)
+    var report = Report(sfDir, corpusRows, SparkEntry.cpus, queries, errors)
     def emit(complete: Boolean): Unit = {
       val line = json(report, complete)
       println(line)
@@ -653,8 +653,8 @@ object Bench {
     // first emitted artifact; not part of the pair). TWO warmed visits x 2
     // reps: a single visit lets one of this VM's multi-second stall windows
     // poison every draw (observed 11.7 vs 15.3 s across identical runs).
-    report = report.copy(max = Vector.fill(2)(level(maxCores, corpusPath, warmPath, corpusRows, 2)))
-    System.err.println(f"[bench] corpus max local[$maxCores] ${report.maxMin}%.2f s " +
+    report = report.copy(max = Vector.fill(2)(level(SparkEntry.cpus, corpusPath, warmPath, corpusRows, 2)))
+    System.err.println(f"[bench] corpus max local[${SparkEntry.cpus}] ${report.maxMin}%.2f s " +
       s"(draws ${report.max.flatMap(_.draws).map(t => f"$t%.2f").mkString(",")})")
     emit(complete = false)
 
@@ -713,7 +713,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     def names(arg: List[String]) = arg.headOption.map(_.split(",").toSeq).getOrElse(HeadlineQueries)
     def withSession(coalesce: Boolean)(f: SparkSession => Unit): Unit = {
-      val spark = session(maxCores, coalesce)
+      val spark = session(SparkEntry.cpus, coalesce)
       try f(spark) finally spark.stop()
     }
     args.toList match {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,8 +10,7 @@ import graft.operators.{Stats, Windows}
   */
 object QueriesAgg {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import QuerySpec.t
 
   val specs: Seq[QuerySpec] = Seq(
     // ---- A1: replicate summarization per (entity, type) --------------------

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,8 +14,7 @@ import graft.operators.Stats
   */
 object QueriesExt {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import QuerySpec.t
 
   val specs: Seq[QuerySpec] = Seq(
     // ---- J4: match()-ordered dim join preserving a STORED rank -------------

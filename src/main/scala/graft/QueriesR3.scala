@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Stats
@@ -16,8 +15,7 @@ import graft.operators.Stats
   */
 object QueriesR3 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import QuerySpec.t
 
   /** The A&S 7.1.26 two-sided p, spelled in ANSI SQL over a column `z`
     * (identical constants/structure to [[Stats.pTwoSided]]).

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -21,8 +20,7 @@ import graft.operators.{Dedup, Similarity, Terms}
   */
 object QueriesR4 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import QuerySpec.t
 
   /** The documents corpus has no newlines, so the line-dedup query derives
     * deterministic line boundaries first: every aligned run of 4 tokens is

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.Text
@@ -33,8 +33,7 @@ import graft.operators.{Caches, Curation, Quality, Sampling}
   */
 object QueriesR5 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import QuerySpec.t
 
   private val Dim = 4096
   private val LabelMinTokens = 40

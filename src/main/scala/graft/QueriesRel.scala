@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +19,7 @@ import graft.operators.{AsOf, Stats, Windows}
   */
 object QueriesRel {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import QuerySpec.t
 
   val specs: Seq[QuerySpec] = Seq(
     // ---- S1/A5: flagship scan+aggregate (TPC-H Q1 shape) ------------------

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.corpus.Corpus
@@ -15,8 +15,7 @@ import graft.operators.{Dedup, Similarity}
   */
 object QueriesText {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  import QuerySpec.t
 
   /** 30 stopwords as a DuckDB list literal (kept in sync with Corpus.Stopwords). */
   private val swList: String =
@@ -435,7 +434,7 @@ object QueriesText {
       dumpPlanes(s)
       val e = t(s, d, "embeddings")
       Similarity.cosineNearDupPairs(e, "vec_id", "embedding",
-        Similarity.lshBucket(col("embedding"), planes = 8, dims = 64, seed = 42L),
+        Similarity.lshBucketFast(planes = 8, dims = 64, seed = 42L)(col("embedding")),
         minCos = 0.3)
     },
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

@@ -7,6 +7,13 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 final case class QuerySpec(name: String, run: (SparkSession, String) => DataFrame,
     oracle: String)
 
+object QuerySpec {
+  /** The testdata table `name` under `dir` (`<dir>/<name>.parquet`): the one
+    * reader every registered query uses. */
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
+    s.read.parquet(s"$dir/$name.parquet")
+}
+
 /** Entry points: the flagship job and the query registry (SURVEY.md §7). */
 object SparkEntry {
   /** Flagship: synthesize the image+caption corpus, build per-entity×timestamp
@@ -16,6 +23,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.features.FeaturePipeline.flagship(
       spark, graft.corpus.Corpus.Params(rows = 2000L, entities = 20))
+
+  /** Local parallelism of the driver mains (`graft.Verify`, `graft.Bench`):
+    * SPARK_GRAFT_CPUS, else every processor the JVM sees. */
+  private[graft] def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The query registry: one entry per implemented operator from SURVEY.md
     * §2, each with its oracle, in run order. */

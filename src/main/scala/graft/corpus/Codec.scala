@@ -54,17 +54,6 @@ object Codec {
     out
   }
 
-  /** Peak signal-to-noise ratio between two rasters; infinity if identical. */
-  def psnr(a: Array[Int], b: Array[Int]): Double = {
-    require(a.length == b.length && a.nonEmpty)
-    var se = 0.0
-    var i = 0
-    while (i < a.length) { val d = (a(i) - b(i)).toDouble; se += d * d; i += 1 }
-    val mse = se / a.length
-    if (mse == 0.0) Double.PositiveInfinity
-    else 10.0 * math.log10(255.0 * 255.0 / mse)
-  }
-
   /** Encode ALREADY-STORED pixel values (raw payload for `raw`; values
     * pre-quantized in place for `lq`) — the allocation-lean twin of
     * [[encode]] for scratch-buffer generation. Only the payload byte array
@@ -78,7 +67,10 @@ object Codec {
     out
   }
 
-  /** [[pixels]] into a caller-provided scratch buffer (capacity >= w*h). */
+  /** Deterministic pixel function: pixel (x,y) of image i under seed, into
+    * a caller-provided scratch buffer (capacity >= w*h). Smooth-ish
+    * gradient + hashed noise so phash is non-degenerate.
+    */
   def pixelsInto(seed: Long, imageIdx: Long, w: Int, h: Int, out: Array[Int]): Unit = {
     val base = Rng.hash(seed, imageIdx, 1)
     var y = 0
@@ -92,14 +84,5 @@ object Codec {
       }
       y += 1
     }
-  }
-
-  /** Deterministic pixel function: pixel (x,y) of image i under seed.
-    * Smooth-ish gradient + hashed noise so phash is non-degenerate.
-    */
-  def pixels(seed: Long, imageIdx: Long, w: Int, h: Int): Array[Int] = {
-    val out = new Array[Int](w * h)
-    pixelsInto(seed, imageIdx, w, h, out)
-    out
   }
 }

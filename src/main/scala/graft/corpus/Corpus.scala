@@ -90,31 +90,13 @@ object Corpus {
     sb.toString
   }
 
-  def imageRow(p: Params, i: Long): ImageRow = {
-    val entity = entityOf(p.seed, i, p.entities)
-    val imageId = s"$entity-%012d".format(i)
-    val h = Rng.hash(p.seed, i, 5)
-    val w = p.sizes(Rng.int(h, p.sizes.length))
-    val ht = p.sizes(Rng.int(Rng.mix(h), p.sizes.length))
-    val fmt = if (Rng.int(Rng.hash(p.seed, i, 6), 2) == 0) Codec.FmtRaw else Codec.FmtLq
-    val px = Codec.pixels(p.seed, i, w, ht)
-    val bytes = Codec.encode(px, fmt)
-    // phash is computed over the *stored* (decoded) pixels so recomputation
-    // from the payload always matches the stored value, for both formats.
-    val phash = Phash.compute(Codec.decode(bytes), w, ht)
-    ImageRow(imageId, bytes, w, ht, fmt, captionOf(p.seed, i), phash)
-  }
-
-  /** Parse the row index back out of an image_id (suffix after '-'). */
-  def indexOf(imageId: String): Long =
-    imageId.substring(imageId.lastIndexOf('-') + 1).toLong
-
   /** Allocation-lean generator used by the distributed paths: pixel raster
     * is produced into a per-partition scratch buffer and quantized in place
     * (the lq decode equals its in-place quantization, so phash can be
-    * computed without a decode copy). Byte-identical output to [[imageRow]]
-    * (asserted in CorpusSpec) — at 32 local threads the pure version's
-    * ~3 KB/row garbage makes generation GC-bound, inverting N-vs-4N scaling.
+    * computed without a decode copy). Byte-identical output to the
+    * spec-side pure generator `CorpusSpec.imageRow` — at 32 local threads
+    * the pure version's ~3 KB/row garbage makes generation GC-bound,
+    * inverting N-vs-4N scaling.
     */
   def imageRowFast(p: Params, i: Long, scratch: Array[Int]): ImageRow = {
     val entity = entityOf(p.seed, i, p.entities)

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *    the running-aggregate fast path) and spills via SortExec;
   *  - AQE skew handling and adaptive partition coalescing still apply.
   * If the inputs are already hash-partitioned by entity and sorted by
-  * (entity, t) — e.g. read back from a graft snapshot table written with
-  * [[pin]] — Catalyst's EnsureRequirements inserts no extra exchange and no
-  * extra sort (asserted by PlanChecks in the test suite).
+  * (entity, t) — e.g. `repartition(col(entity)).sortWithinPartitions(entity,
+  * t)` upstream — Catalyst's EnsureRequirements inserts no extra exchange
+  * and no extra sort.
   *
   * Tie rules:
   *  - an event at exactly t IS visible to a probe at t (<=, zero leakage of
@@ -35,17 +35,6 @@ import org.apache.spark.sql.functions._
   *    column wins (deterministic; pass a unique sequence column).
   */
 object AsOf {
-
-  /** Pin the shuffle layout: hash-repartition by entity and sort within
-    * partitions by (entity, time, tie) so every downstream per-entity window
-    * or as-of merge reuses the layout with no extra exchange/sort.
-    */
-  def pin(df: DataFrame, entity: String, time: String, tie: Seq[String] = Nil,
-      partitions: Int = 0): DataFrame = {
-    val base = if (partitions > 0) df.repartition(partitions, col(entity))
-               else df.repartition(col(entity))
-    base.sortWithinPartitions((Seq(entity, time) ++ tie).map(col): _*)
-  }
 
   /** Skew-safe left as-of join for HOT entities.
     *

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -39,19 +41,6 @@ object Caches {
     df
   }
 
-  /** The compute plan BELOW each registered persist (the cached-relation
-    * child plan), for plan-shape assertions — e.g. "the funnel staging
-    * pass is a zero-Exchange projection" (PlanShapeSpec).
-    */
-  def snapshotPlans(): Seq[String] = synchronized {
-    registered.toSeq.map { df =>
-      df.queryExecution.executedPlan.collectFirst {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          s.relation.cachedPlan.toString
-      }.getOrElse(df.queryExecution.executedPlan.toString)
-    }
-  }
-
   /** Broadcast `v` and register the handle for release: the kernel fast
     * paths (TF-IDF / NLL vocabularies, NB weights, over-threshold line
     * sets) ship value broadcasts into UDF closures, and a bare
@@ -69,12 +58,15 @@ object Caches {
     b
   }
 
+  /** Unpersist every registered frame and broadcast. A failed unpersist
+    * of one does not stop the rest; a fatal error (OOM, interrupt) does.
+    */
   def releaseAll(): Unit = synchronized {
     registered.foreach(df =>
-      try df.unpersist(blocking = true) catch { case _: Throwable => () })
+      try df.unpersist(blocking = true) catch { case NonFatal(_) => () })
     registered.clear()
     broadcasts.foreach(b =>
-      try b.unpersist(blocking = true) catch { case _: Throwable => () })
+      try b.unpersist(blocking = true) catch { case NonFatal(_) => () })
     broadcasts.clear()
   }
 }

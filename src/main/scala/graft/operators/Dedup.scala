@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XXH64
@@ -21,8 +21,8 @@ import graft.functions.Text
   * generation, and (d) exact verification only on candidate pairs.
   *
   * Signature computation policy: the HOF (`aggregate`/`zip_with`) Column
-  * formulations are kept as the REFERENCE semantics (and for the oracle
-  * specs), but the operators run the `*Fast` typed variants — the HOFs
+  * formulations are the REFERENCE semantics and live spec-side
+  * (`KernelTwins`); the operators run the `*Fast` typed variants — the HOFs
   * evaluate k interpreted expression trees per gram (measured 2–5 ms/doc at
   * sf0.1, the round-1 scale-killer), while the typed loops produce the
   * EXACT same bits (asserted in DedupSimilaritySpec) at ~µs/doc.
@@ -48,23 +48,9 @@ object Dedup {
       .groupBy("fingerprint")
       .agg(min(col(id)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Distinct word n-grams of the whitespace-tokenized text. Short docs
-    * (< n tokens) yield an empty array — the `when` guard is load-bearing:
-    * `sequence(1, 0)` is DESCENDING in Spark ([1,0]) and `slice(arr, 0, n)`
-    * throws under ANSI mode.
-    */
-  def tokenGrams(text: Column, n: Int): Column = {
-    val tk = Text.tokens(text)
-    array_distinct(
-      when(size(tk) >= n,
-        transform(sequence(lit(1), size(tk) - (n - 1)),
-          i => array_join(slice(tk, i, lit(n)), " ")))
-        .otherwise(array().cast("array<string>")))
-  }
-
   /** Typed MinHash signature over word `shingleN`-grams of `text`:
-    * bit-identical to the HOF reference
-    * `minhashSignature(tokenGrams(text, shingleN), k)` (spec-side `KernelTwins`)
+    * bit-identical to the spec-side HOF reference
+    * `KernelTwins.minhashSignature(KernelTwins.tokenGrams(text, shingleN), k)`
     * (duplicate grams cannot change a min; null/short text yields the
     * Long.MaxValue init vector, same as the HOF over an empty gram array).
     * One JIT'd loop per row: UTF-8 gram bytes are assembled in a reused
@@ -241,7 +227,7 @@ object Dedup {
     * within hamming 3 must agree on at least one of their four 16-bit
     * chunks (pigeonhole), so the equi-join on (chunk, key) has complete
     * recall for hamming <= 3 — no all-pairs scan anywhere. Works for any
-    * 64-bit LSB-ish signature: SimHash ([[simhashPairs]]) or a perceptual
+    * 64-bit LSB-ish signature: SimHash ([[simhashFast]]) or a perceptual
     * image hash (phash near-dup detection — the image-modality dedup).
     *
     * @param maxBucket chunk buckets above this size are dropped before the
@@ -275,18 +261,12 @@ object Dedup {
       .groupBy("id_a", "id_b").agg(min("hamming").as("hamming"))
   }
 
-  /** SimHash near-dup pairs: [[simhashFast]] signature → [[hammingPairs]]. */
-  def simhashPairs(df: DataFrame, id: String, text: String,
-      maxHamming: Int = 3, maxBucket: Int = 256): DataFrame =
-    hammingPairs(df.select(col(id), simhashFast(col(text)).as("__sim")),
-      id, "__sim", maxHamming, maxBucket)
-
   /** Distinct word-`n`-gram hashes of `text` as one tight loop per row:
-    * bit-identical to `transform(tokenGrams(text, n), g => xxhash64(g))` as
-    * a SET (asserted in DedupSimilaritySpec) — same Catalyst XXH64 (seed
-    * 42) over the UTF-8 bytes of the space-joined gram. Returned sorted
-    * ascending (set semantics; every consumer aggregates). Null/short text
-    * yields an empty array.
+    * bit-identical to the spec-side `transform(KernelTwins.tokenGrams(text,
+    * n), g => xxhash64(g))` as a SET (asserted in DedupSimilaritySpec) —
+    * same Catalyst XXH64 (seed 42) over the UTF-8 bytes of the space-joined
+    * gram. Returned sorted ascending (set semantics; every consumer
+    * aggregates). Null/short text yields an empty array.
     */
   def gramHashesFast(n: Int): UserDefinedFunction = udf { (text: String) =>
     val toks = Text.fastTokens(text)
@@ -368,17 +348,6 @@ object Dedup {
     // the checkpointed label RDD is released by the ContextCleaner once the
     // returned frame is no longer referenced
     labels.select(col("id"), col("comp"))
-  }
-
-  /** Survivor set after near-dup clustering: every id in `df` that is NOT a
-    * non-minimal member of a component — i.e. cluster representatives plus
-    * all unpaired documents.
-    */
-  def keepAfterNearDup(df: DataFrame, id: String, pairs: DataFrame,
-      aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
-    val drop = components(pairs, aCol, bCol)
-      .where(col("id") =!= col("comp")).select(col("id").as("__drop"))
-    df.join(drop, df(id) === col("__drop"), "left_anti")
   }
 
   /** Per-document DISTINCT trimmed-line hashes in one typed pass — the
@@ -562,10 +531,10 @@ object Dedup {
     * anti-joins `train` against it to discard them.
     *
     * Scale shape: gram extraction is a pure projection via the typed
-    * [[gramHashesFast]] kernel (per-doc distinct, bit-equal to
-    * xxhash64-over-[[tokenGrams]] — the policy every dedup operator here
-    * follows); grams travel as 8-byte hash keys, never strings. The
-    * benchmark gram set — eval suites are ~10^6–10^8 grams, tiny next to a
+    * [[gramHashesFast]] kernel (per-doc distinct, bit-equal to xxhash64
+    * over the spec-side `KernelTwins.tokenGrams` — the policy every dedup
+    * operator here follows); grams travel as 8-byte hash keys, never
+    * strings. The benchmark gram set — eval suites are ~10^6–10^8 grams, tiny next to a
     * 10^12-doc corpus — is broadcast by default, making the contamination
     * check a broadcast semi-join plus one map-side-combined per-doc count:
     * the training corpus never shuffles. Set `broadcastBench = false` for

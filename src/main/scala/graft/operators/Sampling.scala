@@ -102,24 +102,6 @@ object Sampling {
     df.withColumn("m", m(col(keyCol).cast("long"), rateCol))
   }
 
-  /** Bootstrap mean ± percentile-free normal CI of `value` over `reps`
-    * independent resamples (reference `az_ml_models.R:299-303` pattern):
-    * each rep r uses seed+r, so the whole family is reproducible. One
-    * grouped aggregation per rep over the SAME scan (union of projections —
-    * Spark shares the scan via reused exchange); no driver-side loops over
-    * data.
-    */
-  def bootstrapMeans(df: DataFrame, keyCol: String, value: String,
-      rate: Double, reps: Int, seed: Long): DataFrame = {
-    val perRep = (0 until reps).map { r =>
-      poissonBootstrap(df, keyCol, rate, seed + r)
-        .agg(lit(r).as("rep"),
-          (sum(col("m") * col(value)) / sum(col("m"))).as("boot_mean"),
-          sum(col("m")).as("n_sampled"))
-    }
-    perRep.reduce(_ unionByName _)
-  }
-
   /** Stratified train/test split with EXACT per-class counts — the engine
     * analog of caret's `createDataPartition(y, p = .8)` (the reference's
     * split in every model sweep, `train_functions.R:115,130`,

@@ -7,29 +7,18 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — brute-force cosine as the exactness baseline, plus two
   * scale paths: random-hyperplane LSH bucketing and a centroid-coarse (IVF
-  * style) variant. All dot products are `zip_with`+`aggregate` column
-  * expressions in double precision (left-to-right accumulation, so results
-  * are deterministic and engine-comparable).
+  * style) variant. Every dot product accumulates left to right in double
+  * precision inside a typed loop ([[cosineFast]], [[lshBucketFast]]), so
+  * results are deterministic and engine-comparable; the interpreted
+  * `zip_with`+`aggregate` reference forms they are bit-identical to are
+  * spec-side (`KernelTwins.cosine`, `KernelTwins.lshBucket`).
   */
 object Similarity {
 
-  /** Dot product of two array columns in double precision. REFERENCE
-    * formulation (interpreted HOF) — operators use [[cosineFast]], the typed
-    * tight-loop twin producing the EXACT same doubles (left-to-right
-    * accumulation, asserted in DedupSimilaritySpec); this form remains the
-    * spec oracle.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Typed cosine: bit-identical to [[cosine]] (same multiply/add order,
-    * double precision) at ~µs/pair instead of an interpreted expression tree
-    * per element — the round-1 MinHash lesson applied to the vector path.
+  /** Typed cosine: bit-identical to the spec-side `KernelTwins.cosine`
+    * (same multiply/add order, double precision) at ~µs/pair instead of an
+    * interpreted expression tree per element — the round-1 MinHash lesson
+    * applied to the vector path.
     */
   val cosineFast: UserDefinedFunction = udf { (a: Seq[Float], b: Seq[Float]) =>
     if (a == null || b == null) null
@@ -60,20 +49,6 @@ object Similarity {
     scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
   }
 
-  /** Random-hyperplane LSH bucket id: `planes` sign bits from deterministic
-    * pseudo-random hyperplanes (plane p, dim i weight = a pure hash). Rows
-    * in the same bucket are near in angle with high probability. REFERENCE
-    * formulation; operators use [[lshBucketFast]] (same bits, one loop).
-    */
-  def lshBucket(vec: Column, planes: Int, dims: Int, seed: Long): Column =
-    (0 until planes).map { p =>
-      val weights = planeWeights(p, dims, seed)
-      val proj = aggregate(
-        zip_with(vec, typedLit(weights.toSeq), (x, wgt) => x.cast("double") * wgt),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
   /** Deterministic weights of hyperplane `p` (shared by both formulations
     * and the oracle dump).
     */
@@ -81,9 +56,12 @@ object Similarity {
     Array.tabulate(dims)(i => graft.corpus.Rng.double01(
       graft.corpus.Rng.hash(seed, p.toLong * 100003L + i)) * 2.0 - 1.0)
 
-  /** Typed LSH bucket id: bit-identical to [[lshBucket]] (per-plane
-    * projections accumulate left-to-right in double), one JIT'd loop per row
-    * instead of `planes` interpreted folds.
+  /** Random-hyperplane LSH bucket id: `planes` sign bits from deterministic
+    * pseudo-random hyperplanes (plane p, dim i weight = a pure hash). Rows
+    * in the same bucket are near in angle with high probability. Bit-identical
+    * to the spec-side `KernelTwins.lshBucket` (per-plane projections
+    * accumulate left-to-right in double), one JIT'd loop per row instead of
+    * `planes` interpreted folds.
     */
   def lshBucketFast(planes: Int, dims: Int, seed: Long): UserDefinedFunction = {
     val w: Array[Array[Double]] = Array.tabulate(planes)(planeWeights(_, dims, seed))
@@ -268,8 +246,8 @@ object Similarity {
     * dup_of = the smallest such neighbor (null when kept) — the same
     * keep-min-id survivor convention as every other dedup operator here
     * (the paper keeps the vector farthest from the centroid; min-id is
-    * deterministic and engine-portable, and downstream
-    * [[graft.operators.Dedup.keepAfterNearDup]] composes either way).
+    * deterministic and engine-portable, and a downstream
+    * [[graft.operators.Dedup.components]] + anti-join composes either way).
     *
     * Scale shape: cell assignment is a pure broadcast map (zero corpus
     * shuffle — the exact [[ivfTopK]] rule: cosine rounded to 6 dp, ties to

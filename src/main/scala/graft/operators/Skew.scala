@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Explicit skew handling (BASELINE.json north_star: "skew is handled
@@ -11,10 +11,10 @@ import org.apache.spark.sql.functions._
   *  - AQE skew-join splitting: enabled via session conf
   *    (`spark.sql.adaptive.skewJoin.enabled=true`, on by default in the
   *    engine's sessions) — splits oversized sort-merge partitions at runtime.
-  *  - Explicit salting for the cases AQE can't fix (e.g. a single hot key in
-  *    an aggregation, or a broadcast-ineligible dim): [[saltedJoin]] and
-  *    [[saltedAgg]] below. Salting is semantics-preserving by construction
-  *    and asserted so in SkewSpec.
+  *  - Explicit salting for the case AQE can't fix (a single hot key joined
+  *    to a broadcast-ineligible dim): [[saltedJoin]] below. Salting is
+  *    semantics-preserving by construction and asserted so in
+  *    SkewStreamSpec.
   */
 object Skew {
 
@@ -33,54 +33,5 @@ object Skew {
     val replicated = dim.withColumn("__salt",
       explode(array((0 until salts).map(lit(_)): _*)))
     salted.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
-  /** Two-phase salted aggregation for skewed group keys: partial aggregate
-    * on (key, salt), then final aggregate on key. Pass the partial and final
-    * agg expressions (they must compose, e.g. sum/sum, count/sum).
-    */
-  def saltedAgg(df: DataFrame, key: String, uniqueCol: String, salts: Int,
-      partial: Seq[Column], fin: Seq[Column]): DataFrame =
-    df.withColumn("__salt", pmod(xxhash64(col(uniqueCol)), lit(salts)).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(partial.head, partial.tail: _*)
-      .groupBy(col(key))
-      .agg(fin.head, fin.tail: _*)
-
-  /** Hot-key detection: keys whose SAMPLED frequency exceeds `factor`× the
-    * mean sampled-key frequency — a diagnostic for choosing what to salt,
-    * so it must not itself cost a full shuffle of the fact table at 100 TB.
-    * A row-level Bernoulli sample (`fraction`, seeded) feeds the count;
-    * a genuinely hot key (the only kind worth salting) keeps ~fraction of
-    * its mass and still towers over the sampled mean, while `minSample`
-    * floors the noise: keys with fewer than that many sampled rows are
-    * never reported (a 3-row sample count is not evidence of heat).
-    * Returns (key, n_est) with n_est ≈ the full-table count (sample count
-    * scaled by 1/fraction).
-    *
-    * Determinism: the seeded sample is reproducible for a fixed partition
-    * layout (Spark seeds per partition); across different layouts the
-    * sampled SET varies but any key hot enough to matter is found in all
-    * of them (asserted in the spec).
-    */
-  def hotKeys(df: DataFrame, key: String, factor: Double = 10.0,
-      fraction: Double = 0.001, seed: Long = 42L,
-      minSample: Long = 8L): DataFrame = {
-    require(fraction > 0 && fraction <= 1.0, s"fraction=$fraction not in (0,1]")
-    val counts = df.sample(withReplacement = false, fraction, seed)
-      .groupBy(col(key)).agg(count(lit(1)).as("__ns"))
-    // an empty sample (routine for small tables at the default fraction)
-    // means "no evidence of heat", not an error: avg over zero rows is
-    // null, so guard before the mean comparison
-    val meanRow = counts.agg(avg(col("__ns"))).head()
-    val result = counts.select(col(key),
-      (col("__ns") / fraction).cast("long").as("n_est"))
-    if (meanRow.isNullAt(0)) result.limit(0)
-    else {
-      val mean = meanRow.getDouble(0)
-      counts.filter(col("__ns") > mean * factor && col("__ns") >= minSample)
-        .select(col(key),
-          (col("__ns") / fraction).cast("long").as("n_est"))
-    }
   }
 }

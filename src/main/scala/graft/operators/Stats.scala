@@ -460,65 +460,6 @@ object Stats {
       .drop("__maxt")
   }
 
-  /** Exact two-sided signed-rank p-value for the NO-TIES case (R's
-    * `wilcox.test(paired = TRUE)` default under 50 tie-free nonzero
-    * differences): csignrank counts subsets of ranks {1..n} by sum —
-    * c(k; n) = c(k-n; n-1) + c(k; n-1), total 2^n — with R's tail split
-    * around n(n+1)/4.
-    */
-  def exactSignedRankP(nr: Int, w: Double): Double = {
-    require(nr > 0, "exactSignedRankP needs a non-empty sample")
-    require(w == math.rint(w), s"W=$w is not integral — ties present; use the normal approximation")
-    val memo = new java.util.HashMap[java.lang.Long, java.lang.Double]()
-    val maxW = nr.toLong * (nr + 1) / 2
-    def c(k: Long, n: Int): Double = {
-      if (k < 0 || k > n.toLong * (n + 1) / 2) 0.0
-      else if (n == 0) { if (k == 0) 1.0 else 0.0 }
-      else {
-        val key = java.lang.Long.valueOf((k << 12) ^ n.toLong)
-        val hit = memo.get(key)
-        if (hit ne null) hit.doubleValue()
-        else {
-          val v = c(k - n, n - 1) + c(k, n - 1)
-          memo.put(key, java.lang.Double.valueOf(v))
-          v
-        }
-      }
-    }
-    val total = math.pow(2.0, nr)
-    val wi = math.rint(w).toLong
-    val p0 =
-      if (wi > maxW / 2.0) (0L to (maxW - wi)).map(c(_, nr)).sum / total // P(W >= w) by symmetry
-      else (0L to wi).map(c(_, nr)).sum / total
-    math.min(1.0, 2.0 * p0)
-  }
-
-  /** [[signedRank]] with R's default small-sample behavior: EXACT
-    * permutation p (via [[exactSignedRankP]]) when the group has STRICTLY
-    * fewer than `maxExact` nonzero differences (R switches on `n < 50`)
-    * and their magnitudes are tie-free; tie-corrected normal approximation
-    * otherwise. `method` records the choice per group.
-    */
-  def signedRankExact(df: DataFrame, group: Seq[String], x: String,
-      y: String, maxExact: Int = 50): DataFrame = {
-    val base = signedRank(df, group, x, y)
-    val ties = df.withColumn("__d", col(x) - col(y))
-      .where(col("__d") =!= 0.0)
-      .groupBy((group.map(col) :+ abs(col("__d")).as("__ad")): _*)
-      .agg(count(lit(1)).as("__t"))
-      .groupBy(group.map(col): _*)
-      .agg(max(col("__t")).as("__maxt"))
-    val pe = udf((nr: Long, w: Double) => exactSignedRankP(nr.toInt, w))
-    val exactOk = col("n_nonzero") > 0 && col("n_nonzero") < maxExact &&
-      col("__maxt") === 1
-    base.join(ties, group)
-      .withColumn("method", when(exactOk, lit("exact")).otherwise(lit("normal")))
-      .withColumn("p_value",
-        when(exactOk, pe(col("n_nonzero"), col("w_stat")))
-          .otherwise(col("p_value")))
-      .drop("__maxt")
-  }
-
   /** Paired Wilcoxon signed-rank test per group
     * (`Fig3_4_violin.R:96-100` `method = "wilcox.test", paired = TRUE`):
     * d = x - y per pair, zeros dropped (R's default zero handling), |d|

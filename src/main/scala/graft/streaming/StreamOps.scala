@@ -63,7 +63,8 @@ object StreamOps {
   final case class NdPair(id_a: Long, id_b: Long, hamming: Int)
 
   /** Streaming NEAR-dup detection — the incremental twin of
-    * [[graft.operators.Dedup.simhashPairs]]: every document explodes into
+    * [[graft.operators.Dedup.simhashFast]] signatures paired by
+    * [[graft.operators.Dedup.hammingPairs]]: every document explodes into
     * its four 16-bit SimHash chunk keys (pigeonhole: hamming<=3 pairs agree
     * on at least one chunk); per chunk-bucket the state holds (id, sig, t)
     * of documents inside the watermark horizon, and each arriving document

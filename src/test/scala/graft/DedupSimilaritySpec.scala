@@ -74,7 +74,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       a <- sigs.keys; b <- sigs.keys if a < b
       h = java.lang.Long.bitCount(sigs(a) ^ sigs(b)) if h <= 3
     } yield (a, b) -> h.toLong).toMap
-    val got = Dedup.simhashPairs(d, "doc_id", "text", maxHamming = 3).collect()
+    val fast = d.select(col("doc_id"), Dedup.simhashFast(col("text")).as("sim"))
+    val got = Dedup.hammingPairs(fast, "doc_id", "sim", maxHamming = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == want, s"got=$got want=$want")
   }
@@ -146,7 +147,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("minhashSignatureFast is bit-identical to the HOF reference formulation") {
     val d = (docs(25, 31L) ++ edgeTexts).toDF("doc_id", "text")
     val hof = d.select(col("doc_id"),
-      KernelTwins.minhashSignature(Dedup.tokenGrams(col("text"), 3), 16).as("sig"))
+      KernelTwins.minhashSignature(KernelTwins.tokenGrams(col("text"), 3), 16).as("sig"))
       .collect().map(r => r.getLong(0) ->
         Option(r.getSeq[Long](1)).map(_.toList).getOrElse(List.fill(16)(Long.MaxValue)))
       .toMap
@@ -197,7 +198,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("gramHashesFast is set-equal to xxhash64 over the tokenGrams HOF") {
     val d = (docs(25, 43L) ++ edgeTexts).toDF("doc_id", "text")
     val hof = d.select(col("doc_id"),
-      transform(Dedup.tokenGrams(col("text"), 3), g => xxhash64(g)).as("h"))
+      transform(KernelTwins.tokenGrams(col("text"), 3), g => xxhash64(g)).as("h"))
       .collect().map(r => r.getLong(0) ->
         Option(r.getSeq[Long](1)).map(_.toSet).getOrElse(Set.empty[Long])).toMap
     val fast = d.select(col("doc_id"), Dedup.gramHashesFast(3)(col("text")).as("h"))
@@ -241,8 +242,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 1L, 9L -> 1L,
       5L -> 5L, 6L -> 5L), s"got $comp")
     graft.operators.Caches.releaseAll()
+    // survivors: every doc that is not a non-minimal component member
     val docs = Seq(1L, 2L, 3L, 5L, 6L, 7L, 8L, 9L).toDF("doc_id")
-    val kept = Dedup.keepAfterNearDup(docs, "doc_id", pairs)
+    val drop = Dedup.components(pairs, "id_a", "id_b")
+      .where(col("id") =!= col("comp")).select(col("id").as("doc_id"))
+    val kept = docs.join(drop, Seq("doc_id"), "left_anti")
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(1L, 5L, 7L), s"got $kept") // reps + the unpaired doc
     graft.operators.Caches.releaseAll()
@@ -267,11 +271,11 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val b = e.select(col("vec_id").as("idb"), col("embedding").as("vb"))
     val joined = a.crossJoin(b).where(col("ida") < col("idb")).limit(2000)
       .select(
-        Similarity.cosine(col("va"), col("vb")).as("c_ref"),
+        KernelTwins.cosine(col("va"), col("vb")).as("c_ref"),
         Similarity.cosineFast(col("va"), col("vb")).as("c_fast"))
     assert(joined.filter(col("c_ref") =!= col("c_fast")).count() == 0)
     val buckets = e.select(
-      Similarity.lshBucket(col("embedding"), 8, 16, 42L).as("b_ref"),
+      KernelTwins.lshBucket(col("embedding"), 8, 16, 42L).as("b_ref"),
       Similarity.lshBucketFast(8, 16, 42L)(col("embedding")).as("b_fast"))
     assert(buckets.filter(col("b_ref") =!= col("b_fast")).count() == 0)
   }

@@ -30,7 +30,7 @@ class GoldenFeatureSpec extends AnyFunSuite {
       .map(e => "e%05d".format(e) -> s"topic${e % 5}").toMap
 
     val evs = (0L until P.rows).map { i =>
-      val r = Corpus.imageRow(P, i)
+      val r = CorpusSpec.imageRow(P, i)
       val ent = r.image_id.substring(0, r.image_id.lastIndexOf('-'))
       Ev(ent, Corpus.eventMsOf(P.seed, i, P.baseMs, P.stepMs), i, r.phash,
         r.caption, topicOf(ent))
@@ -204,7 +204,7 @@ class GoldenFeatureSpec extends AnyFunSuite {
   test("captions are byte-equal end to end (input_hint invariant)") {
     val imgs = Corpus.images(spark, P).collect()
     imgs.foreach { r =>
-      val want = Corpus.captionOf(P.seed, Corpus.indexOf(r.image_id))
+      val want = Corpus.captionOf(P.seed, CorpusSpec.indexOf(r.image_id))
       assert(r.caption == want)
       assert(r.caption.getBytes("UTF-8").sameElements(want.getBytes("UTF-8")))
     }

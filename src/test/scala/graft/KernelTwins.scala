@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Text
 import graft.functions.Text.tokens
+import graft.operators.Similarity
 
 /** The interpreted expression (HOF) formulations the typed kernels in main
   * are checked against — the REFERENCE semantics of each `*Fast` twin
@@ -52,6 +53,22 @@ object KernelTwins {
     (wc, mwl, alphaFrac, nStop, dupFrac)
   }
 
+  /** Distinct word n-grams of the whitespace-tokenized text. Short docs
+    * (< n tokens) yield an empty array — the `when` guard is load-bearing:
+    * `sequence(1, 0)` is DESCENDING in Spark ([1,0]) and `slice(arr, 0, n)`
+    * throws under ANSI mode. The gram set behind
+    * [[graft.operators.Dedup.minhashSignatureFast]] and
+    * [[graft.operators.Dedup.gramHashesFast]].
+    */
+  def tokenGrams(text: Column, n: Int): Column = {
+    val tk = Text.tokens(text)
+    array_distinct(
+      when(size(tk) >= n,
+        transform(sequence(lit(1), size(tk) - (n - 1)),
+          i => array_join(slice(tk, i, lit(n)), " ")))
+        .otherwise(array().cast("array<string>")))
+  }
+
   /** MinHash signature: for each of k hash families, min over grams of
     * xxhash64(seed_i, gram), min-combined via zip_with — the reference for
     * [[graft.operators.Dedup.minhashSignatureFast]].
@@ -86,4 +103,29 @@ object KernelTwins {
       aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(toks))
       .otherwise(lit(0.0))
   }
+
+  /** Dot product of two array columns in double precision, accumulated
+    * left to right.
+    */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** The reference for [[graft.operators.Similarity.cosineFast]]. */
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  /** Random-hyperplane LSH bucket id: `planes` sign bits, one interpreted
+    * fold per plane — the reference for
+    * [[graft.operators.Similarity.lshBucketFast]].
+    */
+  def lshBucket(vec: Column, planes: Int, dims: Int, seed: Long): Column =
+    (0 until planes).map { p =>
+      val weights = Similarity.planeWeights(p, dims, seed)
+      val proj = aggregate(
+        zip_with(vec, typedLit(weights.toSeq), (x, wgt) => x.cast("double") * wgt),
+        lit(0.0), (acc, v) => acc + v)
+      when(proj > 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce((a, b) => a.bitwiseOR(b))
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
 import graft.operators.AsOf
@@ -21,6 +23,14 @@ class PlanShapeSpec extends AnyFunSuite {
     val s = df.queryExecution.executedPlan.toString
     s.split("== Initial Plan ==")(0)
   }
+
+  /** The persisted relations `df`'s executed plan scans (its
+    * `InMemoryTableScanExec` nodes, inside AQE query stages too); each
+    * carries the compute plan BELOW its persist as `cachedPlan`. */
+  private def cachedRelations(df: DataFrame): Seq[InMemoryRelation] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: InMemoryTableScanExec => s.relation
+    }
 
   private def countOcc(plan: String, needle: String): Int =
     plan.sliding(needle.length).count(_ == needle)
@@ -204,9 +214,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // the plan BELOW the staging persist must be scan -> projections only.
     val df = SparkEntry.queries("curation_funnel")(spark, "/root/testdata/sf0.001")
     df.collect()
-    val cached = graft.operators.Caches.snapshotPlans()
-    val staging = cached.find(_.contains("doc_id")).getOrElse(
-      fail("no cached staging plan found"))
+    val staging = cachedRelations(df).find(_.output.exists(_.name == "__gop"))
+      .getOrElse(fail("no cached staging plan found")).cachedPlan.toString
     Seq("Exchange", "Join", "HashAggregate", "Window").foreach { op =>
       assert(!staging.contains(op),
         s"staging pass should be a pure projection but contains $op:\n$staging")

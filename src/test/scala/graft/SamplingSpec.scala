@@ -74,22 +74,6 @@ class SamplingSpec extends AnyFunSuite {
       up13.select("k", "m").collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq)
   }
 
-  test("bootstrapMeans: reps are reproducible and concentrate around the true mean") {
-    val df = keyed(10000, 8)
-    val trueMean = df.agg(avg("v")).head.getDouble(0)
-    val reps = Sampling.bootstrapMeans(df, "k", "v", rate = 0.5, reps = 8, seed = 3L)
-      .select(col("rep"), col("boot_mean")).as[(Int, Double)].collect().toMap
-    val again = Sampling.bootstrapMeans(df, "k", "v", rate = 0.5, reps = 8, seed = 3L)
-      .select(col("rep"), col("boot_mean")).as[(Int, Double)].collect().toMap
-    assert(reps == again)
-    assert(reps.size == 8)
-    // each bootstrap mean is within a loose CLT band of the population mean
-    val sd = df.agg(stddev_samp("v")).head.getDouble(0)
-    reps.values.foreach { m =>
-      assert(math.abs(m - trueMean) < 6 * sd / math.sqrt(5000.0), s"boot mean $m vs $trueMean")
-    }
-  }
-
   private def classed(n: Int, parts: Int) =
     spark.range(0, n, 1, parts).select(col("id").as("k"),
       // three classes with sizes ~ n/2, n/3, n/6 (id mod 6 buckets)

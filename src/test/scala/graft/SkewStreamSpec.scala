@@ -24,53 +24,6 @@ class SkewStreamSpec extends AnyFunSuite {
   private def FeaturePipeline_entityDim() =
     graft.features.FeaturePipeline.entityDim(spark, 10)
 
-  test("salted aggregation equals plain aggregation") {
-    val p = Corpus.Params(rows = 3000, entities = 6)
-    val ev = Corpus.events(spark, p).select("entity_id", "seq", "w")
-    val plain = ev.groupBy("entity_id")
-      .agg(sum(col("w")).as("s"), count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = Skew.saltedAgg(ev, "entity_id", "seq", salts = 8,
-      partial = Seq(sum(col("w")).as("ps"), count(lit(1)).as("pn")),
-      fin = Seq(sum(col("ps")).as("s"), sum(col("pn")).as("n")))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(plain == salted)
-  }
-
-  test("hotKeys finds the planted hot key from a sample, at two partition layouts") {
-    // ~50k rows, one key carrying ~20% of them; sampling at 2% must find it
-    // (expected ~200 sampled hits vs a mean of ~1) under either layout,
-    // and must NOT report any of the uniform keys
-    val n = 50000
-    val df = spark.range(n.toLong)
-      .select(when(col("id") % 5 === 0, lit("HOT"))
-        .otherwise(concat(lit("k"), (col("id") % 4000).cast("string")))
-        .as("k"))
-    for (parts <- Seq(4, 13)) {
-      val got = Skew.hotKeys(df.repartition(parts), "k",
-          factor = 10.0, fraction = 0.02, seed = 7L)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got.keySet == Set("HOT"), s"parts=$parts got=${got.keySet}")
-      // scaled estimate lands within 3x of the true 10k count
-      assert(got("HOT") > 3000 && got("HOT") < 30000, s"est=${got("HOT")}")
-    }
-    // same layout + seed => identical result (deterministic diagnostic)
-    val a = Skew.hotKeys(df.repartition(4), "k", fraction = 0.02, seed = 7L).collect().toSeq
-    val b = Skew.hotKeys(df.repartition(4), "k", fraction = 0.02, seed = 7L).collect().toSeq
-    assert(a == b)
-  }
-
-  test("hotKeys on a table too small for the sample fraction returns empty, not an error") {
-    // a few hundred rows at the default fraction=0.001 routinely samples
-    // ZERO rows — "no evidence of heat" must be an empty result
-    val tiny = spark.range(300).select(concat(lit("k"), col("id")).as("k"))
-    val got = Skew.hotKeys(tiny, "k") // defaults: fraction=0.001
-    assert(got.columns.toSeq == Seq("k", "n_est"))
-    assert(got.count() == 0)
-    // literally empty input too
-    assert(Skew.hotKeys(tiny.limit(0), "k").count() == 0)
-  }
-
   test("native hamming expression matches bit_count oracle and codegens") {
     // range-based source so Catalyst cannot constant-fold the expression away
     val df = spark.range(500)

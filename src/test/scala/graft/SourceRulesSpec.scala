@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * expression) would have to find every copy. And no source holds a raw
   * control byte other than '\n': editors and diffs do not show it, so a
   * fixture or comparison with one reads as something else (write the
-  * escape, e.g. "\u000B").
+  * escape, e.g. "\u000B"). And the operator, feature and corpus objects
+  * keep only public names a query, the pipeline, a bench or perfbench
+  * runs: a name only specs call is a reference twin and lives in src/test
+  * (`KernelTwins`, the spec objects), and a name nothing calls is deleted.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -41,6 +44,41 @@ class SourceRulesSpec extends AnyFunSuite {
       if wsComparison.findFirstIn(line).nonEmpty || seed42Hash.findFirstIn(line).nonEmpty
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  /** A public member of a top-level object: 2-space indent, no modifier. */
+  private val publicMember = """^  (?:lazy )?(?:def|val) ([A-Za-z_][A-Za-z0-9_]*)""".r
+
+  /** `line` with its comment part cut: a doc/block-comment line is empty,
+    * and a `//` at the start or after a blank ends the code. */
+  private def code(line: String): String = {
+    val t = line.trim
+    if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
+    else line.replaceFirst("""\s//.*$""", "")
+  }
+
+  test("every public operator, feature and corpus member is named outside its definition") {
+    val owners = Seq("operators", "features", "corpus")
+      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d"))
+    val lines = for {
+      f <- scalaFiles("src/main/scala") ++ scalaFiles("perfbench/src")
+      (line, i) <- Files.readAllLines(f, StandardCharsets.UTF_8).asScala.zipWithIndex
+    } yield (f, i, line)
+    val defs = for {
+      (f, i, line) <- lines if owners.contains(f)
+      m <- publicMember.findFirstMatchIn(line)
+    } yield (f, i, m.group(1))
+    val defSites = defs.toSet
+    // a use stands alone or follows its own object's name: `s.indexOf` on
+    // a String is not `Corpus.indexOf`
+    val unused = defs.filterNot { case (f, _, name) =>
+      val owner = f.getFileName.toString.stripSuffix(".scala")
+      val word = s"(?:(?<![\\w.])|(?<=\\b$owner\\.))$name\\b".r
+      lines.exists { case (g, j, l) =>
+        !defSites((g, j, name)) && word.findFirstIn(code(l)).nonEmpty }
+    }.map { case (f, i, name) => s"$f:${i + 1}: $name" }
+    assert(defs.nonEmpty)
+    assert(unused.isEmpty, unused.mkString("\n"))
   }
 
   test("no .scala file in src/main or src/test holds a raw control byte but \\n") {

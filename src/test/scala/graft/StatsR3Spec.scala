@@ -213,40 +213,6 @@ class StatsR3Spec extends AnyFunSuite {
     val r = Stats.rankSumTestExact(df, Seq("grp"), "cls", "A", "v", maxExact = 4)
       .collect().map(x => x.getAs[String]("grp") -> x.getAs[String]("method")).toMap
     assert(r == Map("a" -> "normal", "b" -> "exact"), s"got $r")
-    // paired twin: exactly maxExact nonzero diffs -> normal
-    val p = Seq(("a", 1.0, 2.0), ("a", 5.0, 3.0), ("a", 9.0, 6.0),
-      ("b", 1.0, 2.0), ("b", 5.0, 3.0))
-      .toDF("grp", "x", "y")
-    val rs = Stats.signedRankExact(p, Seq("grp"), "x", "y", maxExact = 3)
-      .collect().map(x => x.getAs[String]("grp") -> x.getAs[String]("method")).toMap
-    assert(rs == Map("a" -> "normal", "b" -> "exact"), s"got $rs")
-  }
-
-  test("exactSignedRankP matches textbook signed-rank p-values") {
-    // n=3: counts by sum = 1,1,1,2,1,1,1 over total 2^3
-    assert(math.abs(Stats.exactSignedRankP(3, 6.0) - 2.0 / 8) < 1e-12)
-    assert(math.abs(Stats.exactSignedRankP(3, 0.0) - 2.0 / 8) < 1e-12)
-    assert(Stats.exactSignedRankP(3, 3.0) == 1.0) // central W
-    // the classic smallest two-sided paired p at n=5: 2/32
-    assert(math.abs(Stats.exactSignedRankP(5, 15.0) - 0.0625) < 1e-12)
-    assert(math.abs(Stats.exactSignedRankP(5, 0.0) - 0.0625) < 1e-12)
-    intercept[IllegalArgumentException](Stats.exactSignedRankP(3, 2.5))
-  }
-
-  test("signedRankExact: exact for small tie-free groups, normal otherwise") {
-    // "s": d = {+1, -2, +3} -> W = 4, nr = 3, exact p = 2*(3/8) = 0.75
-    // "t": |d| tie (1, -1, 2) -> normal fallback
-    val df = Seq(("s", 2.0, 1.0), ("s", 1.0, 3.0), ("s", 6.0, 3.0),
-      ("t", 2.0, 1.0), ("t", 1.0, 2.0), ("t", 5.0, 3.0))
-      .toDF("grp", "x", "y")
-    val r = Stats.signedRankExact(df, Seq("grp"), "x", "y")
-      .collect().map(x => x.getAs[String]("grp") ->
-        ((x.getAs[String]("method"), x.getAs[Double]("p_value")))).toMap
-    assert(r("s")._1 == "exact" && math.abs(r("s")._2 - 0.75) < 1e-12, s"got ${r("s")}")
-    assert(r("t")._1 == "normal", s"got ${r("t")}")
-    val normal = Stats.signedRank(df.where(col("grp") === "t"),
-      Seq("grp"), "x", "y").head().getAs[Double]("p_value")
-    assert(math.abs(r("t")._2 - normal) < 1e-12)
   }
 
   test("kendall fails fast with a clear error on a fact-scale group") {
