@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.HouseRound
 import graft.operators.{Stats, Windows}
 
 /** Aggregation + window/ordered operator queries (SURVEY.md §2.4–§2.5),
@@ -18,13 +19,13 @@ object QueriesAgg {
     QuerySpec("a1_replicate_summary", (s, d) =>
       t(s, d, "events").groupBy(col("user_id"), col("event_type"))
         .agg(
-          round(avg(col("value")) + 1.7e-8, 4).as("mean_v"),
+          HouseRound(avg(col("value")), 4).as("mean_v"),
           round(min(col("value")), 4).as("min_v"),
           round(max(col("value")), 4).as("max_v"),
           round(min_by(col("value"), col("event_id")), 4).as("first_v"),
           round(max_by(col("value"), col("event_id")), 4).as("last_v"),
           count(lit(1)).as("n")),
-      """SELECT user_id, event_type, round(avg(value) + 1.7e-8, 4) AS mean_v,
+      s"""SELECT user_id, event_type, ${HouseRound.sql("avg(value)", 4)} AS mean_v,
          round(min(value), 4) AS min_v, round(max(value), 4) AS max_v,
          round(arg_min(value, event_id), 4) AS first_v,
          round(arg_max(value, event_id), 4) AS last_v, count(*) AS n
@@ -33,22 +34,22 @@ object QueriesAgg {
     // ---- A3: per-group Pearson correlation with target ---------------------
     QuerySpec("a3_group_corr", (s, d) =>
       t(s, d, "lineitem").groupBy(col("l_returnflag"))
-        .agg(round(corr(col("l_quantity"), col("l_extendedprice")) + 1.7e-8, 4).as("pearson"),
+        .agg(HouseRound(corr(col("l_quantity"), col("l_extendedprice")), 4).as("pearson"),
           count(lit(1)).as("n")),
-      """SELECT l_returnflag, round(corr(l_quantity, l_extendedprice) + 1.7e-8, 4) AS pearson,
+      s"""SELECT l_returnflag, ${HouseRound.sql("corr(l_quantity, l_extendedprice)", 4)} AS pearson,
          count(*) AS n FROM lineitem GROUP BY l_returnflag"""),
 
     // ---- A4: per-group Welch t-statistic between two classes ---------------
     QuerySpec("a4_welch_t", (s, d) =>
       Stats.welchT(t(s, d, "lineitem"), Seq("l_linestatus"),
         "l_returnflag", "A", "N", "l_quantity")
-        .withColumn("t_stat", round(col("t_stat") + 1.7e-8, 4)),
-      """WITH g AS (SELECT l_linestatus, l_returnflag, avg(l_quantity) m,
+        .withColumn("t_stat", HouseRound(col("t_stat"), 4)),
+      s"""WITH g AS (SELECT l_linestatus, l_returnflag, avg(l_quantity) m,
                     var_samp(l_quantity) v, count(*) n
                     FROM lineitem WHERE l_returnflag IN ('A', 'N')
                     GROUP BY 1, 2)
          SELECT a.l_linestatus,
-                round((a.m - b.m) / sqrt(a.v / a.n + b.v / b.n) + 1.7e-8, 4) AS t_stat,
+                ${HouseRound.sql("(a.m - b.m) / sqrt(a.v / a.n + b.v / b.n)", 4)} AS t_stat,
                 a.n AS n1, b.n AS n2
          FROM g a JOIN g b ON a.l_linestatus = b.l_linestatus
          WHERE a.l_returnflag = 'A' AND b.l_returnflag = 'N'"""),
@@ -56,13 +57,13 @@ object QueriesAgg {
     // ---- A7: mean ± CI per group -------------------------------------------
     QuerySpec("a7_mean_ci", (s, d) =>
       Stats.meanCi(t(s, d, "customer"), Seq("c_mktsegment"), "c_acctbal")
-        .select(col("c_mktsegment"), round(col("mean") + 1.7e-8, 4).as("mean"),
-          round(col("sd") + 1.7e-8, 4).as("sd"), col("n"),
-          round(col("ci_lo") + 1.7e-8, 4).as("ci_lo"), round(col("ci_hi") + 1.7e-8, 4).as("ci_hi")),
-      """SELECT c_mktsegment, round(avg(c_acctbal) + 1.7e-8, 4) AS mean,
-         round(stddev_samp(c_acctbal) + 1.7e-8, 4) AS sd, count(*) AS n,
-         round(avg(c_acctbal) - 1.96 * stddev_samp(c_acctbal) / sqrt(count(*)) + 1.7e-8, 4) AS ci_lo,
-         round(avg(c_acctbal) + 1.96 * stddev_samp(c_acctbal) / sqrt(count(*)) + 1.7e-8, 4) AS ci_hi
+        .select(col("c_mktsegment"), HouseRound(col("mean"), 4).as("mean"),
+          HouseRound(col("sd"), 4).as("sd"), col("n"),
+          HouseRound(col("ci_lo"), 4).as("ci_lo"), HouseRound(col("ci_hi"), 4).as("ci_hi")),
+      s"""SELECT c_mktsegment, ${HouseRound.sql("avg(c_acctbal)", 4)} AS mean,
+         ${HouseRound.sql("stddev_samp(c_acctbal)", 4)} AS sd, count(*) AS n,
+         ${HouseRound.sql("avg(c_acctbal) - 1.96 * stddev_samp(c_acctbal) / sqrt(count(*))", 4)} AS ci_lo,
+         ${HouseRound.sql("avg(c_acctbal) + 1.96 * stddev_samp(c_acctbal) / sqrt(count(*))", 4)} AS ci_hi
          FROM customer GROUP BY c_mktsegment"""),
 
     // ---- A8: grouped mean difference via conditional agg (pivot diff) ------
@@ -70,14 +71,14 @@ object QueriesAgg {
       t(s, d, "events").filter(col("event_type").isin("purchase", "view"))
         .groupBy(col("user_id"))
         .agg(
-          round(avg(when(col("event_type") === "purchase", col("value"))) + 1.7e-8, 4).as("mean_purchase"),
-          round(avg(when(col("event_type") === "view", col("value"))) + 1.7e-8, 4).as("mean_view"))
+          HouseRound(avg(when(col("event_type") === "purchase", col("value"))), 4).as("mean_purchase"),
+          HouseRound(avg(when(col("event_type") === "view", col("value"))), 4).as("mean_view"))
         .withColumn("diff", round(col("mean_purchase") - col("mean_view"), 4)),
-      """SELECT user_id,
-         round(avg(value) FILTER (WHERE event_type = 'purchase') + 1.7e-8, 4) AS mean_purchase,
-         round(avg(value) FILTER (WHERE event_type = 'view') + 1.7e-8, 4) AS mean_view,
-         round(round(avg(value) FILTER (WHERE event_type = 'purchase') + 1.7e-8, 4)
-             - round(avg(value) FILTER (WHERE event_type = 'view') + 1.7e-8, 4), 4) AS diff
+      s"""SELECT user_id,
+         ${HouseRound.sql("avg(value) FILTER (WHERE event_type = 'purchase')", 4)} AS mean_purchase,
+         ${HouseRound.sql("avg(value) FILTER (WHERE event_type = 'view')", 4)} AS mean_view,
+         round(${HouseRound.sql("avg(value) FILTER (WHERE event_type = 'purchase')", 4)}
+             - ${HouseRound.sql("avg(value) FILTER (WHERE event_type = 'view')", 4)}, 4) AS diff
          FROM events WHERE event_type IN ('purchase', 'view') GROUP BY user_id"""),
 
     // ---- A9: error metrics (RMSE / MAE / pearson) --------------------------
@@ -87,14 +88,14 @@ object QueriesAgg {
           .withColumn("pred", col("l_quantity") * (lit(1.0) - col("l_discount")))
           .withColumn("obs", col("l_quantity")),
         Seq("l_returnflag"), "pred", "obs")
-        .select(col("l_returnflag"), round(col("rmse") + 1.7e-8, 4).as("rmse"),
-          round(col("mae") + 1.7e-8, 4).as("mae"), round(col("pearson") + 1.7e-8, 4).as("pearson"),
+        .select(col("l_returnflag"), HouseRound(col("rmse"), 4).as("rmse"),
+          HouseRound(col("mae"), 4).as("mae"), HouseRound(col("pearson"), 4).as("pearson"),
           col("n")),
-      """WITH t AS (SELECT l_returnflag, l_quantity * (1.0 - l_discount) AS pred,
+      s"""WITH t AS (SELECT l_returnflag, l_quantity * (1.0 - l_discount) AS pred,
                     l_quantity AS obs FROM lineitem)
-         SELECT l_returnflag, round(sqrt(avg((pred - obs) * (pred - obs))) + 1.7e-8, 4) AS rmse,
-         round(avg(abs(pred - obs)) + 1.7e-8, 4) AS mae,
-         round(corr(pred, obs) + 1.7e-8, 4) AS pearson, count(*) AS n
+         SELECT l_returnflag, ${HouseRound.sql("sqrt(avg((pred - obs) * (pred - obs)))", 4)} AS rmse,
+         ${HouseRound.sql("avg(abs(pred - obs))", 4)} AS mae,
+         ${HouseRound.sql("corr(pred, obs)", 4)} AS pearson, count(*) AS n
          FROM t GROUP BY l_returnflag"""),
 
     // ---- A10: Spearman rank correlation per group --------------------------
@@ -104,14 +105,14 @@ object QueriesAgg {
     QuerySpec("a10_spearman", (s, d) =>
       Stats.spearmanGridX(t(s, d, "lineitem"), Seq("l_returnflag"),
         "l_quantity", "l_extendedprice")
-        .withColumn("spearman", round(col("spearman") + 1.7e-8, 4)),
-      """WITH r AS (SELECT l_returnflag,
+        .withColumn("spearman", HouseRound(col("spearman"), 4)),
+      s"""WITH r AS (SELECT l_returnflag,
            rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
              + (count(*) OVER (PARTITION BY l_returnflag, l_quantity) - 1) / 2.0 AS rx,
            rank() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice)
              + (count(*) OVER (PARTITION BY l_returnflag, l_extendedprice) - 1) / 2.0 AS ry
            FROM lineitem)
-         SELECT l_returnflag, round(corr(rx, ry) + 1.7e-8, 4) AS spearman
+         SELECT l_returnflag, ${HouseRound.sql("corr(rx, ry)", 4)} AS spearman
          FROM r GROUP BY l_returnflag"""),
 
     // ---- A11: correlation of value with its own rank position --------------
@@ -120,12 +121,12 @@ object QueriesAgg {
         .orderBy(col("value").desc, col("event_id"))
       t(s, d, "events").withColumn("rn", row_number().over(w))
         .groupBy(col("event_type"))
-        .agg(round(corr(col("value"), col("rn")) + 1.7e-8, 4).as("cor_rank"))
+        .agg(HouseRound(corr(col("value"), col("rn")), 4).as("cor_rank"))
     },
-      """WITH r AS (SELECT event_type, value,
+      s"""WITH r AS (SELECT event_type, value,
            row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rn
            FROM events)
-         SELECT event_type, round(corr(value, rn) + 1.7e-8, 4) AS cor_rank FROM r GROUP BY event_type"""),
+         SELECT event_type, ${HouseRound.sql("corr(value, rn)", 4)} AS cor_rank FROM r GROUP BY event_type"""),
 
     // ---- A12: confusion-matrix counts ---------------------------------------
     QuerySpec("a12_confusion", (s, d) =>
@@ -157,12 +158,12 @@ object QueriesAgg {
     QuerySpec("a14_linear_fit", (s, d) =>
       Stats.linearFit(t(s, d, "lineitem"), Seq("l_returnflag"),
         "l_quantity", "l_extendedprice")
-        .select(col("l_returnflag"), round(col("slope") + 1.7e-8, 4).as("slope"),
-          round(col("intercept") + 1.7e-8, 4).as("intercept"), col("n")),
-      """SELECT l_returnflag,
-         round(covar_samp(l_quantity, l_extendedprice) / var_samp(l_quantity) + 1.7e-8, 4) AS slope,
-         round(avg(l_extendedprice) - covar_samp(l_quantity, l_extendedprice)
-           / var_samp(l_quantity) * avg(l_quantity) + 1.7e-8, 4) AS intercept,
+        .select(col("l_returnflag"), HouseRound(col("slope"), 4).as("slope"),
+          HouseRound(col("intercept"), 4).as("intercept"), col("n")),
+      s"""SELECT l_returnflag,
+         ${HouseRound.sql("covar_samp(l_quantity, l_extendedprice) / var_samp(l_quantity)", 4)} AS slope,
+         ${HouseRound.sql("""avg(l_extendedprice) - covar_samp(l_quantity, l_extendedprice)
+           / var_samp(l_quantity) * avg(l_quantity)""", 4)} AS intercept,
          count(*) AS n
          FROM lineitem GROUP BY l_returnflag"""),
 
@@ -206,15 +207,15 @@ object QueriesAgg {
     QuerySpec("a17_union_agg", (s, d) => {
       val ev = t(s, d, "events")
       val a = ev.filter(col("value") >= 50).groupBy(col("event_type"))
-        .agg(round(avg(col("value")) + 1.7e-8, 4).as("mean_v")).withColumn("half", lit("hi"))
+        .agg(HouseRound(avg(col("value")), 4).as("mean_v")).withColumn("half", lit("hi"))
       val b = ev.filter(col("value") < 50).groupBy(col("event_type"))
-        .agg(round(avg(col("value")) + 1.7e-8, 4).as("mean_v")).withColumn("half", lit("lo"))
+        .agg(HouseRound(avg(col("value")), 4).as("mean_v")).withColumn("half", lit("lo"))
       a.unionByName(b)
     },
-      """SELECT event_type, round(avg(value) + 1.7e-8, 4) AS mean_v, 'hi' AS half
+      s"""SELECT event_type, ${HouseRound.sql("avg(value)", 4)} AS mean_v, 'hi' AS half
          FROM events WHERE value >= 50 GROUP BY event_type
          UNION ALL
-         SELECT event_type, round(avg(value) + 1.7e-8, 4) AS mean_v, 'lo' AS half
+         SELECT event_type, ${HouseRound.sql("avg(value)", 4)} AS mean_v, 'lo' AS half
          FROM events WHERE value < 50 GROUP BY event_type"""),
 
     // ---- W1/W2: top-k per group by metric ------------------------------------
@@ -353,14 +354,14 @@ object QueriesAgg {
           // + 0.0 canonicalizes IEEE negative zero (-0.0 + 0.0 = 0.0); DuckDB
           // emits -0.0 for 2 rows at sf0.1 where Spark emits 0.0 and the
           // driver's hash is sign-sensitive (round-1 hash FAIL root cause)
-          (round(col("l_extendedprice_z") + 1.7e-8, 4) + lit(0.0)).as("z")),
-      """WITH stats AS (SELECT l_returnflag, avg(l_extendedprice) AS mu,
+          (HouseRound(col("l_extendedprice_z"), 4) + lit(0.0)).as("z")),
+      s"""WITH stats AS (SELECT l_returnflag, avg(l_extendedprice) AS mu,
            stddev_samp(l_extendedprice) AS sigma
            FROM lineitem WHERE l_shipdate < TIMESTAMP '1997-01-01'
            GROUP BY l_returnflag)
          SELECT l.l_orderkey, l.l_linenumber,
            CASE WHEN s.sigma > 0
-             THEN round((l.l_extendedprice - s.mu) / s.sigma + 1.7e-8, 4) + 0.0 END AS z
+             THEN ${HouseRound.sql("(l.l_extendedprice - s.mu) / s.sigma", 4)} + 0.0 END AS z
          FROM lineitem l LEFT JOIN stats s ON l.l_returnflag = s.l_returnflag"""),
 
     // ---- R1: pivot long→wide via conditional aggregation ----------------------

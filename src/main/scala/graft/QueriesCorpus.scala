@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Corpus
 import graft.features.FeaturePipeline
+import graft.functions.{HouseRound, Text}
 import graft.multimodal.Multimodal
 import graft.operators.AsOf
 
@@ -22,6 +23,8 @@ import graft.operators.AsOf
   * signatures (xxhash64) and the binary codec remain ScalaTest-only.
   */
 object QueriesCorpus {
+
+  import QuerySpec.StopwordsSql
 
   private val P = Corpus.Params(rows = 2000L, entities = 20)
 
@@ -72,16 +75,12 @@ object QueriesCorpus {
   private def events5(s: SparkSession): DataFrame =
     Corpus.events(s, P).select("entity_id", "event_ms", "seq", "phash", "caption")
 
-  /** 30 stopwords as a DuckDB list literal (kept in sync with Corpus.Stopwords). */
-  private val sw: String =
-    Corpus.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-
   /** The full flagship feature computation as DuckDB CTEs ending in `feats`.
     * Mirrors FeaturePipeline.scalarFeatures + features exactly: token stats
     * via list lambdas, dim lookups via an explode + left join + re-agg,
     * temporal features via window functions over (entity_id; event_ms, seq).
-    * Epsilon-rounding (+1.7e-8) on the two order-sensitive double sums matches
-    * the Spark side (see FeaturePipeline).
+    * The two order-sensitive double sums take the house rounding, as on the
+    * Spark side.
     */
   private val featsSql: String =
     s"""WITH ev AS (SELECT * FROM read_parquet('$D/events.parquet/*.parquet')),
@@ -90,7 +89,7 @@ object QueriesCorpus {
        |base AS (
        |  SELECT ev.image_id, ev.w, ev.h, ev.phash, ev.entity_id, ev.event_ms,
        |         ev.seq, ev.caption, ed.topic,
-       |         list_filter(string_split_regex(trim(ev.caption), '\\s+'), x -> x <> '') AS tk
+       |         ${Text.sqlTokens("ev.caption")} AS tk
        |  FROM ev LEFT JOIN ed USING (entity_id)),
        |tokrows AS (SELECT image_id, topic, unnest(tk) AS token FROM base),
        |dimagg AS (
@@ -101,7 +100,7 @@ object QueriesCorpus {
        |qual AS (
        |  SELECT b.*,
        |    CASE WHEN len(b.tk) > 0 THEN
-       |      CAST(len(list_filter(b.tk, x -> list_contains($sw, x))) AS DOUBLE) / len(b.tk)
+       |      CAST(len(list_filter(b.tk, x -> list_contains($StopwordsSql, x))) AS DOUBLE) / len(b.tk)
        |      ELSE 0.0 END AS swr,
        |    least(CAST(len(b.tk) AS DOUBLE) / 8.0, 1.0) AS len_score,
        |    CASE WHEN length(b.caption) > 0 THEN
@@ -118,7 +117,7 @@ object QueriesCorpus {
        |        + (1.0 - abs(q.swr - 0.35) / 0.65) * 0.3)), 6) AS quality,
        |    CAST(coalesce(da.dm, 0) AS BIGINT) AS dim_matched,
        |    CAST(da.dmr AS INTEGER) AS dim_min_rank,
-       |    round(coalesce(da.dss, 0.0) + 1.7e-8, 6) AS dim_score_sum
+       |    ${HouseRound.sql("coalesce(da.dss, 0.0)", 6)} AS dim_score_sum
        |  FROM qual q LEFT JOIN dimagg da USING (image_id)),
        |scal2 AS (
        |  SELECT s.*, CASE WHEN s.token_count >= 6 THEN s.quality END AS sparse_quality
@@ -142,7 +141,7 @@ object QueriesCorpus {
        |    CAST(f.rn - last_value(CASE WHEN f.newsess = 1 THEN f.rn END IGNORE NULLS)
        |      OVER wr AS INTEGER) AS session_pos,
        |    last_value(f.sparse_quality IGNORE NULLS) OVER wr AS quality_filled,
-       |    round(avg(f.quality) OVER wr + 1.7e-8, 6) AS running_quality_mean
+       |    ${HouseRound.sql("avg(f.quality) OVER wr", 6)} AS running_quality_mean
        |  FROM sessf f WINDOW wr AS (PARTITION BY f.entity_id
        |    ORDER BY f.event_ms, f.seq ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
        |""".stripMargin
@@ -208,12 +207,11 @@ object QueriesCorpus {
       stats.groupBy(col("fmt"))
         .agg(count(lit(1)).as("n"),
           // px_mean is a 4dp-grid per-image value; its cross-partition avg is
-          // an order-sensitive double sum, so it takes the house non-grid
-          // epsilon (FeaturePipeline convention) before the 4dp round
-          round(avg(col("px_mean")) + 1.7e-8, 4).as("avg_px_mean"),
+          // an order-sensitive double sum
+          HouseRound(avg(col("px_mean")), 4).as("avg_px_mean"),
           sum(when(col("phash_matches"), 1L).otherwise(0L)).as("n_phash_ok"))
     },
-      s"""SELECT fmt, count(*) AS n, round(avg(px_mean) + 1.7e-8, 4) AS avg_px_mean,
+      s"""SELECT fmt, count(*) AS n, ${HouseRound.sql("avg(px_mean)", 4)} AS avg_px_mean,
          |  CAST(sum(CASE WHEN phash_matches THEN 1 ELSE 0 END) AS BIGINT) AS n_phash_ok
          |FROM read_parquet('${Dumps.Dir}/decode_stats.parquet/*.parquet')
          |GROUP BY 1""".stripMargin),
@@ -241,12 +239,12 @@ object QueriesCorpus {
       val frames = Multimodal.frameSample(Corpus.images(s, P), everyK = 4).toDF()
       Dumps.write(frames, "frame_stats")
       frames.groupBy(col("image_id")).agg(count(lit(1)).as("n_frames"),
-        round(avg(col("px_mean")) + 1.7e-8, 4).as("mean_frame_px"))
+        HouseRound(avg(col("px_mean")), 4).as("mean_frame_px"))
     },
       // n_frames comes from the EVENT table (ceil(h/4)), not the dump — a
       // wrong fan-out in the Spark flatMap shows as a count mismatch
       s"""SELECT f.image_id, CAST((ev.h + 3) // 4 AS BIGINT) AS n_frames,
-         |  round(avg(f.px_mean) + 1.7e-8, 4) AS mean_frame_px
+         |  ${HouseRound.sql("avg(f.px_mean)", 4)} AS mean_frame_px
          |FROM read_parquet('${Dumps.Dir}/frame_stats.parquet/*.parquet') f
          |JOIN read_parquet('$D/events.parquet/*.parquet') ev
          |  ON ev.image_id = f.image_id
@@ -269,14 +267,14 @@ object QueriesCorpus {
       gated.groupBy(coalesce(col("reject_reason"), lit("pass")).as("outcome"),
           col("fmt"))
         .agg(count(lit(1)).as("n"),
-          round(avg(graft.functions.Text.tokenCount(col("caption"))
-            .cast("double")) + 1.7e-8, 4).as("avg_tokens"))
+          HouseRound(avg(Text.tokenCount(col("caption"))
+            .cast("double")), 4).as("avg_tokens"))
     },
       // the corrupt branch replays the plant (seq % 19) rather than reading
       // byte lengths — the dump carries no payloads; rule ORDER must match
       // Multimodal.qualityGate exactly (first failing rule wins)
       s"""WITH t AS (SELECT *,
-         |    list_filter(string_split_regex(trim(caption), '\\s+'), x -> x <> '') AS tk
+         |    ${Text.sqlTokens("caption")} AS tk
          |  FROM read_parquet('$D/events.parquet/*.parquet')),
          |g AS (SELECT fmt, tk,
          |  CASE WHEN w IS NULL OR h IS NULL OR fmt IS NULL OR caption IS NULL
@@ -288,12 +286,12 @@ object QueriesCorpus {
          |       WHEN seq % 19 = 0 THEN 'corrupt'
          |       WHEN len(tk) < 3 THEN 'caption_short'
          |       WHEN (CASE WHEN len(tk) > 0 THEN
-         |           CAST(len(list_filter(tk, x -> list_contains($sw, x))) AS DOUBLE)
+         |           CAST(len(list_filter(tk, x -> list_contains($StopwordsSql, x))) AS DOUBLE)
          |             / len(tk) ELSE 0.0 END) > 0.7 THEN 'caption_stopwordy'
          |       ELSE 'pass' END AS outcome
          |  FROM t)
          |SELECT outcome, fmt, count(*) AS n,
-         |  round(avg(CAST(len(tk) AS DOUBLE)) + 1.7e-8, 4) AS avg_tokens
+         |  ${HouseRound.sql("avg(CAST(len(tk) AS DOUBLE))", 4)} AS avg_tokens
          |FROM g GROUP BY 1, 2""".stripMargin),
 
     // corpus as-of against the probe matrix (edge cases incl. before-first)

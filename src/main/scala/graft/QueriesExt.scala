@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.HouseRound
 import graft.operators.Stats
 
 /** Round-2 coverage queries: the SURVEY §2 components the round-1 verdict
@@ -44,13 +45,13 @@ object QueriesExt {
         .where(col("__has_na") === 1).select("user_id")
       long.join(bad, Seq("user_id"), "left_anti")
         .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"), round(sum(col("v")) + 1.7e-8, 4).as("sum_v"))
+        .agg(count(lit(1)).as("n"), HouseRound(sum(col("v")), 4).as("sum_v"))
     },
-      """WITH l AS (SELECT user_id,
+      s"""WITH l AS (SELECT user_id,
            CASE WHEN event_id % 50 <> 0 THEN value END AS v FROM events),
          bad AS (SELECT user_id FROM l GROUP BY user_id
                  HAVING sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) > 0)
-         SELECT user_id, count(*) AS n, round(sum(v) + 1.7e-8, 4) AS sum_v
+         SELECT user_id, count(*) AS n, ${HouseRound.sql("sum(v)", 4)} AS sum_v
          FROM l WHERE user_id NOT IN (SELECT user_id FROM bad)
          GROUP BY user_id"""),
 
@@ -85,9 +86,9 @@ object QueriesExt {
         key = "o_custkey", uniqueCol = "o_orderkey", salts = 8)
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice")) + 1.7e-8, 2).as("sum_price")),
-      """SELECT c_nationkey, count(*) AS n_orders,
-           round(sum(o_totalprice) + 1.7e-8, 2) AS sum_price
+          HouseRound(sum(col("o_totalprice")), 2).as("sum_price")),
+      s"""SELECT c_nationkey, count(*) AS n_orders,
+           ${HouseRound.sql("sum(o_totalprice)", 2)} AS sum_price
          FROM orders JOIN customer ON o_custkey = c_custkey
          GROUP BY 1"""),
 
@@ -150,18 +151,18 @@ object QueriesExt {
     QuerySpec("a7_mean_ci90", (s, d) =>
       Stats.meanCiLevel(t(s, d, "customer"), Seq("c_mktsegment"), "c_acctbal",
         level = 0.90)
-        .select(col("c_mktsegment"), round(col("mean") + 1.7e-8, 4).as("mean"),
+        .select(col("c_mktsegment"), HouseRound(col("mean"), 4).as("mean"),
           col("n"),
           // CI bounds rounded to 2 dp: the oracle's z is the published
           // constant 1.6448536269514722 while ours is Acklam-derived
           // (|rel err| < 1.15e-9) — at 4 dp a ~3e-7 absolute difference
           // could straddle a rounding boundary
-          round(col("ci_lo") + 1.7e-8, 2).as("ci_lo"),
-          round(col("ci_hi") + 1.7e-8, 2).as("ci_hi")),
-      """SELECT c_mktsegment, round(avg(c_acctbal) + 1.7e-8, 4) AS mean, count(*) AS n,
-         round(avg(c_acctbal)
-           - 1.6448536269514722 * stddev_samp(c_acctbal) / sqrt(count(*)) + 1.7e-8, 2) AS ci_lo,
-         round(avg(c_acctbal)
-           + 1.6448536269514722 * stddev_samp(c_acctbal) / sqrt(count(*)) + 1.7e-8, 2) AS ci_hi
+          HouseRound(col("ci_lo"), 2).as("ci_lo"),
+          HouseRound(col("ci_hi"), 2).as("ci_hi")),
+      s"""SELECT c_mktsegment, ${HouseRound.sql("avg(c_acctbal)", 4)} AS mean, count(*) AS n,
+         ${HouseRound.sql("""avg(c_acctbal)
+           - 1.6448536269514722 * stddev_samp(c_acctbal) / sqrt(count(*))""", 2)} AS ci_lo,
+         ${HouseRound.sql("""avg(c_acctbal)
+           + 1.6448536269514722 * stddev_samp(c_acctbal) / sqrt(count(*))""", 2)} AS ci_hi
          FROM customer GROUP BY c_mktsegment"""))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.HouseRound
+
 /** Sampling / ML-boundary / source-format coverage (SURVEY.md §2.1, §2.10). */
 object QueriesMisc {
 
@@ -37,9 +39,9 @@ object QueriesMisc {
         .withColumn("fold", pmod(col("o_orderkey"), lit(5)).cast("int"))
         .groupBy(col("fold"))
         .agg(count(lit(1)).as("n"),
-          round(avg(col("o_totalprice")) + 1.7e-8, 4).as("mean_price")),
-      """SELECT CAST(o_orderkey % 5 AS INTEGER) AS fold, count(*) AS n,
-         round(avg(o_totalprice) + 1.7e-8, 4) AS mean_price
+          HouseRound(avg(col("o_totalprice")), 4).as("mean_price")),
+      s"""SELECT CAST(o_orderkey % 5 AS INTEGER) AS fold, count(*) AS n,
+         ${HouseRound.sql("avg(o_totalprice)", 4)} AS mean_price
          FROM orders GROUP BY 1"""),
 
     // ---- M2: Poisson bootstrap (seeded, partitioning-independent) -----------
@@ -55,12 +57,12 @@ object QueriesMisc {
       Dumps.write(m.select(col("o_orderkey"), col("m")), "bootstrap_m")
       m.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_rows_hit"), sum(col("m")).as("n_sampled"),
-          round(sum(col("m") * col("o_totalprice")) / sum(col("m")) + 1.7e-8, 4)
+          HouseRound(sum(col("m") * col("o_totalprice")) / sum(col("m")), 4)
             .as("mean_price"))
     },
       s"""SELECT o.o_orderstatus, count(*) AS n_rows_hit,
          |  CAST(sum(m.m) AS BIGINT) AS n_sampled,
-         |  round(sum(m.m * o.o_totalprice) / sum(m.m) + 1.7e-8, 4) AS mean_price
+         |  ${HouseRound.sql("sum(m.m * o.o_totalprice) / sum(m.m)", 4)} AS mean_price
          |FROM orders o
          |JOIN read_parquet('${Dumps.Dir}/bootstrap_m.parquet/*.parquet') m
          |  ON o.o_orderkey = m.o_orderkey
@@ -75,12 +77,12 @@ object QueriesMisc {
       Dumps.write(up.select(col("o_orderkey"), col("m")), "upsample_m")
       up.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_rows_hit"), sum(col("m")).as("n_sampled"),
-          round(sum(col("m") * col("o_totalprice")) / sum(col("m")) + 1.7e-8, 4)
+          HouseRound(sum(col("m") * col("o_totalprice")) / sum(col("m")), 4)
             .as("mean_price"))
     },
       s"""SELECT o.o_orderstatus, count(*) AS n_rows_hit,
          |  CAST(sum(m.m) AS BIGINT) AS n_sampled,
-         |  round(sum(m.m * o.o_totalprice) / sum(m.m) + 1.7e-8, 4) AS mean_price
+         |  ${HouseRound.sql("sum(m.m * o.o_totalprice) / sum(m.m)", 4)} AS mean_price
          |FROM orders o
          |JOIN read_parquet('${Dumps.Dir}/upsample_m.parquet/*.parquet') m
          |  ON o.o_orderkey = m.o_orderkey
@@ -99,7 +101,7 @@ object QueriesMisc {
         xxhash64(lit(7L), col("o_orderkey")).as("h")), "split_h")
       sp.groupBy(col("o_orderstatus"), col("is_train"))
         .agg(count(lit(1)).as("n"),
-          round(avg(col("o_totalprice")) + 1.7e-8, 4).as("mean_price"))
+          HouseRound(avg(col("o_totalprice")), 4).as("mean_price"))
     },
       s"""WITH j AS (SELECT o.*, h.h
          |  FROM orders o
@@ -110,7 +112,7 @@ object QueriesMisc {
          |  count(*) OVER (PARTITION BY o_orderstatus) AS nc
          |  FROM j)
          |SELECT o_orderstatus, rn <= ceil(nc * 0.8) AS is_train,
-         |  count(*) AS n, round(avg(o_totalprice) + 1.7e-8, 4) AS mean_price
+         |  count(*) AS n, ${HouseRound.sql("avg(o_totalprice)", 4)} AS mean_price
          |FROM r GROUP BY 1, 2""".stripMargin),
 
     // the at-scale variant: pure-projection hash threshold (no count, no
@@ -123,11 +125,11 @@ object QueriesMisc {
         xxhash64(lit(7L), col("o_orderkey")).as("h")), "split_h")
       sp.groupBy(col("o_orderstatus"), col("is_train"))
         .agg(count(lit(1)).as("n"),
-          round(avg(col("o_totalprice")) + 1.7e-8, 4).as("mean_price"))
+          HouseRound(avg(col("o_totalprice")), 4).as("mean_price"))
     },
       s"""SELECT o.o_orderstatus,
          |  ((h.h % 1000000) + 1000000) % 1000000 < 800000 AS is_train,
-         |  count(*) AS n, round(avg(o.o_totalprice) + 1.7e-8, 4) AS mean_price
+         |  count(*) AS n, ${HouseRound.sql("avg(o.o_totalprice)", 4)} AS mean_price
          |FROM orders o
          |JOIN read_parquet('${Dumps.Dir}/split_h.parquet/*.parquet') h
          |  ON o.o_orderkey = h.o_orderkey

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.HouseRound
 import graft.operators.Stats
 
 /** Round-3 coverage queries: the statistical surface the round-2 verdict
@@ -36,8 +37,8 @@ object QueriesR3 {
         Seq("l_linestatus"), "l_returnflag", "A", "l_quantity")
         .select(col("l_linestatus"), col("n1"), col("n2"),
           round(col("u_stat"), 2).as("u_stat"),
-          round(col("z") + 1.7e-8, 4).as("z"),
-          round(col("p_value") + 1.7e-8, 4).as("p_value")),
+          HouseRound(col("z"), 4).as("z"),
+          HouseRound(col("p_value"), 4).as("p_value")),
       s"""WITH f AS (SELECT l_linestatus, l_returnflag, l_quantity FROM lineitem
             WHERE l_returnflag IN ('A', 'N')),
           r AS (SELECT l_linestatus, l_returnflag,
@@ -61,8 +62,8 @@ object QueriesR3 {
                     - tie / ((n1 + n2) * CAST(n1 + n2 - 1 AS DOUBLE)))) AS z
             FROM u JOIN tie USING (l_linestatus))
           SELECT l_linestatus, n1, n2, round(u_stat, 2) AS u_stat,
-            round(z + 1.7e-8, 4) AS z,
-            round(${pSql("z")} + 1.7e-8, 4) AS p_value
+            ${HouseRound.sql("z", 4)} AS z,
+            ${HouseRound.sql(pSql("z"), 4)} AS p_value
           FROM zc"""),
 
     // ---- A13 paired: signed-rank test over (pred, obs) pairs ----------------
@@ -77,8 +78,8 @@ object QueriesR3 {
         Seq("l_linestatus"), "pred", "obs")
         .select(col("l_linestatus"), col("n_nonzero"),
           round(col("w_stat"), 2).as("w_stat"),
-          round(col("z") + 1.7e-8, 4).as("z"),
-          round(col("p_value") + 1.7e-8, 4).as("p_value")),
+          HouseRound(col("z"), 4).as("z"),
+          HouseRound(col("p_value"), 4).as("p_value")),
       s"""WITH d0 AS (SELECT l_linestatus,
               l_quantity * (1.0 - l_discount) * (1.0 + l_tax) - l_quantity AS d
             FROM lineitem),
@@ -100,8 +101,8 @@ object QueriesR3 {
                     - tie / 48.0) AS z
             FROM a)
           SELECT l_linestatus, n_nonzero, round(w_stat, 2) AS w_stat,
-            round(z + 1.7e-8, 4) AS z,
-            round(${pSql("z")} + 1.7e-8, 4) AS p_value
+            ${HouseRound.sql("z", 4)} AS z,
+            ${HouseRound.sql(pSql("z"), 4)} AS p_value
           FROM zc"""),
 
     // ---- A13 exact: small-sample exact Mann-Whitney p (R's default) --------
@@ -118,8 +119,8 @@ object QueriesR3 {
         Seq("g"), "cls", "A", "v")
         .select(col("g"), col("n1"), col("n2"),
           round(col("u_stat"), 2).as("u_stat"), col("method"),
-          round(col("p_value") + 1.7e-8, 6).as("p_value")),
-      """WITH f AS (SELECT CASE WHEN n_regionkey = 0 THEN 'A' ELSE 'B' END AS cls,
+          HouseRound(col("p_value"), 6).as("p_value")),
+      s"""WITH f AS (SELECT CASE WHEN n_regionkey = 0 THEN 'A' ELSE 'B' END AS cls,
              CAST(n_nationkey AS DOUBLE) AS v
            FROM nation WHERE n_regionkey IN (0, 1)),
           r AS (SELECT cls,
@@ -132,14 +133,14 @@ object QueriesR3 {
           k AS (SELECT *, CAST(least(u_stat, n1 * n2 - u_stat) AS INTEGER) AS kk FROM u)
           SELECT 'all' AS g, n1, n2, round(u_stat, 2) AS u_stat,
             'exact' AS method,
-            round(CASE kk
+            ${HouseRound.sql("""CASE kk
               WHEN 0 THEN 0.007936507936507936 WHEN 1 THEN 0.015873015873015872
               WHEN 2 THEN 0.031746031746031744 WHEN 3 THEN 0.05555555555555555
               WHEN 4 THEN 0.09523809523809523 WHEN 5 THEN 0.15079365079365079
               WHEN 6 THEN 0.2222222222222222 WHEN 7 THEN 0.30952380952380953
               WHEN 8 THEN 0.42063492063492064 WHEN 9 THEN 0.5476190476190477
               WHEN 10 THEN 0.6904761904761905 WHEN 11 THEN 0.8412698412698413
-              ELSE 1.0 END + 1.7e-8, 6) AS p_value
+              ELSE 1.0 END""", 6)} AS p_value
           FROM k"""),
 
     // ---- A12 derived: accuracy/sensitivity/specificity/precision/kappa -----
@@ -150,12 +151,12 @@ object QueriesR3 {
         actual = col("o_orderstatus") === "F",
         predicted = col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
         .select(col("seg"), col("tp"), col("fp"), col("fn"), col("tn"),
-          round(col("accuracy") + 1.7e-8, 4).as("accuracy"),
-          round(col("sensitivity") + 1.7e-8, 4).as("sensitivity"),
-          round(col("specificity") + 1.7e-8, 4).as("specificity"),
-          round(col("precision") + 1.7e-8, 4).as("precision"),
-          round(col("kappa") + 1.7e-8, 4).as("kappa")),
-      """WITH b AS (SELECT CAST(o_custkey % 3 AS INTEGER) AS seg,
+          HouseRound(col("accuracy"), 4).as("accuracy"),
+          HouseRound(col("sensitivity"), 4).as("sensitivity"),
+          HouseRound(col("specificity"), 4).as("specificity"),
+          HouseRound(col("precision"), 4).as("precision"),
+          HouseRound(col("kappa"), 4).as("kappa")),
+      s"""WITH b AS (SELECT CAST(o_custkey % 3 AS INTEGER) AS seg,
             (o_orderstatus = 'F') AS act,
             (o_orderpriority IN ('1-URGENT', '2-HIGH')) AS prd FROM orders),
           c AS (SELECT seg,
@@ -171,20 +172,18 @@ object QueriesR3 {
                    * CAST(tp + fp + fn + tn AS DOUBLE)) AS pe
             FROM c)
           SELECT seg, tp, fp, fn, tn,
-            round(po + 1.7e-8, 4) AS accuracy,
-            round(tp / CAST(tp + fn AS DOUBLE) + 1.7e-8, 4) AS sensitivity,
-            round(tn / CAST(tn + fp AS DOUBLE) + 1.7e-8, 4) AS specificity,
-            round(tp / CAST(tp + fp AS DOUBLE) + 1.7e-8, 4) AS precision,
-            round((po - pe) / (1.0 - pe) + 1.7e-8, 4) AS kappa
+            ${HouseRound.sql("po", 4)} AS accuracy,
+            ${HouseRound.sql("tp / CAST(tp + fn AS DOUBLE)", 4)} AS sensitivity,
+            ${HouseRound.sql("tn / CAST(tn + fp AS DOUBLE)", 4)} AS specificity,
+            ${HouseRound.sql("tp / CAST(tp + fp AS DOUBLE)", 4)} AS precision,
+            ${HouseRound.sql("(po - pe) / (1.0 - pe)", 4)} AS kappa
           FROM k"""),
 
     // ---- A12 multi-class: k-level confusion, one-vs-rest stats, kappa ------
     // 3-class actual (order status F/O/P) vs a 3-class priority-derived
     // prediction — the caret-confusionMatrix-on-a-3-level-factor analog.
-    // Epsilon is the house non-grid +1.7e-8 (FeaturePipeline convention),
-    // NOT +1e-7: the round-4 oracle run flipped a 4-dp kappa boundary that
-    // the on-grid epsilon mapped values onto (the pe sum itself is now
-    // exact decimal, so every derived double is parallelism-independent)
+    // The pe sum is exact decimal, so every derived double is
+    // parallelism-independent before the house rounding
     QuerySpec("a12_confusion_multi", (s, d) =>
       Stats.confusionMulti(
         t(s, d, "orders").withColumn("seg", pmod(col("o_custkey"), lit(2)).cast("int")),
@@ -195,14 +194,14 @@ object QueriesR3 {
           .otherwise("O"))
         .select(col("seg"), col("cls"), col("tp"), col("n_actual"),
           col("n_predicted"),
-          round(col("sensitivity") + 1.7e-8, 4).as("sensitivity"),
-          round(col("specificity") + 1.7e-8, 4).as("specificity"),
-          round(col("precision") + 1.7e-8, 4).as("precision"),
-          round(col("f1") + 1.7e-8, 4).as("f1"),
-          round(col("balanced_accuracy") + 1.7e-8, 4).as("balanced_accuracy"),
-          round(col("accuracy") + 1.7e-8, 4).as("accuracy"),
-          round(col("kappa") + 1.7e-8, 4).as("kappa")),
-      """WITH b AS (SELECT CAST(o_custkey % 2 AS INTEGER) AS seg,
+          HouseRound(col("sensitivity"), 4).as("sensitivity"),
+          HouseRound(col("specificity"), 4).as("specificity"),
+          HouseRound(col("precision"), 4).as("precision"),
+          HouseRound(col("f1"), 4).as("f1"),
+          HouseRound(col("balanced_accuracy"), 4).as("balanced_accuracy"),
+          HouseRound(col("accuracy"), 4).as("accuracy"),
+          HouseRound(col("kappa"), 4).as("kappa")),
+      s"""WITH b AS (SELECT CAST(o_custkey % 2 AS INTEGER) AS seg,
             o_orderstatus AS a,
             CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'F'
                  WHEN o_orderpriority = '3-MEDIUM' THEN 'P'
@@ -229,23 +228,23 @@ object QueriesR3 {
             FROM j LEFT JOIN tps ON j.seg = tps.seg AND j.cls = tps.cls
               JOIN tots ON j.seg = tots.seg)
           SELECT seg, cls, tp, n_actual, n_predicted,
-            round(CASE WHEN n_actual > 0
-              THEN tp / CAST(n_actual AS DOUBLE) END + 1.7e-8, 4) AS sensitivity,
-            round(CASE WHEN ntot > n_actual
+            ${HouseRound.sql("""CASE WHEN n_actual > 0
+              THEN tp / CAST(n_actual AS DOUBLE) END""", 4)} AS sensitivity,
+            ${HouseRound.sql("""CASE WHEN ntot > n_actual
               THEN (ntot - n_actual - n_predicted + tp)
-                / CAST(ntot - n_actual AS DOUBLE) END + 1.7e-8, 4) AS specificity,
-            round(CASE WHEN n_predicted > 0
-              THEN tp / CAST(n_predicted AS DOUBLE) END + 1.7e-8, 4) AS precision,
-            round(CASE WHEN tp > 0
+                / CAST(ntot - n_actual AS DOUBLE) END""", 4)} AS specificity,
+            ${HouseRound.sql("""CASE WHEN n_predicted > 0
+              THEN tp / CAST(n_predicted AS DOUBLE) END""", 4)} AS precision,
+            ${HouseRound.sql("""CASE WHEN tp > 0
               THEN 2.0 * tp / CAST(n_actual + n_predicted AS DOUBLE)
-              END + 1.7e-8, 4) AS f1,
-            round(CASE WHEN n_actual > 0 AND ntot > n_actual
+              END""", 4)} AS f1,
+            ${HouseRound.sql("""CASE WHEN n_actual > 0 AND ntot > n_actual
               THEN (tp / CAST(n_actual AS DOUBLE)
                 + (ntot - n_actual - n_predicted + tp)
-                  / CAST(ntot - n_actual AS DOUBLE)) / 2 END + 1.7e-8, 4)
+                  / CAST(ntot - n_actual AS DOUBLE)) / 2 END""", 4)}
               AS balanced_accuracy,
-            round(diag / CAST(ntot AS DOUBLE) + 1.7e-8, 4) AS accuracy,
-            round((diag / CAST(ntot AS DOUBLE) - pe) / (1.0 - pe) + 1.7e-8, 4) AS kappa
+            ${HouseRound.sql("diag / CAST(ntot AS DOUBLE)", 4)} AS accuracy,
+            ${HouseRound.sql("(diag / CAST(ntot AS DOUBLE) - pe) / (1.0 - pe)", 4)} AS kappa
           FROM k"""),
 
     // ---- A13 multiple testing: p.adjust (bonferroni/holm/BH) + stars -------
@@ -265,15 +264,15 @@ object QueriesR3 {
           Stats.adjustPValues(df, Seq("lang"), "p_raw", m, c) }
       adj.withColumn("signif", Stats.significance(col("p_raw")))
         .select(col("doc_id"), col("lang"),
-          round(col("p_raw") + 1.7e-8, 4).as("p_raw"),
-          round(col("p_bh") + 1.7e-8, 4).as("p_bh"),
-          round(col("p_holm") + 1.7e-8, 4).as("p_holm"),
-          round(col("p_bonf") + 1.7e-8, 4).as("p_bonf"),
-          round(col("p_hoch") + 1.7e-8, 4).as("p_hoch"),
-          round(col("p_by") + 1.7e-8, 4).as("p_by"),
+          HouseRound(col("p_raw"), 4).as("p_raw"),
+          HouseRound(col("p_bh"), 4).as("p_bh"),
+          HouseRound(col("p_holm"), 4).as("p_holm"),
+          HouseRound(col("p_bonf"), 4).as("p_bonf"),
+          HouseRound(col("p_hoch"), 4).as("p_hoch"),
+          HouseRound(col("p_by"), 4).as("p_by"),
           col("signif"))
     },
-      """WITH t AS (SELECT doc_id, lang,
+      s"""WITH t AS (SELECT doc_id, lang,
             ((doc_id * 7919) % 1000 + 1) / 1000.0 AS p_raw FROM documents),
           w AS (SELECT doc_id, lang, p_raw,
             count(*) OVER (PARTITION BY lang) AS m,
@@ -289,12 +288,12 @@ object QueriesR3 {
               ORDER BY p_raw DESC, doc_id ROWS UNBOUNDED PRECEDING) AS hoch0,
             sum(1.0 / ra) OVER (PARTITION BY lang) AS cm
             FROM w)
-          SELECT doc_id, lang, round(p_raw + 1.7e-8, 4) AS p_raw,
-            round(least(1.0, bh0) + 1.7e-8, 4) AS p_bh,
-            round(least(1.0, holm0) + 1.7e-8, 4) AS p_holm,
-            round(least(1.0, p_raw * m) + 1.7e-8, 4) AS p_bonf,
-            round(least(1.0, hoch0) + 1.7e-8, 4) AS p_hoch,
-            round(least(1.0, cm * bh0) + 1.7e-8, 4) AS p_by,
+          SELECT doc_id, lang, ${HouseRound.sql("p_raw", 4)} AS p_raw,
+            ${HouseRound.sql("least(1.0, bh0)", 4)} AS p_bh,
+            ${HouseRound.sql("least(1.0, holm0)", 4)} AS p_holm,
+            ${HouseRound.sql("least(1.0, p_raw * m)", 4)} AS p_bonf,
+            ${HouseRound.sql("least(1.0, hoch0)", 4)} AS p_hoch,
+            ${HouseRound.sql("least(1.0, cm * bh0)", 4)} AS p_by,
             CASE WHEN p_raw <= 0.0001 THEN '****' WHEN p_raw <= 0.001 THEN '***'
                  WHEN p_raw <= 0.01 THEN '**' WHEN p_raw <= 0.05 THEN '*'
                  ELSE 'ns' END AS signif
@@ -308,10 +307,10 @@ object QueriesR3 {
           .withColumn("obs", col("l_quantity")),
         Seq("l_returnflag"), "pred", "obs",
         trainPred = col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("l_returnflag"), round(col("rmse_z") + 1.7e-8, 4).as("rmse_z"),
-          round(col("mae_z") + 1.7e-8, 4).as("mae_z"),
-          round(col("pearson") + 1.7e-8, 4).as("pearson"), col("n")),
-      """WITH t AS (SELECT l_returnflag,
+        .select(col("l_returnflag"), HouseRound(col("rmse_z"), 4).as("rmse_z"),
+          HouseRound(col("mae_z"), 4).as("mae_z"),
+          HouseRound(col("pearson"), 4).as("pearson"), col("n")),
+      s"""WITH t AS (SELECT l_returnflag,
             l_quantity * (1.0 - l_discount) AS pred, l_quantity AS obs,
             l_shipdate FROM lineitem),
           s AS (SELECT l_returnflag, avg(obs) AS mu, stddev_samp(obs) AS sigma
@@ -320,8 +319,8 @@ object QueriesR3 {
               (pred - mu) / sigma AS pz, (obs - mu) / sigma AS oz
             FROM t JOIN s USING (l_returnflag) WHERE sigma > 0)
           SELECT l_returnflag,
-            round(sqrt(avg((pz - oz) * (pz - oz))) + 1.7e-8, 4) AS rmse_z,
-            round(avg(abs(pz - oz)) + 1.7e-8, 4) AS mae_z,
-            round(corr(pz, oz) + 1.7e-8, 4) AS pearson, count(*) AS n
+            ${HouseRound.sql("sqrt(avg((pz - oz) * (pz - oz)))", 4)} AS rmse_z,
+            ${HouseRound.sql("avg(abs(pz - oz))", 4)} AS mae_z,
+            ${HouseRound.sql("corr(pz, oz)", 4)} AS pearson, count(*) AS n
           FROM z GROUP BY 1"""))
 }

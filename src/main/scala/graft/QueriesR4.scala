@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
+import graft.functions.{HouseRound, Text}
 import graft.operators.{Dedup, Similarity, Terms}
 
 /** Round-4 training-pipeline additions: the three dedup/curation shapes a
@@ -26,20 +26,14 @@ object QueriesR4 {
     * deterministic line boundaries first: every aligned run of 4 tokens is
     * one line (the operator itself is delimiter-generic — production feeds
     * real '\n' pages). The oracle rebuilds the same chunking in SQL.
-    */
-  private[graft] def linedText(text: org.apache.spark.sql.Column) = {
-    val tk = Text.tokens(text)
-    concat_ws("\n",
-      transform(sequence(lit(0), floor((size(tk) - 1) / 4).cast("int")),
-        i => concat_ws(" ", slice(tk, i * 4 + 1, lit(4)))))
-  }
-
-  /** Typed twin of [[linedText]] (spec-asserted byte-equal, incl. the
-    * null → '' and zero-token → '\n' edge cases the expression form
-    * produces): one tokenizer pass + one StringBuilder instead of a
-    * sequence/transform/slice/concat_ws HOF chain — which, evaluated
-    * interpreted on the single-input-task documents table, was ~60% of
-    * dd_line_dedup's whole cost (it runs once per dedup pass, so twice).
+    *
+    * Typed twin of the spec-side `KernelTwins.linedText` (spec-asserted
+    * byte-equal, incl. the null → '' and zero-token → '\n' edge cases the
+    * expression form produces): one tokenizer pass + one StringBuilder
+    * instead of a sequence/transform/slice/concat_ws HOF chain — which,
+    * evaluated interpreted on the single-input-task documents table, was
+    * ~60% of dd_line_dedup's whole cost (it runs once per dedup pass, so
+    * twice).
     */
   private[graft] val linedTextFast = udf { (t: String) =>
     if (t == null) ""
@@ -61,8 +55,8 @@ object QueriesR4 {
 
   /** Shared SQL fragment: whitespace tokens per document. */
   private val ToksCte: String =
-    """toks AS (SELECT doc_id,
-      |  list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
+    s"""toks AS (SELECT doc_id,
+      |  ${Text.sqlTokens("text")} AS tk
       |  FROM documents)""".stripMargin
 
   val specs: Seq[QuerySpec] = Seq(
@@ -216,8 +210,8 @@ object QueriesR4 {
          |lq AS (SELECT term, CAST(round(ln(cnt / t) * 1e9) AS BIGINT) AS q
          |  FROM vocab CROSS JOIN tot)
          |SELECT doc_id,
-         |  round(-CAST(sum(CAST(tf AS HUGEINT) * q) AS DOUBLE) / 1e9
-         |    / CAST(sum(tf) AS DOUBLE) + 1.7e-8, 6) AS nll,
+         |  ${HouseRound.sql("""-CAST(sum(CAST(tf AS HUGEINT) * q) AS DOUBLE) / 1e9
+         |    / CAST(sum(tf) AS DOUBLE)""", 6)} AS nll,
          |  CAST(sum(tf) AS BIGINT) AS n_tokens
          |FROM tfc JOIN lq USING (term)
          |GROUP BY 1""".stripMargin))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
+import graft.functions.{HouseRound, Text}
 import graft.operators.{Caches, Curation, Quality, Sampling}
 
 /** Round-5 additions: the heuristic + model-based quality-filtering layer
@@ -99,7 +99,7 @@ object QueriesR5 {
         Text.tokenCountFast(col("text")) > LabelMinTokens, dim = Dim)
     },
       s"""WITH toks AS (SELECT doc_id,
-         |    list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS tk
+         |    ${Text.sqlTokens("text")} AS tk
          |  FROM documents),
          |lab AS (SELECT doc_id, coalesce(len(tk) > $LabelMinTokens, false) AS y, tk
          |  FROM toks),
@@ -125,8 +125,8 @@ object QueriesR5 {
          |  GROUP BY 1)
          |SELECT l.doc_id,
          |  coalesce(s.ng, 0) AS n_terms,
-         |  round((coalesce(s.sw, 0) + b.bq) / 1e6 + 1.7e-8, 6) AS score,
-         |  round((coalesce(s.sw, 0) + b.bq) / 1e6 + 1.7e-8, 6) > 0 AS pred
+         |  ${HouseRound.sql("(coalesce(s.sw, 0) + b.bq) / 1e6", 6)} AS score,
+         |  ${HouseRound.sql("(coalesce(s.sw, 0) + b.bq) / 1e6", 6)} > 0 AS pred
          |FROM lab l LEFT JOIN s USING (doc_id) CROSS JOIN b""".stripMargin),
 
     QuerySpec("txt_c4_clean", (s, d) => {
@@ -136,7 +136,7 @@ object QueriesR5 {
       // replay the plant (replace/concat string algebra), then the C4 line
       // rules (terminal punct + >=5 words) and the page rules in the exact
       // c4Clean order: lorem_ipsum -> brace -> too_few_lines -> pass
-      """WITH pl AS (SELECT doc_id,
+      s"""WITH pl AS (SELECT doc_id,
         |    replace(replace(text, ' table ', '.' || chr(10)), ' value ', chr(10))
         |    || CASE WHEN doc_id % 17 = 0
         |         THEN chr(10) || 'this page contains Lorem Ipsum filler content here.'
@@ -145,10 +145,10 @@ object QueriesR5 {
         |         THEN chr(10) || 'if (x) { return x }' ELSE '' END AS t
         |  FROM documents),
         |g AS (SELECT doc_id, t,
-        |    string_split_regex(t, '\r?\n') AS lines,
-        |    list_filter(string_split_regex(t, '\r?\n'), l ->
+        |    string_split_regex(t, '\\r?\\n') AS lines,
+        |    list_filter(string_split_regex(t, '\\r?\\n'), l ->
         |      right(rtrim(l), 1) IN ('.', '!', '?', '"') AND
-        |      len(list_filter(string_split_regex(trim(l), '\s+'), x -> x <> '')) >= 5
+        |      len(${Text.sqlTokens("l")}) >= 5
         |    ) AS kept
         |  FROM pl),
         |v AS (SELECT doc_id, CAST(coalesce(len(lines), 0) AS INTEGER) AS n_lines,
@@ -168,10 +168,10 @@ object QueriesR5 {
     QuerySpec("txt_gopher_gate", (s, d) =>
       Curation.gopherGate(t(s, d, "documents"), "doc_id", "text",
         stopwords = Seq("the", "a"), minWords = 25, maxDupFrac = 0.6),
-      // Gopher rules in gopherGate order over the raw documents; rounding is
-      // the house round(x + 1.7e-8, 4)
-      """WITH t AS (SELECT doc_id, text IS NULL AS no_text,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
+      // Gopher rules in gopherGate order over the raw documents, with the
+      // gate's house rounding
+      s"""WITH t AS (SELECT doc_id, text IS NULL AS no_text,
+        |    ${Text.sqlTokens("text")} AS tk
         |  FROM documents),
         |m AS (SELECT doc_id, no_text, coalesce(len(tk), 0) AS wc,
         |    CASE WHEN len(tk) > 0 THEN
@@ -186,10 +186,10 @@ object QueriesR5 {
         |      1.0 - len(list_distinct(tk)) * 1.0 / len(tk) ELSE 0.0 END AS df
         |  FROM t)
         |SELECT doc_id, CAST(wc AS INTEGER) AS word_count,
-        |  round(mwl + 1.7e-8, 4) AS mean_word_len,
-        |  round(af + 1.7e-8, 4) AS alpha_frac,
+        |  ${HouseRound.sql("mwl", 4)} AS mean_word_len,
+        |  ${HouseRound.sql("af", 4)} AS alpha_frac,
         |  CAST(ns AS INTEGER) AS n_stopwords,
-        |  round(df + 1.7e-8, 4) AS dup_frac,
+        |  ${HouseRound.sql("df", 4)} AS dup_frac,
         |  CASE WHEN no_text THEN 'missing_text'
         |       WHEN wc < 25 THEN 'too_few_words'
         |       WHEN wc > 100000 THEN 'too_many_words'
@@ -272,7 +272,7 @@ object QueriesR5 {
           "offset_in_seq")
     },
       s"""WITH j AS (SELECT d.doc_id,
-         |    len(list_filter(string_split_regex(trim(d.text), '\\s+'), x -> x <> ''))
+         |    len(${Text.sqlTokens("d.text")})
          |      AS nt,
          |    h.h
          |  FROM documents d
@@ -377,7 +377,7 @@ object QueriesR5 {
          |c4 AS (SELECT doc_id, lang, t,
          |    list_filter(string_split_regex(t, '\\r?\\n'), l ->
          |      right(rtrim(l), 1) IN ('.', '!', '?', '"') AND
-         |      len(list_filter(string_split_regex(trim(l), '\\s+'), x -> x <> '')) >= 5
+         |      len(${Text.sqlTokens("l")}) >= 5
          |    ) AS kl
          |  FROM pl),
          |c4v AS (SELECT doc_id, lang,
@@ -402,7 +402,7 @@ object QueriesR5 {
          |    CASE WHEN len(tk) > 0 THEN
          |      1.0 - len(list_distinct(tk)) * 1.0 / len(tk) ELSE 0.0 END AS df
          |  FROM (SELECT doc_id,
-         |      list_filter(string_split_regex(trim(ct), '\\s+'), x -> x <> '') AS tk
+         |      ${Text.sqlTokens("ct")} AS tk
          |    FROM c4w)),
          |gv AS (SELECT doc_id,
          |    (CASE WHEN wc < 10 THEN 'x' WHEN wc > 100000 THEN 'x'
@@ -416,7 +416,7 @@ object QueriesR5 {
          |s3 AS (SELECT s12.doc_id, s12.doc_id <> cn.keep_id AS dup
          |  FROM s12 JOIN cn USING (ct)),
          |bj AS (SELECT s12.doc_id, s12.lang,
-         |    len(list_filter(string_split_regex(trim(s12.ct), '\\s+'), x -> x <> '')) AS nt,
+         |    len(${Text.sqlTokens("s12.ct")}) AS nt,
          |    h.h
          |  FROM s12 JOIN s3 USING (doc_id)
          |  JOIN read_parquet('${Dumps.Dir}/funnel_h.parquet/*.parquet') h
@@ -459,7 +459,7 @@ object QueriesR5 {
 
   private def tokenBudgetSql: String =
     s"""WITH j AS (SELECT d.doc_id, d.lang,
-       |    len(list_filter(string_split_regex(trim(d.text), '\\s+'), x -> x <> ''))
+       |    len(${Text.sqlTokens("d.text")})
        |      AS nt,
        |    h.h
        |  FROM documents d

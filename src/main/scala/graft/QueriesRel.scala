@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.HouseRound
 import graft.operators.{AsOf, Stats, Windows}
 
 /** Relational operator queries (SURVEY.md §2.2–§2.7) over the driver's
@@ -39,16 +40,16 @@ object QueriesRel {
           round(sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double"), 2).as("sum_base_price"),
           round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(18,4)")).cast("double"), 2).as("sum_disc_price"),
-          round(avg(col("l_quantity")) + 1.7e-8, 4).as("avg_qty"),
-          round(avg(col("l_discount")) + 1.7e-8, 4).as("avg_disc"),
+          HouseRound(avg(col("l_quantity")), 4).as("avg_qty"),
+          HouseRound(avg(col("l_discount")), 4).as("avg_disc"),
           count(lit(1)).as("count_order"))
     },
-      """SELECT l_returnflag, l_linestatus,
+      s"""SELECT l_returnflag, l_linestatus,
          round(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_qty,
          round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_base_price,
          round(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_disc_price,
-         round(CAST(avg(l_quantity) AS DOUBLE) + 1.7e-8, 4) AS avg_qty,
-         round(CAST(avg(l_discount) AS DOUBLE) + 1.7e-8, 4) AS avg_disc,
+         ${HouseRound.sql("CAST(avg(l_quantity) AS DOUBLE)", 4)} AS avg_qty,
+         ${HouseRound.sql("CAST(avg(l_discount) AS DOUBLE)", 4)} AS avg_disc,
          count(*) AS count_order
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
          GROUP BY l_returnflag, l_linestatus"""),
@@ -79,10 +80,10 @@ object QueriesRel {
     // ---- P6: zero-variance feature filter ---------------------------------
     QuerySpec("p6_variance_filter", (s, d) =>
       t(s, d, "lineitem").groupBy(col("l_partkey"))
-        .agg(round(var_samp(col("l_quantity")) + 1.7e-8, 4).as("var_qty"),
+        .agg(HouseRound(var_samp(col("l_quantity")), 4).as("var_qty"),
           count(lit(1)).as("n"))
         .filter(col("var_qty") > 0),
-      """SELECT l_partkey, round(var_samp(l_quantity) + 1.7e-8, 4) AS var_qty, count(*) AS n
+      s"""SELECT l_partkey, ${HouseRound.sql("var_samp(l_quantity)", 4)} AS var_qty, count(*) AS n
          FROM lineitem GROUP BY l_partkey HAVING var_samp(l_quantity) > 0"""),
 
     // ---- P7: low-information feature filter -------------------------------
@@ -168,14 +169,14 @@ object QueriesRel {
       val a = li.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(round(sum(col("l_quantity")), 2).as("sum_qty"))
       val b = li.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(avg(col("l_discount")) + 1.7e-8, 4).as("avg_disc"))
+        .agg(HouseRound(avg(col("l_discount")), 4).as("avg_disc"))
       a.join(b, Seq("l_returnflag", "l_linestatus"))
     },
-      """WITH a AS (SELECT l_returnflag, l_linestatus,
+      s"""WITH a AS (SELECT l_returnflag, l_linestatus,
                     round(CAST(sum(l_quantity) AS DOUBLE), 2) AS sum_qty
                     FROM lineitem GROUP BY 1, 2),
               b AS (SELECT l_returnflag, l_linestatus,
-                    round(CAST(avg(l_discount) AS DOUBLE) + 1.7e-8, 4) AS avg_disc
+                    ${HouseRound.sql("CAST(avg(l_discount) AS DOUBLE)", 4)} AS avg_disc
                     FROM lineitem GROUP BY 1, 2)
          SELECT a.l_returnflag, a.l_linestatus, a.sum_qty, b.avg_disc
          FROM a JOIN b USING (l_returnflag, l_linestatus)"""),

@@ -15,11 +15,7 @@ import graft.operators.{Dedup, Similarity}
   */
 object QueriesText {
 
-  import QuerySpec.t
-
-  /** 30 stopwords as a DuckDB list literal (kept in sync with Corpus.Stopwords). */
-  private val swList: String =
-    Corpus.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
+  import QuerySpec.{StopwordsSql, t}
 
   /** Dump the deterministic hyperplane weights (pure function of the seed)
     * for the LSH oracles — idempotent; called by every LSH query so the
@@ -49,8 +45,8 @@ object QueriesText {
     * oracle, and the edge list the dd_components oracle builds on.
     */
   private val NgramPairsSql: String =
-    """WITH toks AS (SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
+    s"""WITH toks AS (SELECT doc_id,
+         ${Text.sqlTokens("text")} AS tk
          FROM documents),
        grams AS (SELECT DISTINCT doc_id,
          unnest(list_transform(generate_series(1, len(tk) - 2),
@@ -118,10 +114,10 @@ object QueriesText {
         .select(explode(Text.tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 100),
-      """SELECT token, count(*) AS n FROM (
-           SELECT unnest(string_split_regex(trim(text), '\s+')) AS token
+      s"""SELECT token, count(*) AS n FROM (
+           SELECT unnest(${Text.sqlTokens("text")}) AS token
            FROM documents)
-         WHERE token <> '' GROUP BY token HAVING count(*) >= 100"""),
+         GROUP BY token HAVING count(*) >= 100"""),
 
     // ---- TXT: per-document token stats + BPE-proxy count ----------------------
     // round 6: ONE counting-kernel pass (tokens, chars, length sum,
@@ -148,7 +144,7 @@ object QueriesText {
             .as("punct_ratio"))
     },
       s"""WITH toks AS (SELECT doc_id, text,
-           list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS tk
+           ${Text.sqlTokens("text")} AS tk
            FROM documents)
          SELECT doc_id,
            CAST(len(tk) AS BIGINT) AS n_tokens,
@@ -159,7 +155,7 @@ object QueriesText {
              CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk)
              ELSE 0.0 END, 4) AS mean_tok_len,
            round(CASE WHEN len(tk) > 0 THEN
-             CAST(len(list_filter(tk, x -> list_contains($swList, x))) AS DOUBLE) / len(tk)
+             CAST(len(list_filter(tk, x -> list_contains($StopwordsSql, x))) AS DOUBLE) / len(tk)
              ELSE 0.0 END, 4) AS stopword_ratio,
            round(CASE WHEN length(text) > 0 THEN
              CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE)
@@ -176,8 +172,8 @@ object QueriesText {
         Text.tokenCount(col("text")).cast("long").as("n_tokens"),
         round(Text.dupWordFrac(col("text")) + lit(1e-9), 4).as("dup_word_frac"),
         round(Text.topBigramFrac(col("text")) + lit(1e-9), 4).as("top_bigram_frac")),
-      """WITH toks AS (SELECT doc_id,
-           list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS tk
+      s"""WITH toks AS (SELECT doc_id,
+           ${Text.sqlTokens("text")} AS tk
            FROM documents),
          base AS (SELECT doc_id, len(tk) AS n_tokens,
            CASE WHEN len(tk) > 0 THEN
@@ -202,8 +198,8 @@ object QueriesText {
     QuerySpec("txt_langid", (s, d) =>
       t(s, d, "documents").select(col("doc_id"), col("lang").as("lang_true"),
         Text.langIdFast(col("text")).as("lang_pred")),
-      """WITH toks AS (SELECT doc_id, lang,
-           list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> x <> '') AS tk
+      s"""WITH toks AS (SELECT doc_id, lang,
+           ${Text.sqlTokens("lower(text)")} AS tk
            FROM documents),
          sc AS (SELECT doc_id, lang,
            len(list_filter(tk, x -> list_contains(['der','die','und','das','ist','ein'], x))) AS s_de,
@@ -233,7 +229,7 @@ object QueriesText {
     },
       s"""WITH v AS (SELECT * FROM read_parquet('$dumpDir/token_hash.parquet/*.parquet')),
          |toks AS (SELECT doc_id,
-         |  list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '') AS tk
+         |  ${Text.sqlTokens("text")} AS tk
          |  FROM documents),
          |tp AS (SELECT doc_id, unnest(generate_series(1, len(tk))) AS i, tk FROM toks),
          |th AS (SELECT tp.doc_id, tp.i, v.h FROM tp JOIN v ON v.token = tp.tk[tp.i]),
@@ -252,9 +248,9 @@ object QueriesText {
     QuerySpec("dd_fingerprint", (s, d) =>
       Dedup.byFingerprint(t(s, d, "documents"), "doc_id", "text")
         .select(col("keep_id"), col("n_copies")),
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
+      s"""SELECT min(doc_id) AS keep_id, count(*) AS n_copies
          FROM (SELECT doc_id, array_to_string(
-                 list_filter(string_split_regex(trim(text), '\s+'), x -> x <> ''),
+                 ${Text.sqlTokens("text")},
                  ' ') AS norm
                FROM documents)
          GROUP BY norm"""),
@@ -382,7 +378,7 @@ object QueriesText {
          |  SELECT u.b, r.root FROM reach r JOIN und u ON u.a = r.id),
          |comp AS (SELECT id, min(root) AS comp FROM reach GROUP BY id),
          |q AS (SELECT c.id, c.comp,
-         |    len(list_filter(string_split_regex(trim(d.text), '\\s+'), x -> x <> ''))
+         |    len(${Text.sqlTokens("d.text")})
          |      AS nt
          |  FROM comp c JOIN documents d ON d.doc_id = c.id),
          |r AS (SELECT *, row_number()

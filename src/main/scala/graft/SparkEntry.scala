@@ -12,6 +12,10 @@ object QuerySpec {
     * reader every registered query uses. */
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
+
+  /** `Corpus.Stopwords` as a DuckDB list literal, for the oracles. */
+  private[graft] val StopwordsSql: String =
+    graft.corpus.Corpus.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 }
 
 /** Entry points: the flagship job and the query registry (SURVEY.md §7). */

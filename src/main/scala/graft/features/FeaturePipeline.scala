@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.corpus.Corpus
-import graft.functions.Text
+import graft.functions.{HouseRound, Text}
 import graft.operators.AsOf
 
 /** Flagship pipeline: per-entity×timestamp feature vectors over the
@@ -164,14 +164,9 @@ object FeaturePipeline {
       .withColumn("dim_matched", col("__tf")("dm").cast("long"))
       .withColumn("dim_min_rank",
         when(col("__tf")("dm") > 0, col("__tf")("dmr")))
-      // +1.7e-8 before rounding: dss is an order-sensitive double sum (token
-      // order here, join order in a SQL oracle) — the epsilon keeps ulp
-      // differences from flipping a 1e-6 rounding boundary. NOT 1e-7: an
-      // epsilon that is a multiple of the value grid maps on-grid values
-      // (e.g. a mean of round6 numbers landing on x.xxxxxx4) EXACTLY onto
-      // the rounding boundary, letting engine noise pick the side
-      // (observed once in 44k values at +1e-7)
-      .withColumn("dim_score_sum", round(col("__tf")("dss") + lit(1.7e-8), 6))
+      // dss is an order-sensitive double sum (token order here, join order
+      // in a SQL oracle)
+      .withColumn("dim_score_sum", HouseRound(col("__tf")("dss"), 6))
       // a sparsely-populated signal to demonstrate rolling backfill
       .withColumn("sparse_quality", when(col("token_count") >= 6, col("quality")))
       .drop("__tf")
@@ -226,7 +221,7 @@ object FeaturePipeline {
           .otherwise(lit(0L))).cast("int"))
       .withColumn("quality_filled", coalesce(col("__lfilled"), lastSparse))
       .withColumn("running_quality_mean",
-        round((qsum + col("__lqsum")) / (n + col("__lrn")) + lit(1.7e-8), 6))
+        HouseRound((qsum + col("__lqsum")) / (n + col("__lrn")), 6))
       .drop("__lrn", "__lgap", "__lphash_prev", "__lnew", "__lsess", "__lpos",
         "__lqsum", "__lfilled", "__prev_phash")
 
@@ -257,9 +252,9 @@ object FeaturePipeline {
       .withColumn("session_pos",
         col("__rn") - last(when(col("__new") === 1L, col("__rn")), ignoreNulls = true).over(wRun))
       .withColumn("quality_filled", last(col("sparse_quality"), ignoreNulls = true).over(wRun))
-      // +1.7e-8: running mean is an order-sensitive double sum (see dim_score_sum)
+      // running mean is an order-sensitive double sum
       .withColumn("running_quality_mean",
-        round(avg(col("quality")).over(wRun) + lit(1.7e-8), 6))
+        HouseRound(avg(col("quality")).over(wRun), 6))
       // event_time duplicates event_ms (ms-precision timestamp) — not carried
       .drop("__new", "__rn", "phash_prev", "bytes", "caption", "fmt", "event_time")
   }

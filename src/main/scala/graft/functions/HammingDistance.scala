@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftBridge
@@ -36,9 +36,4 @@ object HammingDistance {
   def hamming(a: Column, b: Column): Column =
     GraftBridge.column(HammingDistance(
       GraftBridge.expression(a), GraftBridge.expression(b)))
-
-  /** Register as a SQL function `hamming(a, b)` in the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming", exprs => HammingDistance(exprs(0), exprs(1)), "built-in")
 }

@@ -86,6 +86,14 @@ object Text {
   def tokens(text: Column): Column =
     filter(split(trim(text), "\\s+"), t => length(t) > lit(0))
 
+  /** [[tokens]] as DuckDB oracle SQL over the SQL expression `e`: the same
+    * trim, `\s+` split and empty-token filter, written once for every oracle.
+    * One known gap: DuckDB's `\s` is RE2's, which leaves out U+000B, so
+    * [[tokens]] splits at a vertical tab and this form does not.
+    */
+  def sqlTokens(e: String): String =
+    s"list_filter(string_split_regex(trim($e), '\\s+'), x -> x <> '')"
+
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -329,7 +337,4 @@ object Text {
     aggregate(tokens(text), lit(1469598103934665603L),
       (acc, t) => shiftleft(acc, 5).bitwiseOR(shiftrightunsigned(acc, 59))
         .bitwiseXOR(xxhash64(t)))
-
-  /** Hamming distance between two 64-bit hashes (phash etc.). */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }

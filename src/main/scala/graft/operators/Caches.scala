@@ -32,15 +32,6 @@ object Caches {
       c
     }
 
-  /** Register an ALREADY-persisted frame for deterministic release (used by
-    * iterative operators that manage persist/unpersist per round and hand
-    * only the final round to the registry).
-    */
-  def register(df: DataFrame): DataFrame = synchronized {
-    registered += df
-    df
-  }
-
   /** Broadcast `v` and register the handle for release: the kernel fast
     * paths (TF-IDF / NLL vocabularies, NB weights, over-threshold line
     * sets) ship value broadcasts into UDF closures, and a bare

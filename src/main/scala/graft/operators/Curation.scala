@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
+import graft.functions.{HouseRound, Text}
 
 /** Heuristic corpus-curation gates — the rule-based filtering layer of the
   * web-scale training-data stack that runs BEFORE the model-based classifier
@@ -20,8 +20,8 @@ import graft.functions.Text
   * Nothing document-keyed ever exchanges; 10^12 documents cost exactly
   * 10^12 / cores row visits.
   *
-  * Determinism: every emitted float is rounded with the house non-grid
-  * epsilon (`round(x + 1.7e-8, d)`) and every rule is an exact string /
+  * Determinism: every emitted float is rounded by
+  * [[graft.functions.HouseRound]] and every rule is an exact string /
   * integer predicate, so outputs are bit-identical at any parallelism and
   * replayable in ANSI SQL by a cross-engine oracle.
   */
@@ -215,10 +215,10 @@ object Curation {
     df.withColumn("__gsig", gopherSignalsFast(stopwords)(t))
       .select(col(id),
         wc.as("word_count"),
-        round(mwl + 1.7e-8, 4).as("mean_word_len"),
-        round(af + 1.7e-8, 4).as("alpha_frac"),
+        HouseRound(mwl, 4).as("mean_word_len"),
+        HouseRound(af, 4).as("alpha_frac"),
         ns.as("n_stopwords"),
-        round(dp + 1.7e-8, 4).as("dup_frac"),
+        HouseRound(dp, 4).as("dup_frac"),
         reason.as("reject_reason"),
         reason.isNull.as("keep"))
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
+import graft.functions.{HouseRound, Text}
 
 /** Model-based document quality filtering — the classifier step of the
   * modern curation stack (GPT-3's LR filter over WebText features, CCNet's
@@ -40,7 +40,7 @@ object Quality {
 
   /** Train on `df` with weak label `label` (nulls count as negative) and
     * score every document. Output: (id, n_terms, score, pred) where score
-    * is the 6-dp-rounded log-odds (house +1.7e-8 non-grid epsilon) and
+    * is the log-odds rounded to 6 dp by [[graft.functions.HouseRound]] and
     * pred = score > 0.
     */
   def nbClassifierScore(df: DataFrame, id: String, text: String,
@@ -98,8 +98,7 @@ object Quality {
       var s = bias
       var i = 0
       while (i < buckets.length) { s += bc.value(buckets(i).toInt); i += 1 }
-      val z = java.math.BigDecimal.valueOf(s.toDouble / 1e6 + 1.7e-8)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      val z = HouseRound.double(s.toDouble / 1e6, 6)
       (buckets.length.toLong, z, z > 0.0)
     }
     df.select(col(id), score(col(text)).as("__c"))

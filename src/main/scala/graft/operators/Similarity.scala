@@ -18,14 +18,16 @@ object Similarity {
   /** Typed cosine: bit-identical to the spec-side `KernelTwins.cosine`
     * (same multiply/add order, double precision) at ~µs/pair instead of an
     * interpreted expression tree per element — the round-1 MinHash lesson
-    * applied to the vector path.
+    * applied to the vector path. Null when either vector is null or the
+    * lengths differ: a malformed pair has no cosine (the twin's padded
+    * `zip_with` is null there too), never a score over a shared prefix.
     */
   val cosineFast: UserDefinedFunction = udf { (a: Seq[Float], b: Seq[Float]) =>
-    if (a == null || b == null) null
+    if (a == null || b == null || a.length != b.length) null
     else {
       var dotp = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
-      val n = math.min(a.length, b.length)
+      val n = a.length
       while (i < n) {
         val x = a(i).toDouble; val y = b(i).toDouble
         dotp += x * y; na += x * x; nb += y * y
@@ -60,13 +62,16 @@ object Similarity {
     * pseudo-random hyperplanes (plane p, dim i weight = a pure hash). Rows
     * in the same bucket are near in angle with high probability. Bit-identical
     * to the spec-side `KernelTwins.lshBucket` (per-plane projections
-    * accumulate left-to-right in double), one JIT'd loop per row instead of
-    * `planes` interpreted folds.
+    * accumulate left-to-right in double) on every vector of length `dims`,
+    * one JIT'd loop per row instead of `planes` interpreted folds. Null for
+    * a null vector or one of another length: such a row has no bucket (the
+    * twin would put it in bucket 0, where it would match every other
+    * malformed row).
     */
   def lshBucketFast(planes: Int, dims: Int, seed: Long): UserDefinedFunction = {
     val w: Array[Array[Double]] = Array.tabulate(planes)(planeWeights(_, dims, seed))
     udf { (v: Seq[Float]) =>
-      if (v == null) null
+      if (v == null || v.length != dims) null
       else {
         var bucket = 0L
         var p = 0
@@ -74,8 +79,7 @@ object Similarity {
           val wp = w(p)
           var proj = 0.0
           var i = 0
-          val n = math.min(v.length, dims)
-          while (i < n) { proj += v(i).toDouble * wp(i); i += 1 }
+          while (i < dims) { proj += v(i).toDouble * wp(i); i += 1 }
           if (proj > 0) bucket |= (1L << p)
           p += 1
         }

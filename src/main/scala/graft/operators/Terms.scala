@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.Text
+import graft.functions.{HouseRound, Text}
 
 /** Corpus vocabulary / term-weighting operators — the token-side analog of
   * the reference's univariate feature ranking (score every (entity,
@@ -39,13 +39,6 @@ object Terms {
   /** Output row of the [[tfidfTopK]] per-document kernel. */
   final case class TfidfTerm(term: String, tf: Long, df: Long,
       tfidf: Double, rk: Int)
-
-  /** Spark's Round-on-double semantics (codegen executes exactly this:
-    * java.math.BigDecimal.valueOf → setScale(HALF_UP) → doubleValue).
-    */
-  private def roundHalfUp(x: Double, scale: Int): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** Vocabulary aggregate over per-document DISTINCT terms (document
     * frequency) or raw occurrences (collection frequency), keyed by the
@@ -98,7 +91,7 @@ object Terms {
               "broadcast vocabulary — tokenizer twin divergence")
           val tf = e.getValue
           out(i) = TfidfTerm(e.getKey, tf, ds(idx),
-            roundHalfUp(
+            HouseRound.halfUp(
               tf.toDouble * (math.log((n + 1).toDouble / (ds(idx) + 1).toDouble) + 1.0),
               6), 0)
           i += 1
@@ -159,7 +152,7 @@ object Terms {
     * (a different partition count flipped a 6-dp rounding boundary on one
     * of 500 rows). The final division back to double is a pure function of
     * (exact sum, n_tokens), so the output is bit-identical at any
-    * parallelism; the house +1.7e-8 non-grid epsilon then guards the
+    * parallelism; [[graft.functions.HouseRound]] then guards the
     * engine-boundary ulp on the quantization itself.
     */
   def unigramLogProb(df: DataFrame, id: String, text: String,
@@ -175,7 +168,7 @@ object Terms {
     // round(log(cnt/tot) * 1e9, 0).cast(long) exactly
     val totD = tot.toDouble
     val qs = pairs.map(p =>
-      roundHalfUp(math.log(p._2.toDouble / totD) * 1e9, 0).toLong)
+      HouseRound.halfUp(math.log(p._2.toDouble / totD) * 1e9, 0).toLong)
     val bc = Caches.broadcast(df.sparkSession.sparkContext, (hashes, qs))
     val nllOf = udf { (t: String) =>
       val toks = Text.fastTokens(t)
@@ -228,7 +221,7 @@ object Terms {
         }
         val s = if (accB ne null) accB.doubleValue() else accL.toDouble
         val nTok = toks.length.toLong
-        Some((roundHalfUp(-s / 1e9 / nTok.toDouble + 1.7e-8, 6), nTok))
+        Some((HouseRound.double(-s / 1e9 / nTok.toDouble, 6), nTok))
       }
     }
     df.select(col(id), nllOf(col(text)).as("__c"))
@@ -256,9 +249,9 @@ object Terms {
       .withColumn("__q", q)
       .groupBy(col(id))
       .agg(
-        round(-sum((col("tf").cast("decimal(19,0)") * col("__q").cast("decimal(19,0)"))
+        HouseRound(-sum((col("tf").cast("decimal(19,0)") * col("__q").cast("decimal(19,0)"))
             .cast("decimal(38,0)")).cast("double") / 1e9 /
-          sum(col("tf")).cast("double") + 1.7e-8, 6).as("nll"),
+          sum(col("tf")).cast("double"), 6).as("nll"),
         sum(col("tf")).as("n_tokens"))
   }
 

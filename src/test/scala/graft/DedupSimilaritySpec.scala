@@ -266,18 +266,30 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("cosineFast and lshBucketFast are bit-identical to the HOF reference forms") {
-    val e = vecs(120, 16, 31L).toDF("vec_id", "embedding")
+    val full = vecs(120, 16, 31L)
+    // two malformed rows (ids >= 1000): a null vector, a short (8 of 16) one
+    val e = (full ++ Seq(1000L -> (null: Array[Float]), 1001L -> full.head._2.take(8)))
+      .toDF("vec_id", "embedding")
     val a = e.select(col("vec_id").as("ida"), col("embedding").as("va"))
     val b = e.select(col("vec_id").as("idb"), col("embedding").as("vb"))
-    val joined = a.crossJoin(b).where(col("ida") < col("idb")).limit(2000)
-      .select(
+    val joined = a.crossJoin(b).where(col("ida") =!= col("idb"))
+      .select(col("ida"), col("idb"),
         KernelTwins.cosine(col("va"), col("vb")).as("c_ref"),
         Similarity.cosineFast(col("va"), col("vb")).as("c_fast"))
-    assert(joined.filter(col("c_ref") =!= col("c_fast")).count() == 0)
-    val buckets = e.select(
+    val wellFormed = joined.where(col("ida") < 1000 && col("idb") < 1000).limit(2000)
+    assert(wellFormed.filter(!(col("c_ref") <=> col("c_fast"))).count() == 0)
+    assert(wellFormed.filter(col("c_fast").isNull).count() == 0)
+    // every ordered pair with a malformed side: 122 * 121 - 120 * 119
+    val malformed = joined.where(col("ida") >= 1000 || col("idb") >= 1000)
+    assert(malformed.count() == 482)
+    assert(malformed.filter(col("c_fast").isNotNull).count() == 0)
+    val buckets = e.select(col("vec_id"),
       KernelTwins.lshBucket(col("embedding"), 8, 16, 42L).as("b_ref"),
       Similarity.lshBucketFast(8, 16, 42L)(col("embedding")).as("b_fast"))
-    assert(buckets.filter(col("b_ref") =!= col("b_fast")).count() == 0)
+    val okRows = buckets.where(col("vec_id") < 1000)
+    assert(okRows.filter(!(col("b_ref") <=> col("b_fast"))).count() == 0)
+    assert(okRows.filter(col("b_fast").isNull).count() == 0)
+    assert(buckets.where(col("vec_id") >= 1000 && col("b_fast").isNull).count() == 2)
   }
 
   test("IVF ANN achieves high recall vs brute force on clustered vectors") {

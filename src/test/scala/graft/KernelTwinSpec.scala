@@ -124,7 +124,7 @@ class KernelTwinSpec extends AnyFunSuite {
   test("linedTextFast == the sequence/slice/concat_ws expression, byte-equal") {
     val got = df.select(col("id"),
       QueriesR4.linedTextFast(col("text")).as("fast"),
-      QueriesR4.linedText(col("text")).as("ref")).collect()
+      KernelTwins.linedText(col("text")).as("ref")).collect()
     got.foreach { r =>
       assert(r.getString(1) === r.getString(2),
         s"id=${r.getLong(0)}: '${r.getString(1)}' vs '${r.getString(2)}'")

@@ -128,4 +128,14 @@ object KernelTwins {
         lit(0.0), (acc, v) => acc + v)
       when(proj > 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
+
+  /** Every aligned run of 4 tokens as one '\n'-joined line — the reference
+    * for [[graft.QueriesR4.linedTextFast]].
+    */
+  def linedText(text: Column): Column = {
+    val tk = Text.tokens(text)
+    concat_ws("\n",
+      transform(sequence(lit(0), floor((size(tk) - 1) / 4).cast("int")),
+        i => concat_ws(" ", slice(tk, i * 4 + 1, lit(4)))))
+  }
 }

@@ -32,7 +32,7 @@ class SkewStreamSpec extends AnyFunSuite {
       bit_count(col("a").bitwiseXOR(col("b"))).cast("int").as("o"))
     assert(got.filter(col("h") =!= col("o")).count() == 0)
     // SQL registration
-    HammingDistance.register(spark)
+    GraftExtensions.registerAll(spark)
     df.createOrReplaceTempView("hamming_in")
     val viaSql = spark.sql(
       "SELECT count(*) FROM hamming_in WHERE hamming(a, b) <> bit_count(a ^ b)")

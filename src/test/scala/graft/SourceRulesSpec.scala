@@ -8,16 +8,20 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source rules the compiler cannot check. What a token is and how it is
-  * hashed is decided once, in `graft.functions.Text`: a kernel that spells
-  * out the whitespace class or the seed-42 XXH64 itself can drift from it
-  * unseen, and a port of the tokenizer (e.g. to a native Catalyst
-  * expression) would have to find every copy. And no source holds a raw
+  * hashed is decided once, in `graft.functions.Text`: a kernel or oracle
+  * that spells out the whitespace class or the seed-42 XXH64 itself can
+  * drift from it unseen, and a port of the tokenizer (e.g. to a native
+  * Catalyst expression) would have to find every copy. How an
+  * order-sensitive double is rounded is decided once, in
+  * `graft.functions.HouseRound`: a copy of its epsilon that misses a change
+  * flips rare rows on one engine only. And no source holds a raw
   * control byte other than '\n': editors and diffs do not show it, so a
   * fixture or comparison with one reads as something else (write the
-  * escape, e.g. "\u000B"). And the operator, feature and corpus objects
-  * keep only public names a query, the pipeline, a bench or perfbench
-  * runs: a name only specs call is a reference twin and lives in src/test
-  * (`KernelTwins`, the spec objects), and a name nothing calls is deleted.
+  * escape, e.g. "\u000B"). And the operator, feature, corpus and function
+  * objects keep only public names a query, the pipeline, a bench or
+  * perfbench runs: a name only specs call is a reference twin and lives in
+  * src/test (`KernelTwins`, the spec objects), and a name nothing calls is
+  * deleted.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -35,15 +39,29 @@ class SourceRulesSpec extends AnyFunSuite {
   /** An XXH64 call with the literal seed 42. */
   private val seed42Hash = """XXH64\.\w+\(.*\b42L?\b""".r
 
-  test("the whitespace class and the seed-42 token hash are written only in Text") {
-    val main = scalaFiles("src/main/scala")
-    assert(main.contains(tokenizerHome))
-    val hits = for {
-      f <- main if f != tokenizerHome
+  /** A DuckDB split on the `\s+` class: the oracle tokenizer, whichever
+    * way its backslash is escaped. */
+  private val oracleTokenizer = """string_split_regex\(.*\\+s\+""".r
+
+  /** Every line of a src/main file other than `home` that a pattern finds. */
+  private def hitsOutside(home: Path, patterns: scala.util.matching.Regex*): Seq[String] =
+    for {
+      f <- scalaFiles("src/main/scala") if f != home
       (line, i) <- Files.readAllLines(f, StandardCharsets.UTF_8).asScala.zipWithIndex
-      if wsComparison.findFirstIn(line).nonEmpty || seed42Hash.findFirstIn(line).nonEmpty
+      if patterns.exists(_.findFirstIn(line).nonEmpty)
     } yield s"$f:${i + 1}: ${line.trim}"
+
+  test("the whitespace class and the seed-42 token hash are written only in Text") {
+    val hits = hitsOutside(tokenizerHome, wsComparison, seed42Hash, oracleTokenizer)
     assert(hits.isEmpty, hits.mkString("\n"))
+    assert(Files.exists(tokenizerHome))
+  }
+
+  test("the house rounding epsilon is written only in HouseRound") {
+    val home = Paths.get("src/main/scala/graft/functions/HouseRound.scala")
+    val hits = hitsOutside(home, """1\.7[eE]-0*8""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(Files.exists(home))
   }
 
   /** A public member of a top-level object: 2-space indent, no modifier. */
@@ -58,7 +76,7 @@ class SourceRulesSpec extends AnyFunSuite {
   }
 
   test("every public operator, feature and corpus member is named outside its definition") {
-    val owners = Seq("operators", "features", "corpus")
+    val owners = Seq("operators", "features", "corpus", "functions")
       .flatMap(d => scalaFiles(s"src/main/scala/graft/$d"))
     val lines = for {
       f <- scalaFiles("src/main/scala") ++ scalaFiles("perfbench/src")
@@ -68,14 +86,18 @@ class SourceRulesSpec extends AnyFunSuite {
       (f, i, line) <- lines if owners.contains(f)
       m <- publicMember.findFirstMatchIn(line)
     } yield (f, i, m.group(1))
-    val defSites = defs.toSet
     // a use stands alone or follows its own object's name: `s.indexOf` on
-    // a String is not `Corpus.indexOf`
+    // a String is not `Corpus.indexOf`; `apply` is used as `Owner(`. A line
+    // that defines the same name, in any object, is not a use of it.
     val unused = defs.filterNot { case (f, _, name) =>
       val owner = f.getFileName.toString.stripSuffix(".scala")
-      val word = s"(?:(?<![\\w.])|(?<=\\b$owner\\.))$name\\b".r
-      lines.exists { case (g, j, l) =>
-        !defSites((g, j, name)) && word.findFirstIn(code(l)).nonEmpty }
+      val word =
+        if (name == "apply") s"(?<![\\w.])$owner\\(".r
+        else s"(?:(?<![\\w.])|(?<=\\b$owner\\.))$name\\b".r
+      val definition = s"\\b(?:def|val|var)\\s+$name\\b".r
+      lines.exists { case (_, _, l) =>
+        val c = code(l)
+        definition.findFirstIn(c).isEmpty && word.findFirstIn(c).nonEmpty }
     }.map { case (f, i, name) => s"$f:${i + 1}: $name" }
     assert(defs.nonEmpty)
     assert(unused.isEmpty, unused.mkString("\n"))
