@@ -104,7 +104,7 @@ object QueriesCorpus {
        |      ELSE 0.0 END AS swr,
        |    least(CAST(len(b.tk) AS DOUBLE) / 8.0, 1.0) AS len_score,
        |    CASE WHEN length(b.caption) > 0 THEN
-       |      CAST(length(regexp_replace(b.caption, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE)
+       |      CAST(length(regexp_replace(b.caption, '[a-zA-Z0-9\\s\\v]', '', 'g')) AS DOUBLE)
        |        / length(b.caption) ELSE 0.0 END AS punct
        |  FROM base b),
        |scal AS (

@@ -71,7 +71,7 @@ object QueriesText {
           "(anodized|burnished)", "finished"), "\\s+", "_").as("type_clean")),
       """SELECT p_partkey,
          regexp_replace(regexp_replace(lower(p_type),
-           '(anodized|burnished)', 'finished', 'g'), '\s+', '_', 'g') AS type_clean
+           '(anodized|burnished)', 'finished', 'g'), '[\s\v]+', '_', 'g') AS type_clean
          FROM part"""),
 
     // ---- F3/F6: split + element + substring ---------------------------------
@@ -149,7 +149,7 @@ object QueriesText {
          SELECT doc_id,
            CAST(len(tk) AS BIGINT) AS n_tokens,
            CAST(len(tk) + greatest(0.0, floor(
-             (length(regexp_replace(text, '\\s+', '', 'g')) - len(tk) * 6) / 4.0))
+             (length(regexp_replace(text, '[\\s\\v]+', '', 'g')) - len(tk) * 6) / 4.0))
              AS BIGINT) AS n_bpe,
            round(CASE WHEN len(tk) > 0 THEN
              CAST(list_sum(list_transform(tk, x -> length(x))) AS DOUBLE) / len(tk)
@@ -158,7 +158,7 @@ object QueriesText {
              CAST(len(list_filter(tk, x -> list_contains($StopwordsSql, x))) AS DOUBLE) / len(tk)
              ELSE 0.0 END, 4) AS stopword_ratio,
            round(CASE WHEN length(text) > 0 THEN
-             CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE)
+             CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s\\v]', '', 'g')) AS DOUBLE)
                / length(text) ELSE 0.0 END, 4) AS punct_ratio
          FROM toks"""),
 

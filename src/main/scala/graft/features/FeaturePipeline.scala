@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Corpus
 import graft.functions.{HouseRound, Text}
-import graft.operators.AsOf
+import graft.operators.{AsOf, Windows}
 
 /** Flagship pipeline: per-entity×timestamp feature vectors over the
   * image+caption corpus (BASELINE.json north_star).
@@ -26,8 +26,10 @@ import graft.operators.AsOf
   *    (it is small by definition) and shipped as literal maps inside the
   *    plan — broadcast semantics with zero join shuffle;
   *  - entity metadata: broadcast hash join (no shuffle of the fact side);
-  *  - all temporal features share ONE window layout (hash by entity, sort by
-  *    (entity, time, seq)) → exactly one shuffle + one sort end-to-end.
+  *  - every temporal feature comes from ONE algebra, [[localWindows]] +
+  *    [[repairBoundary]] from a carry (the summary of earlier rows);
+  *    [[features]], its carry-free case, hashes by entity and sorts by
+  *    (entity, time, seq) → exactly one shuffle + one sort end-to-end.
   */
 object FeaturePipeline {
 
@@ -37,6 +39,11 @@ object FeaturePipeline {
     * (Bench/Verify do, after each query/rep).
     */
   def releaseCaches(): Unit = graft.operators.Caches.releaseAll()
+
+  /** Input columns no feature row carries (event_time duplicates event_ms). */
+  private val Payload = Seq("bytes", "caption", "fmt", "event_time")
+
+  private def entityWindow = Windows.entityWindow("entity_id", "event_ms", Seq("seq"))
 
   /** Closure-captured dim-table entry (allocation-free probe in the UDF). */
   final case class DimEntry(rank: Int, score: Double)
@@ -173,14 +180,14 @@ object FeaturePipeline {
     scalar
   }
 
-  /** The "local" temporal-window block shared by [[featuresSkewSafe]]
-    * (per (entity, time-bucket) partitions) and [[featuresIncremental]]
-    * (per entity over the new slice): row number, gap to previous event,
-    * previous phash, session-start flag, local session index, in-session
-    * position, running quality sum, last non-null sparse value. ONE
-    * definition of the session/gap algebra, so a future change cannot be
-    * applied to one path and silently diverge the other — exactly the
-    * equivalence GoldenFeatureSpec protects.
+  /** The "local" temporal-window block shared by [[features]] (per
+    * entity), [[featuresSkewSafe]] (per (entity, time-bucket) partitions)
+    * and [[featuresIncremental]] (per entity over the new slice): row
+    * number, gap to previous event, previous phash, session-start flag,
+    * local session index, in-session position, running quality sum, last
+    * non-null sparse value. ONE definition of the session/gap algebra, so
+    * a future change cannot be applied to one path and silently diverge
+    * the others — exactly the equivalence GoldenFeatureSpec protects.
     */
   private def localWindows(df: DataFrame, w: WindowSpec, gapMs: Long): DataFrame = {
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -202,9 +209,10 @@ object FeaturePipeline {
     * `bnew` (1 if the boundary gap opens a new session, else 0), the length
     * of the session still open at the boundary, the last non-null sparse
     * value, and the carried quality sum and row count. ONE definition of
-    * the repair algebra for [[featuresSkewSafe]]'s bucket merge (the carry
-    * is all earlier buckets) and [[featuresIncremental]] (the carry is the
-    * state table), for the same reason [[localWindows]] is one.
+    * the repair algebra for [[features]] (the empty carry: nothing came
+    * before), [[featuresSkewSafe]]'s bucket merge (the carry is all earlier
+    * buckets) and [[featuresIncremental]] (the carry is the state table),
+    * for the same reason [[localWindows]] is one.
     */
   private def repairBoundary(df: DataFrame, lastMs: Column, lastPhash: Column,
       sessCnt: Column, bnew: Column, openLen: Column, lastSparse: Column,
@@ -225,7 +233,8 @@ object FeaturePipeline {
       .drop("__lrn", "__lgap", "__lphash_prev", "__lnew", "__lsess", "__lpos",
         "__lqsum", "__lfilled", "__prev_phash")
 
-  /** Compute the feature vector table from an event-shaped corpus.
+  /** Compute the feature vector table from an event-shaped corpus: the
+    * local windows over each entity's timeline, from the empty carry.
     *
     * @param events  columns: image_id, caption, phash, entity_id, event_ms, seq
     * @param dim     dimension feature table (topic, token, rank, n, n_pos, score)
@@ -234,29 +243,12 @@ object FeaturePipeline {
     */
   def features(events: DataFrame, dim: DataFrame, entDim: DataFrame,
       gapMs: Long = Corpus.SessionGapMs): DataFrame = {
-    val scalar = scalarFeatures(events, dim, entDim)
-
-    // --- one shared window layout for every temporal feature ---------------
-    val w = Window.partitionBy(col("entity_id")).orderBy(col("event_ms"), col("seq"))
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    scalar
-      .withColumn("phash_prev", lag(col("phash"), 1).over(w))
-      .withColumn("phash_prev_hamming",
-        graft.functions.HammingDistance.hamming(col("phash"), col("phash_prev")))
-      .withColumn("dt_prev_ms", col("event_ms") - lag(col("event_ms"), 1).over(w))
-      .withColumn("__new",
-        when(col("dt_prev_ms").isNull || col("dt_prev_ms") > gapMs, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("__new")).over(wRun) - 1L)
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("session_pos",
-        col("__rn") - last(when(col("__new") === 1L, col("__rn")), ignoreNulls = true).over(wRun))
-      .withColumn("quality_filled", last(col("sparse_quality"), ignoreNulls = true).over(wRun))
-      // running mean is an order-sensitive double sum
-      .withColumn("running_quality_mean",
-        HouseRound(avg(col("quality")).over(wRun), 6))
-      // event_time duplicates event_ms (ms-precision timestamp) — not carried
-      .drop("__new", "__rn", "phash_prev", "bytes", "caption", "fmt", "event_time")
+    val local = localWindows(scalarFeatures(events, dim, entDim).drop(Payload: _*),
+      entityWindow, gapMs)
+    repairBoundary(local, lastMs = lit(null).cast("long"),
+      lastPhash = lit(null).cast("long"), sessCnt = lit(0L), bnew = lit(1L),
+      openLen = lit(0L), lastSparse = lit(null).cast("double"), qsum = lit(0.0),
+      n = lit(0L))
   }
 
   /** Skew-safe variant of [[features]]: identical output (equivalence
@@ -281,24 +273,11 @@ object FeaturePipeline {
   def featuresSkewSafe(events: DataFrame, dim: DataFrame, entDim: DataFrame,
       gapMs: Long = Corpus.SessionGapMs, timeBuckets: Int = 64,
       bounds: Option[(Long, Long)] = None): DataFrame = {
-    val scalar = scalarFeatures(events, dim, entDim)
-
-    // fixed-width global time buckets. Bounds come from the caller when the
-    // time range is known (at 100 TB the table's partition metadata has it —
-    // paying a scan for min/max is wasteful); otherwise ONE pruned-column
-    // min/max over the raw input (vectorized scan of event_ms only, never
-    // the scalar-feature pipeline, which would run the UDF block twice)
-    val (lo, hi) = bounds.getOrElse {
-      val b = events.agg(min(col("event_ms")).as("lo"), max(col("event_ms")).as("hi")).head()
-      // empty input aggregates to (null, null) — e.g. an incremental slice
-      // that deduped to zero rows; any bounds work (the output is empty)
-      if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
-    }
-    val span = math.max(1L, (hi - lo) / timeBuckets + 1L)
+    // bounds from the raw input, never the scalar features (UDF block twice)
+    val bucketOf = Windows.timeBuckets(events.select(col("event_ms")), bounds, timeBuckets)
     // drop the payload columns BEFORE phase 1: no later phase reads them
-    val withBkt = scalar.drop("bytes", "caption", "fmt", "event_time")
-      .withColumn("__bkt",
-        ((col("event_ms") - lit(lo)) / lit(span)).cast("int"))
+    val withBkt = scalarFeatures(events, dim, entDim).drop(Payload: _*)
+      .withColumn("__bkt", bucketOf(col("event_ms")))
 
     // --- phase 1: local windows over (entity, bucket) -----------------------
     val w1 = Window.partitionBy(col("entity_id"), col("__bkt"))
@@ -411,9 +390,8 @@ object FeaturePipeline {
   def featuresIncremental(state: DataFrame, newEvents: DataFrame,
       dim: DataFrame, entDim: DataFrame,
       gapMs: Long = Corpus.SessionGapMs): DataFrame = {
-    val scalar = scalarFeatures(newEvents, dim, entDim)
-    val w = Window.partitionBy(col("entity_id")).orderBy(col("event_ms"), col("seq"))
-    val local = localWindows(scalar, w, gapMs)
+    val local = localWindows(scalarFeatures(newEvents, dim, entDim).drop(Payload: _*),
+      entityWindow, gapMs)
     val joined = local.join(broadcast(state), Seq("entity_id"), "left")
       // bnew is a per-entity property of the BOUNDARY (gap between the
       // slice's first row and the carried last event), constant across rows
@@ -429,8 +407,7 @@ object FeaturePipeline {
         qsum = coalesce(col("st_qsum"), lit(0.0)),
         n = coalesce(col("st_n"), lit(0L)))
       .drop("__bnew", "__first_ms", "st_n", "st_qsum", "st_last_ms",
-        "st_last_phash", "st_sess_cnt", "st_open_len", "st_last_sparse",
-        "bytes", "caption", "fmt", "event_time")
+        "st_last_phash", "st_sess_cnt", "st_open_len", "st_last_sparse")
   }
 
   /** Attach the point-in-time feature vector to arbitrary (entity, t) probes
@@ -446,8 +423,9 @@ object FeaturePipeline {
 
   /** End-to-end flagship at a given scale (synthesize → features → as-of).
     * Runs the SKEW-SAFE feature variant — the scale path is the product;
-    * the plain-window [[features]] is its small-input semantic twin
-    * (equivalence asserted in GoldenFeatureSpec, both DuckDB-oracle'd).
+    * [[features]], the same algebra with no carry across buckets, is its
+    * small-input twin (equivalence asserted in GoldenFeatureSpec, both
+    * DuckDB-oracle'd).
     */
   def flagship(spark: SparkSession, p: Corpus.Params): DataFrame = {
     val ev = Corpus.events(spark, p)

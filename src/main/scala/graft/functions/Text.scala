@@ -87,12 +87,12 @@ object Text {
     filter(split(trim(text), "\\s+"), t => length(t) > lit(0))
 
   /** [[tokens]] as DuckDB oracle SQL over the SQL expression `e`: the same
-    * trim, `\s+` split and empty-token filter, written once for every oracle.
-    * One known gap: DuckDB's `\s` is RE2's, which leaves out U+000B, so
-    * [[tokens]] splits at a vertical tab and this form does not.
+    * trim, whitespace split and empty-token filter, written once for every
+    * oracle. DuckDB's `\s` is RE2's, which leaves out U+000B, so the class
+    * is `[\s\v]`: exactly [[isWs]].
     */
   def sqlTokens(e: String): String =
-    s"list_filter(string_split_regex(trim($e), '\\s+'), x -> x <> '')"
+    s"list_filter(string_split_regex(trim($e), '[\\s\\v]+'), x -> x <> '')"
 
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = size(tokens(text))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,6 +36,12 @@ import org.apache.spark.sql.functions._
   */
 object AsOf {
 
+  /** `attach`, or by default every event column but the key and the time. */
+  private def attachColumns(events: DataFrame, entity: String, eventTime: String,
+      attach: Seq[String]): Seq[String] =
+    if (attach.nonEmpty) attach
+    else events.columns.filter(c => c != entity && c != eventTime).toSeq
+
   /** Skew-safe left as-of join for HOT entities.
     *
     * [[join]] partitions the window by entity, so one hot entity (Zipf head
@@ -45,7 +51,8 @@ object AsOf {
     * hot entity's work spreads across `timeBuckets` tasks — and repairs the
     * cross-bucket dependency with a tiny per-(entity, bucket) summary table:
     *
-    *  1. bucket = floor((t - tmin) / span), identical for both sides;
+    *  1. bucket = floor((t - tmin) / span), identical for both sides (the
+    *     [[Windows.timeBuckets]] layout `featuresSkewSafe` shares);
     *  2. within each (entity, bucket): the normal union-tag window finds the
     *     latest event <= t *inside the probe's bucket*;
     *  3. a per-(entity, bucket) "latest event" summary (|entities|·B rows,
@@ -66,24 +73,12 @@ object AsOf {
       prefix: String = "asof_",
       timeBuckets: Int = 32,
       timeBounds: Option[(Long, Long)] = None): DataFrame = {
-    val attachCols =
-      if (attach.nonEmpty) attach
-      else events.columns.filter(c => c != entity && c != eventTime).toSeq
+    val attachCols = attachColumns(events, entity, eventTime, attach)
 
-    // fixed-width global time buckets. `timeBounds` lets the caller supply
-    // the known time range (table partition metadata at scale); the fallback
-    // is one pruned two-column min/max scan — acceptable for ad-hoc use but
-    // an extra full pass over both sides at 100 TB, so callers should pass it
-    val (lo, hi) = timeBounds.getOrElse {
-      val b = probes.select(col(probeTime).cast("long").as("t"))
-        .unionByName(events.select(col(eventTime).cast("long").as("t")))
-        .agg(min(col("t")).as("lo"), max(col("t")).as("hi")).head()
-      // both sides empty aggregates to (null, null); any bounds work then
-      // (the output is empty)
-      if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
-    }
-    val span = math.max(1L, (hi - lo) / timeBuckets + 1L)
-    def bucketOf(t: Column): Column = ((t.cast("long") - lit(lo)) / lit(span)).cast("int")
+    val bucketOf = Windows.timeBuckets(
+      probes.select(col(probeTime).cast("long").as("t"))
+        .unionByName(events.select(col(eventTime).cast("long").as("t"))),
+      timeBounds, timeBuckets)
 
     val tieCol = tie.map(col).getOrElse(lit(0L)).cast("long")
     // __origt keeps the event time in its ORIGINAL type (the long __t is for
@@ -163,9 +158,7 @@ object AsOf {
       attach: Seq[String] = Nil,
       tie: Option[String] = None,
       prefix: String = "asof_"): DataFrame = {
-    val attachCols =
-      if (attach.nonEmpty) attach
-      else events.columns.filter(c => c != entity && c != eventTime).toSeq
+    val attachCols = attachColumns(events, entity, eventTime, attach)
     val probeCols = probes.columns.toSeq
 
     // Unified schema: (entity, __t, __side, __tie, probe cols..., __ev struct)

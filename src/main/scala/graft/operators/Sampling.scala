@@ -241,6 +241,19 @@ object Sampling {
       keyCol: String, tokens: Column, budget: Column, seed: Long = 42L,
       nBuckets: Int = 64): DataFrame = {
     require(strata.nonEmpty, "tokenBudgetSampleSkewSafe: empty strata")
+    bucketedPrefixSum(df, strata, keyCol, tokens, seed, nBuckets)
+      .withColumn("kept", col("cum_before") < budget)
+      .select((df.columns.toSeq ++ Seq("n_tokens", "cum_before", "kept"))
+        .map(col): _*)
+  }
+
+  /** The two-phase distributed prefix sum of [[tokenBudgetSampleSkewSafe]]
+    * (per stratum) and [[packSequences]] (`strata` = Nil, one global
+    * stratum): `df` plus `__h`, `__b`, `n_tokens` and `cum_before`, the
+    * exclusive prefix token count in (strata; hash, key) order.
+    */
+  private def bucketedPrefixSum(df: DataFrame, strata: Seq[String], keyCol: String,
+      tokens: Column, seed: Long, nBuckets: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (h, b) = budgetOrder(keyCol, seed, nBuckets)
     val ann = df.withColumn("__h", h).withColumn("__b", b)
@@ -270,9 +283,6 @@ object Sampling {
       .join(broadcast(offsetsR), joinCond)
       .withColumn("cum_before",
         col("__off") + coalesce(sum(col("n_tokens")).over(inBucketW), lit(0L)))
-      .withColumn("kept", col("cum_before") < budget)
-      .select((df.columns.toSeq ++ Seq("n_tokens", "cum_before", "kept"))
-        .map(col): _*)
   }
 
   /** Sequence packing — the GPT-style "concatenate and chunk" pretraining
@@ -303,24 +313,7 @@ object Sampling {
   def packSequences(df: DataFrame, keyCol: String, tokens: Column,
       seqLen: Long, seed: Long = 42L, nBuckets: Int = 64): DataFrame = {
     require(seqLen > 0, s"packSequences: seqLen=$seqLen must be positive")
-    import org.apache.spark.sql.expressions.Window
-    val (h, b) = budgetOrder(keyCol, seed, nBuckets)
-    val ann = df.withColumn("__h", h).withColumn("__b", b)
-      .withColumn("n_tokens", tokens.cast("long"))
-    // nBuckets-row aggregate; the global-order window over it is trivial
-    val offW = Window.orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ann.groupBy(col("__b"))
-      .agg(sum(col("n_tokens")).as("__bs"))
-      .withColumn("__off", coalesce(sum(col("__bs")).over(offW), lit(0L)))
-      .drop("__bs")
-    val inBucketW = Window.partitionBy(col("__b"))
-      .orderBy(col("__h"), col(keyCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ann
-      .join(broadcast(offsets), Seq("__b"))
-      .withColumn("cum_before",
-        col("__off") + coalesce(sum(col("n_tokens")).over(inBucketW), lit(0L)))
+    bucketedPrefixSum(df, Nil, keyCol, tokens, seed, nBuckets)
       .withColumn("seq_first", expr(s"cum_before div ${seqLen}L"))
       .withColumn("seq_last", expr(
         s"(cum_before + greatest(n_tokens, 1L) - 1L) div ${seqLen}L"))

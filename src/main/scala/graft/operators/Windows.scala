@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -15,6 +15,25 @@ object Windows {
 
   def entityWindow(entity: String, time: String, tie: Seq[String] = Nil): WindowSpec =
     Window.partitionBy(col(entity)).orderBy((Seq(time) ++ tie).map(col): _*)
+
+  /** The fixed-width time-bucket layout of the skew-safe operators
+    * ([[AsOf.joinSkewSafe]], `FeaturePipeline.featuresSkewSafe`): the int
+    * bucket `(t - lo) / span` of a time column, [lo, hi] in `buckets`
+    * buckets. `bounds` is the caller's known time range (at 100 TB the
+    * partition metadata has it); else ONE min/max over `times`, a single
+    * long column, where empty input gives (0, 0) (any bounds work then).
+    */
+  def timeBuckets(times: => DataFrame, bounds: Option[(Long, Long)],
+      buckets: Int): Column => Column = {
+    require(buckets > 0, s"timeBuckets=$buckets must be positive")
+    val (lo, hi) = bounds.getOrElse {
+      val t = col(times.columns.head)
+      val b = times.agg(min(t), max(t)).head()
+      if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
+    }
+    val span = math.max(1L, (hi - lo) / buckets + 1L)
+    t => ((t.cast("long") - lit(lo)) / lit(span)).cast("int")
+  }
 
   /** Gap-based sessionization: a new session starts when the gap since the
     * previous event exceeds `gapMs`. session_idx is a running sum of

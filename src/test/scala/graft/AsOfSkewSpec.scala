@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.{Corpus, Rng}
+import graft.features.FeaturePipeline
 import graft.operators.AsOf
 
 /** The skew-safe as-of join must be semantically identical to the plain
@@ -77,5 +78,24 @@ class AsOfSkewSpec extends AnyFunSuite {
     val plan = safe.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(plan.contains("windowspecdefinition(entity_id"), plan)
     assert(plan.contains("__bkt"), "expected (entity, bucket) window partitioning")
+  }
+
+  test("skew-safe as-of and features reject a non-positive bucket count") {
+    val p = Corpus.Params(rows = 50, entities = 4)
+    val ev = Corpus.events(spark, p)
+    val pr = Corpus.probes(spark, p)
+    val dim = Corpus.dimFeatures(spark, p.seed)
+    val ed = FeaturePipeline.entityDim(spark, p.entities)
+    for (b <- Seq(0, -1)) {
+      val a = intercept[IllegalArgumentException] {
+        AsOf.joinSkewSafe(pr, ev.select("entity_id", "event_ms", "seq"), "entity_id",
+          "probe_ms", "event_ms", tie = Some("seq"), timeBuckets = b)
+      }
+      assert(a.getMessage.contains(s"timeBuckets=$b"), a.getMessage)
+      val f = intercept[IllegalArgumentException] {
+        FeaturePipeline.featuresSkewSafe(ev, dim, ed, timeBuckets = b)
+      }
+      assert(f.getMessage.contains(s"timeBuckets=$b"), f.getMessage)
+    }
   }
 }

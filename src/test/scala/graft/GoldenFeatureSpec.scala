@@ -120,8 +120,8 @@ class GoldenFeatureSpec extends AnyFunSuite {
       df.collect().map(r => (r.getAs[String]("entity_id"), r.getAs[Long]("seq")) -> r).toMap
     val plain = FeaturePipeline.features(ev, dim, ed)
     val safe = FeaturePipeline.featuresSkewSafe(ev, dim, ed, timeBuckets = 13)
-    assert(plain.columns.sorted.sameElements(safe.columns.sorted),
-      s"schemas differ: ${plain.columns.sorted.mkString(",")} vs ${safe.columns.sorted.mkString(",")}")
+    assert(plain.columns.sameElements(safe.columns),
+      s"columns differ: ${plain.columns.mkString(",")} vs ${safe.columns.mkString(",")}")
     val a = rows(plain)
     val b = rows(safe)
     assert(a.keySet == b.keySet)
@@ -137,6 +137,25 @@ class GoldenFeatureSpec extends AnyFunSuite {
       val (qx, qy) = (a(k).getAs[Double]("running_quality_mean"),
         b(k).getAs[Double]("running_quality_mean"))
       assert(math.abs(qx - qy) <= 1.5e-6, s"key=$k running_quality_mean $qx vs $qy")
+    }
+  }
+
+  test("features equal the plain-window twin on every column, exactly") {
+    val p = Corpus.Params(rows = 3000, entities = 8)
+    val f = FeaturePipeline.features(Corpus.events(spark, p),
+      Corpus.dimFeatures(spark, p.seed), FeaturePipeline.entityDim(spark, p.entities))
+    val twin = FeatureTwins.plainWindows(f)
+    assert(f.schema.fields.sortBy(_.name).sameElements(twin.schema.fields.sortBy(_.name)),
+      s"schemas differ: ${f.schema.simpleString} vs ${twin.schema.simpleString}")
+    def rows(df: org.apache.spark.sql.DataFrame): Map[(String, Long), org.apache.spark.sql.Row] =
+      df.collect().map(r => (r.getAs[String]("entity_id"), r.getAs[Long]("seq")) -> r).toMap
+    val (a, b) = (rows(f), rows(twin))
+    assert(a.size == p.rows && a.keySet == b.keySet)
+    // no tolerance: the running mean is sum/count in both forms, in the
+    // same row order, so even running_quality_mean is bit-equal
+    for (k <- a.keys; c <- f.columns) {
+      val (x, y) = (a(k).getAs[Any](c), b(k).getAs[Any](c))
+      assert(x == y, s"key=$k col=$c features=$x twin=$y")
     }
   }
 
@@ -175,8 +194,8 @@ class GoldenFeatureSpec extends AnyFunSuite {
     val inc = FeaturePipeline.featuresIncremental(state,
       ev.where(col("seq") >= split), dim, ed)
     val want = full.where(col("seq") >= split)
-    assert(inc.columns.sorted.sameElements(want.columns.sorted),
-      s"schemas differ: ${inc.columns.sorted.mkString(",")} vs ${want.columns.sorted.mkString(",")}")
+    assert(inc.columns.sameElements(want.columns),
+      s"columns differ: ${inc.columns.mkString(",")} vs ${want.columns.mkString(",")}")
     def rows(df: org.apache.spark.sql.DataFrame): Map[(String, Long), org.apache.spark.sql.Row] =
       df.collect().map(r => (r.getAs[String]("entity_id"), r.getAs[Long]("seq")) -> r).toMap
     val a = rows(want)

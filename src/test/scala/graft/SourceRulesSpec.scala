@@ -14,14 +14,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * Catalyst expression) would have to find every copy. How an
   * order-sensitive double is rounded is decided once, in
   * `graft.functions.HouseRound`: a copy of its epsilon that misses a change
-  * flips rare rows on one engine only. And no source holds a raw
-  * control byte other than '\n': editors and diffs do not show it, so a
-  * fixture or comparison with one reads as something else (write the
-  * escape, e.g. "\u000B"). And the operator, feature, corpus and function
-  * objects keep only public names a query, the pipeline, a bench or
-  * perfbench runs: a name only specs call is a reference twin and lives in
-  * src/test (`KernelTwins`, the spec objects), and a name nothing calls is
-  * deleted.
+  * flips rare rows on one engine only. How a skew-safe operator splits
+  * time into buckets is decided once, in `graft.operators.Windows`: the
+  * as-of join and the feature pipeline must agree on it. And no source
+  * holds a raw control byte other than '\n': editors and diffs do not
+  * show it, so a fixture or comparison with one reads as something else
+  * (write the escape, e.g. "\u000B"). And the operator, feature, corpus
+  * and function objects keep only public names a query, the pipeline, a
+  * bench or perfbench runs: a name only specs call is a reference twin and
+  * lives in src/test (`KernelTwins`, `FeatureTwins`, the spec objects), and
+  * a name nothing calls is deleted.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -39,9 +41,9 @@ class SourceRulesSpec extends AnyFunSuite {
   /** An XXH64 call with the literal seed 42. */
   private val seed42Hash = """XXH64\.\w+\(.*\b42L?\b""".r
 
-  /** A DuckDB split on the `\s+` class: the oracle tokenizer, whichever
-    * way its backslash is escaped. */
-  private val oracleTokenizer = """string_split_regex\(.*\\+s\+""".r
+  /** A DuckDB split on the `\s+` or `[\s\v]+` class: the oracle tokenizer,
+    * whichever way its backslashes are escaped. */
+  private val oracleTokenizer = """string_split_regex\(.*\\+s(?:\\+v\])?\+""".r
 
   /** Every line of a src/main file other than `home` that a pattern finds. */
   private def hitsOutside(home: Path, patterns: scala.util.matching.Regex*): Seq[String] =
@@ -60,6 +62,14 @@ class SourceRulesSpec extends AnyFunSuite {
   test("the house rounding epsilon is written only in HouseRound") {
     val home = Paths.get("src/main/scala/graft/functions/HouseRound.scala")
     val hits = hitsOutside(home, """1\.7[eE]-0*8""".r)
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(Files.exists(home))
+  }
+
+  test("the time-bucket span and bucket arithmetic is written only in Windows") {
+    val home = Paths.get("src/main/scala/graft/operators/Windows.scala")
+    // the span `(hi - lo) / buckets` and the bucket `(t - lo) / lit(span)`
+    val hits = hitsOutside(home, """\(\s*hi\s*-\s*lo\s*\)\s*/|/\s*lit\(\s*span\s*\)""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
     assert(Files.exists(home))
   }
