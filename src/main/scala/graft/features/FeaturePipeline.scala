@@ -223,7 +223,8 @@ object FeaturePipeline {
         when(col("__lrn") > 1, col("__lphash_prev")).otherwise(lastPhash))
       .withColumn("phash_prev_hamming",
         graft.functions.HammingDistance.hamming(col("phash"), col("__prev_phash")))
-      .withColumn("session_idx", sessCnt + col("__lsess") - 1L - (lit(1L) - bnew))
+      // the carry terms in one subtree, so a literal carry folds to one constant
+      .withColumn("session_idx", col("__lsess") + (sessCnt + bnew - 2L))
       .withColumn("session_pos",
         (col("__lpos") + when(col("__lsess") === 1L && bnew === 0L, openLen)
           .otherwise(lit(0L))).cast("int"))

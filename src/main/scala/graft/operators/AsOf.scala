@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Point-in-time (as-of) join.
   *
@@ -15,7 +16,9 @@ import org.apache.spark.sql.functions._
   * Physical formulation (SURVEY.md §7.2 decision): the union-tag window
   * technique — tag probes/events, union, and take
   * `last(struct(event cols), ignoreNulls) OVER (PARTITION BY entity
-  * ORDER BY t, side, tie ROWS UNBOUNDED PRECEDING)`.
+  * ORDER BY t, side, tie ROWS UNBOUNDED PRECEDING)`. Both forms run this one
+  * window: [[join]] partitions it by entity, [[joinSkewSafe]] by (entity,
+  * time bucket) and adds the carry from earlier buckets.
   *
   * Why this beats a custom merge exec at scale:
   *  - exactly ONE shuffle (hash on entity) and ONE sort per side-union —
@@ -36,11 +39,42 @@ import org.apache.spark.sql.functions._
   */
 object AsOf {
 
-  /** `attach`, or by default every event column but the key and the time. */
-  private def attachColumns(events: DataFrame, entity: String, eventTime: String,
-      attach: Seq[String]): Seq[String] =
-    if (attach.nonEmpty) attach
-    else events.columns.filter(c => c != entity && c != eventTime).toSeq
+  /** Events in the union-tag layout: the partition `keys`, the time key
+    * `__t` (the event time cast to `timeType`, the probe time's type),
+    * `__side` 0, `__tie`, and `__ev`, the one event struct: `asof_time`
+    * (the event time in its own type), then `asof_<c>` per attach column
+    * (`attach`, or by default every event column but the key and the time).
+    */
+  private def tagEvents(events: DataFrame, keys: Seq[Column], entity: String,
+      eventTime: String, timeType: DataType, attach: Seq[String],
+      tie: Option[String]): DataFrame = {
+    val attachCols =
+      if (attach.nonEmpty) attach
+      else events.columns.filter(c => c != entity && c != eventTime).toSeq
+    events.select((keys ++ Seq(col(eventTime).cast(timeType).as("__t"), lit(0).as("__side"),
+      tie.map(col).getOrElse(lit(0L)).cast("long").as("__tie"),
+      struct((col(eventTime).as("asof_time") +:
+        attachCols.map(c => col(c).as("asof_" + c))): _*).as("__ev"))): _*)
+  }
+
+  /** The one union-tag window of both forms: the [[tagEvents]] and the
+    * probes (`__side` 1), unioned; within the partition `keys`, ordered by
+    * (`__t`, `__side`, `__tie`). Each probe row keeps its columns and gets
+    * `__match`, the latest event struct at or before it in that order, or
+    * null.
+    */
+  private def matchWindow(probes: DataFrame, tagged: DataFrame, keys: Seq[String],
+      probeTime: String): DataFrame = {
+    val probesU = probes.select((keys.map(col) ++ Seq(col(probeTime).as("__t"),
+      lit(1).as("__side"), lit(Long.MaxValue).as("__tie")) ++
+      probes.columns.toSeq.filterNot(keys.contains).map(col)): _*)
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("__t"), col("__side"), col("__tie"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    tagged.unionByName(probesU, allowMissingColumns = true)
+      .withColumn("__match", last(col("__ev"), ignoreNulls = true).over(w))
+      .where(col("__side") === 1)
+  }
 
   /** Skew-safe left as-of join for HOT entities.
     *
@@ -52,15 +86,20 @@ object AsOf {
     * cross-bucket dependency with a tiny per-(entity, bucket) summary table:
     *
     *  1. bucket = floor((t - tmin) / span), identical for both sides (the
-    *     [[Windows.timeBuckets]] layout `featuresSkewSafe` shares);
-    *  2. within each (entity, bucket): the normal union-tag window finds the
-    *     latest event <= t *inside the probe's bucket*;
+    *     [[Windows.timeBuckets]] layout `featuresSkewSafe` shares), over the
+    *     times cast to long — the only long in the operator; a bucket is
+    *     monotone in time, so an event in an earlier bucket than a probe's
+    *     is strictly earlier than the probe;
+    *  2. within each (entity, bucket): [[join]]'s union-tag window finds the
+    *     latest event <= t *inside the probe's bucket*, at the time's full
+    *     precision;
     *  3. a per-(entity, bucket) "latest event" summary (|entities|·B rows,
     *     tiny) is prefix-scanned per entity so each probe bucket knows the
     *     latest event of ALL earlier buckets;
     *  4. result = within-bucket match, else the carried prefix match.
     *
-    * Semantically identical to [[join]] (asserted in AsOfSpec).
+    * Semantically identical to [[join]], schema included (asserted in
+    * AsOfSkewSpec).
     */
   def joinSkewSafe(
       probes: DataFrame,
@@ -70,84 +109,51 @@ object AsOf {
       eventTime: String,
       attach: Seq[String] = Nil,
       tie: Option[String] = None,
-      prefix: String = "asof_",
       timeBuckets: Int = 32,
       timeBounds: Option[(Long, Long)] = None): DataFrame = {
-    val attachCols = attachColumns(events, entity, eventTime, attach)
-
     val bucketOf = Windows.timeBuckets(
       probes.select(col(probeTime).cast("long").as("t"))
         .unionByName(events.select(col(eventTime).cast("long").as("t"))),
       timeBounds, timeBuckets)
+    val keys = Seq(entity, "__bkt")
+    val probesB = probes.withColumn("__bkt", bucketOf(col(probeTime)))
+    val tagged = tagEvents(events, Seq(col(entity), bucketOf(col(eventTime)).as("__bkt")),
+      entity, eventTime, probes.schema(probeTime).dataType, attach, tie)
 
-    val tieCol = tie.map(col).getOrElse(lit(0L)).cast("long")
-    // __origt keeps the event time in its ORIGINAL type (the long __t is for
-    // ordering/bucketing only) so the output schema and values are identical
-    // to [[join]]'s on timestamp-typed inputs
-    val evStruct = struct(
-      (col(eventTime).cast("long").as("__t") +: tieCol.as("__tie") +:
-        col(eventTime).as("__origt") +:
-        attachCols.map(c => col(c).as(prefix + c))): _*)
-    val ev = events.select(col(entity), bucketOf(col(eventTime)).as("__bkt"),
-      evStruct.as("__ev"))
+    // per-(entity, bucket) latest event in the window's (__t, __tie) order —
+    // |entities|·B rows, tiny
+    val summary = tagged.groupBy(keys.map(col): _*)
+      .agg(max_by(col("__ev"), struct(col("__t"), col("__tie"))).as("__c"))
 
-    // per-(entity, bucket) latest event — |entities|·B rows, tiny.
-    // max(struct) orders by (__t, __tie, ...) lexicographically = our tie rule
-    val summary = ev.groupBy(col(entity), col("__bkt")).agg(max(col("__ev")).as("__last"))
-
-    // for a probe in bucket k: latest event across all buckets < k = max of
-    // summary.__last over a RANGE frame ending at bucket value k-1 (range,
+    // for a probe in bucket k: the latest event of all buckets < k = the
+    // last summary row over a RANGE frame ending at bucket value k-1 (range,
     // not rows, so probe buckets with no summary row still see the carry)
-    val probeBuckets = probes.select(col(entity), bucketOf(col(probeTime)).as("__bkt"))
-      .distinct()
-    val sumU = summary.select(col(entity), col("__bkt"), lit(0).as("__side"),
-      col("__last").as("__c"))
-    val prbU = probeBuckets.select(col(entity), col("__bkt"), lit(1).as("__side"),
-      lit(null).cast(summary.schema("__last").dataType).as("__c"))
-    val probeCarry = sumU.unionByName(prbU)
-      .withColumn("__carriedIn", max(col("__c")).over(
+    val probeCarry = summary.withColumn("__side", lit(0))
+      .unionByName(probesB.select(keys.map(col): _*).distinct()
+        .withColumn("__side", lit(1)), allowMissingColumns = true)
+      .withColumn("__carriedIn", last(col("__c"), ignoreNulls = true).over(
         Window.partitionBy(col(entity)).orderBy(col("__bkt"))
           .rangeBetween(Window.unboundedPreceding, -1)))
       .where(col("__side") === 1)
       .select(col(entity), col("__bkt"), col("__carriedIn"))
 
-    // within-bucket as-of via the standard union-tag window on (entity, bkt)
-    val probeCols = probes.columns.toSeq
-    val evU = ev.select(
-      (Seq(col(entity), col("__bkt"), col("__ev")("__t").as("__t"),
-        lit(0).as("__side"), col("__ev")("__tie").as("__tie"), col("__ev").as("__evs")) ++
-        probeCols.filter(_ != entity).map(c =>
-          lit(null).cast(probes.schema(c).dataType).as(c))): _*)
-    val prU = probes.select(
-      (Seq(col(entity), bucketOf(col(probeTime)).as("__bkt"),
-        col(probeTime).cast("long").as("__t"), lit(1).as("__side"),
-        lit(Long.MaxValue).as("__tie"), lit(null).cast(ev.schema("__ev").dataType).as("__evs")) ++
-        probeCols.filter(_ != entity).map(col)): _*)
-    val wIn = Window.partitionBy(col(entity), col("__bkt"))
-      .orderBy(col("__t"), col("__side"), col("__tie"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = evU.unionByName(prU)
-      .withColumn("__inMatch", last(col("__evs"), ignoreNulls = true).over(wIn))
-      .where(col("__side") === 1)
-
-    val joined = within.join(probeCarry, Seq(entity, "__bkt"), "left")
-      .withColumn("__match", coalesce(col("__inMatch"), col("__carriedIn")))
-    val out = probeCols.map(col) ++ Seq(
-      col("__match")("__origt").as(prefix + "time")) ++
-      attachCols.map(c => col("__match")(prefix + c).as(prefix + c))
-    joined.select(out: _*)
+    matchWindow(probesB, tagged, keys, probeTime)
+      .join(probeCarry, keys, "left")
+      .withColumn("__match", coalesce(col("__match"), col("__carriedIn")))
+      .select(probes.columns.map(col) :+ col("__match.*"): _*)
   }
 
-  /** Left as-of join.
+  /** Left as-of join: the union-tag window partitioned by entity alone,
+    * with no bucket and no carry.
     *
     * @param probes   left side; one output row per probe row
-    * @param events   right side; columns in `attach` are carried over
+    * @param events   right side; columns in `attach` are carried over as
+    *                 `asof_<c>`, the event time as `asof_time`
     * @param entity   equality key column name (present on both sides)
     * @param probeTime probe-side time column (long or timestamp)
     * @param eventTime event-side time column (same type as probeTime)
     * @param attach   event-side columns to attach (default: all non-key)
     * @param tie      event-side tie-break column (greatest wins at equal t)
-    * @param prefix   prefix for attached columns (avoids collisions)
     */
   def join(
       probes: DataFrame,
@@ -156,35 +162,8 @@ object AsOf {
       probeTime: String,
       eventTime: String,
       attach: Seq[String] = Nil,
-      tie: Option[String] = None,
-      prefix: String = "asof_"): DataFrame = {
-    val attachCols = attachColumns(events, entity, eventTime, attach)
-    val probeCols = probes.columns.toSeq
-
-    // Unified schema: (entity, __t, __side, __tie, probe cols..., __ev struct)
-    val evStruct = struct(
-      (col(eventTime).as(prefix + "time") +: attachCols.map(c => col(c).as(prefix + c))): _*)
-    val eventsU = events.select(
-      (Seq(col(entity), col(eventTime).cast(probes.schema(probeTime).dataType).as("__t"),
-        lit(0).as("__side"),
-        tie.map(col).getOrElse(lit(0L)).cast("long").as("__tie"),
-        evStruct.as("__ev")) ++
-        probeCols.filter(_ != entity).map(c => lit(null).cast(probes.schema(c).dataType).as(c))): _*)
-    val probesU = probes.select(
-      (Seq(col(entity), col(probeTime).as("__t"), lit(1).as("__side"),
-        lit(Long.MaxValue).as("__tie"), lit(null).cast(eventsU.schema("__ev").dataType).as("__ev")) ++
-        probeCols.filter(_ != entity).map(col)): _*)
-
-    val w = Window.partitionBy(col(entity))
-      .orderBy(col("__t"), col("__side"), col("__tie"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val joined = eventsU.unionByName(probesU)
-      .withColumn("__match", last(col("__ev"), ignoreNulls = true).over(w))
-      .where(col("__side") === 1)
-
-    val out = probeCols.map(col) ++
-      ((prefix + "time") +: attachCols.map(prefix + _)).map(n => col("__match." + n).as(n))
-    joined.select(out: _*)
-  }
+      tie: Option[String] = None): DataFrame =
+    matchWindow(probes, tagEvents(events, Seq(col(entity)), entity, eventTime,
+        probes.schema(probeTime).dataType, attach, tie), Seq(entity), probeTime)
+      .select(probes.columns.map(col) :+ col("__match.*"): _*)
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 import graft.corpus.Rng
@@ -29,19 +29,23 @@ object Sampling {
     */
   def poissonMultiplicity(rate: Double, seed: Long): UserDefinedFunction = {
     require(rate > 0 && rate <= 30, s"rate $rate outside sane bootstrap range")
-    udf { (key: Long) =>
-      val u = Rng.double01(Rng.hash(seed, key, stream = 7L))
-      // inverse CDF: smallest m with CDF(m) >= u
-      var m = 0
-      var p = math.exp(-rate)
-      var cdf = p
-      while (cdf < u && m < 200) {
-        m += 1
-        p = p * rate / m
-        cdf += p
-      }
-      m
+    udf((key: Long) => poissonDraw(rate, seed, key))
+  }
+
+  /** The Poisson(rate) draw of row `key`: u = uniform01(hash(seed, key)),
+    * then the inverse CDF, the smallest m with CDF(m) >= u (capped at 200).
+    */
+  private def poissonDraw(rate: Double, seed: Long, key: Long): Int = {
+    val u = Rng.double01(Rng.hash(seed, key, stream = 7L))
+    var m = 0
+    var p = math.exp(-rate)
+    var cdf = p
+    while (cdf < u && m < 200) {
+      m += 1
+      p = p * rate / m
+      cdf += p
     }
+    m
   }
 
   /** Poisson-bootstrap resample: every input row annotated with its
@@ -80,24 +84,11 @@ object Sampling {
       when(col(classCol) <=> lit(c), lit(r)).otherwise(acc)
     }
     // per-class rate via a tiny literal CASE chain; the EXTRA-copy count
-    // comes from hash(seed, key) as in poissonBootstrap, inverse-CDF
-    // inlined per row; Poisson(0) is identically 0, so the majority class
-    // never branches into the loop
+    // is poissonBootstrap's draw from hash(seed, key); Poisson(0) is
+    // identically 0, so the majority class never branches into the loop
     val m = udf { (key: Long, rate: Double) =>
       val extra = rate - 1.0
-      if (extra <= 0.0) 1
-      else {
-        val u = Rng.double01(Rng.hash(seed, key, stream = 7L))
-        var k = 0
-        var p = math.exp(-extra)
-        var cdf = p
-        while (cdf < u && k < 200) {
-          k += 1
-          p = p * extra / k
-          cdf += p
-        }
-        1 + k
-      }
+      if (extra <= 0.0) 1 else 1 + poissonDraw(extra, seed, key)
     }
     df.withColumn("m", m(col(keyCol).cast("long"), rateCol))
   }
@@ -132,7 +123,6 @@ object Sampling {
         "class inside one partition; a class this size is fact-scale — use " +
         "stratifiedSplitHash (pure map, fraction concentrates to p) or " +
         "raise maxClassRows deliberately.")
-    import org.apache.spark.sql.expressions.Window
     val cls = Window.partitionBy(col(classCol))
     val w = cls.orderBy(col("__h"), col(keyCol))
     df.withColumn("__h", xxhash64(lit(seed), col(keyCol)))
@@ -157,10 +147,15 @@ object Sampling {
         < lit(math.round(p * 1000000.0)))
   }
 
-  /** Canonical intra-stratum sampling order for the token-budget samplers:
-    * (hash, key). The skew-safe variant additionally range-buckets on the
-    * hash's high 32 bits — a MONOTONE non-decreasing function of the hash,
-    * so sorting (bucket, hash, key) is the SAME total order as (hash, key)
+  /** The hash of the token-budget samplers' canonical intra-stratum
+    * sampling order, (hash, key).
+    */
+  private def budgetHash(keyCol: String, seed: Long): Column =
+    xxhash64(lit(seed), col(keyCol))
+
+  /** [[budgetHash]] and the skew-safe variant's range bucket on the hash's
+    * high 32 bits — a MONOTONE non-decreasing function of the hash, so
+    * sorting (bucket, hash, key) is the SAME total order as (hash, key)
     * for EVERY bucket count: `nBuckets` is a pure parallelism knob that
     * cannot change which documents are sampled.
     */
@@ -168,7 +163,7 @@ object Sampling {
       : (Column, Column) = {
     require(nBuckets > 0 && nBuckets <= (1 << 30),
       s"budgetOrder: nBuckets=$nBuckets out of (0, 2^30]")
-    val h = xxhash64(lit(seed), col(keyCol))
+    val h = budgetHash(keyCol, seed)
     // high 32 bits shifted into [0, 2^32), then scaled to [0, nBuckets):
     // exact long arithmetic (hi < 2^32, nBuckets <= 2^30 => no overflow)
     val hi = shiftright(h, 32) + lit(2147483648L)
@@ -196,7 +191,7 @@ object Sampling {
     * [[tokenBudgetSampleSkewSafe]], which is bit-equal by construction.
     */
   def tokenBudgetSample(df: DataFrame, strata: Seq[String], keyCol: String,
-      tokens: Column, budget: Column, seed: Long = 42L, nBuckets: Int = 64,
+      tokens: Column, budget: Column, seed: Long = 42L,
       maxStratumRows: Long = 50000000L): DataFrame = {
     require(strata.nonEmpty, "tokenBudgetSample: empty strata")
     val maxRow = df.groupBy(strata.map(col): _*).count()
@@ -208,15 +203,9 @@ object Sampling {
         "each stratum in one partition; at this size use " +
         "tokenBudgetSampleSkewSafe (bit-equal two-phase prefix sum) or " +
         "raise maxStratumRows deliberately.")
-    import org.apache.spark.sql.expressions.Window
-    val (h, _) = budgetOrder(keyCol, seed, nBuckets)
-    val w = Window.partitionBy(strata.map(col): _*)
-      .orderBy(col("__h"), col(keyCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    df.withColumn("__h", h)
+    df.withColumn("__h", budgetHash(keyCol, seed))
       .withColumn("n_tokens", tokens.cast("long"))
-      .withColumn("cum_before",
-        coalesce(sum(col("n_tokens")).over(w), lit(0L)))
+      .withColumn("cum_before", exclusivePrefix(strata.map(col), keyCol))
       .withColumn("kept", col("cum_before") < budget)
       .select((df.columns.toSeq ++ Seq("n_tokens", "cum_before", "kept"))
         .map(col): _*)
@@ -254,7 +243,6 @@ object Sampling {
     */
   private def bucketedPrefixSum(df: DataFrame, strata: Seq[String], keyCol: String,
       tokens: Column, seed: Long, nBuckets: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (h, b) = budgetOrder(keyCol, seed, nBuckets)
     val ann = df.withColumn("__h", h).withColumn("__b", b)
       .withColumn("n_tokens", tokens.cast("long"))
@@ -267,10 +255,6 @@ object Sampling {
     val offsets = bucketSums
       .withColumn("__off", coalesce(sum(col("__bs")).over(offW), lit(0L)))
       .drop("__bs")
-    val inBucketW = Window
-      .partitionBy((strata.map(col) :+ col("__b")): _*)
-      .orderBy(col("__h"), col(keyCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
     // null-safe offsets join: a null stratum is a stratum (the plain form's
     // window partitions it; a usingColumns equi-join would silently DROP it)
     val offsetsR = offsets.select(
@@ -282,8 +266,17 @@ object Sampling {
     ann
       .join(broadcast(offsetsR), joinCond)
       .withColumn("cum_before",
-        col("__off") + coalesce(sum(col("n_tokens")).over(inBucketW), lit(0L)))
+        col("__off") + exclusivePrefix(strata.map(col) :+ col("__b"), keyCol))
   }
+
+  /** The exclusive prefix sum of `n_tokens` in (`__h`, key) order within
+    * `parts`: the whole answer of [[tokenBudgetSample]] (parts = strata)
+    * and the in-bucket half of [[bucketedPrefixSum]] (strata and bucket).
+    */
+  private def exclusivePrefix(parts: Seq[Column], keyCol: String): Column =
+    coalesce(sum(col("n_tokens")).over(Window.partitionBy(parts: _*)
+      .orderBy(col("__h"), col(keyCol))
+      .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
 
   /** Sequence packing — the GPT-style "concatenate and chunk" pretraining
     * data layout: documents are laid end-to-end in the deterministic

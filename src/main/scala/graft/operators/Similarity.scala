@@ -37,6 +37,13 @@ object Similarity {
     }
   }
 
+  /** Each query's top `k` of the scored (qid, cid, cos) rows: `rk` by
+    * cosine descending, ties to the smaller corpus id. */
+  private def topKPerQuery(scored: DataFrame, qid: String, cid: String, k: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(
+      Window.partitionBy(col(qid)).orderBy(col("cos").desc, col(cid).asc)))
+      .where(col("rk") <= k)
+
   /** Exact top-k cosine neighbors of each query vector (brute force).
     * Query side is broadcast (queries are few); the corpus is never
     * shuffled — each partition scores its rows, then a top-k per query
@@ -47,8 +54,7 @@ object Similarity {
     val scored = corpus.crossJoin(broadcast(queries))
       .select(col(qid), col(cid),
         round(cosineFast(col(qvec), col(cvec)), 6).as("cos"))
-    val w = Window.partitionBy(col(qid)).orderBy(col("cos").desc, col(cid).asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    topKPerQuery(scored, qid, cid, k)
   }
 
   /** Deterministic weights of hyperplane `p` (shared by both formulations
@@ -107,8 +113,7 @@ object Similarity {
     val scored = qb.join(cb, Seq("__bucket"))
       .select(col(qid), col(cid), round(cosineFast(col(qvec), col(cvec)), 6).as("cos"))
       .groupBy(qid, cid).agg(max("cos").as("cos"))
-    val w = Window.partitionBy(col(qid)).orderBy(col("cos").desc, col(cid).asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    topKPerQuery(scored, qid, cid, k)
   }
 
   /** IVF-style (inverted-file) ANN: the corpus is coarsely partitioned into
@@ -141,8 +146,7 @@ object Similarity {
       .select(col(qid), col(cid),
         round(cosineFast(col(qvec), col(cvec)), 6).as("cos"))
       .groupBy(qid, cid).agg(max("cos").as("cos"))
-    val w = Window.partitionBy(col(qid)).orderBy(col("cos").desc, col(cid).asc)
-    scored.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
+    topKPerQuery(scored, qid, cid, k)
   }
 
   /** Deterministic spherical k-means (Lloyd) over an embedding column — the

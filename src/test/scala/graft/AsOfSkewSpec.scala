@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.{Corpus, Rng}
@@ -16,9 +17,10 @@ class AsOfSkewSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def canon(df: org.apache.spark.sql.DataFrame): Set[String] =
+  /** Every row as JSON (all columns, full precision), sorted: a multiset. */
+  private def canon(df: DataFrame): Seq[String] =
     df.select(to_json(struct(df.columns.sorted.map(col): _*)))
-      .collect().map(_.getString(0)).toSet
+      .collect().map(_.getString(0)).toSeq.sorted
 
   test("skew-safe as-of equals plain as-of on the hot-entity corpus") {
     val p = Corpus.Params(rows = 3000, entities = 8) // e00000 very hot
@@ -47,24 +49,36 @@ class AsOfSkewSpec extends AnyFunSuite {
         ("e" + Rng.int(Rng.hash(seed, 3000 + j), 4), // incl. entity w/o events
           (90L + Rng.int(Rng.hash(seed, 4000 + j), 80)))
       }
-      (s"trial $trial", events, probes)
+      (s"trial $trial", events, probes, false)
     }
     // both sides empty, no timeBounds: the bounds scan aggregates to nulls
     val empty = ("empty", Seq.empty[(String, Long, Long, Double)],
-      Seq.empty[(String, Long)])
-    for ((name, events, probes) <- random :+ empty) {
-      val evDf = events.toDF("entity_id", "event_ms", "seq", "v")
-      val prDf = probes.toDF("entity_id", "probe_ms")
+      Seq.empty[(String, Long)], false)
+    // timestamp times, many events and probes inside each of 3 seconds at
+    // sub-second offsets, seq unordered in time: the window and the carry
+    // must order at the timestamp's full precision, not by whole seconds
+    val subSecond = ("timestamp sub-second",
+      (0 until 60).map { i =>
+        ("e" + Rng.int(Rng.hash(900L, i), 2),
+          1704067200000L + Rng.int(Rng.hash(900L, 1000 + i), 3000),
+          Rng.int(Rng.hash(900L, 2000 + i), 1000000).toLong,
+          Rng.double01(Rng.hash(900L, 3000 + i)))
+      },
+      (0 until 40).map { j =>
+        ("e" + Rng.int(Rng.hash(900L, 4000 + j), 3),
+          1704067200000L + Rng.int(Rng.hash(900L, 5000 + j), 3000))
+      }, true)
+    for ((name, events, probes, ts) <- random :+ empty :+ subSecond) {
+      def time(df: DataFrame, c: String) =
+        if (ts) df.withColumn(c, timestamp_millis(col(c))) else df
+      val evDf = time(events.toDF("entity_id", "event_ms", "seq", "v"), "event_ms")
+      val prDf = time(probes.toDF("entity_id", "probe_ms"), "probe_ms")
       val plain = AsOf.join(prDf, evDf, "entity_id", "probe_ms", "event_ms",
         tie = Some("seq"))
       val safe = AsOf.joinSkewSafe(prDf, evDf, "entity_id", "probe_ms", "event_ms",
         tie = Some("seq"), timeBuckets = 7)
       assert(safe.schema == plain.schema, s"$name schema")
-      assert(canon(plain.select(col("entity_id"), col("probe_ms"),
-          col("asof_time").cast("long").as("t"), col("asof_v"), col("asof_seq"))) ==
-        canon(safe.select(col("entity_id"), col("probe_ms"),
-          col("asof_time").cast("long").as("t"), col("asof_v"), col("asof_seq"))),
-        s"$name mismatch")
+      assert(canon(safe) == canon(plain), s"$name mismatch")
     }
   }
 

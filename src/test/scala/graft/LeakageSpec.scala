@@ -72,13 +72,6 @@ class LeakageSpec extends AnyFunSuite {
       }
       val evDf = events.toDF("entity_id", "event_ms", "seq", "v")
       val prDf = probes.toDF("entity_id", "probe_ms")
-      def run(df: DataFrame): Map[(String, Long), String] =
-        AsOf.join(prDf, df, "entity_id", "probe_ms", "event_ms", tie = Some("seq"))
-          .select(col("entity_id"), col("probe_ms"),
-            to_json(struct(col("asof_time"), col("asof_v"))).as("j"))
-          .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getString(2)).toMap
-      val base = run(evDf)
-
       // mutate every event strictly after the max probe time of its entity:
       // results for ALL probes must be identical
       val probeMax = probes.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
@@ -89,10 +82,22 @@ class LeakageSpec extends AnyFunSuite {
       val dropped = events.filter { case (e, t, _, _) =>
         t <= probeMax.getOrElse(e, Long.MaxValue)
       }
-      assert(run(mutated.toDF("entity_id", "event_ms", "seq", "v")) == base,
-        s"trial $trial: mutation of strictly-future events changed probe results")
-      assert(run(dropped.toDF("entity_id", "event_ms", "seq", "v")) == base,
-        s"trial $trial: deletion of strictly-future events changed probe results")
+      // both forms; the skew-safe one's bucket bounds move with the events
+      for ((form, asOf) <- Seq[(String, DataFrame => DataFrame)](
+          "join" -> (AsOf.join(prDf, _, "entity_id", "probe_ms", "event_ms",
+            tie = Some("seq"))),
+          "joinSkewSafe" -> (AsOf.joinSkewSafe(prDf, _, "entity_id", "probe_ms",
+            "event_ms", tie = Some("seq"), timeBuckets = 4)))) {
+        def run(df: DataFrame): Map[(String, Long), String] =
+          asOf(df).select(col("entity_id"), col("probe_ms"),
+              to_json(struct(col("asof_time"), col("asof_v"))).as("j"))
+            .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getString(2)).toMap
+        val base = run(evDf)
+        assert(run(mutated.toDF("entity_id", "event_ms", "seq", "v")) == base,
+          s"$form trial $trial: mutation of strictly-future events changed probe results")
+        assert(run(dropped.toDF("entity_id", "event_ms", "seq", "v")) == base,
+          s"$form trial $trial: deletion of strictly-future events changed probe results")
+      }
     }
   }
 }

@@ -16,14 +16,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.functions.HouseRound`: a copy of its epsilon that misses a change
   * flips rare rows on one engine only. How a skew-safe operator splits
   * time into buckets is decided once, in `graft.operators.Windows`: the
-  * as-of join and the feature pipeline must agree on it. And no source
-  * holds a raw control byte other than '\n': editors and diffs do not
-  * show it, so a fixture or comparison with one reads as something else
-  * (write the escape, e.g. "\u000B"). And the operator, feature, corpus
-  * and function objects keep only public names a query, the pipeline, a
-  * bench or perfbench runs: a name only specs call is a reference twin and
-  * lives in src/test (`KernelTwins`, `FeatureTwins`, the spec objects), and
-  * a name nothing calls is deleted.
+  * as-of join and the feature pipeline must agree on it. The as-of join's
+  * union-tag window, ordered by (__t, __side, __tie), is written once, in
+  * `graft.operators.AsOf`: its plain and skew-safe forms must attach the
+  * same event. And no source holds a raw control byte other than '\n':
+  * editors and diffs do not show it, so a fixture or comparison with one
+  * reads as something else (write the escape, e.g. "\u000B"). And the
+  * operator, feature, corpus and function objects keep only public names a
+  * query, the pipeline, a bench or perfbench runs: a name only specs call
+  * is a reference twin and lives in src/test (`KernelTwins`,
+  * `FeatureTwins`, the spec objects), and a name nothing calls is deleted.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -45,13 +47,17 @@ class SourceRulesSpec extends AnyFunSuite {
     * whichever way its backslashes are escaped. */
   private val oracleTokenizer = """string_split_regex\(.*\\+s(?:\\+v\])?\+""".r
 
-  /** Every line of a src/main file other than `home` that a pattern finds. */
-  private def hitsOutside(home: Path, patterns: scala.util.matching.Regex*): Seq[String] =
+  /** Every line of a src/main file that a pattern finds, as `file:n: line`. */
+  private def hits(patterns: scala.util.matching.Regex*): Seq[String] =
     for {
-      f <- scalaFiles("src/main/scala") if f != home
+      f <- scalaFiles("src/main/scala")
       (line, i) <- Files.readAllLines(f, StandardCharsets.UTF_8).asScala.zipWithIndex
       if patterns.exists(_.findFirstIn(line).nonEmpty)
     } yield s"$f:${i + 1}: ${line.trim}"
+
+  /** [[hits]] outside the file `home`. */
+  private def hitsOutside(home: Path, patterns: scala.util.matching.Regex*): Seq[String] =
+    hits(patterns: _*).filterNot(_.startsWith(s"$home:"))
 
   test("the whitespace class and the seed-42 token hash are written only in Text") {
     val hits = hitsOutside(tokenizerHome, wsComparison, seed42Hash, oracleTokenizer)
@@ -72,6 +78,12 @@ class SourceRulesSpec extends AnyFunSuite {
     val hits = hitsOutside(home, """\(\s*hi\s*-\s*lo\s*\)\s*/|/\s*lit\(\s*span\s*\)""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
     assert(Files.exists(home))
+  }
+
+  test("the as-of union-tag ordering (__t, __side, __tie) is written once") {
+    val found = hits("""col\("__t"\)\s*,\s*col\("__side"\)\s*,\s*col\("__tie"\)""".r)
+    assert(found.size == 1, found.mkString("\n"))
+    assert(found.head.startsWith("src/main/scala/graft/operators/AsOf.scala:"), found.head)
   }
 
   /** A public member of a top-level object: 2-space indent, no modifier. */
