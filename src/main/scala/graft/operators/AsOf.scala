@@ -44,6 +44,9 @@ object AsOf {
     * `__side` 0, `__tie`, and `__ev`, the one event struct: `asof_time`
     * (the event time in its own type), then `asof_<c>` per attach column
     * (`attach`, or by default every event column but the key and the time).
+    * An event whose time is null is dropped: it is at no point in time, so
+    * it attaches to no probe, and a null-time probe, which sorts first,
+    * matches nothing (DuckDB's `ASOF LEFT JOIN` semantics).
     */
   private def tagEvents(events: DataFrame, keys: Seq[Column], entity: String,
       eventTime: String, timeType: DataType, attach: Seq[String],
@@ -51,7 +54,7 @@ object AsOf {
     val attachCols =
       if (attach.nonEmpty) attach
       else events.columns.filter(c => c != entity && c != eventTime).toSeq
-    events.select((keys ++ Seq(col(eventTime).cast(timeType).as("__t"), lit(0).as("__side"),
+    events.where(col(eventTime).isNotNull).select((keys ++ Seq(col(eventTime).cast(timeType).as("__t"), lit(0).as("__side"),
       tie.map(col).getOrElse(lit(0L)).cast("long").as("__tie"),
       struct((col(eventTime).as("asof_time") +:
         attachCols.map(c => col(c).as("asof_" + c))): _*).as("__ev"))): _*)

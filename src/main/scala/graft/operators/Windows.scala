@@ -18,10 +18,13 @@ object Windows {
 
   /** The fixed-width time-bucket layout of the skew-safe operators
     * ([[AsOf.joinSkewSafe]], `FeaturePipeline.featuresSkewSafe`): the int
-    * bucket `(t - lo) / span` of a time column, [lo, hi] in `buckets`
-    * buckets. `bounds` is the caller's known time range (at 100 TB the
-    * partition metadata has it); else ONE min/max over `times`, a single
-    * long column, where empty input gives (0, 0) (any bounds work then).
+    * bucket `(t - lo) div span` of a time column, [lo, hi] in `buckets`
+    * buckets — an exact long division, truncating toward zero, so a time
+    * just below a caller's `lo` shares bucket 0; the bucket stays monotone
+    * in time, which is all the carry needs. `bounds` is the caller's known
+    * time range (at 100 TB the partition metadata has it); else ONE
+    * min/max over `times`, a single long column, where empty input gives
+    * (0, 0) (any bounds work then).
     */
   def timeBuckets(times: => DataFrame, bounds: Option[(Long, Long)],
       buckets: Int): Column => Column = {
@@ -32,7 +35,7 @@ object Windows {
       if (b.isNullAt(0)) (0L, 0L) else (b.getLong(0), b.getLong(1))
     }
     val span = math.max(1L, (hi - lo) / buckets + 1L)
-    t => ((t.cast("long") - lit(lo)) / lit(span)).cast("int")
+    t => call_function("div", t.cast("long") - lit(lo), lit(span)).cast("int")
   }
 
   /** Gap-based sessionization: a new session starts when the gap since the

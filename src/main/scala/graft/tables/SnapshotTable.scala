@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.core.JacksonException
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Iceberg-shaped table layout: partitioned Parquet + JSON snapshot metadata
   * with per-partition lineage manifests and an atomically-swapped pointer.
@@ -76,6 +77,20 @@ object SnapshotTable {
         r.getInt(0)
       }.toSet
 
+  /** The bucket ids of a null-free key list already on the driver, with no
+    * Spark job: the bucket expression over the keys' LocalRelation is folded
+    * on the driver (ConvertToLocalRelation), and the dedupe is Scala's.
+    */
+  private def keyBuckets[T](spark: SparkSession, keys: Seq[T], snap: Snapshot,
+      what: String)(implicit enc: org.apache.spark.sql.Encoder[T]): Set[Int] = {
+    val keyDf = spark.createDataset(keys).toDF(snap.entityCol)
+    // a mistyped key hashes to the WRONG bucket (e.g. Long 5 vs the table's
+    // string "5") and silently misses its rows — fail fast instead
+    requireTypesMatch(snap, keyDf, what)
+    keyDf.select(bucketExpr(snap.entityCol, snap.nbuckets)).collect()
+      .map(_.getInt(0)).toSet
+  }
+
   /** One SLICE of a bucket's data: a directory of parquet files plus its
     * lineage stats. A bucket may have several slices (initial load + each
     * appended delta — Iceberg's manifest-lists-files shape); the bucket's
@@ -91,20 +106,14 @@ object SnapshotTable {
     */
   final case class BucketManifest(bucket: Int, dir: String, rows: Long,
       watermark: Long, digest: Long, tmin: Long)
-  /** `mixedSchema`: true once any slice was written under an older (pre-
-    * additive-evolution) column set; read paths pay parquet schema-merging
-    * (a footer read per file at planning) ONLY then — the homogeneous
-    * common case keeps single-footer schema inference. A full [[commit]]
-    * resets it (every slice rewritten under one schema).
-    */
+  /** One snapshot's manifest: the whole input of read planning. */
   final case class Snapshot(id: Long, parent: Long,
       entityCol: String, timeCol: String, nbuckets: Int, batchId: Long,
       columns: Seq[String], buckets: Seq[BucketManifest],
-      mixedSchema: Boolean,
-      /** Typed schema (Spark DDL) — lets a mixed-schema read pad columns a
-        * pre-evolution slice lacks with correctly-TYPED nulls even when no
-        * slice in the scan carries them (a pruned point lookup may touch
-        * only old slices).
+      /** Typed schema (Spark DDL, columns in `columns` order) — every read
+        * scans with it, so no parquet footer is read at planning, and a
+        * slice written before an additive evolution reads the newer columns
+        * as correctly-TYPED nulls.
         */
       schemaDdl: String) {
     /** Per-bucket folded (rows, watermark, digest) over slices. */
@@ -203,7 +212,7 @@ object SnapshotTable {
   }
 
   /** Per-bucket (rows, watermark, digest, tmin) aggregate of a frame that
-    * already carries [[BucketCol]] — the only data scan a commit performs.
+    * already carries [[BucketCol]].
     *
     * to_json renders timestamps in the SESSION timezone by default, which
     * would make the same content digest differently across heterogeneously-
@@ -233,6 +242,25 @@ object SnapshotTable {
       }
       .toMap
   }
+
+  /** The slices a write staged under `stage`, with stats from ONE scan of
+    * the stage itself, read with `schema` plus the int [[BucketCol]] (so
+    * it infers no schema either): the input that produced the stage is
+    * never evaluated a second time. A stage with no bucket dir (nothing was
+    * written) is deleted. A null entity key (staged under a null bucket)
+    * deletes the stage and fails here, before anything is published.
+    */
+  private def stagedSlices(spark: SparkSession, stage: Path, schema: StructType,
+      timeCol: String): Map[Int, BucketManifest] =
+    if (!children(stage).exists(_.getFileName.toString.startsWith(s"$BucketCol="))) {
+      deleteRecursively(stage)
+      Map.empty
+    } else
+      try bucketStats(
+          spark.read.schema(schema.add(BucketCol, IntegerType)).parquet(stage.toString),
+          schema.fieldNames.toSeq, timeCol)
+        .map { case (k, st) => k -> sliceOf(stage, k, st) }
+      catch { case e: IllegalArgumentException => deleteRecursively(stage); throw e }
 
   private val stageCounter = new java.util.concurrent.atomic.AtomicLong
 
@@ -317,7 +345,7 @@ object SnapshotTable {
     * columns, never mutate one.
     */
   private def requireTypesMatch(p: Snapshot, df: DataFrame, what: String): Unit = {
-    val recorded = org.apache.spark.sql.types.StructType.fromDDL(p.schemaDdl)
+    val recorded = StructType.fromDDL(p.schemaDdl)
       .fields.map(f => f.name -> f.dataType).toMap
     df.schema.fields.foreach { f =>
       recorded.get(f.name).foreach { t =>
@@ -391,20 +419,15 @@ object SnapshotTable {
         val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, st) =>
           if (changed.contains(k)) Seq(sliceOf(stage, k, st)) else parentSlices(k)
         }
-        // slices can disagree on schema only if some parent slice was CARRIED
-        // (resume path) and either the parent already mixed or this commit
-        // changed the column set; a full rewrite (changed == all) clears it
-        val mixed = changed.size < man.size &&
-          parent.exists(p => p.mixedSchema || p.columns != cols)
         publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
-          entityCol, timeCol, buckets, batchId, cols, newBuckets, mixed,
-          sortedDdl(df0)))
+          entityCol, timeCol, buckets, batchId, cols, newBuckets, sortedDdl(df0)))
       }
     }
   }
 
-  /** APPEND `delta` as a new snapshot costing O(delta): only the delta is
-    * scanned, hashed and written (one new slice per touched bucket); every
+  /** APPEND `delta` as a new snapshot costing O(delta): the delta is
+    * evaluated once, by the write that stages it (one new slice per touched
+    * bucket), and only that staged slice is scanned and hashed; every
     * parent slice is carried over verbatim and the folded per-bucket
     * manifests update arithmetically (rows: +, watermark: max, digest: xor)
     * — byte-identical to what a full recompute over parent ∪ delta would
@@ -431,22 +454,19 @@ object SnapshotTable {
   def commitDelta(delta: DataFrame, root: String, entityCol: String,
       timeCol: String, buckets: Int = 16, batchId: Long = -1L,
       evolveSchema: Boolean = false): Long = {
-    val df = delta.withColumn(BucketCol, bucketExpr(entityCol, buckets))
     val deltaCols = delta.columns.sorted.toSeq
-    // the delta's slices are PARENT-INDEPENDENT: scanned and staged at most
-    // once, then reused verbatim across optimistic retries (only the
+    // the delta's slices are PARENT-INDEPENDENT: the delta is evaluated
+    // ONCE, by the staging write, and its slices (stats from the staged
+    // parquet) are reused verbatim across optimistic retries (only the
     // manifest's id/parent change when a concurrent writer wins a claim)
     var staged: Option[Seq[BucketManifest]] = None
     def slices(newIdHint: Long): Seq[BucketManifest] = staged.getOrElse {
-      val man = bucketStats(df, delta.columns.toSeq, timeCol)
-      val ss =
-        if (man.isEmpty) Seq.empty
-        else {
-          val stage = newStage(root, newIdHint)
-          df.sortWithinPartitions(col(entityCol), col(timeCol))
-            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-          man.toSeq.sortBy(_._1).map { case (k, st) => sliceOf(stage, k, st) }
-        }
+      val stage = newStage(root, newIdHint)
+      delta.withColumn(BucketCol, bucketExpr(entityCol, buckets))
+        .sortWithinPartitions(col(entityCol), col(timeCol))
+        .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+      val ss = stagedSlices(delta.sparkSession, stage, delta.schema, timeCol)
+        .values.toSeq.sortBy(_.bucket)
       staged = Some(ss)
       ss
     }
@@ -459,7 +479,7 @@ object SnapshotTable {
           // commit here would retry with overwrite semantics and erase the
           // winner's rows)
           publish(root, Snapshot(0L, -1L, entityCol, timeCol, buckets,
-            batchId, deltaCols, slices(0L), false, sortedDdl(delta)))
+            batchId, deltaCols, slices(0L), sortedDdl(delta)))
         case Some(p) if batchId >= 0 && p.batchId == batchId => Some(p.id)
         case Some(p) =>
           requireLayout(p, root, entityCol, timeCol, buckets)
@@ -476,10 +496,9 @@ object SnapshotTable {
           if (ds.isEmpty) Some(p.id) // empty delta: nothing to commit
           else
             // the delta's DDL: equal on a plain append, WIDENED under
-            // evolution, which is exactly what mixed reads must pad to
+            // evolution, which is exactly what reads of older slices pad to
             publish(root, Snapshot(p.id + 1, p.id, entityCol, timeCol, buckets,
-              batchId, deltaCols, p.buckets ++ ds,
-              p.mixedSchema || p.columns != deltaCols, sortedDdl(delta)))
+              batchId, deltaCols, p.buckets ++ ds, sortedDdl(delta)))
       }
     }
   }
@@ -497,21 +516,14 @@ object SnapshotTable {
     content.repartition(math.max(1, touched.size), col(BucketCol))
       .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
       .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-    // an all-rows-deleted stage has no bucket dirs to scan
-    val stats =
-      if (children(stage).exists(_.getFileName.toString.startsWith(s"$BucketCol=")))
-        bucketStats(content.sparkSession.read.parquet(stage.toString), p.columns, p.timeCol)
-      else Map.empty[Int, Stats]
+    val staged = stagedSlices(content.sparkSession, stage,
+      StructType.fromDDL(p.schemaDdl), p.timeCol)
     val bySlices = p.buckets.groupBy(_.bucket)
     val newBuckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
-      if (touched.contains(k)) stats.get(k).map(sliceOf(stage, k, _)).toSeq
-      else bySlices(k)
+      if (touched.contains(k)) staged.get(k).toSeq else bySlices(k)
     }
-    // touched buckets were rewritten on the full recorded schema (conform)
-    // — only untouched ones can still hold old-schema slices
-    val mixed = p.mixedSchema && bySlices.keySet.exists(!touched.contains(_))
     publish(root, p.copy(id = p.id + 1, parent = p.id, batchId = batchId,
-      buckets = newBuckets, mixedSchema = mixed))
+      buckets = newBuckets))
   }
 
   /** UPSERT `updates` by the table's (entity, time) key — Iceberg's MERGE
@@ -550,15 +562,12 @@ object SnapshotTable {
           else {
             val bySlices = p.buckets.groupBy(_.bucket)
             val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
-            // merged content of the touched buckets: surviving old rows + all
-            // updates (old side conformed so a pre-evolution slice can't drop
-            // the union schema)
-            val old = readSlices(spark, oldSlices, p.mixedSchema)
-              .map(conform(_, p)).getOrElse(df.limit(0))
-            val merged = old
+            // merged content of the touched buckets: surviving old rows (read
+            // on the recorded schema, old slices padded) + all updates
+            val merged = readSlices(spark, oldSlices, p)
               .join(df.select(col(entityCol), col(timeCol)).distinct(),
                 Seq(entityCol, timeCol), "left_anti")
-              .unionByName(df, allowMissingColumns = true)
+              .unionByName(df)
             // a maintenance upsert (no batchId) must CARRY the parent's
             // streaming replay marker, like compact does — overwriting it
             // with -1 would let a crash-replayed micro-batch re-append
@@ -585,18 +594,13 @@ object SnapshotTable {
       "commitDelete: keys must be a non-empty, null-free list")
     retrying("commitDelete", root) {
       val p = resolve(root, None)
-      val keyDf = spark.createDataset(keys).toDF(p.entityCol)
-      // a mistyped key prunes the WRONG buckets and the delete silently
-      // leaves the data in place — fail fast instead
-      requireTypesMatch(p, keyDf, "delete key")
-      val touched = bucketsOf(keyDf, p.entityCol, p.nbuckets)
+      val touched = keyBuckets(spark, keys, p, "delete key")
       val bySlices = p.buckets.groupBy(_.bucket)
       val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
       if (oldSlices.isEmpty) Some(p.id) // keys hash only into empty buckets
       else
         publishRewrite(root, p, touched,
-          readSlices(spark, oldSlices, p.mixedSchema).map(conform(_, p)).get
-            .filter(!col(p.entityCol).isInCollection(keys)),
+          readSlices(spark, oldSlices, p).filter(!col(p.entityCol).isInCollection(keys)),
           p.batchId)
     }
   }
@@ -622,14 +626,12 @@ object SnapshotTable {
         val stage = newStage(root, p.id + 1)
         val folded = p.folded
         // ONE job for all compacted buckets (not a driver loop of per-bucket
-        // jobs): union per bucket, one shuffle hash-partitioned by bucket,
-        // one sorted file per bucket out of partitionBy
-        readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.mixedSchema)
-          .foreach { df =>
-            df.repartition(toCompact.size, col(BucketCol))
-              .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
-              .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-          }
+        // jobs): one scan, one shuffle hash-partitioned by bucket, one sorted
+        // file per bucket out of partitionBy
+        readSlices(spark, toCompact.flatMap(k => bySlices(k)), p)
+          .repartition(toCompact.size, col(BucketCol))
+          .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
+          .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
         val newBuckets = bySlices.toSeq.sortBy(_._1).flatMap { case (k, ss) =>
           if (toCompact.contains(k)) {
             val (rows, wm, dg) = folded(k)
@@ -640,54 +642,36 @@ object SnapshotTable {
         }
         // batchId carries over: compaction must not defeat the replay-skip
         // of the delta commit it follows (a crash between them would
-        // otherwise re-append the batch on restart). mixedSchema carries
-        // too — UNCOMPACTED buckets may still hold pre-evolution slices
-        // (compacted ones are rewritten under the merged schema)
+        // otherwise re-append the batch on restart)
         publish(root, p.copy(id = p.id + 1, parent = p.id, buckets = newBuckets))
       }
     }
 
-  /** One multi-path scan per BUCKET (not per slice): the union tree is
-    * O(buckets) wide regardless of how many append slices accumulated, so
-    * the logical plan stays small under long append histories.
-    * `mixed` (from the snapshot's [[Snapshot.mixedSchema]]): slices written
-    * before an additive schema evolution lack the newer columns — parquet
-    * schema-merging + union-by-name-with-nulls reconciles them. That merge
-    * reads a footer per FILE at planning, so it is paid only when the
-    * manifest says slices can actually disagree; the homogeneous common
-    * case keeps single-footer schema inference.
+  /** ONE typed parquet scan over every kept slice, planned from the manifest
+    * alone: the recorded schema (no footer is read at planning, and a slice
+    * written before an additive evolution reads the newer columns as typed
+    * nulls), the slice dirs sorted by (bucket, dir), and [[BucketCol]]
+    * recomputed by [[bucketExpr]] — the expression every writer partitions
+    * by, and [[requireLayout]] pins it — so a caller that drops the column
+    * gets it pruned away. With no slice holding rows it is [[schemaOnly]].
+    * (Spark's file index still lists more than 32 dirs,
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`, in a job.)
     */
   private def readSlices(spark: SparkSession, slices: Seq[BucketManifest],
-      mixed: Boolean = false): Option[DataFrame] =
-    slices.filter(_.rows > 0).groupBy(_.bucket).toSeq.sortBy(_._1)
-      .map { case (k, ss) =>
-        val r = if (mixed) spark.read.option("mergeSchema", "true") else spark.read
-        r.parquet(ss.map(_.dir).distinct: _*).withColumn(BucketCol, lit(k))
-      }
-      .reduceOption(_.unionByName(_, allowMissingColumns = mixed))
-
-  /** Pad `df` with any recorded column it lacks, as typed nulls — a
-    * mixed-schema scan may have touched only pre-evolution slices (e.g. a
-    * pruned point lookup into a bucket whose slices all predate the
-    * evolution), leaving no slice to contribute the newer columns.
-    */
-  private def conform(df: DataFrame, snap: Snapshot): DataFrame =
-    if (!snap.mixedSchema) df
-    else {
-      val have = df.columns.toSet
-      org.apache.spark.sql.types.StructType.fromDDL(snap.schemaDdl).fields
-        .filterNot(f => have.contains(f.name))
-        .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    }
+      snap: Snapshot): DataFrame = {
+    val dirs = slices.filter(_.rows > 0).sortBy(b => (b.bucket, b.dir)).map(_.dir).distinct
+    if (dirs.isEmpty) schemaOnly(spark, snap)
+    else spark.read.schema(StructType.fromDDL(snap.schemaDdl)).parquet(dirs: _*)
+      .withColumn(BucketCol, bucketExpr(snap.entityCol, snap.nbuckets))
+  }
 
   /** Read the table at a snapshot (default: current). Reconstructs exactly
-    * the committed content, including the bucket column.
+    * the committed content: the recorded columns in the manifest's (sorted)
+    * order, then the bucket column.
     */
   def read(spark: SparkSession, root: String, id: Option[Long] = None): DataFrame = {
     val snap = resolve(root, id)
-    readSlices(spark, snap.buckets, snap.mixedSchema)
-      .map(conform(_, snap))
-      .getOrElse(spark.emptyDataFrame)
+    readSlices(spark, snap.buckets, snap)
   }
 
   /** Point-lookup read: opens ONLY the buckets that can hold `keys` —
@@ -696,7 +680,7 @@ object SnapshotTable {
     * so row-group stats prune within the touched slices too). At 10^12
     * rows a single-entity lookup reads 1/nbuckets of the data instead of
     * scanning the table; the bucket ids come from the same hash expression
-    * commits use, evaluated in a tiny local job over the key list.
+    * commits use, folded on the driver over the key list (no Spark job).
     *
     * `from`/`until` (inclusive, [[readRange]]'s semantics) additionally
     * skip slices whose [tmin, watermark] interval misses the window — the
@@ -713,18 +697,12 @@ object SnapshotTable {
       "readEntities: keys must be a non-empty, null-free list")
     requireWindow("readEntities", from, until)
     val snap = resolve(root, id)
-    val keyDf = spark.createDataset(keys).toDF(snap.entityCol)
-    // a mistyped key hashes to the WRONG bucket and silently returns
-    // nothing (e.g. Long 5 vs the table's string "5") — fail fast instead
-    requireTypesMatch(snap, keyDf, "lookup key")
-    val wanted = bucketsOf(keyDf, snap.entityCol, snap.nbuckets)
+    val wanted = keyBuckets(spark, keys, snap, "lookup key")
     val keep = snap.buckets.filter(b =>
       wanted.contains(b.bucket) && sliceInWindow(b, from, until))
     val pred = (Seq(col(snap.entityCol).isInCollection(keys)) ++
       windowPredicates(snap.timeCol, from, until)).reduce(_ && _)
-    // keys may hash to buckets that never held rows: keep the schema
-    conform(readSlices(spark, keep, snap.mixedSchema)
-      .getOrElse(schemaOnly(spark, snap)), snap).filter(pred)
+    readSlices(spark, keep, snap).filter(pred)
   }
 
   /** Can this slice's [tmin, watermark] stats interval intersect the
@@ -756,10 +734,8 @@ object SnapshotTable {
     * with zero I/O.
     */
   private def schemaOnly(spark: SparkSession, snap: Snapshot): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(snap.schemaDdl)
-        .add(BucketCol, org.apache.spark.sql.types.IntegerType))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType.fromDDL(snap.schemaDdl).add(BucketCol, IntegerType))
 
   /** Time-range read (bounds inclusive, in the long unit the manifests
     * record): opens ONLY the slices whose stats interval [tmin, watermark]
@@ -786,8 +762,7 @@ object SnapshotTable {
     val snap = resolve(root, id)
     val keep = snap.buckets.filter(sliceInWindow(_, from, until))
     val pred = windowPredicates(snap.timeCol, from, until).reduce(_ && _)
-    conform(readSlices(spark, keep, snap.mixedSchema)
-      .getOrElse(schemaOnly(spark, snap)), snap).filter(pred)
+    readSlices(spark, keep, snap).filter(pred)
   }
 
   /** Read ONLY the rows appended between `fromId` (exclusive) and `toId`
@@ -806,10 +781,7 @@ object SnapshotTable {
     require(fromDirs.subsetOf(to.buckets.map(_.dir).toSet),
       s"snapshot $fromId's slices were compacted away after id ${from.id}; " +
         "incremental read is only valid across append-only history")
-    readSlices(spark, to.buckets.filterNot(b => fromDirs.contains(b.dir)),
-        to.mixedSchema)
-      .map(conform(_, to))
-      .getOrElse(read(spark, root, Some(to.id)).limit(0))
+    readSlices(spark, to.buckets.filterNot(b => fromDirs.contains(b.dir)), to)
   }
 
   /** Expire snapshots with id < `keepFrom`: delete their manifest files and

@@ -82,6 +82,24 @@ class AsOfSkewSpec extends AnyFunSuite {
     }
   }
 
+  test("a null time matches nothing: null-time events attach to no probe, in both forms") {
+    val ev = Seq(("a", Option(100L), 0L), ("a", Option.empty[Long], 1L),
+      ("a", Option(300L), 2L), ("b", Option.empty[Long], 3L))
+      .toDF("entity_id", "event_ms", "seq")
+    val pr = Seq(("a", Option(50L)), ("a", Option(200L)), ("a", Option.empty[Long]),
+      ("b", Option(10L)), ("b", Option.empty[Long])).toDF("entity_id", "probe_ms")
+    // DuckDB's ASOF LEFT JOIN: only a@200 finds an event (a@100, seq 0)
+    val want = Set(("a", Option(50L), None), ("a", Option(200L), Some(0L)),
+      ("a", None, None), ("b", Option(10L), None), ("b", None, None))
+    def got(df: DataFrame) = df.select("entity_id", "probe_ms", "asof_seq").collect()
+      .map(r => (r.getString(0), Option(r.getAs[Any](1)).map(_.asInstanceOf[Long]),
+        Option(r.getAs[Any](2)).map(_.asInstanceOf[Long]))).toSet
+    assert(got(AsOf.join(pr, ev, "entity_id", "probe_ms", "event_ms",
+      tie = Some("seq"))) == want, "join")
+    assert(got(AsOf.joinSkewSafe(pr, ev, "entity_id", "probe_ms", "event_ms",
+      tie = Some("seq"), timeBuckets = 4)) == want, "joinSkewSafe")
+  }
+
   test("skew-safe window partitions by (entity, bucket), not entity alone") {
     val p = Corpus.Params(rows = 2000, entities = 4)
     val ev = Corpus.events(spark, p).select("entity_id", "event_ms", "seq", "phash")

@@ -133,8 +133,9 @@ class SnapshotTableSpec extends AnyFunSuite {
         last = read.get(); Thread.sleep(100); spins += 1
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    // the delta (400 rows) is scanned twice (stats + write); the 3600-row
-    // base must NOT be re-read — that was the O(history) scale-killer
+    // the delta (400 rows) is read once, by the staging write, and its stats
+    // come from one scan of the staged 400-row slice; the 3600-row base
+    // must NOT be re-read — that was the O(history) scale-killer
     assert(read.get() >= 400, s"listener saw ${read.get()} records — tracking broken?")
     assert(read.get() < 3600, s"commitDelta read ${read.get()} records; base was re-scanned")
 
@@ -294,7 +295,7 @@ class SnapshotTableSpec extends AnyFunSuite {
         s""""nbuckets":1,"batch_id":-1,"columns":["e","t"],""" +
         s""""buckets":[{"bucket":0,"dir":"${dir.resolve("pbucket=0")}","rows":1,""" +
         s""""watermark":1,"digest":7,"tmin":1}],""" +
-        s""""mixed_schema":false,"schema_ddl":"e BIGINT,t BIGINT"}"""
+        s""""schema_ddl":"e BIGINT,t BIGINT"}"""
     Files.createDirectories(Paths.get(root, "snapshots"))
     Files.writeString(Paths.get(root, "snapshots", "v0.json"), manifest(0, -1, deadStage))
     Files.writeString(Paths.get(root, "snapshots", "v1.json"), manifest(1, 0, liveStage))
@@ -431,10 +432,12 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
     SnapshotTable.commitDelta(delta, root, "entity_id", "event_ms", buckets = 4,
       evolveSchema = true)
-    assert(SnapshotTable.currentSnapshot(root).get.mixedSchema,
-      "evolution must flag the manifest so reads pay schema-merging")
+    // the read is typed by the widened manifest schema, in its sorted order
     val back = SnapshotTable.read(spark, root)
-    assert(back.count() == 3 && back.columns.contains("score"))
+    assert(back.columns.toSeq ==
+      Seq("entity_id", "event_ms", "score", "v", SnapshotTable.BucketCol))
+    assert(back.schema("score").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(back.count() == 3)
     val score = back.collect()
       .map(r => r.getAs[Long]("entity_id") -> Option(r.getAs[Any]("score"))).toMap
     assert(score(1L).isEmpty && score(2L).isEmpty && score(3L).contains(1.5))
@@ -450,13 +453,17 @@ class SnapshotTableSpec extends AnyFunSuite {
     // bucket-pruned lookup of a pre-evolution entity sees the null column
     val one = SnapshotTable.readEntities[Long](spark, root, Seq(1L)).collect()
     assert(one.length == 1 && one.head.getAs[Any]("score") == null)
-    // a full rewrite on one schema clears the flag (every row changed ->
-    // every bucket rewritten; a carried bucket would keep it conservatively)
+    // a full rewrite of the mixed table reads back exactly what it wrote:
+    // the padded nulls were written as real nulls under one schema
     val full = SnapshotTable.read(spark, root).drop(SnapshotTable.BucketCol)
       .withColumn("v", concat(col("v"), lit("!")))
     SnapshotTable.commit(full, root, "entity_id", "event_ms", buckets = 4,
       evolveSchema = true)
-    assert(!SnapshotTable.currentSnapshot(root).get.mixedSchema)
+    val rewritten = SnapshotTable.read(spark, root).collect()
+      .map(r => r.getAs[Long]("entity_id") ->
+        ((r.getAs[String]("v"), Option(r.getAs[Any]("score"))))).toMap
+    assert(rewritten == Map(1L -> (("a!", None)), 2L -> (("b!", None)),
+      3L -> (("c!", Some(1.5)))))
   }
 
   test("upsert replaces matching keys, inserts the rest, touches only their buckets") {
@@ -847,5 +854,136 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(got.count() == 100)
     assert(digestOf(got.select(df.columns.map(col): _*)) ==
       digestOf(df.filter(col("event_ms").between(350, 449))))
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive async, in
+    * order: a marker job run after `body` bounds the count.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "jobsDuring marker"
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      Iterator.continually(starts.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d => assert(d != null, "the marker job never reached the listener"); d != marker }
+        .size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Rows of the head whose bucket column differs from the manifest bucket
+    * of the slice dir its file lies in, as (bucket, file) pairs.
+    */
+  private def misbucketed(root: String): Seq[(Int, String)] = {
+    val byDir = SnapshotTable.currentSnapshot(root).get.buckets
+      .map(b => Paths.get(b.dir).toString -> b.bucket).toMap
+    val pairs = SnapshotTable.read(spark, root)
+      .select(col(SnapshotTable.BucketCol), input_file_name()).distinct().collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(pairs.nonEmpty)
+    pairs.filterNot { case (k, f) =>
+      byDir.get(Paths.get(new java.net.URI(f)).getParent.toString).contains(k)
+    }
+  }
+
+  test("commitDelta evaluates its delta once per row: stats come from the staged slice") {
+    val root = tmpRoot("once")
+    val ev = Corpus.events(spark, Corpus.Params(rows = 500, entities = 8)).drop("bytes")
+    SnapshotTable.commit(ev.filter(col("seq") < 400), root, "entity_id", "event_ms", buckets = 4)
+    val pd = tmpRoot("once-delta")
+    ev.filter(col("seq") >= 400).write.mode("overwrite").parquet(pd)
+    val evaluated = spark.sparkContext.longAccumulator("delta filter evaluations")
+    val counted = udf { (_: Long) => evaluated.add(1L); true }.asNondeterministic()
+    SnapshotTable.commitDelta(spark.read.parquet(pd).filter(counted(col("seq"))),
+      root, "entity_id", "event_ms", buckets = 4)
+    assert(evaluated.value == 100L, s"the delta filter ran ${evaluated.value} times for 100 rows")
+    val back = SnapshotTable.read(spark, root).drop(SnapshotTable.BucketCol)
+    assert(digestOf(back.select(ev.columns.map(col): _*)) == digestOf(ev))
+  }
+
+  test("read plans one typed scan from the manifest: no Spark job before an action") {
+    val (root, df) = rangeTable("onescan")
+    val snap = SnapshotTable.currentSnapshot(root).get
+    assert(snap.buckets.map(_.bucket).distinct.size > 1 &&
+      snap.buckets.groupBy(_.bucket).values.exists(_.size > 1),
+      "fixture must hold several slices in several buckets")
+    var back: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { back = SnapshotTable.read(spark, root) }
+    assert(jobs == 0, s"read ran $jobs Spark jobs at planning")
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(back.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+    assert(scans.size == 1, s"${scans.size} scans:\n${back.queryExecution.executedPlan}")
+    assert(digestOf(back.drop(SnapshotTable.BucketCol).select(df.columns.map(col): _*)) ==
+      digestOf(df))
+  }
+
+  test("every row's bucket column is its slice dir's manifest bucket, across every writer") {
+    import spark.implicits._
+    val (root, _) = rangeTable("bucketcol")
+    def check(after: String): Unit = {
+      val bad = misbucketed(root)
+      assert(bad.isEmpty, s"after $after: ${bad.take(5)}")
+    }
+    check("commitDelta")
+    SnapshotTable.compact(spark, root, maxSlices = 1)
+    check("compact")
+    SnapshotTable.commitUpsert(Seq(("e5", 365L, "X"), ("new", 5L, "N"))
+      .toDF("entity_id", "event_ms", "v"), root, "entity_id", "event_ms", buckets = 4)
+    check("commitUpsert")
+    SnapshotTable.commitDelete[String](spark, root, Seq("e7"))
+    check("commitDelete")
+    SnapshotTable.commitDelta(Seq(("e9", 2000L, "w", 1.5))
+      .toDF("entity_id", "event_ms", "v", "score"), root, "entity_id", "event_ms",
+      buckets = 4, evolveSchema = true)
+    check("an additive-evolution append")
+    // e5@365 is replaced and new@5 inserted, e7's 30 rows go, e9@2000 comes
+    assert(SnapshotTable.read(spark, root).count() == 900 + 1 - 30 + 1)
+  }
+
+  test("commitDelta with a null key fails before publishing and leaves no stage") {
+    import spark.implicits._
+    val root = tmpRoot("deltanull")
+    SnapshotTable.commit(Seq((Option(1L), 10L)).toDF("entity_id", "event_ms"),
+      root, "entity_id", "event_ms", buckets = 2)
+    def stages = Files.list(Paths.get(root, "data")).toArray.toSet
+    val (head, before) = (SnapshotTable.currentId(root), stages)
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.commitDelta(Seq((Option.empty[Long], 20L), (Option(2L), 30L))
+        .toDF("entity_id", "event_ms"), root, "entity_id", "event_ms", buckets = 2)
+    }
+    assert(e.getMessage.contains("null"))
+    assert(SnapshotTable.currentId(root) == head)
+    assert(stages == before, s"new stage dirs: ${stages -- before}")
+  }
+
+  test("key buckets come from the driver: a lookup and an empty-bucket delete run no job") {
+    import spark.implicits._
+    val root = tmpRoot("keyhash")
+    // one entity in 16 buckets: most keys hash into a bucket with no slice
+    SnapshotTable.commit(Seq(("only", 10L)).toDF("entity_id", "event_ms"),
+      root, "entity_id", "event_ms", buckets = 16)
+    val bucketOf = (k: String) => spark.range(1)
+      .select(pmod(xxhash64(lit(k)), lit(16)).cast("int")).head().getInt(0)
+    val elsewhere = (0 until 100).map(i => s"k$i").filterNot(bucketOf(_) == bucketOf("only"))
+      .take(3)
+    assert(elsewhere.size == 3)
+    val head = SnapshotTable.currentId(root)
+    val jobs = jobsDuring {
+      SnapshotTable.readEntities[String](spark, root, "only" +: elsewhere)
+      SnapshotTable.commitDelete[String](spark, root, elsewhere)
+    }
+    assert(jobs == 0, s"$jobs Spark jobs to hash a driver-side key list")
+    assert(SnapshotTable.currentId(root) == head)
+    assert(SnapshotTable.readEntities[String](spark, root, "only" +: elsewhere).count() == 1)
   }
 }

@@ -19,13 +19,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * as-of join and the feature pipeline must agree on it. The as-of join's
   * union-tag window, ordered by (__t, __side, __tie), is written once, in
   * `graft.operators.AsOf`: its plain and skew-safe forms must attach the
-  * same event. And no source holds a raw control byte other than '\n':
-  * editors and diffs do not show it, so a fixture or comparison with one
-  * reads as something else (write the escape, e.g. "\u000B"). And the
-  * operator, feature, corpus and function objects keep only public names a
-  * query, the pipeline, a bench or perfbench runs: a name only specs call
-  * is a reference twin and lives in src/test (`KernelTwins`,
-  * `FeatureTwins`, the spec objects), and a name nothing calls is deleted.
+  * same event. `graft.tables.SnapshotTable` plans every read from its
+  * manifest's typed schema, so it merges no parquet schemas and pads no
+  * union: a `mergeSchema` or `allowMissingColumns` there brings back a
+  * footer read per file at planning. And no source holds a raw control
+  * byte other than '\n': editors and diffs do not show it, so a fixture or
+  * comparison with one reads as something else (write the escape, e.g.
+  * "\u000B"). And the operator, feature, corpus and function objects keep
+  * only public names a query, the pipeline, a bench or perfbench runs: a
+  * name only specs call is a reference twin and lives in src/test
+  * (`KernelTwins`, `FeatureTwins`, the spec objects), and a name nothing
+  * calls is deleted.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -74,8 +78,9 @@ class SourceRulesSpec extends AnyFunSuite {
 
   test("the time-bucket span and bucket arithmetic is written only in Windows") {
     val home = Paths.get("src/main/scala/graft/operators/Windows.scala")
-    // the span `(hi - lo) / buckets` and the bucket `(t - lo) / lit(span)`
-    val hits = hitsOutside(home, """\(\s*hi\s*-\s*lo\s*\)\s*/|/\s*lit\(\s*span\s*\)""".r)
+    // the span `(hi - lo) / buckets` and the bucket `(t - lo) div span`
+    val hits = hitsOutside(home,
+      """\(\s*hi\s*-\s*lo\s*\)\s*/|/\s*lit\(\s*span\s*\)|call_function\(\s*"div"""".r)
     assert(hits.isEmpty, hits.mkString("\n"))
     assert(Files.exists(home))
   }
@@ -84,6 +89,13 @@ class SourceRulesSpec extends AnyFunSuite {
     val found = hits("""col\("__t"\)\s*,\s*col\("__side"\)\s*,\s*col\("__tie"\)""".r)
     assert(found.size == 1, found.mkString("\n"))
     assert(found.head.startsWith("src/main/scala/graft/operators/AsOf.scala:"), found.head)
+  }
+
+  test("SnapshotTable reads on the manifest's typed schema: no schema merging") {
+    val home = "src/main/scala/graft/tables/SnapshotTable.scala"
+    val found = hits("""mergeSchema|allowMissingColumns""".r).filter(_.startsWith(s"$home:"))
+    assert(found.isEmpty, found.mkString("\n"))
+    assert(Files.exists(Paths.get(home)))
   }
 
   /** A public member of a top-level object: 2-space indent, no modifier. */
