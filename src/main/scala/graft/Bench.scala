@@ -53,7 +53,8 @@ import graft.features.FeaturePipeline
   * SPARK_GRAFT_BENCH_VISITS (2), SPARK_GRAFT_MULTIJVM (1 = run part 3).
   *
   * Other modes (sbt `runMain graft.Bench <mode> ...`):
-  *   explain <outdir> [suffix] [q1,q2,...]  `.explain("formatted")` plan dumps
+  *   explain <outdir> [suffix] [q1,q2,...]  `.explain("formatted")` plan dumps,
+  *                                          each followed by its Caches.plans
   *   time [q1,q2,...]                       part-1 timing, hash sink
   *   noop [q1,q2,...]                       part-1 timing, noop sink
   *   corpus [rows]                          the corpus job at SPARK_GRAFT_CPUS
@@ -700,8 +701,12 @@ object Bench {
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {
+        // planning runs the shuffle stages below each materialization;
+        // their plans follow the query's, whose leaves only name them
         val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
-          .explainString(org.apache.spark.sql.execution.FormattedMode)
+          .explainString(org.apache.spark.sql.execution.FormattedMode) +
+          graft.operators.Caches.plans.zipWithIndex.map { case (p, i) =>
+            s"\n== Materialization $i ==\n$p" }.mkString
         Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
         System.err.println(s"[explain] wrote ${name}_$suffix.txt")
       } catch { case e: Throwable =>

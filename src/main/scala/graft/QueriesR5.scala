@@ -299,8 +299,8 @@ object QueriesR5 {
         xxhash64(lit(19L), col("doc_id")).as("h")), "funnel_h")
       // ONE corpus pass — ZERO joins — computes every per-doc stage input
       // (C4 keep + cleaned text, Gopher keep over the cleaned text, the
-      // 8-byte dedup hash, the token count), then a NARROW persist — id,
-      // lang, two flags, two longs, never the text — feeds the three
+      // 8-byte dedup hash, the token count), then a NARROW materialization
+      // — id, lang, two flags, two longs, never the text — feeds the three
       // downstream consumers (stage labeling, dedup canon, budget).
       // Round 6 (verdict item): the previous staging built the same frame
       // via TWO corpus-sized self-joins of per-row projections — at fact
@@ -309,7 +309,7 @@ object QueriesR5 {
       // chain are the operators' own shared builders, so the stage
       // semantics exist exactly once; the Gopher signals come from the
       // typed kernel (bit-equal to the HOF form, CurationSpec).
-      // PlanShapeSpec asserts zero Exchange below the staging persist.
+      // PlanShapeSpec asserts zero Exchange below the staging materialization.
       // Gopher's word count IS the token count of the cleaned text, so
       // __tok reuses it instead of re-tokenizing.
       val c4s = col("__c4s")

@@ -2,35 +2,60 @@ package graft.operators
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.execution.SparkPlan
 
-/** Session cache registry for operator-internal persists.
+/** Session cache registry for operator-internal materializations.
   *
   * Several operators materialize an intermediate consumed by MULTIPLE
   * downstream exchanges (the dedup inverted index, skew-safe phase-1):
-  * without a persist, Spark recomputes the full upstream lineage once per
+  * without one, Spark recomputes the full upstream lineage once per
   * consumer (measured 5x recompute of the n-gram index in ngramJaccard).
   * At warehouse scale these intermediates would be materialized tables;
   * in-session they are registered here so callers that loop over many
   * queries (Verify, Bench) can release them deterministically between
   * invocations — `unpersist(blocking = true)`, because lazily-released
-  * blocks compete with the next persist for storage memory.
+  * blocks compete with the next materialization for storage memory.
+  *
+  * A materialization is the persisted (MEMORY_AND_DISK) rows of the
+  * frame's EXECUTED plan, read through a `LogicalRDD` leaf
+  * ([[GraftBridge.materialize]]), not `Dataset.persist`. A persisted
+  * plan keeps its planned output partitioning, so AQE never coalesces its
+  * final stage — a cache whose plan ends in a shuffle had
+  * `spark.sql.shuffle.partitions` partitions (128 in the benchmark
+  * session) and every read of it ran that many tasks — and AQE ran each
+  * `InMemoryRelation` in a query stage of its own. The executed plan is
+  * AQE's final plan, so its last stage is coalesced to the data's size,
+  * and the leaf reports that plan's partitioning and the optimized plan's
+  * statistics to the planner above.
+  * The RDD keeps its lineage (no `localCheckpoint`): a lost block is
+  * recomputed, not an error.
+  *
+  * Timing: the shuffle stages BELOW a cached frame run when the operator
+  * calls [[cache]] (AQE materializes them to plan the final stage), and
+  * the final stage runs at the first action that reads the frame. So
+  * planning a query that caches — `explain`, `graft.Bench explain` —
+  * runs those shuffle stages. A query's own plan shows each
+  * materialization as a `Scan ExistingRDD` leaf; [[plans]] holds what
+  * runs below it.
   */
 object Caches {
 
-  private val registered = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val registered = scala.collection.mutable.ArrayBuffer.empty[(RDD[_], SparkPlan)]
   private val broadcasts =
     scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
 
-  /** Persist and register `df`; returns the persisted frame. */
-  def cache(df: DataFrame,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    synchronized {
-      val c = df.persist(level)
-      registered += c
-      c
-    }
+  /** Materialize and register `df`; returns the frame over its rows. */
+  def cache(df: DataFrame): DataFrame = {
+    val (c, rdd) = GraftBridge.materialize(df)
+    synchronized { registered += ((rdd, df.queryExecution.executedPlan)) }
+    c
+  }
+
+  /** The executed plan of every live materialization, in the order
+    * [[cache]] made them. */
+  def plans: Seq[SparkPlan] = synchronized { registered.map(_._2).toSeq }
 
   /** Broadcast `v` and register the handle for release: the kernel fast
     * paths (TF-IDF / NLL vocabularies, NB weights, over-threshold line
@@ -49,12 +74,13 @@ object Caches {
     b
   }
 
-  /** Unpersist every registered frame and broadcast. A failed unpersist
-    * of one does not stop the rest; a fatal error (OOM, interrupt) does.
+  /** Unpersist every registered materialization and broadcast. A failed
+    * unpersist of one does not stop the rest; a fatal error (OOM,
+    * interrupt) does.
     */
   def releaseAll(): Unit = synchronized {
-    registered.foreach(df =>
-      try df.unpersist(blocking = true) catch { case NonFatal(_) => () })
+    registered.foreach { case (rdd, _) =>
+      try rdd.unpersist(blocking = true) catch { case NonFatal(_) => () } }
     registered.clear()
     broadcasts.foreach(b =>
       try b.unpersist(blocking = true) catch { case NonFatal(_) => () })

@@ -151,8 +151,8 @@ object Dedup {
     val bands = k / rowsPerBand
     val sigUdf = minhashSignatureFast(shingleN, k)
     val sigd = df.select(col(id).as("__id"), sigUdf(col(text)).as("__sig"))
-    // cached: the banded rows feed both the hot-bucket count and the capped
-    // join — without a persist the signature UDF runs once per consumer
+    // materialized: the banded rows feed both the hot-bucket count and the
+    // capped join — without it the signature UDF runs once per consumer
     val banded = Caches.cache(sigd.select(col("__id"),
       posexplode(array((0 until bands).map { b =>
         xxhash64((col("__sig")(b * rowsPerBand) +:
@@ -300,13 +300,14 @@ object Dedup {
     *
     * Scale shape: per round two shuffles of (node, label) pairs — 16 bytes —
     * plus the convergence count. Each round's label table is materialized
-    * with an EAGER localCheckpoint, which truncates the logical plan: the
+    * through [[Caches.cache]], whose frame reads a `LogicalRDD` leaf: the
     * round's plan references the previous label table three times, so
-    * without truncation the plan tree grows 3^rounds and the driver dies
-    * stringifying it long before the data is a problem. (localCheckpoint
-    * trades executor-loss recomputability for speed — the right trade
-    * inside one job; a multi-job pipeline would persist labels to the
-    * snapshot table anyway.)
+    * without that leaf the plan tree grows 3^rounds and the driver dies
+    * stringifying it long before the data is a problem. The leaf cuts the
+    * logical plan only; the persisted RDD keeps its lineage (one shuffle
+    * chain per round), so a lost block is recomputed rather than failing
+    * the job. Every round's labels stay registered until the caller's
+    * `Caches.releaseAll` — a few (node, label) tables, one per round.
     */
   def components(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 20): DataFrame = {
@@ -314,8 +315,8 @@ object Dedup {
       pairs.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
         .union(pairs.select(col(bCol).cast("long").as("a"), col(aCol).cast("long").as("b")))
         .distinct())
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("comp", col("id")).localCheckpoint(true)
+    var labels = Caches.cache(edges.select(col("a").as("id")).distinct()
+      .withColumn("comp", col("id")))
     var i = 0
     var converged = false
     while (!converged && i < maxIter) {
@@ -328,14 +329,13 @@ object Dedup {
       // pointer jumping: comp <- comp(comp). Labels are always node ids
       // (mins over initial id labels), so the lookup hits; comp(x) <= x is
       // invariant, so least() only ever improves
-      val next = stepped
+      val next = Caches.cache(stepped
         .join(labels.select(col("id").as("__c1"), col("comp").as("__jump")),
           Seq("__c1"), "left")
         .select(col("id"), col("__old"),
-          least(col("__c1"), coalesce(col("__jump"), col("__c1"))).as("comp"))
-        .localCheckpoint(true)
+          least(col("__c1"), coalesce(col("__jump"), col("__c1"))).as("comp")))
       converged = next.filter(col("comp") =!= col("__old")).isEmpty
-      labels = next // previous round's checkpoint RDD is GC'd by the cleaner
+      labels = next
       i += 1
     }
     if (!converged) {
@@ -345,8 +345,6 @@ object Dedup {
           s"2^$maxIter, which indicates a bug or corrupt edge input; " +
           "refusing to return a partial (split-component) labeling.")
     }
-    // the checkpointed label RDD is released by the ContextCleaner once the
-    // returned frame is no longer referenced
     labels.select(col("id"), col("comp"))
   }
 
@@ -582,13 +580,13 @@ object Dedup {
       n: Int = 3, minJaccard: Double = 0.6, maxPrefixDf: Long = 1000): DataFrame = {
     // The inverted index feeds five downstream exchanges (doc sizes, gram
     // document frequencies, prefix ranking, both sides of the verification
-    // join); without a persist Spark recomputes the scan+tokenize+explode
-    // lineage once per consumer (measured ~5x the query's total cost at
-    // sf0.1). At warehouse scale this is the materialized-index table;
-    // in-session it registers in [[Caches]] and callers release it after
-    // the output is materialized.
-    // per-doc sorted gram-hash sets, cached once; the exploded posting list
-    // is a cheap projection of this cache (explode of in-memory arrays)
+    // join); without a materialization Spark recomputes the
+    // scan+tokenize+explode lineage once per consumer (measured ~5x the
+    // query's total cost at sf0.1). At warehouse scale this is the
+    // materialized-index table; in-session it registers in [[Caches]] and
+    // callers release it after the output is materialized.
+    // per-doc sorted gram-hash sets, materialized once; the exploded posting
+    // list is a cheap projection of it (explode of in-memory arrays)
     val sets = Caches.cache(
       df.select(col(id).as("__id"), gramHashesFast(n)(col(text)).as("__h"))
         .where(size(col("__h")) > 0)
@@ -620,11 +618,13 @@ object Dedup {
     // (identical posting set to ranking ALL grams and then dropping df-1
     // rows — asserted against the two-window formulation in the spec)
     // the prefix index feeds BOTH sides of the candidate self-join; without
-    // a persist each side re-runs the df join + both window passes (the
-    // planner does not reuse the exchange across the self-join aliases).
-    // Materializing the index once is also the warehouse-scale shape: the
-    // prefix posting list is the small (~(1-t)·corpus grams, df>=2 only)
-    // derivative of the corpus, built once, probed twice.
+    // a materialization each side re-runs the df join + both window passes
+    // (the planner does not reuse the exchange across the self-join
+    // aliases). Materializing the index once is also the warehouse-scale
+    // shape: the prefix posting list is the small (~(1-t)·corpus grams,
+    // df>=2 only) derivative of the corpus, built once, probed twice. Its
+    // window stage is AQE-coalesced, so both probes read a few partitions,
+    // not one per shuffle partition.
     val prefix = Caches.cache(g2
       .withColumn("__n2", count(lit(1)).over(wDocAll))
       .withColumn("__rn", row_number().over(wDoc))

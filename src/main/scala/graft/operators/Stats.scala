@@ -66,7 +66,8 @@ object Stats {
     * double bit for bit (integers below 2^53). Beyond `maxGridRows` —
     * i.e. x was not grid-valued after all — falls back to the two-window
     * form rather than building a fact-sized broadcast. The grid aggregate
-    * is Caches-persisted: the rail probe and the join both consume it.
+    * is materialized once ([[Caches.cache]], AQE-coalesced to a few
+    * partitions): the rail probe and the join both read it.
     *
     * Scale note: the two-window form serializes each group into one
     * partition TWICE; at fact scale with few groups the second sort is a

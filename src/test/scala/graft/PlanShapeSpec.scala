@@ -1,12 +1,16 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
-import graft.operators.AsOf
+import graft.operators.{AsOf, Caches}
 
 /** Physical-plan assertions (SURVEY.md §7.1 step 6): the plans the engine
   * relies on at 100 TB must actually materialize at any scale —
@@ -24,12 +28,56 @@ class PlanShapeSpec extends AnyFunSuite {
     s.split("== Initial Plan ==")(0)
   }
 
-  /** The persisted relations `df`'s executed plan scans (its
-    * `InMemoryTableScanExec` nodes, inside AQE query stages too); each
-    * carries the compute plan BELOW its persist as `cachedPlan`. */
-  private def cachedRelations(df: DataFrame): Seq[InMemoryRelation] =
+  /** The materialization scans (`RDDScanExec`, the physical `LogicalRDD`
+    * leaf) of `df`'s final plan, inside AQE query stages too. */
+  private def materializedScans(df: DataFrame): Seq[RDDScanExec] =
     new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
-      case s: InMemoryTableScanExec => s.relation
+      case s: RDDScanExec => s
+    }
+
+  /** `body`'s jobs and tasks, counted by a listener. Events reach a
+    * listener in order: a marker job run after `body` bounds the count.
+    */
+  private def sparkWork(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val marker = "sparkWork marker"
+    val events = new LinkedBlockingQueue[SparkListenerEvent]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = events.put(j)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = events.put(t)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val seen = Iterator.continually(events.poll(60, TimeUnit.SECONDS))
+        .takeWhile {
+          case null => fail("the marker job never reached the listener")
+          case j: SparkListenerJobStart =>
+            Option(j.properties).flatMap(p =>
+              Option(p.getProperty("spark.job.description"))) != Some(marker)
+          case _ => true
+        }.toSeq
+      (seen.count(_.isInstanceOf[SparkListenerJobStart]),
+        seen.count(_.isInstanceOf[SparkListenerTaskEnd]))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body` with `spark.sql.shuffle.partitions` at `n`, restored after. */
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try body finally spark.conf.set(key, old)
+  }
+
+  /** (jobs, tasks) of one collected headline query on sf0.001 at 64
+    * shuffle partitions, its materializations released after. */
+  private def queryWork(name: String): (Int, Int) =
+    withShufflePartitions(64) {
+      try sparkWork(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").collect())
+      finally Caches.releaseAll()
     }
 
   private def countOcc(plan: String, needle: String): Int =
@@ -158,14 +206,19 @@ class PlanShapeSpec extends AnyFunSuite {
       s"ngramJaccard degenerated to a cartesian product:\n$ngPlan")
     // r4 shape: the prefix index is MATERIALIZED once (Caches.cache) and
     // probed by both sides of the candidate self-join, so the df join and
-    // both window passes run exactly once, inside the cached index build —
-    // the join plan reads InMemoryTableScans (the cache print may still
-    // SHOW the window lineage under InMemoryRelation; what matters is that
-    // both probe sides and the verify joins are cache scans, not
-    // recomputations)
-    assert(countOcc(ngPlan, "InMemoryTableScan") >= 3,
-      s"self-join sides + verify joins should probe cached indexes:\n$ngPlan")
-    graft.operators.Caches.releaseAll()
+    // both window passes run exactly once, inside the index build; the
+    // verify joins read the materialized gram sets. Every leaf of the plan
+    // above the materializations is a LogicalRDD: nothing is recomputed
+    // from the docs. (The plan is read before AQE: on this fixture no pair
+    // passes, and the final plan folds to an EmptyRelation.)
+    val leaves = ng.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]),
+      s"the near-dup join recomputes below a materialization:\n${ng.queryExecution.optimizedPlan}")
+    val rdds = leaves.map(_.asInstanceOf[LogicalRDD].rdd.id)
+    assert(rdds.size == 4 && rdds.distinct.size == 2 &&
+        rdds.groupBy(identity).values.forall(_.size == 2),
+      s"both self-join sides and both verify joins should each read one materialization: $rdds")
+    Caches.releaseAll()
 
     // signatures with BOTH a hot bucket (300 identical sigs > maxBucket —
     // the guard must fire, or the fixture collapses to EmptyRelation and
@@ -188,22 +241,25 @@ class PlanShapeSpec extends AnyFunSuite {
   test("curation funnel consumers probe a NARROW cached staging frame") {
     val df = SparkEntry.queries("curation_funnel")(spark, "/root/testdata/sf0.001")
     df.collect()
-    // the FULL plan print (the AQE final-plan prefix collapses reused
-    // stages to bare references, hiding their scans): the three consumer
-    // branches (stage labeling, dedup canon, token budget) must probe the
-    // persisted staging frame instead of re-evaluating the C4+Gopher
-    // subtree once each (measured ~1.5x the whole query pre-persist)
-    val plan = df.queryExecution.executedPlan.toString
-    val scans = plan.linesIterator.filter(_.contains("InMemoryTableScan")).toSeq
-    assert(scans.size >= 3,
-      s"funnel consumers should probe the cached staging frame:\n$plan")
-    // and every cache probe must read the narrow (id, lang, flags, hash,
-    // tokens) projection — the document text is consumed inside the one
-    // staging pass and never enters the cache scans or anything above them
-    assert(scans.forall(s => !s.contains("cleaned_text") && !s.contains("text#")
-        && !s.contains("__ct")),
-      s"text column leaked into a staging-cache scan:\n${scans.mkString("\n")}")
-    graft.operators.Caches.releaseAll()
+    // the three consumer branches (stage labeling, dedup canon, token
+    // budget) must probe the materialized staging frame instead of
+    // re-evaluating the C4+Gopher subtree once each (measured ~1.5x the
+    // whole query before the staging frame was materialized): at least
+    // three scans of the final plan read the one staging RDD
+    val plan = df.queryExecution.executedPlan
+    val scans = materializedScans(df)
+    val staging = scans.filter(_.output.exists(_.name == "__gop"))
+    assert(staging.size >= 3,
+      s"funnel consumers should probe the materialized staging frame:\n$plan")
+    assert(staging.map(_.rdd.id).distinct.size == 1,
+      s"funnel consumers read different staging materializations:\n$plan")
+    // and every materialization scan must read the narrow (id, lang, flags,
+    // hash, tokens) projection — the document text is consumed inside the
+    // one staging pass and never enters the scans or anything above them
+    val text = Set("text", "cleaned_text", "__ct")
+    assert(scans.forall(_.output.forall(a => !text.contains(a.name))),
+      s"text column leaked into a staging scan:\n${scans.mkString("\n")}")
+    Caches.releaseAll()
   }
 
   test("curation funnel staging pass is a ZERO-JOIN, zero-Exchange projection") {
@@ -211,15 +267,47 @@ class PlanShapeSpec extends AnyFunSuite {
     // corpus-sized self-joins of pure projections — at fact scale, three
     // scans and two full exchanges carrying cleaned_text. The C4 fields,
     // Gopher kernel, dedup hash and token count are per-row functions, so
-    // the plan BELOW the staging persist must be scan -> projections only.
+    // the plan BELOW the staging materialization must be scan ->
+    // projections only.
     val df = SparkEntry.queries("curation_funnel")(spark, "/root/testdata/sf0.001")
     df.collect()
-    val staging = cachedRelations(df).find(_.output.exists(_.name == "__gop"))
-      .getOrElse(fail("no cached staging plan found")).cachedPlan.toString
+    val staging = Caches.plans.find(_.output.exists(_.name == "__gop"))
+      .getOrElse(fail("no staging materialization found")).toString
     Seq("Exchange", "Join", "HashAggregate", "Window").foreach { op =>
       assert(!staging.contains(op),
         s"staging pass should be a pure projection but contains $op:\n$staging")
     }
-    graft.operators.Caches.releaseAll()
+    Caches.releaseAll()
+  }
+
+  test("operator materializations are AQE-coalesced: a10 and dd_ngram run < 64 tasks") {
+    // a cache whose plan ends in a shuffle used to keep every shuffle
+    // partition (an InMemoryRelation is never coalesced): 3 stages of 64
+    // tasks each built and read the spearman grid and the n-gram prefix
+    // index. A materialization of the executed plan reads the coalesced
+    // final stage, so the whole query runs fewer tasks than one stage had.
+    Seq("a10_spearman", "dd_ngram_jaccard").foreach { q =>
+      val (_, tasks) = queryWork(q)
+      assert(tasks > 0, s"$q: the listener saw no task")
+      assert(tasks < 64, s"$q ran $tasks tasks at 64 shuffle partitions")
+    }
+  }
+
+  test("dd_minhash_lsh runs at most 9 Spark jobs") {
+    // 36 while its banded-rows cache was an InMemoryRelation
+    val (jobs, _) = queryWork("dd_minhash_lsh")
+    assert(jobs > 0, "the listener saw no job")
+    assert(jobs <= 9, s"dd_minhash_lsh ran $jobs jobs")
+  }
+
+  test("releaseAll unpersists every materialization a query made") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    SparkEntry.queries("dd_ngram_jaccard")(spark, "/root/testdata/sf0.001").collect()
+    val made = sc.getPersistentRDDs.keySet -- before
+    assert(made.nonEmpty, "the query materialized nothing")
+    Caches.releaseAll()
+    val left = sc.getPersistentRDDs.keySet.intersect(made)
+    assert(left.isEmpty, s"still persisted after releaseAll: $left")
   }
 }

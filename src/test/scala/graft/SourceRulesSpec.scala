@@ -22,14 +22,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * same event. `graft.tables.SnapshotTable` plans every read from its
   * manifest's typed schema, so it merges no parquet schemas and pads no
   * union: a `mergeSchema` or `allowMissingColumns` there brings back a
-  * footer read per file at planning. And no source holds a raw control
-  * byte other than '\n': editors and diffs do not show it, so a fixture or
-  * comparison with one reads as something else (write the escape, e.g.
-  * "\u000B"). And the operator, feature, corpus and function objects keep
-  * only public names a query, the pipeline, a bench or perfbench runs: a
-  * name only specs call is a reference twin and lives in src/test
-  * (`KernelTwins`, `FeatureTwins`, the spec objects), and a name nothing
-  * calls is deleted.
+  * footer read per file at planning. An operator materializes an
+  * intermediate one way, `graft.operators.Caches.cache` (over
+  * `GraftBridge.materialize`): a `persist`, `cache()` or checkpoint
+  * elsewhere escapes `Caches.releaseAll` and the AQE-coalesced read. And
+  * no source holds a raw control byte other than '\n': editors and diffs
+  * do not show it, so a fixture or comparison with one reads as something
+  * else (write the escape, e.g. "\u000B"). And the operator, feature,
+  * corpus and function objects keep only public names a query, the
+  * pipeline, a bench or perfbench runs: a name only specs call is a
+  * reference twin and lives in src/test (`KernelTwins`, `FeatureTwins`,
+  * the spec objects), and a name nothing calls is deleted.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -96,6 +99,15 @@ class SourceRulesSpec extends AnyFunSuite {
     val found = hits("""mergeSchema|allowMissingColumns""".r).filter(_.startsWith(s"$home:"))
     assert(found.isEmpty, found.mkString("\n"))
     assert(Files.exists(Paths.get(home)))
+  }
+
+  test("materializations go through Caches: no persist, cache or checkpoint elsewhere") {
+    val homes = Seq("src/main/scala/graft/operators/Caches.scala",
+      "src/main/scala/org/apache/spark/sql/GraftBridge.scala")
+    val found = hits("""\.persist\(|\.cache\(\)|[cC]heckpoint\(""".r)
+      .filterNot(h => homes.exists(home => h.startsWith(s"$home:")))
+    assert(found.isEmpty, found.mkString("\n"))
+    homes.foreach(home => assert(Files.exists(Paths.get(home)), home))
   }
 
   /** A public member of a top-level object: 2-space indent, no modifier. */
