@@ -1,10 +1,16 @@
 package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 
@@ -15,7 +21,7 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   * engine owns the same *semantics* with zero new dependencies:
   *
   *  - snapshots: every commit creates `snapshots/v<id>.json` listing, per
-  *    entity-hash bucket, the data directory, row count, watermark
+  *    entity-hash bucket, the data directory and files, row count, watermark
   *    (max event time), and an order-insensitive content digest
   *    (bit_xor of row hashes — commutative, so equal at any parallelism);
   *  - time travel: `read(root, Some(id))` reconstructs exactly snapshot id;
@@ -103,9 +109,12 @@ object SnapshotTable {
     * slice. `Long.MinValue` means "no lower-bound claim" (a slice whose
     * time column is entirely null): such a slice is never skipped on its
     * lower bound — pruning degrades, correctness doesn't.
+    * `files` maps each data file of the slice dir to its length, listed
+    * once when the slice is staged: reads plan from it ([[ManifestIndex]]).
     */
   final case class BucketManifest(bucket: Int, dir: String, rows: Long,
-      watermark: Long, digest: Long, tmin: Long)
+      watermark: Long, digest: Long, tmin: Long,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) files: SortedMap[String, Long])
   /** One snapshot's manifest: the whole input of read planning. */
   final case class Snapshot(id: Long, parent: Long,
       entityCol: String, timeCol: String, nbuckets: Int, batchId: Long,
@@ -116,6 +125,7 @@ object SnapshotTable {
         * as correctly-TYPED nulls.
         */
       schemaDdl: String) {
+    def schema: StructType = StructType.fromDDL(schemaDdl)
     /** Per-bucket folded (rows, watermark, digest) over slices. */
     def folded: Map[Int, (Long, Long, Long)] =
       buckets.groupBy(_.bucket).map { case (k, ss) =>
@@ -127,8 +137,21 @@ object SnapshotTable {
   /** Per-bucket (rows, watermark, digest, tmin) of one staged write. */
   private type Stats = (Long, Long, Long, Long)
 
-  private def sliceOf(stage: Path, k: Int, st: Stats): BucketManifest =
-    BucketManifest(k, s"$stage/$BucketCol=$k", st._1, st._2, st._3, st._4)
+  private def sliceOf(stage: Path, files: Map[Int, SortedMap[String, Long]],
+      k: Int, st: Stats): BucketManifest =
+    BucketManifest(k, s"$stage/$BucketCol=$k", st._1, st._2, st._3, st._4, files(k))
+
+  /** The data files (name -> length) per `pbucket=<k>` dir of `stage`, from
+    * one driver-side listing (`_`/`.` names are not data, as in Spark's). A
+    * null-key dir (`pbucket=__HIVE_DEFAULT_PARTITION__`) deletes the stage and fails. */
+  private def stageFiles(stage: Path): Map[Int, SortedMap[String, Long]] =
+    children(stage).filter(_.getFileName.toString.startsWith(s"$BucketCol=")).map { d =>
+      val k = d.getFileName.toString.stripPrefix(s"$BucketCol=").toIntOption.getOrElse {
+        deleteRecursively(stage); throw new IllegalArgumentException(NullEntities) }
+      k -> SortedMap.from(children(d).map(_.getFileName.toString)
+        .filterNot(n => n.startsWith("_") || n.startsWith("."))
+        .map(n => n -> Files.size(d.resolve(n))))
+    }.toMap
 
   /** Parse the manifest at `p`. Strict: a manifest cut short (a torn
     * O_EXCL claim, see [[claimManifest]]), or one missing a field, fails
@@ -243,24 +266,22 @@ object SnapshotTable {
       .toMap
   }
 
-  /** The slices a write staged under `stage`, with stats from ONE scan of
-    * the stage itself, read with `schema` plus the int [[BucketCol]] (so
-    * it infers no schema either): the input that produced the stage is
-    * never evaluated a second time. A stage with no bucket dir (nothing was
-    * written) is deleted. A null entity key (staged under a null bucket)
-    * deletes the stage and fails here, before anything is published.
+  /** The slices a write staged under `stage`: their files from one listing
+    * ([[stageFiles]], where a null entity key fails), their stats from ONE
+    * scan of those files through [[readSlices]] with `schema`, so the input
+    * that produced the stage is never evaluated a second time. A stage with
+    * no bucket dir (nothing was written) is deleted.
     */
   private def stagedSlices(spark: SparkSession, stage: Path, schema: StructType,
-      timeCol: String): Map[Int, BucketManifest] =
-    if (!children(stage).exists(_.getFileName.toString.startsWith(s"$BucketCol="))) {
-      deleteRecursively(stage)
-      Map.empty
-    } else
-      try bucketStats(
-          spark.read.schema(schema.add(BucketCol, IntegerType)).parquet(stage.toString),
-          schema.fieldNames.toSeq, timeCol)
-        .map { case (k, st) => k -> sliceOf(stage, k, st) }
-      catch { case e: IllegalArgumentException => deleteRecursively(stage); throw e }
+      timeCol: String): Map[Int, BucketManifest] = {
+    val files = stageFiles(stage)
+    if (files.isEmpty) { deleteRecursively(stage); Map.empty }
+    else {
+      val unscanned = files.keys.toSeq.map(sliceOf(stage, files, _, (0L, 0L, 0L, 0L)))
+      bucketStats(readSlices(spark, unscanned, schema), schema.fieldNames.toSeq, timeCol)
+        .map { case (k, st) => k -> sliceOf(stage, files, k, st) }
+    }
+  }
 
   private val stageCounter = new java.util.concurrent.atomic.AtomicLong
 
@@ -345,8 +366,7 @@ object SnapshotTable {
     * columns, never mutate one.
     */
   private def requireTypesMatch(p: Snapshot, df: DataFrame, what: String): Unit = {
-    val recorded = StructType.fromDDL(p.schemaDdl)
-      .fields.map(f => f.name -> f.dataType).toMap
+    val recorded = p.schema.fields.map(f => f.name -> f.dataType).toMap
     df.schema.fields.foreach { f =>
       recorded.get(f.name).foreach { t =>
         require(f.dataType == t,
@@ -416,8 +436,9 @@ object SnapshotTable {
             .sortWithinPartitions(col(entityCol), col(timeCol))
             .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
         }
+        val files = stageFiles(stage)
         val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, st) =>
-          if (changed.contains(k)) Seq(sliceOf(stage, k, st)) else parentSlices(k)
+          if (changed.contains(k)) Seq(sliceOf(stage, files, k, st)) else parentSlices(k)
         }
         publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
           entityCol, timeCol, buckets, batchId, cols, newBuckets, sortedDdl(df0)))
@@ -516,8 +537,7 @@ object SnapshotTable {
     content.repartition(math.max(1, touched.size), col(BucketCol))
       .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
       .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-    val staged = stagedSlices(content.sparkSession, stage,
-      StructType.fromDDL(p.schemaDdl), p.timeCol)
+    val staged = stagedSlices(content.sparkSession, stage, p.schema, p.timeCol)
     val bySlices = p.buckets.groupBy(_.bucket)
     val newBuckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
       if (touched.contains(k)) staged.get(k).toSeq else bySlices(k)
@@ -564,7 +584,7 @@ object SnapshotTable {
             val oldSlices = touched.toSeq.sorted.flatMap(k => bySlices.getOrElse(k, Seq.empty))
             // merged content of the touched buckets: surviving old rows (read
             // on the recorded schema, old slices padded) + all updates
-            val merged = readSlices(spark, oldSlices, p)
+            val merged = readSlices(spark, oldSlices, p.schema)
               .join(df.select(col(entityCol), col(timeCol)).distinct(),
                 Seq(entityCol, timeCol), "left_anti")
               .unionByName(df)
@@ -600,7 +620,7 @@ object SnapshotTable {
       if (oldSlices.isEmpty) Some(p.id) // keys hash only into empty buckets
       else
         publishRewrite(root, p, touched,
-          readSlices(spark, oldSlices, p).filter(!col(p.entityCol).isInCollection(keys)),
+          readSlices(spark, oldSlices, p.schema).filter(!col(p.entityCol).isInCollection(keys)),
           p.batchId)
     }
   }
@@ -628,16 +648,17 @@ object SnapshotTable {
         // ONE job for all compacted buckets (not a driver loop of per-bucket
         // jobs): one scan, one shuffle hash-partitioned by bucket, one sorted
         // file per bucket out of partitionBy
-        readSlices(spark, toCompact.flatMap(k => bySlices(k)), p)
+        readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.schema)
           .repartition(toCompact.size, col(BucketCol))
           .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
           .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
+        val files = stageFiles(stage)
         val newBuckets = bySlices.toSeq.sortBy(_._1).flatMap { case (k, ss) =>
           if (toCompact.contains(k)) {
             val (rows, wm, dg) = folded(k)
             // tmin folds by min — a slice without a claim (MinValue) keeps
             // the compacted slice claim-free, same conservative semantics
-            Seq(sliceOf(stage, k, (rows, wm, dg, ss.map(_.tmin).min)))
+            Seq(sliceOf(stage, files, k, (rows, wm, dg, ss.map(_.tmin).min)))
           } else ss
         }
         // batchId carries over: compaction must not defeat the replay-skip
@@ -647,31 +668,27 @@ object SnapshotTable {
       }
     }
 
-  /** ONE typed parquet scan over every kept slice, planned from the manifest
-    * alone: the recorded schema (no footer is read at planning, and a slice
-    * written before an additive evolution reads the newer columns as typed
-    * nulls), the slice dirs sorted by (bucket, dir), and [[BucketCol]]
-    * recomputed by [[bucketExpr]] — the expression every writer partitions
-    * by, and [[requireLayout]] pins it — so a caller that drops the column
-    * gets it pruned away. With no slice holding rows it is [[schemaOnly]].
-    * (Spark's file index still lists more than 32 dirs,
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold`, in a job.)
+  /** ONE typed parquet scan over `slices`, planned from the manifest alone
+    * through a [[ManifestIndex]] (no footer read, no dir listed), with
+    * [[BucketCol]] as each bucket's partition value. Every field is read
+    * nullable, as `DataFrameReader.schema` makes them: a slice written before
+    * an additive evolution reads the newer columns as typed nulls.
     */
   private def readSlices(spark: SparkSession, slices: Seq[BucketManifest],
-      snap: Snapshot): DataFrame = {
-    val dirs = slices.filter(_.rows > 0).sortBy(b => (b.bucket, b.dir)).map(_.dir).distinct
-    if (dirs.isEmpty) schemaOnly(spark, snap)
-    else spark.read.schema(StructType.fromDDL(snap.schemaDdl)).parquet(dirs: _*)
-      .withColumn(BucketCol, bucketExpr(snap.entityCol, snap.nbuckets))
+      schema: StructType): DataFrame = {
+    val index = new ManifestIndex(spark, slices)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      StructType(schema.map(_.copy(nullable = true))), None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat, Map.empty)(spark))
   }
 
-  /** Read the table at a snapshot (default: current). Reconstructs exactly
-    * the committed content: the recorded columns in the manifest's (sorted)
-    * order, then the bucket column.
+  /** Read the table at a snapshot (default: current): exactly the committed
+    * content, the recorded columns in manifest (sorted) order, then the
+    * bucket column, planned from the manifest with no Spark job or listing.
     */
   def read(spark: SparkSession, root: String, id: Option[Long] = None): DataFrame = {
     val snap = resolve(root, id)
-    readSlices(spark, snap.buckets, snap)
+    readSlices(spark, snap.buckets, snap.schema)
   }
 
   /** Point-lookup read: opens ONLY the buckets that can hold `keys` —
@@ -702,7 +719,7 @@ object SnapshotTable {
       wanted.contains(b.bucket) && sliceInWindow(b, from, until))
     val pred = (Seq(col(snap.entityCol).isInCollection(keys)) ++
       windowPredicates(snap.timeCol, from, until)).reduce(_ && _)
-    readSlices(spark, keep, snap).filter(pred)
+    readSlices(spark, keep, snap.schema).filter(pred)
   }
 
   /** Can this slice's [tmin, watermark] stats interval intersect the
@@ -730,13 +747,6 @@ object SnapshotTable {
       require(lo <= hi, s"$what: empty interval [$lo, $hi]")
     }
 
-  /** Zero-row frame carrying the table's schema, from the recorded DDL
-    * with zero I/O.
-    */
-  private def schemaOnly(spark: SparkSession, snap: Snapshot): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType.fromDDL(snap.schemaDdl).add(BucketCol, IntegerType))
-
   /** Time-range read (bounds inclusive, in the long unit the manifests
     * record): opens ONLY the slices whose stats interval [tmin, watermark]
     * intersects [from, until] — Iceberg's min/max file skipping, decided
@@ -762,7 +772,7 @@ object SnapshotTable {
     val snap = resolve(root, id)
     val keep = snap.buckets.filter(sliceInWindow(_, from, until))
     val pred = windowPredicates(snap.timeCol, from, until).reduce(_ && _)
-    readSlices(spark, keep, snap).filter(pred)
+    readSlices(spark, keep, snap.schema).filter(pred)
   }
 
   /** Read ONLY the rows appended between `fromId` (exclusive) and `toId`
@@ -781,7 +791,7 @@ object SnapshotTable {
     require(fromDirs.subsetOf(to.buckets.map(_.dir).toSet),
       s"snapshot $fromId's slices were compacted away after id ${from.id}; " +
         "incremental read is only valid across append-only history")
-    readSlices(spark, to.buckets.filterNot(b => fromDirs.contains(b.dir)), to)
+    readSlices(spark, to.buckets.filterNot(b => fromDirs.contains(b.dir)), to.schema)
   }
 
   /** Expire snapshots with id < `keepFrom`: delete their manifest files and
@@ -859,4 +869,33 @@ object SnapshotTable {
   def watermark(root: String, id: Option[Long] = None): Option[Long] =
     id.orElse(currentId(root)).map(snapshot(root, _))
       .filter(_.buckets.nonEmpty).map(_.folded.values.map(_._2).min)
+}
+
+/** A [[FileIndex]] over manifest slices: one [[PartitionDirectory]] per bucket,
+  * its value the manifest bucket and its files the recorded ones, so planning
+  * touches no filesystem. `listFiles` applies the partition filters itself:
+  * the scan does not re-apply them above it. */
+private[tables] final class ManifestIndex(spark: SparkSession,
+    slices: Seq[SnapshotTable.BucketManifest]) extends FileIndex {
+  private val buckets: Seq[(Int, Array[FileStatus])] =
+    slices.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (k, ss) =>
+      k -> ss.sortBy(_.dir).toArray.flatMap { s =>
+        val dir = new HPath(s.dir)
+        val qualified = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
+        s.files.map { case (n, l) => new FileStatus(l, false, 0, 0L, 0L, new HPath(qualified, n)) }
+      }
+    }
+  override val partitionSchema = new StructType().add(SnapshotTable.BucketCol, IntegerType)
+  override def rootPaths: Seq[HPath] = buckets.flatMap(_._2.map(_.getPath.getParent)).distinct
+  override def inputFiles: Array[String] = buckets.flatMap(_._2.map(_.getPath.toString)).toArray
+  override def sizeInBytes: Long = buckets.map(_._2.map(_.getLen).sum).sum
+  override def refresh(): Unit = ()
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep = partitionFilters.map(f => Predicate.createInterpreted(
+      f.transform { case _: Attribute => BoundReference(0, IntegerType, nullable = true) }))
+    buckets.collect { case (k, fs) if keep.forall(_.eval(InternalRow(k))) =>
+      PartitionDirectory(InternalRow(k), fs)
+    }
+  }
 }

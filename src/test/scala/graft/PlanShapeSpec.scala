@@ -6,8 +6,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
   SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec}
+import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
 import graft.operators.{AsOf, Caches}
@@ -197,24 +198,34 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("near-dup joins: no cartesian product, hot-bucket guard is broadcast") {
     import spark.implicits._
-    val docs = (0 until 200).map(i => (i.toLong, s"w${i % 7} w${i % 5} w${i % 3} w$i end"))
-      .toDF("doc_id", "text")
+    // 10 planted near-dup pairs (docs 20g and 20g+10: 4 of 5 trigrams
+    // shared, Jaccard 0.8) among 180 docs that pair with nothing
+    val docs = (0 until 200).map { i =>
+      val g = i / 20
+      val twin = s"twin$g alpha$g beta$g gamma$g delta$g epsilon$g"
+      (i.toLong, if (i % 10 != 0) s"w${i % 7} w${i % 5} w${i % 3} w$i end"
+        else if (i % 20 == 0) twin else s"$twin zeta$g")
+    }.toDF("doc_id", "text")
     val ng = graft.operators.Dedup.ngramJaccard(docs, "doc_id", "text", 3, 0.5)
-    ng.collect()
+    val pairs = ng.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+    assert(pairs == (0 until 10).map(g => (20L * g, 20L * g + 10)).toSet,
+      s"the planted near-dup pairs are not found exactly: $pairs")
     val ngPlan = executed(ng)
     assert(!ngPlan.contains("CartesianProduct"),
       s"ngramJaccard degenerated to a cartesian product:\n$ngPlan")
     // r4 shape: the prefix index is MATERIALIZED once (Caches.cache) and
     // probed by both sides of the candidate self-join, so the df join and
     // both window passes run exactly once, inside the index build; the
-    // verify joins read the materialized gram sets. Every leaf of the plan
-    // above the materializations is a LogicalRDD: nothing is recomputed
-    // from the docs. (The plan is read before AQE: on this fixture no pair
-    // passes, and the final plan folds to an EmptyRelation.)
-    val leaves = ng.queryExecution.optimizedPlan.collectLeaves()
-    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]),
-      s"the near-dup join recomputes below a materialization:\n${ng.queryExecution.optimizedPlan}")
-    val rdds = leaves.map(_.asInstanceOf[LogicalRDD].rdd.id)
+    // verify joins read the materialized gram sets. Every leaf of the final
+    // adaptive plan reads a materialization (a verify join may reuse the
+    // other's broadcast of it): nothing is recomputed from the docs.
+    val final_ = ng.queryExecution.executedPlan
+    val reads = new AdaptiveSparkPlanHelper {}.collectLeaves(final_).flatMap {
+      case s: RDDScanExec => Seq(s)
+      case r: ReusedExchangeExec => r.child.collect { case s: RDDScanExec => s }
+      case leaf => fail(s"the near-dup join recomputes below a materialization at $leaf:\n$final_")
+    }
+    val rdds = reads.map(_.rdd.id)
     assert(rdds.size == 4 && rdds.distinct.size == 2 &&
         rdds.groupBy(identity).values.forall(_.size == 2),
       s"both self-join sides and both verify joins should each read one materialization: $rdds")

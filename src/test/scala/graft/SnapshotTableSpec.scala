@@ -294,7 +294,7 @@ class SnapshotTableSpec extends AnyFunSuite {
       s"""{"id":$id,"parent":$parent,"entity_col":"e","time_col":"t",""" +
         s""""nbuckets":1,"batch_id":-1,"columns":["e","t"],""" +
         s""""buckets":[{"bucket":0,"dir":"${dir.resolve("pbucket=0")}","rows":1,""" +
-        s""""watermark":1,"digest":7,"tmin":1}],""" +
+        s""""watermark":1,"digest":7,"tmin":1,"files":{"part-0.parquet":1}}],""" +
         s""""schema_ddl":"e BIGINT,t BIGINT"}"""
     Files.createDirectories(Paths.get(root, "snapshots"))
     Files.writeString(Paths.get(root, "snapshots", "v0.json"), manifest(0, -1, deadStage))
@@ -336,11 +336,12 @@ class SnapshotTableSpec extends AnyFunSuite {
     val last = whole.lastIndexOf("{\"bucket\":")
     assert(last > whole.indexOf("\"buckets\":["))
     val noTmin = whole.replaceFirst(",\"tmin\":-?\\d+", "")
-    assert(noTmin != whole)
+    val noFiles = whole.replaceFirst(",\"files\":\\{[^}]*\\}", "")
+    assert(noTmin != whole && noFiles != whole)
     // cut after a complete slice, inside the last slice, and just before
     // the closing bracket: each would parse as a smaller table if tolerated
     val bad = Seq(whole.take(last), whole.take(last + 5),
-      whole.take(whole.indexOf("]", last)), noTmin)
+      whole.take(whole.indexOf("]", last)), noTmin, noFiles)
     bad.foreach { text =>
       Files.writeString(path, text)
       val errs = Seq(
@@ -985,5 +986,70 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(jobs == 0, s"$jobs Spark jobs to hash a driver-side key list")
     assert(SnapshotTable.currentId(root) == head)
     assert(SnapshotTable.readEntities[String](spark, root, "only" +: elsewhere).count() == 1)
+  }
+
+  test("a read over more than 32 live slices runs no Spark job at planning") {
+    import spark.implicits._
+    val root = tmpRoot("manyslices")
+    val df = (0L until 600L).map(i => (s"e${i % 120}", i, s"v$i"))
+      .toDF("entity_id", "event_ms", "v")
+    SnapshotTable.commit(df.filter(col("event_ms") < 200), root,
+      "entity_id", "event_ms", buckets = 16)
+    Seq(200L, 400L).foreach { lo =>
+      SnapshotTable.commitDelta(df.filter(col("event_ms").between(lo, lo + 199)), root,
+        "entity_id", "event_ms", buckets = 16)
+    }
+    val slices = SnapshotTable.currentSnapshot(root).get.buckets.size
+    assert(slices > 32, s"fixture holds only $slices slices")
+    var back: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { back = SnapshotTable.read(spark, root) }
+    assert(jobs == 0, s"a read of $slices slices ran $jobs Spark jobs at planning")
+    assert(digestOf(back.drop(SnapshotTable.BucketCol).select(df.columns.map(col): _*)) ==
+      digestOf(df))
+  }
+
+  test("pruned reads open exactly the manifest-recorded files of their kept slices") {
+    import spark.implicits._
+    val (root, _) = rangeTable("files")
+    val snap = SnapshotTable.currentSnapshot(root).get
+    // the manifest records each slice dir's parquet files with their lengths
+    snap.buckets.foreach { s =>
+      val onDisk = Files.list(Paths.get(s.dir)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(f => f.getFileName.toString -> Files.size(f)).toMap
+      assert(s.files.toMap == onDisk, s.dir)
+    }
+    def recorded(keep: SnapshotTable.BucketManifest => Boolean): Set[String] =
+      snap.buckets.filter(keep)
+        .flatMap(s => s.files.keys.map(n => Paths.get(s.dir, n).toString)).toSet
+    def planned(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.inputFiles.map(f => Paths.get(new java.net.URI(f)).toString).toSet
+    def inWindow(b: SnapshotTable.BucketManifest) = b.watermark >= 350L && b.tmin <= 449L
+    val keys = Seq("e5", "e17")
+    val wanted = keys.map(k => spark.range(1)
+      .select(pmod(xxhash64(lit(k)), lit(4)).cast("int")).head().getInt(0)).toSet
+    val kept = recorded(b => wanted.contains(b.bucket) && inWindow(b))
+    assert(kept.nonEmpty && recorded(inWindow).size > kept.size &&
+      recorded(_ => true).size > recorded(inWindow).size, "fixture prunes nothing")
+    val lookup = SnapshotTable
+      .readEntities[String](spark, root, keys, from = Some(350L), until = Some(449L))
+    assert(planned(lookup) == kept)
+    assert(planned(SnapshotTable.readRange(spark, root, Some(350L), Some(449L))) ==
+      recorded(inWindow))
+  }
+
+  test("a filter on the bucket column returns exactly that bucket's rows") {
+    val (root, df) = rangeTable("bucketfilter")
+    val hashed = df.withColumn("k", pmod(xxhash64(col("entity_id")), lit(4)).cast("int"))
+    val all = SnapshotTable.read(spark, root)
+    (0 until 4).foreach { k =>
+      val got = all.filter(col(SnapshotTable.BucketCol) === k)
+      val want = hashed.filter(col("k") === k).drop("k")
+      assert(got.count() == want.count() && want.count() > 0, s"bucket $k")
+      assert(digestOf(got.drop(SnapshotTable.BucketCol).select(df.columns.map(col): _*)) ==
+        digestOf(want), s"bucket $k")
+    }
+    assert(all.filter(col(SnapshotTable.BucketCol) =!= 0).count() ==
+      hashed.filter(col("k") =!= 0).count())
   }
 }

@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * same event. `graft.tables.SnapshotTable` plans every read from its
   * manifest's typed schema, so it merges no parquet schemas and pads no
   * union: a `mergeSchema` or `allowMissingColumns` there brings back a
-  * footer read per file at planning. An operator materializes an
+  * footer read per file at planning. Every table read plans through the
+  * manifest's file index, so no `spark.read` appears under `graft/tables`:
+  * one there lists the slice dirs again, in a job of its own past 32 dirs.
+  * An operator materializes an
   * intermediate one way, `graft.operators.Caches.cache` (over
   * `GraftBridge.materialize`): a `persist`, `cache()` or checkpoint
   * elsewhere escapes `Caches.releaseAll` and the AQE-coalesced read. And
@@ -99,6 +102,13 @@ class SourceRulesSpec extends AnyFunSuite {
     val found = hits("""mergeSchema|allowMissingColumns""".r).filter(_.startsWith(s"$home:"))
     assert(found.isEmpty, found.mkString("\n"))
     assert(Files.exists(Paths.get(home)))
+  }
+
+  test("table reads plan through the manifest index: no spark.read in graft/tables") {
+    val home = "src/main/scala/graft/tables"
+    val found = hits("""spark\.read|\.read\.""".r).filter(_.startsWith(s"$home/"))
+    assert(found.isEmpty, found.mkString("\n"))
+    assert(Files.isDirectory(Paths.get(home)))
   }
 
   test("materializations go through Caches: no persist, cache or checkpoint elsewhere") {
