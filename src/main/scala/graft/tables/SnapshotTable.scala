@@ -395,8 +395,7 @@ object SnapshotTable {
     * rewrites every bucket even if the shared columns are identical.
     */
   def commit(df0: DataFrame, root: String, entityCol: String, timeCol: String,
-      buckets: Int = 16, batchId: Long = -1L,
-      evolveSchema: Boolean = false): Long = {
+      buckets: Int = 16, evolveSchema: Boolean = false): Long = {
     val df = df0.withColumn(BucketCol, bucketExpr(entityCol, buckets))
     val cols = df0.columns.sorted.toSeq
     // ONE stats scan of df, reused across optimistic retries (the diff and
@@ -414,35 +413,32 @@ object SnapshotTable {
         // resume path can carry old slices)
         if (!evolveSchema) requireTypesMatch(p, df0, "commit")
       }
-      if (batchId >= 0 && parent.exists(_.batchId == batchId))
-        parent.map(_.id) // idempotent replay of an already-committed batch
-      else {
-        val parentFolded = parent.map(_.folded).getOrElse(Map.empty)
-        val parentSlices = parent.map(_.buckets.groupBy(_.bucket)).getOrElse(Map.empty)
-        val newId = parent.map(_.id + 1).getOrElse(0L)
+      val parentFolded = parent.map(_.folded).getOrElse(Map.empty)
+      val parentSlices = parent.map(_.buckets.groupBy(_.bucket)).getOrElse(Map.empty)
+      val newId = parent.map(_.id + 1).getOrElse(0L)
 
-        // a bucket is unchanged only if digest AND row count AND watermark
-        // all match the parent's folded manifest: bit_xor alone cancels
-        // pairs, so adding two identical rows (exact duplicates are central
-        // to this corpus) would otherwise leave the digest unchanged and
-        // silently drop the new rows
-        val changed = man.filter { case (k, (rows, wm, dg, _)) =>
-          !parentFolded.get(k).contains((rows, wm, dg))
-        }.keys.toSeq.sorted
+      // a bucket is unchanged only if digest AND row count AND watermark
+      // all match the parent's folded manifest: bit_xor alone cancels
+      // pairs, so adding two identical rows (exact duplicates are central
+      // to this corpus) would otherwise leave the digest unchanged and
+      // silently drop the new rows
+      val changed = man.filter { case (k, (rows, wm, dg, _)) =>
+        !parentFolded.get(k).contains((rows, wm, dg))
+      }.keys.toSeq.sorted
 
-        val stage = newStage(root, newId)
-        if (changed.nonEmpty) {
-          df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*))
-            .sortWithinPartitions(col(entityCol), col(timeCol))
-            .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-        }
-        val files = stageFiles(stage)
-        val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, st) =>
-          if (changed.contains(k)) Seq(sliceOf(stage, files, k, st)) else parentSlices(k)
-        }
-        publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
-          entityCol, timeCol, buckets, batchId, cols, newBuckets, sortedDdl(df0)))
+      val stage = newStage(root, newId)
+      if (changed.nonEmpty) {
+        df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*))
+          .sortWithinPartitions(col(entityCol), col(timeCol))
+          .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
       }
+      val files = stageFiles(stage)
+      val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, st) =>
+        if (changed.contains(k)) Seq(sliceOf(stage, files, k, st)) else parentSlices(k)
+      }
+      // a full commit is no streaming micro-batch: it records no replay marker
+      publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
+        entityCol, timeCol, buckets, -1L, cols, newBuckets, sortedDdl(df0)))
     }
   }
 
@@ -525,14 +521,15 @@ object SnapshotTable {
   }
 
   /** Rewrite the `touched` buckets of `p` as `content` — ONE consolidated
-    * sorted slice each — and publish the result as `p`'s child with the
-    * given `batchId`. Every other bucket's slices carry over verbatim; a
-    * touched bucket left without rows disappears from the manifest. The
-    * new slices' stats come from one scan of the staged parquet, never of
-    * the untouched buckets.
+    * sorted slice each — and publish the result as `p`'s child, carrying
+    * `p`'s replay marker (`batchId`): a maintenance rewrite must not let a
+    * crash-replayed micro-batch re-append. Every other bucket's slices carry
+    * over verbatim; a touched bucket left without rows disappears from the
+    * manifest. The new slices' stats come from one scan of the staged
+    * parquet, never of the untouched buckets.
     */
   private def publishRewrite(root: String, p: Snapshot, touched: Set[Int],
-      content: DataFrame, batchId: Long): Option[Long] = {
+      content: DataFrame): Option[Long] = {
     val stage = newStage(root, p.id + 1)
     content.repartition(math.max(1, touched.size), col(BucketCol))
       .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
@@ -542,8 +539,7 @@ object SnapshotTable {
     val newBuckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
       if (touched.contains(k)) staged.get(k).toSeq else bySlices(k)
     }
-    publish(root, p.copy(id = p.id + 1, parent = p.id, batchId = batchId,
-      buckets = newBuckets))
+    publish(root, p.copy(id = p.id + 1, parent = p.id, buckets = newBuckets))
   }
 
   /** UPSERT `updates` by the table's (entity, time) key — Iceberg's MERGE
@@ -557,17 +553,17 @@ object SnapshotTable {
     *
     * Deterministic delete-then-insert: ALL old rows matching some update
     * key are dropped, then ALL update rows are written — an `updates`
-    * frame carrying several rows for one key keeps them all.
+    * frame carrying several rows for one key keeps them all. The new
+    * snapshot carries the parent's replay marker (`batchId`).
     */
   def commitUpsert(updates: DataFrame, root: String, entityCol: String,
-      timeCol: String, buckets: Int = 16, batchId: Long = -1L): Long = {
+      timeCol: String, buckets: Int = 16): Long = {
     val spark = updates.sparkSession
     retrying("commitUpsert", root) {
       currentSnapshot(root) match {
         case None =>
           // empty table: an upsert is just a first commit of the updates
-          Some(commitDelta(updates, root, entityCol, timeCol, buckets, batchId))
-        case Some(p) if batchId >= 0 && p.batchId == batchId => Some(p.id)
+          Some(commitDelta(updates, root, entityCol, timeCol, buckets))
         case Some(p) =>
           requireLayout(p, root, entityCol, timeCol, buckets)
           require(p.columns == updates.columns.sorted.toSeq,
@@ -588,11 +584,7 @@ object SnapshotTable {
               .join(df.select(col(entityCol), col(timeCol)).distinct(),
                 Seq(entityCol, timeCol), "left_anti")
               .unionByName(df)
-            // a maintenance upsert (no batchId) must CARRY the parent's
-            // streaming replay marker, like compact does — overwriting it
-            // with -1 would let a crash-replayed micro-batch re-append
-            publishRewrite(root, p, touched, merged,
-              if (batchId >= 0) batchId else p.batchId)
+            publishRewrite(root, p, touched, merged)
           }
       }
     }
@@ -604,9 +596,9 @@ object SnapshotTable {
     * rewritten; a bucket left empty disappears from the manifest. Returns
     * the new snapshot id — the current one if no key had rows.
     *
-    * Older snapshots still reference the pre-delete slices (time travel is
-    * the point of snapshots); PHYSICAL erasure completes when
-    * [[expireSnapshots]] reclaims every snapshot that predates the delete.
+    * Older snapshots keep their pre-delete slices (time travel is the point
+    * of snapshots), and the engine has no step that removes them: a read
+    * at a pre-delete id still returns the deleted entities' rows.
     */
   def commitDelete[T](spark: SparkSession, root: String, keys: Seq[T])(
       implicit enc: org.apache.spark.sql.Encoder[T]): Long = {
@@ -620,8 +612,7 @@ object SnapshotTable {
       if (oldSlices.isEmpty) Some(p.id) // keys hash only into empty buckets
       else
         publishRewrite(root, p, touched,
-          readSlices(spark, oldSlices, p.schema).filter(!col(p.entityCol).isInCollection(keys)),
-          p.batchId)
+          readSlices(spark, oldSlices, p.schema).filter(!col(p.entityCol).isInCollection(keys)))
     }
   }
 
@@ -792,55 +783,6 @@ object SnapshotTable {
       s"snapshot $fromId's slices were compacted away after id ${from.id}; " +
         "incremental read is only valid across append-only history")
     readSlices(spark, to.buckets.filterNot(b => fromDirs.contains(b.dir)), to.schema)
-  }
-
-  /** Expire snapshots with id < `keepFrom`: delete their manifest files and
-    * every data directory no surviving snapshot references (Iceberg's
-    * expire_snapshots maintenance). Time travel to expired ids stops
-    * working; the CURRENT snapshot and everything it references are always
-    * kept. Returns (manifests deleted, data dirs deleted).
-    */
-  def expireSnapshots(root: String, keepFrom: Long): (Int, Int) = {
-    val cur = currentId(root).getOrElse(-1L)
-    val bound = math.min(keepFrom, cur) // never expire CURRENT
-    val (dead, alive) = snapshots(root).partition(_.id < bound)
-    // a slice dir is <stage>/pbucket=k; reclaim whole stage dirs only when
-    // NO slice under them is referenced by a surviving snapshot. Compare by
-    // path PARENT, not string prefix: stage "s3_1" is a string prefix of
-    // "s3_10/pbucket=0", and prefix matching would retain s3_1 forever
-    // (silent over-retention, never data loss — but still a leak)
-    val referencedStages = alive.flatMap(_.buckets.map(b => Paths.get(b.dir).getParent)).toSet
-    val deadStageDirs = dead.flatMap(_.buckets.map(b => Paths.get(b.dir).getParent))
-      .distinct
-      .filterNot(referencedStages.contains)
-    deadStageDirs.foreach(deleteRecursively)
-    dead.foreach(s => Files.deleteIfExists(Paths.get(root, "snapshots", s"v${s.id}.json")))
-    (dead.size, deadStageDirs.size)
-  }
-
-  /** Reclaim ORPHANS: stage directories no manifest references (a lost
-    * optimistic retry or a killed writer stages data that never publishes)
-    * and leftover `*.tmp` manifest files — Iceberg's remove-orphan-files
-    * maintenance, complementing [[expireSnapshots]] (which only reclaims
-    * stages referenced by DEAD snapshots). Age-gated by file modification
-    * time: an in-flight writer's freshly-staged dir is also unreferenced
-    * until its publish, so anything younger than `olderThanMs` is kept
-    * (pick an age beyond any plausible commit duration). Returns (stage
-    * dirs deleted, tmp files deleted).
-    */
-  def removeOrphans(root: String,
-      olderThanMs: Long = 24L * 3600 * 1000): (Int, Int) = {
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    def old(p: Path) = Files.getLastModifiedTime(p).toMillis < cutoff
-    val referenced =
-      snapshots(root).flatMap(_.buckets.map(b => Paths.get(b.dir).getParent)).toSet
-    val stages = children(Paths.get(root, "data"))
-      .filter(d => Files.isDirectory(d) && !referenced.contains(d) && old(d))
-    stages.foreach(deleteRecursively)
-    val tmps = children(Paths.get(root, "snapshots"))
-      .filter(p => p.getFileName.toString.endsWith(".tmp") && old(p))
-    tmps.foreach(Files.deleteIfExists(_))
-    (stages.size, tmps.size)
   }
 
   /** Per-partition lineage across ALL snapshots as a queryable DataFrame

@@ -156,7 +156,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val root = tmpRoot("replay")
     val ev = Corpus.events(spark, Corpus.Params(rows = 500, entities = 8)).drop("bytes")
     SnapshotTable.commit(ev.filter(col("seq") < 400), root, "entity_id", "event_ms",
-      buckets = 4, batchId = 0L)
+      buckets = 4)
     val delta = ev.filter(col("seq") >= 400)
     val id1 = SnapshotTable.commitDelta(delta, root, "entity_id", "event_ms",
       buckets = 4, batchId = 1L)
@@ -173,7 +173,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     val root = tmpRoot("compact")
     val ev = Corpus.events(spark, Corpus.Params(rows = 600, entities = 8)).drop("bytes")
     SnapshotTable.commit(ev.filter(col("seq") < 100), root, "entity_id", "event_ms",
-      buckets = 4, batchId = 0L)
+      buckets = 4)
     (1 to 5).foreach { i =>
       SnapshotTable.commitDelta(
         ev.filter(col("seq") >= i * 100 && col("seq") < (i + 1) * 100),
@@ -224,36 +224,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(e.getMessage.contains("compacted"))
   }
 
-  test("expireSnapshots deletes old manifests and unreferenced data dirs") {
-    val root = tmpRoot("expire")
-    val ev = Corpus.events(spark, Corpus.Params(rows = 600, entities = 8)).drop("bytes")
-    SnapshotTable.commit(ev.filter(col("seq") < 300), root, "entity_id", "event_ms", buckets = 2)
-    SnapshotTable.commitDelta(ev.filter(col("seq") >= 300 && col("seq") < 450),
-      root, "entity_id", "event_ms", buckets = 2)
-    SnapshotTable.commitDelta(ev.filter(col("seq") >= 450),
-      root, "entity_id", "event_ms", buckets = 2)
-    // every early stage is still referenced by the current snapshot's
-    // carried-over slices: expiry drops manifests but reclaims NO data
-    val (m1, d1) = SnapshotTable.expireSnapshots(root, keepFrom = 2L)
-    assert(m1 == 2 && d1 == 0, s"m=$m1 d=$d1")
-    assert(SnapshotTable.read(spark, root).count() == 600)
-
-    // after full compaction the old stages become unreferenced -> reclaimed
-    val cid = SnapshotTable.compact(spark, root, maxSlices = 1)
-    val (m2, d2) = SnapshotTable.expireSnapshots(root, keepFrom = cid)
-    assert(m2 == 1 && d2 >= 1, s"m=$m2 d=$d2")
-    assert(SnapshotTable.read(spark, root).count() == 600)
-    val dig = digestOf(SnapshotTable.read(spark, root).drop(SnapshotTable.BucketCol)
-      .select(ev.columns.map(col): _*))
-    assert(dig == digestOf(ev))
-    // expired ids are gone; CURRENT is never expired even if asked
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "snapshots", "v0.json")))
-    val (m3, _) = SnapshotTable.expireSnapshots(root, keepFrom = Long.MaxValue)
-    assert(m3 == 0)
-    assert(SnapshotTable.read(spark, root).count() == 600)
-  }
-
   test("resume after simulated kill: rerun yields identical snapshot digests") {
     val rootA = tmpRoot("killA")
     val rootB = tmpRoot("killB")
@@ -277,34 +247,6 @@ class SnapshotTableSpec extends AnyFunSuite {
     val da = digestOf(SnapshotTable.read(spark, rootA).drop(SnapshotTable.BucketCol))
     val db = digestOf(SnapshotTable.read(spark, rootB).drop(SnapshotTable.BucketCol))
     assert(da == db)
-  }
-
-  test("expireSnapshots reclaims stage s_1 even when s_10 is referenced (no prefix aliasing)") {
-    // hand-built metadata: stage dir names where one is a string PREFIX of
-    // another ("s0_1" vs "s0_10") — the round-3 startsWith comparison kept
-    // s0_1 alive forever whenever s0_10 survived
-    val root = tmpRoot("prefix")
-    val deadStage = Paths.get(root, "data", "s0_1")
-    val liveStage = Paths.get(root, "data", "s0_10")
-    for (st <- Seq(deadStage, liveStage)) {
-      Files.createDirectories(st.resolve("pbucket=0"))
-      Files.writeString(st.resolve("pbucket=0").resolve("part-0.parquet"), "x")
-    }
-    def manifest(id: Long, parent: Long, dir: java.nio.file.Path): String =
-      s"""{"id":$id,"parent":$parent,"entity_col":"e","time_col":"t",""" +
-        s""""nbuckets":1,"batch_id":-1,"columns":["e","t"],""" +
-        s""""buckets":[{"bucket":0,"dir":"${dir.resolve("pbucket=0")}","rows":1,""" +
-        s""""watermark":1,"digest":7,"tmin":1,"files":{"part-0.parquet":1}}],""" +
-        s""""schema_ddl":"e BIGINT,t BIGINT"}"""
-    Files.createDirectories(Paths.get(root, "snapshots"))
-    Files.writeString(Paths.get(root, "snapshots", "v0.json"), manifest(0, -1, deadStage))
-    Files.writeString(Paths.get(root, "snapshots", "v1.json"), manifest(1, 0, liveStage))
-    Files.writeString(Paths.get(root, "CURRENT"), "v1\n")
-    val (m, d) = SnapshotTable.expireSnapshots(root, keepFrom = 1L)
-    assert(m == 1 && d == 1, s"m=$m d=$d")
-    assert(!Files.exists(deadStage), "dead stage s0_1 not reclaimed")
-    assert(Files.exists(liveStage.resolve("pbucket=0").resolve("part-0.parquet")),
-      "referenced stage s0_10 must survive")
   }
 
   test("manifest strings with quotes/braces round-trip; special-char roots work") {
@@ -543,16 +485,13 @@ class SnapshotTableSpec extends AnyFunSuite {
     val after = SnapshotTable.currentSnapshot(root).get
     assert((after.buckets.map(_.dir).toSet intersect
       before.buckets.map(_.dir).toSet).nonEmpty)
-    // time travel still sees the pre-delete content until expiry
+    // time travel still sees the pre-delete content
     assert(SnapshotTable.read(spark, root, Some(before.id))
       .filter(col("entity_id").isInCollection(victims)).count() > 0)
     // deleting EVERY entity leaves a legal empty table
     SnapshotTable.commitDelete[String](spark, root, entities)
     assert(SnapshotTable.read(spark, root).isEmpty)
     assert(SnapshotTable.watermark(root).isEmpty)
-    // physical erasure: expire pre-delete snapshots, victims' slices gone
-    SnapshotTable.expireSnapshots(root, keepFrom = after.id + 1)
-    intercept[Exception] { SnapshotTable.read(spark, root, Some(before.id)).count() }
   }
 
   test("type rails: column type changes and mistyped keys are rejected") {
@@ -578,26 +517,6 @@ class SnapshotTableSpec extends AnyFunSuite {
       SnapshotTable.commitDelete[String](spark, root, Seq("1"))
     }
     assert(e3.getMessage.contains("type"))
-  }
-
-  test("removeOrphans reclaims old unreferenced stages + tmp claims, spares young and referenced") {
-    import spark.implicits._
-    val root = tmpRoot("orph")
-    SnapshotTable.commit(Seq((1L, 10L)).toDF("entity_id", "event_ms"),
-      root, "entity_id", "event_ms", buckets = 2)
-    // a lost optimistic retry's stage and a crashed writer's tmp claim
-    val orphan = Paths.get(root, "data", "s9_99999c0")
-    Files.createDirectories(orphan)
-    Files.writeString(orphan.resolve("junk.parquet"), "x")
-    Files.writeString(Paths.get(root, "snapshots", "v9.123.tmp"), "{}")
-    // young files are in-flight commits: spared
-    val (st0, tmp0) = SnapshotTable.removeOrphans(root, olderThanMs = 3600000L)
-    assert(st0 == 0 && tmp0 == 0, "young unreferenced files must be spared")
-    val (st, tmp) = SnapshotTable.removeOrphans(root, olderThanMs = -1000L)
-    assert(st == 1 && tmp == 1, s"got ($st, $tmp)")
-    assert(!Files.exists(orphan))
-    assert(SnapshotTable.read(spark, root).count() == 1,
-      "referenced stage must survive regardless of age")
   }
 
   test("upsert without a batchId carries the parent's streaming replay marker") {

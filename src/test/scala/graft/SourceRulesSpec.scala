@@ -31,11 +31,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * elsewhere escapes `Caches.releaseAll` and the AQE-coalesced read. And
   * no source holds a raw control byte other than '\n': editors and diffs
   * do not show it, so a fixture or comparison with one reads as something
-  * else (write the escape, e.g. "\u000B"). And the operator, feature,
-  * corpus and function objects keep only public names a query, the
-  * pipeline, a bench or perfbench runs: a name only specs call is a
-  * reference twin and lives in src/test (`KernelTwins`, `FeatureTwins`,
-  * the spec objects), and a name nothing calls is deleted.
+  * else (write the escape, e.g. "\u000B"). And the objects of every
+  * package under `graft/` (each directory there, with no exception) keep
+  * only public names a query, the pipeline, a bench or perfbench runs:
+  * members and the types declared beside them alike. A name only specs
+  * call is a reference twin and lives in src/test (`KernelTwins`,
+  * `FeatureTwins`, the spec objects), and a name nothing calls is deleted.
   */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -120,8 +121,10 @@ class SourceRulesSpec extends AnyFunSuite {
     homes.foreach(home => assert(Files.exists(Paths.get(home)), home))
   }
 
-  /** A public member of a top-level object: 2-space indent, no modifier. */
-  private val publicMember = """^  (?:lazy )?(?:def|val) ([A-Za-z_][A-Za-z0-9_]*)""".r
+  /** A public member of a top-level object, or a type declared at its top
+    * level: 2-space indent, no access modifier. */
+  private val publicMember =
+    """^  (?:(?:lazy|final|sealed|abstract|case) )*(?:def|val|class|trait|object) ([A-Za-z_][A-Za-z0-9_]*)""".r
 
   /** `line` with its comment part cut: a doc/block-comment line is empty,
     * and a `//` at the start or after a blank ends the code. */
@@ -132,8 +135,10 @@ class SourceRulesSpec extends AnyFunSuite {
   }
 
   test("every public operator, feature and corpus member is named outside its definition") {
-    val owners = Seq("operators", "features", "corpus", "functions")
-      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d"))
+    // the files of every package directory under graft/, whatever it is
+    // named; the registry, query and bench sources beside them are not owners
+    val graftDir = Paths.get("src/main/scala/graft")
+    val owners = scalaFiles(graftDir.toString).filter(_.getParent != graftDir)
     val lines = for {
       f <- scalaFiles("src/main/scala") ++ scalaFiles("perfbench/src")
       (line, i) <- Files.readAllLines(f, StandardCharsets.UTF_8).asScala.zipWithIndex
@@ -150,13 +155,14 @@ class SourceRulesSpec extends AnyFunSuite {
       val word =
         if (name == "apply") s"(?<![\\w.])$owner\\(".r
         else s"(?:(?<![\\w.])|(?<=\\b$owner\\.))$name\\b".r
-      val definition = s"\\b(?:def|val|var)\\s+$name\\b".r
+      val definition = s"\\b(?:def|val|var|class|trait|object)\\s+$name\\b".r
       lines.exists { case (_, _, l) =>
         val c = code(l)
         definition.findFirstIn(c).isEmpty && word.findFirstIn(c).nonEmpty }
     }.map { case (f, i, name) => s"$f:${i + 1}: $name" }
+    unused.foreach(u => info(u))
     assert(defs.nonEmpty)
-    assert(unused.isEmpty, unused.mkString("\n"))
+    assert(unused.isEmpty, s"${unused.size} public members named only where defined")
   }
 
   test("no .scala file in src/main or src/test holds a raw control byte but \\n") {

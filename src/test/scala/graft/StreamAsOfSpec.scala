@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Corpus
@@ -11,12 +13,32 @@ class StreamAsOfSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** Drive a streaming query synchronously into a parquet file sink with an
+    * explicit checkpoint: a later call with the same checkpoint and sink
+    * processes only source files not yet committed, and the file sink's
+    * manifest gives exactly-once output across restarts.
+    */
+  private def runToParquet(df: DataFrame, outDir: String, checkpointDir: String): Unit =
+    df.writeStream.outputMode(OutputMode.Append)
+      .format("parquet").option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+
   test("streaming as-of attach equals the batch as-of join on a bounded corpus") {
     val p = Corpus.Params(rows = 1200, entities = 8)
-    val ev = Corpus.events(spark, p)
+    val corpusEv = Corpus.events(spark, p)
       .select(col("entity_id"), col("event_ms"), col("seq"), col("phash"),
         col("caption"), col("event_time"))
-    val pr = Corpus.probes(spark, p)
+    // plus one null-time event and one null-time probe: a null time matches
+    // nothing (the probe is emitted unmatched), as in the batch join
+    val e0 = corpusEv.head().getString(0)
+    val ev = corpusEv.unionByName(Seq((e0, Option.empty[Long], -1L, 0L, "no time"))
+      .toDF("entity_id", "event_ms", "seq", "phash", "caption")
+      .withColumn("event_time", timestamp_millis(col("event_ms"))))
+    val pr = Corpus.probes(spark, p).unionByName(Seq((e0, Option.empty[Long]))
+      .toDF("entity_id", "probe_ms")
+      .withColumn("probe_time", timestamp_millis(col("probe_ms"))))
 
     // batch oracle: the proven as-of join over the same bounded data
     val batch = AsOf.join(pr,
@@ -25,7 +47,7 @@ class StreamAsOfSpec extends AnyFunSuite {
       .select(col("entity_id"), col("probe_ms"), col("asof_time"),
         col("asof_seq"), col("asof_phash"), col("asof_caption"))
       .collect()
-      .map(r => (r.getString(0), r.getLong(1),
+      .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
         Option(r.get(2)).map(_.asInstanceOf[Long]),
         Option(r.get(3)).map(_.asInstanceOf[Long]),
         Option(r.get(4)).map(_.asInstanceOf[Long]),
@@ -56,7 +78,7 @@ class StreamAsOfSpec extends AnyFunSuite {
     val streamed = spark.table("asof_out")
       .where(col("entity_id") =!= "zz_sentinel")
       .collect()
-      .map(r => (r.getString(0), r.getLong(1),
+      .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
         Option(r.get(2)).map(_.asInstanceOf[Long]),
         Option(r.get(3)).map(_.asInstanceOf[Long]),
         Option(r.get(4)).map(_.asInstanceOf[Long]),
@@ -64,6 +86,7 @@ class StreamAsOfSpec extends AnyFunSuite {
       .toSet
 
     assert(streamed.nonEmpty, "streaming as-of emitted nothing")
+    assert(batch.contains((e0, None, None, None, None, None)))
     assert(streamed == batch,
       s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
   }
@@ -95,7 +118,7 @@ class StreamAsOfSpec extends AnyFunSuite {
       .write.mode("append").parquet(evDir)
     pr.where(col("probe_ms") <= midMs).coalesce(1)
       .write.mode("append").parquet(prDir)
-    def runOnce(): Unit = StreamOps.runToParquet(
+    def runOnce(): Unit = runToParquet(
       StreamOps.asofAttach(
         spark.readStream.schema(ev.schema).parquet(evDir),
         spark.readStream.schema(pr.schema).parquet(prDir),
