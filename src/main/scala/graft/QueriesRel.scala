@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.HouseRound
-import graft.operators.{AsOf, Stats, Windows}
+import graft.operators.AsOf
 
 /** Relational operator queries (SURVEY.md §2.2–§2.7) over the driver's
   * TPC-H-ish testdata, each [[QuerySpec]] in [[QueriesRel.specs]] carrying

@@ -193,8 +193,8 @@ object QueriesText {
 
     // ---- TXT: heuristic language id -------------------------------------------
     // hot-path form: the typed single-pass kernel (spec-asserted equal to
-    // the Text.langId column form; the interpreted array-HOF filters of the
-    // latter benched 12x slower: 1.99 vs 0.17 s over sf0.1)
+    // the KernelTwins.langId column form; the interpreted array-HOF filters
+    // of the latter benched 12x slower: 1.99 vs 0.17 s over sf0.1)
     QuerySpec("txt_langid", (s, d) =>
       t(s, d, "documents").select(col("doc_id"), col("lang").as("lang_true"),
         Text.langIdFast(col("text")).as("lang_pred")),

@@ -190,21 +190,4 @@ object Corpus {
     rows.toDF("entity_id", "probe_ms")
       .withColumn("probe_time", timestamp_millis(col("probe_ms")))
   }
-
-  /** Response analog (FIXTURES.md §4): y in [0,1] with ~5% nulls, mirroring
-    * `aac_recomputed` (`train_functions.R:62-68`).
-    */
-  def labels(spark: SparkSession, p: Params): DataFrame = {
-    import spark.implicits._
-    spark.range(0L, p.rows, 1L, p.partitions).mapPartitions { it =>
-      it.map { i =>
-        val ent = entityOf(p.seed, i, p.entities)
-        val ms = eventMsOf(p.seed, i, p.baseMs, p.stepMs)
-        val h = Rng.hash(p.seed, i, 10)
-        val y: java.lang.Double =
-          if (Rng.int(h, 20) == 0) null else Rng.double01(Rng.mix(h))
-        (ent, ms, y)
-      }
-    }.toDF("entity_id", "event_ms", "y")
-  }
 }

@@ -39,6 +39,4 @@ object Phash {
     }
     bits
   }
-
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }

@@ -131,10 +131,11 @@ object FeaturePipeline {
         i += 1
       }
       // punctuation-codepoint count, folded into this same pass (round 6):
-      // the Text.punctRatio expression ran a full regexp_replace building a
-      // stripped COPY of every caption just to count [^a-zA-Z0-9\s] chars —
-      // a second corpus-sized string pass. This counts codepoints exactly
-      // as the regex does (codepoints over U+007F never match the class).
+      // the KernelTwins.punctRatio expression ran a full regexp_replace
+      // building a stripped COPY of every caption just to count
+      // [^a-zA-Z0-9\s] chars — a second corpus-sized string pass. This
+      // counts codepoints exactly as the regex does (codepoints over U+007F
+      // never match the class).
       var pc = 0
       if (caption != null) {
         var ci = 0
@@ -150,13 +151,15 @@ object FeaturePipeline {
     // the single "__tf" alias is evaluated once per row.)
     val tf = tfUdf(col("topic"), col("caption"))
       .cast("struct<n:int,sw:int,dm:int,dmr:int,dss:double,pc:int>")
-    // quality formula mirrors Text.qualityScore exactly (golden-spec'd)
+    // the quality formula, checked against GoldenFeatureSpec's scalar
+    // `quality` (its golden)
     val nD = col("__tf")("n").cast("double")
     val swr = when(col("__tf")("n") > 0, col("__tf")("sw") / nD).otherwise(lit(0.0))
     val lenScore = least(nD / lit(8.0), lit(1.0))
-    // same value as Text.punctRatio(caption): pc is the kernel-counted
-    // twin of length(regexp_replace(caption, "[a-zA-Z0-9\\s]", "")), and
-    // the Int -> double division is unchanged (KernelTwinSpec)
+    // same value as KernelTwins.punctRatio(caption): pc is the
+    // kernel-counted twin of
+    // length(regexp_replace(caption, "[a-zA-Z0-9\\s]", "")), and the
+    // Int -> double division is unchanged (KernelTwinSpec)
     val punct = when(length(col("caption")) > 0,
       col("__tf")("pc").cast("double") / length(col("caption")))
       .otherwise(lit(0.0))

@@ -29,7 +29,8 @@ object Text {
   def isWs(c: Int): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == 0x0B || c == '\f' || c == '\r'
 
-  /** `[a-zA-Z0-9]` — the non-whitespace part of [[punctRatio]]'s class. */
+  /** `[a-zA-Z0-9]` — the non-whitespace part of the class a punctuation
+    * count leaves out (`[a-zA-Z0-9\s]`, as in `KernelTwins.punctRatio`). */
   def isAsciiAlnum(c: Int): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
 
@@ -119,11 +120,12 @@ object Text {
   /** Single-pass counting kernel for the token-stats family: ONE tokenizer
     * scan yields (n tokens, non-whitespace codepoints, summed token char
     * lengths, stopword occurrences, punctuation codepoints) — the raw
-    * integer inputs of [[tokenCount]]/[[bpeTokenCount]]/mean token length/
-    * [[stopwordRatio]]/[[punctRatio]], which previously ran five separate
-    * interpreted HOF/regex passes per row. Every RATIO stays an expression
-    * over these counts, so the double arithmetic is the expressions' own —
-    * the kernel only counts (KernelTwinSpec asserts each derived column
+    * integer inputs of [[tokenCount]], `KernelTwins.bpeTokenCount`, mean
+    * token length, [[stopwordRatio]] and `KernelTwins.punctRatio`, which
+    * previously ran five separate interpreted HOF/regex passes per row.
+    * Every RATIO stays an expression over these counts, so the double
+    * arithmetic is the expressions' own — the kernel only counts
+    * (KernelTwinSpec asserts each derived column
     * equal to its expression twin). Char counts are codepoint counts
     * (UTF8String numChars semantics); every non-whitespace codepoint is a
     * token codepoint, so the second and third fields are one count. Null
@@ -158,32 +160,12 @@ object Text {
     }
   }
 
-  /** BPE-ish subword-count proxy: words + extra units for long words and
-    * digit/punctuation boundaries — a deterministic stand-in for a real
-    * tokenizer's token count (the container has no tokenizer libs).
-    */
-  def bpeTokenCount(text: Column): Column = {
-    val words = tokenCount(text)
-    val chars = length(regexp_replace(text, "\\s+", ""))
-    // every word costs >=1 unit; characters beyond 6 per word add ~1 unit/4
-    // chars. floor() is explicit so integer-division semantics can't differ
-    // between engines.
-    val extra = greatest(lit(0.0), floor((chars - words * lit(6)) / lit(4.0)))
-    (words + extra).cast("long")
-  }
-
   /** Ratio of stopword tokens to all tokens (quality signal). */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
     val toks = tokens(text)
     val sw = filter(toks, t => t.isin(stopwords.map(lit(_).cast("string")): _*))
     when(size(toks) > 0, size(sw).cast("double") / size(toks)).otherwise(lit(0.0))
   }
-
-  /** Punctuation character ratio. */
-  def punctRatio(text: Column): Column =
-    when(length(text) > 0,
-      length(regexp_replace(text, "[a-zA-Z0-9\\s]", "")).cast("double") / length(text))
-      .otherwise(lit(0.0))
 
   /** Fraction of tokens that repeat an earlier token — the word-level
     * repetition signal of Gopher-style quality filtering (Rae et al. 2021
@@ -225,52 +207,21 @@ object Text {
       .otherwise(lit(0.0))
   }
 
-  /** Heuristic quality score in [0,1]: rewards moderate length, low
-    * punctuation, mid-range stopword ratio (reference analog: the
-    * low-information feature filters `train_functions.R:15-26`).
+  /** The language-profile table of [[langIdFast]]: a language's score is
+    * the count of its characteristic function words among the lowercased
+    * tokens. The spec-side column twin (`KernelTwins.langId`) reads this
+    * same table.
     */
-  def qualityScore(text: Column, stopwords: Seq[String]): Column = {
-    val n = tokenCount(text).cast("double")
-    val lenScore = least(n / lit(8.0), lit(1.0))
-    val punct = punctRatio(text)
-    val swr = stopwordRatio(text, stopwords)
-    val swScore = lit(1.0) - abs(swr - lit(0.35)) / lit(0.65)
-    round(greatest(lit(0.0), least(lit(1.0),
-      lenScore * lit(0.4) + (lit(1.0) - punct) * lit(0.3) + swScore * lit(0.3))), 6)
-  }
-
-  /** n-gram heuristic language id over a small language-profile table:
-    * score = count of language-characteristic function words present.
-    * Deterministic, pure column expressions.
-    */
-  private val langMarkers: Map[String, Seq[String]] = Map(
+  private[graft] val langMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "is", "with", "for"),
     "es" -> Seq("el", "la", "de", "que", "los", "una"),
     "de" -> Seq("der", "die", "und", "das", "ist", "ein"),
     "fr" -> Seq("le", "la", "les", "des", "est", "une"))
 
-  def langScores(text: Column): Seq[(String, Column)] = {
-    val toks = tokens(lower(text))
-    langMarkers.toSeq.sortBy(_._1).map { case (lang, markers) =>
-      lang -> size(filter(toks, t => t.isin(markers.map(lit(_).cast("string")): _*)))
-    }
-  }
-
-  /** Predicted language: argmax marker count, 'und' if all zero.
-    * Ties break alphabetically (deterministic).
-    */
-  def langId(text: Column): Column = {
-    val scores = langScores(text)
-    val best = scores.tail.foldLeft(struct(scores.head._2.as("s"), lit(scores.head._1).as("l"))) {
-      case (acc, (lang, sc)) =>
-        when(sc > acc.getField("s"), struct(sc.as("s"), lit(lang).as("l"))).otherwise(acc)
-    }
-    when(best.getField("s") > 0, best.getField("l")).otherwise(lit("und"))
-  }
-
-  // alphabetical lang order (the tie-break order of langId's fold) and a
-  // marker -> lang bitmask table ("la" belongs to es AND fr — a marker may
-  // score several languages, exactly as four independent filters do)
+  // alphabetical lang order (the tie-break order of KernelTwins.langId's
+  // fold) and a marker -> lang bitmask table ("la" belongs to es AND fr — a
+  // marker may score several languages, exactly as four independent
+  // filters do)
   private val langsSorted: Array[String] = langMarkers.keys.toArray.sorted
   private val markerMask: java.util.HashMap[String, Int] = {
     val m = new java.util.HashMap[String, Int]()
@@ -282,8 +233,9 @@ object Text {
   }
   private val maxMarkerLen: Int = langMarkers.values.flatten.map(_.length).max
 
-  /** Typed single-pass twin of [[langId]] — same semantics (spec-asserted
-    * equal on generated and edge-case docs): one scan of the string, no
+  /** Typed single-pass twin of the column form `KernelTwins.langId` — same
+    * semantics (spec-asserted equal on generated and edge-case docs): one
+    * scan of the string, no
     * token-array materialization, no interpreted array-HOF lambdas. The
     * column form is ~4 filter() higher-order functions per row, which stay
     * outside whole-stage codegen; this is the hot-path form for

@@ -1,9 +1,9 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.corpus.{Codec, Corpus, ImageRow, Phash, Rng}
+import graft.corpus.{Codec, ImageRow, Phash, Rng}
 
 /** Multimodal (binary-column) processing plumbing.
   *

@@ -29,17 +29,6 @@ import graft.functions.Text
   */
 object Dedup {
 
-  /** Exact dedup: canonical representative (min id) per identical text.
-    * One hash-aggregate; at 100 TB group by xxhash64(text) first so the
-    * shuffle carries 8-byte keys instead of full documents.
-    */
-  def exact(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(col(id), col(text), xxhash64(col(text)).as("__k"))
-      .groupBy("__k")
-      .agg(min(col(id)).as("keep_id"), count(lit(1)).as("n_copies"),
-        min(col(text)).as(text))
-      .drop("__k")
-
   /** Fingerprint dedup: exact dedup after whitespace normalization via the
     * rolling-hash document fingerprint (order-sensitive).
     */

@@ -23,8 +23,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("exact dedup finds the planted exact duplicate") {
-    val d = docs(30, 7L).toDF("doc_id", "text")
-    val res = Dedup.exact(d, "doc_id", "text")
+    // the dd_exact query over the planted docs as its documents table
+    val dir = java.nio.file.Files.createTempDirectory("graft-dd-exact").toString
+    docs(30, 7L).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val res = SparkEntry.queries("dd_exact")(spark, dir)
     val dup = res.filter(col("n_copies") > 1).collect()
     assert(dup.length == 1 && dup(0).getAs[Long]("keep_id") == 0L)
     assert(res.count() == 31) // 32 docs, one merged
@@ -125,7 +127,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("langIdFast equals the Text.langId column form on corpus and edge docs") {
+  test("langIdFast equals the KernelTwins.langId twin on corpus and edge docs") {
     // generated docs (marker-bearing captions) + edge cases: null, empty,
     // whitespace-only, tabs/VT separators, uppercase markers, overlapping
     // markers ("la" scores es AND fr), ties (alphabetical winner)
@@ -135,7 +137,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (9006L, "el\u000Bque\tlos\nuna"), (9007L, "is with for the and of"))
     val d = (docs(40, 77L) ++ edgeTexts ++ extra).toDF("doc_id", "text")
     val both = d.select(col("doc_id"),
-        graft.functions.Text.langId(col("text")).as("viaExpr"),
+        KernelTwins.langId(col("text")).as("viaExpr"),
         graft.functions.Text.langIdFast(col("text")).as("viaFast"))
       .collect()
     both.foreach { r =>

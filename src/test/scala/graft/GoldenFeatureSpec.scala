@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.corpus.{Corpus, Phash}
+import graft.corpus.Corpus
 import graft.features.FeaturePipeline
 
 /** Golden feature-vector test (SURVEY §5.2 pattern 1 / north_rule allclose):
@@ -67,7 +67,7 @@ class GoldenFeatureSpec extends AnyFunSuite {
         qSum += q
         if (toks.length >= 6) lastSparse = Some(q)
         gold((e.entity, e.seq)) = Gold(
-          prev.map(p => Phash.hamming(e.phash, p.phash)),
+          prev.map(p => java.lang.Long.bitCount(e.phash ^ p.phash)),
           sessIdx, (idx - sessStart).toLong,
           // +1.7e-8 mirrors the pipeline's epsilon-rounding of the two
           // order-sensitive double sums (see FeaturePipeline)
@@ -111,7 +111,6 @@ class GoldenFeatureSpec extends AnyFunSuite {
   }
 
   test("skew-safe features are equivalent to the plain-window features") {
-    import org.apache.spark.sql.functions._
     val p = Corpus.Params(rows = 3000, entities = 8) // hot entity + many buckets
     val ev = Corpus.events(spark, p)
     val dim = Corpus.dimFeatures(spark, p.seed)

@@ -146,10 +146,10 @@ class KernelTwinSpec extends AnyFunSuite {
           pc.cast("double") / length(col("text"))).otherwise(lit(0.0)), 4)).collect()
     val ref = df.select(col("id"),
       Text.tokenCount(col("text")).cast("long"),
-      Text.bpeTokenCount(col("text")),
+      KernelTwins.bpeTokenCount(col("text")),
       round(KernelTwins.meanTokenLen(col("text")), 4),
       round(Text.stopwordRatio(col("text"), Corpus.Stopwords), 4),
-      round(Text.punctRatio(col("text")), 4)).collect()
+      round(KernelTwins.punctRatio(col("text")), 4)).collect()
     fast.zip(ref).foreach { case (f, r) =>
       (0 until r.length).foreach { i =>
         assert(f.get(i) === r.get(i), s"id=${r.getLong(0)} field $i")

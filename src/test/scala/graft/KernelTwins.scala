@@ -104,6 +104,50 @@ object KernelTwins {
       .otherwise(lit(0.0))
   }
 
+  /** BPE-ish subword-count proxy: words + extra units for long words and
+    * digit/punctuation boundaries — a deterministic stand-in for a real
+    * tokenizer's token count (the project takes no tokenizer library). The
+    * reference for the token-stats kernel's bpe count.
+    */
+  def bpeTokenCount(text: Column): Column = {
+    val words = Text.tokenCount(text)
+    val chars = length(regexp_replace(text, "\\s+", ""))
+    // every word costs >=1 unit; characters beyond 6 per word add ~1 unit/4
+    // chars. floor() is explicit so integer-division semantics can't differ
+    // between engines.
+    val extra = greatest(lit(0.0), floor((chars - words * lit(6)) / lit(4.0)))
+    (words + extra).cast("long")
+  }
+
+  /** Punctuation character ratio — the reference for the token-stats
+    * kernel's punctuation count.
+    */
+  def punctRatio(text: Column): Column =
+    when(length(text) > 0,
+      length(regexp_replace(text, "[a-zA-Z0-9\\s]", "")).cast("double") / length(text))
+      .otherwise(lit(0.0))
+
+  /** Per-language marker counts over `Text.langMarkers`, in language order. */
+  def langScores(text: Column): Seq[(String, Column)] = {
+    val toks = tokens(lower(text))
+    Text.langMarkers.toSeq.sortBy(_._1).map { case (lang, markers) =>
+      lang -> size(filter(toks, t => t.isin(markers.map(lit(_).cast("string")): _*)))
+    }
+  }
+
+  /** Predicted language: argmax marker count, 'und' if all zero.
+    * Ties break alphabetically (deterministic). The reference for
+    * [[graft.functions.Text.langIdFast]].
+    */
+  def langId(text: Column): Column = {
+    val scores = langScores(text)
+    val best = scores.tail.foldLeft(struct(scores.head._2.as("s"), lit(scores.head._1).as("l"))) {
+      case (acc, (lang, sc)) =>
+        when(sc > acc.getField("s"), struct(sc.as("s"), lit(lang).as("l"))).otherwise(acc)
+    }
+    when(best.getField("s") > 0, best.getField("l")).otherwise(lit("und"))
+  }
+
   /** Dot product of two array columns in double precision, accumulated
     * left to right.
     */

@@ -19,7 +19,6 @@ import graft.operators.{Caches, Stats, Terms}
   */
 class OrderInsensitivitySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   /** Collect `df` fully sorted and return (stringified longs/strings, raw
     * bits of every double column) — the bit-exact canonical form.

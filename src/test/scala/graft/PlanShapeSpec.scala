@@ -136,6 +136,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("Window") || plan.contains("RunningWindowFunction"),
       s"expected window exec:\n$plan")
     assert(sorts <= 1, s"as-of re-sorts (sorts=$sorts):\n$plan")
+    assert(exchanges == 1, s"expected the one shuffle (exchanges=$exchanges):\n$plan")
   }
 
   test("flagship pipeline: all temporal features share one shuffle+sort") {

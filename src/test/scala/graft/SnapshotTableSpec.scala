@@ -585,7 +585,6 @@ class SnapshotTableSpec extends AnyFunSuite {
   }
 
   test("concurrent appends: every commit survives, one claim per snapshot id") {
-    import spark.implicits._
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     val root = tmpRoot("conc")
