@@ -238,7 +238,9 @@ object FeaturePipeline {
         "__lqsum", "__lfilled", "__prev_phash")
 
   /** Compute the feature vector table from an event-shaped corpus: the
-    * local windows over each entity's timeline, from the empty carry.
+    * local windows over each entity's timeline, from the empty carry. The
+    * rows whose entity is null form one timeline of their own (the window's
+    * null partition, as DuckDB's `PARTITION BY` groups nulls).
     *
     * @param events  columns: image_id, caption, phash, entity_id, event_ms, seq
     * @param dim     dimension feature table (topic, token, rank, n, n_pos, score)
@@ -255,8 +257,10 @@ object FeaturePipeline {
       n = lit(0L))
   }
 
-  /** Skew-safe variant of [[features]]: identical output (equivalence
-    * asserted in GoldenFeatureSpec), but every per-entity window runs over
+  /** Skew-safe variant of [[features]]: identical output, the null-entity
+    * timeline included (equivalence asserted in GoldenFeatureSpec; those
+    * rows all take time bucket 0, so they are one partition and need no
+    * carry), but every per-entity window runs over
     * (entity, time-bucket) partitions so a Zipf-hot entity's timeline spreads
     * across `timeBuckets` tasks — the parallel prefix-scan formulation of the
     * running features:
@@ -279,9 +283,11 @@ object FeaturePipeline {
       bounds: Option[(Long, Long)] = None): DataFrame = {
     // bounds from the raw input, never the scalar features (UDF block twice)
     val bucketOf = Windows.timeBuckets(events.select(col("event_ms")), bounds, timeBuckets)
-    // drop the payload columns BEFORE phase 1: no later phase reads them
+    // drop the payload columns BEFORE phase 1: no later phase reads them;
+    // a null entity's rows all take bucket 0 (one timeline, no carry)
     val withBkt = scalarFeatures(events, dim, entDim).drop(Payload: _*)
-      .withColumn("__bkt", bucketOf(col("event_ms")))
+      .withColumn("__bkt",
+        when(col("entity_id").isNotNull, bucketOf(col("event_ms"))).otherwise(lit(0)))
 
     // --- phase 1: local windows over (entity, bucket) -----------------------
     val w1 = Window.partitionBy(col("entity_id"), col("__bkt"))
@@ -344,12 +350,14 @@ object FeaturePipeline {
     // the tiny carries side and builds per-partition hash maps — no sort of
     // the fact side, no driver collect. At 10^12 rows the carries table is
     // |entities|·|buckets| rows (can reach 10^8), far beyond broadcast range.
-    val merged = local.join(carries.hint("SHUFFLE_HASH"), Seq("entity_id", "__bkt"))
+    // left: a null entity's rows match no carry row, and the coalesced
+    // defaults are the empty carry; every other row has its carry row
+    val merged = local.join(carries.hint("SHUFFLE_HASH"), Seq("entity_id", "__bkt"), "left")
     repairBoundary(merged, lastMs = col("prev_last_ms"),
-        lastPhash = col("prev_last_phash"), sessCnt = col("carry_sess"),
-        bnew = col("bnew"), openLen = col("prev_open"),
-        lastSparse = col("carry_sparse"), qsum = col("carry_qsum"),
-        n = col("carry_cnt"))
+        lastPhash = col("prev_last_phash"), sessCnt = coalesce(col("carry_sess"), lit(0L)),
+        bnew = coalesce(col("bnew"), lit(1L)), openLen = col("prev_open"),
+        lastSparse = col("carry_sparse"), qsum = coalesce(col("carry_qsum"), lit(0.0)),
+        n = coalesce(col("carry_cnt"), lit(0L)))
       .drop("__bkt", "prev_last_ms", "prev_last_phash", "bnew", "carry_cnt",
         "carry_qsum", "carry_sess", "carry_sparse", "prev_open")
   }
@@ -357,9 +365,11 @@ object FeaturePipeline {
   /** Compact per-entity resume state extracted from a feature table — the
     * carry needed to continue every temporal feature from the table's end:
     * row/quality prefix sums, last event (ms, seq, phash), total session
-    * count, open-session length, latest sparse value. |entities| rows; this
-    * is what a 100 TB pipeline persists per snapshot so appends never touch
-    * the historical feature table again.
+    * count, open-session length, latest sparse value. |entities| rows. A
+    * pipeline that kept it per snapshot would never read the historical
+    * feature table on append, but nothing in the engine persists it: it is
+    * rebuilt here from the whole table each time (the ingest benchmark does
+    * so every batch).
     */
   def featureState(feats: DataFrame): DataFrame =
     feats.groupBy(col("entity_id")).agg(
@@ -384,19 +394,24 @@ object FeaturePipeline {
     * asserted in GoldenFeatureSpec; DuckDB-oracle'd via the full-recompute
     * SQL filtered to the slice).
     *
-    * Scale shape: the historical feature table is never read — the carry is
-    * the |entities|-row state table, broadcast into one projection after the
-    * slice's own windows ([[repairBoundary]], shared with
-    * [[featuresSkewSafe]]'s bucket merge). Precondition: every new event is
-    * strictly later than its entity's `st_last_ms` (append-only ingest, the
-    * snapshot watermark contract).
+    * Scale shape: this function never reads the historical feature table —
+    * the carry is the |entities|-row state table, broadcast into one
+    * projection after the slice's own windows ([[repairBoundary]], shared
+    * with [[featuresSkewSafe]]'s bucket merge). The state itself comes from
+    * [[featureState]] over that table, which nothing persists between calls.
+    * Precondition: every new event is strictly later than its entity's
+    * `st_last_ms` (append-only ingest, the snapshot watermark contract). The
+    * state joins on a null-safe key, so new null-entity rows continue the
+    * one null-entity timeline as [[features]] over old ∪ new does.
     */
   def featuresIncremental(state: DataFrame, newEvents: DataFrame,
       dim: DataFrame, entDim: DataFrame,
       gapMs: Long = Corpus.SessionGapMs): DataFrame = {
     val local = localWindows(scalarFeatures(newEvents, dim, entDim).drop(Payload: _*),
       entityWindow, gapMs)
-    val joined = local.join(broadcast(state), Seq("entity_id"), "left")
+    // null-safe: the null entity's state row carries its timeline too
+    val joined = local.join(broadcast(state.withColumnRenamed("entity_id", "st_entity_id")),
+        col("entity_id") <=> col("st_entity_id"), "left")
       // bnew is a per-entity property of the BOUNDARY (gap between the
       // slice's first row and the carried last event), constant across rows
       .withColumn("__first_ms",
@@ -410,7 +425,7 @@ object FeaturePipeline {
         openLen = col("st_open_len"), lastSparse = col("st_last_sparse"),
         qsum = coalesce(col("st_qsum"), lit(0.0)),
         n = coalesce(col("st_n"), lit(0L)))
-      .drop("__bnew", "__first_ms", "st_n", "st_qsum", "st_last_ms",
+      .drop("st_entity_id", "__bnew", "__first_ms", "st_n", "st_qsum", "st_last_ms",
         "st_last_phash", "st_sess_cnt", "st_open_len", "st_last_sparse")
   }
 

@@ -46,7 +46,10 @@ object AsOf {
     * (`attach`, or by default every event column but the key and the time).
     * An event whose time is null is dropped: it is at no point in time, so
     * it attaches to no probe, and a null-time probe, which sorts first,
-    * matches nothing (DuckDB's `ASOF LEFT JOIN` semantics).
+    * matches nothing (DuckDB's `ASOF LEFT JOIN` semantics). So is an event
+    * whose entity is null: `ON p.entity = e.entity` holds for no null, so a
+    * null-entity probe matches nothing either, though the window groups the
+    * nulls of its partition keys together.
     */
   private def tagEvents(events: DataFrame, keys: Seq[Column], entity: String,
       eventTime: String, timeType: DataType, attach: Seq[String],
@@ -54,10 +57,11 @@ object AsOf {
     val attachCols =
       if (attach.nonEmpty) attach
       else events.columns.filter(c => c != entity && c != eventTime).toSeq
-    events.where(col(eventTime).isNotNull).select((keys ++ Seq(col(eventTime).cast(timeType).as("__t"), lit(0).as("__side"),
-      tie.map(col).getOrElse(lit(0L)).cast("long").as("__tie"),
-      struct((col(eventTime).as("asof_time") +:
-        attachCols.map(c => col(c).as("asof_" + c))): _*).as("__ev"))): _*)
+    events.where(col(eventTime).isNotNull && col(entity).isNotNull)
+      .select((keys ++ Seq(col(eventTime).cast(timeType).as("__t"), lit(0).as("__side"),
+        tie.map(col).getOrElse(lit(0L)).cast("long").as("__tie"),
+        struct((col(eventTime).as("asof_time") +:
+          attachCols.map(c => col(c).as("asof_" + c))): _*).as("__ev"))): _*)
   }
 
   /** The one union-tag window of both forms: the [[tagEvents]] and the
@@ -102,7 +106,7 @@ object AsOf {
     *  4. result = within-bucket match, else the carried prefix match.
     *
     * Semantically identical to [[join]], schema included (asserted in
-    * AsOfSkewSpec).
+    * AsOfSkewSpec): a null time or a null entity matches nothing in both.
     */
   def joinSkewSafe(
       probes: DataFrame,

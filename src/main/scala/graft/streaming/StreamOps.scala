@@ -37,9 +37,11 @@ object StreamOps {
     * emit the latest event of that entity with event_time <= t (ties: max
     * seq), or nulls if none — zero temporal leakage by construction, since a
     * probe is only resolved once the event-time watermark has passed it (no
-    * admissible event <= t can still arrive). A null time matches nothing,
-    * as in DuckDB's `ASOF`: null-time events are dropped before the stateful
-    * operator, and a null-time probe bypasses it and is emitted unmatched.
+    * admissible event <= t can still arrive). A null time or a null entity
+    * matches nothing, as in DuckDB's `ASOF`: null-time and null-entity
+    * events are dropped before the stateful operator (so the null key's
+    * group holds probes only), and a null-time probe bypasses it and is
+    * emitted unmatched.
     *
     * Bounded state (the 10^12-rows property): per entity the buffer holds
     * only (a) probes still ahead of the watermark, (b) events ahead of the
@@ -53,7 +55,7 @@ object StreamOps {
       watermark: String): Dataset[AsOfOut] = {
     val s = events.sparkSession
     import s.implicits._
-    val evIn = events.where(col("event_ms").isNotNull)
+    val evIn = events.where(col("event_ms").isNotNull && col("entity_id").isNotNull)
       .withWatermark("event_time", watermark)
       .select(col("entity_id"), col("event_ms").as("t_ms"), col("seq"),
         col("phash"), col("caption"), lit(false).as("is_probe"),

@@ -53,6 +53,8 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   *   root/snapshots/v<id>.json      # manifest (see Snapshot)
   *   root/data/s<id>_<pid>c<n>/pbucket=<k>/ (parquet files)
   * }}}
+  * Every data file is sorted by (entity, time): one writer stages every
+  * verb's slices ([[writeSlices]]).
   */
 object SnapshotTable {
 
@@ -136,10 +138,6 @@ object SnapshotTable {
 
   /** Per-bucket (rows, watermark, digest, tmin) of one staged write. */
   private type Stats = (Long, Long, Long, Long)
-
-  private def sliceOf(stage: Path, files: Map[Int, SortedMap[String, Long]],
-      k: Int, st: Stats): BucketManifest =
-    BucketManifest(k, s"$stage/$BucketCol=$k", st._1, st._2, st._3, st._4, files(k))
 
   /** The data files (name -> length) per `pbucket=<k>` dir of `stage`, from
     * one driver-side listing (`_`/`.` names are not data, as in Spark's). A
@@ -266,20 +264,37 @@ object SnapshotTable {
       .toMap
   }
 
-  /** The slices a write staged under `stage`: their files from one listing
-    * ([[stageFiles]], where a null entity key fails), their stats from ONE
-    * scan of those files through [[readSlices]] with `schema`, so the input
-    * that produced the stage is never evaluated a second time. A stage with
-    * no bucket dir (nothing was written) is deleted.
+  /** The ONE slice writer: every verb stages its slices here, so the slice
+    * layout is decided once. `rows` carries [[BucketCol]]; `filesPerBucket`
+    * first hash-partitions them by bucket (one file per bucket). Each slice
+    * is sorted by (entity, time): the sort leads with the bucket, so the
+    * planned write's own `Sort(pbucket)` is already satisfied and adds no
+    * second sort that would undo it. The files are written under a fresh
+    * stage dir and listed once ([[stageFiles]], where a null entity key
+    * fails). Stats are the caller's `stats` when it has them, else one scan
+    * of the staged files through [[readSlices]], so the input that produced
+    * the stage is never evaluated a second time. A stage with no bucket dir
+    * (nothing was written) is deleted.
     */
-  private def stagedSlices(spark: SparkSession, stage: Path, schema: StructType,
-      timeCol: String): Map[Int, BucketManifest] = {
+  private def writeSlices(root: String, newId: Long, rows: DataFrame, entityCol: String,
+      timeCol: String, filesPerBucket: Option[Int] = None,
+      stats: Option[Map[Int, Stats]] = None): Map[Int, BucketManifest] = {
+    val stage = newStage(root, newId)
+    filesPerBucket.fold(rows)(n => rows.repartition(n, col(BucketCol)))
+      .sortWithinPartitions(col(BucketCol), col(entityCol), col(timeCol))
+      .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
     val files = stageFiles(stage)
+    def slice(k: Int, st: Stats) =
+      BucketManifest(k, s"$stage/$BucketCol=$k", st._1, st._2, st._3, st._4, files(k))
     if (files.isEmpty) { deleteRecursively(stage); Map.empty }
     else {
-      val unscanned = files.keys.toSeq.map(sliceOf(stage, files, _, (0L, 0L, 0L, 0L)))
-      bucketStats(readSlices(spark, unscanned, schema), schema.fieldNames.toSeq, timeCol)
-        .map { case (k, st) => k -> sliceOf(stage, files, k, st) }
+      val st = stats.getOrElse {
+        val schema = StructType(rows.schema.filterNot(_.name == BucketCol))
+        bucketStats(readSlices(rows.sparkSession,
+          files.keys.toSeq.map(slice(_, (0L, 0L, 0L, 0L))), schema),
+          schema.fieldNames.toSeq, timeCol)
+      }
+      files.keys.map(k => k -> slice(k, st(k))).toMap
     }
   }
 
@@ -426,16 +441,13 @@ object SnapshotTable {
         !parentFolded.get(k).contains((rows, wm, dg))
       }.keys.toSeq.sorted
 
-      val stage = newStage(root, newId)
-      if (changed.nonEmpty) {
-        df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*))
-          .sortWithinPartitions(col(entityCol), col(timeCol))
-          .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-      }
-      val files = stageFiles(stage)
-      val newBuckets = man.toSeq.sortBy(_._1).flatMap { case (k, st) =>
-        if (changed.contains(k)) Seq(sliceOf(stage, files, k, st)) else parentSlices(k)
-      }
+      val staged =
+        if (changed.isEmpty) Map.empty[Int, BucketManifest]
+        else writeSlices(root, newId,
+          df.filter(col(BucketCol).isin(changed.map(Integer.valueOf): _*)),
+          entityCol, timeCol, stats = Some(man))
+      val newBuckets =
+        man.keys.toSeq.sorted.flatMap(k => staged.get(k).fold(parentSlices(k))(Seq(_)))
       // a full commit is no streaming micro-batch: it records no replay marker
       publish(root, Snapshot(newId, parent.map(_.id).getOrElse(-1L),
         entityCol, timeCol, buckets, -1L, cols, newBuckets, sortedDdl(df0)))
@@ -478,11 +490,8 @@ object SnapshotTable {
     // manifest's id/parent change when a concurrent writer wins a claim)
     var staged: Option[Seq[BucketManifest]] = None
     def slices(newIdHint: Long): Seq[BucketManifest] = staged.getOrElse {
-      val stage = newStage(root, newIdHint)
-      delta.withColumn(BucketCol, bucketExpr(entityCol, buckets))
-        .sortWithinPartitions(col(entityCol), col(timeCol))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-      val ss = stagedSlices(delta.sparkSession, stage, delta.schema, timeCol)
+      val ss = writeSlices(root, newIdHint,
+        delta.withColumn(BucketCol, bucketExpr(entityCol, buckets)), entityCol, timeCol)
         .values.toSeq.sortBy(_.bucket)
       staged = Some(ss)
       ss
@@ -521,20 +530,17 @@ object SnapshotTable {
   }
 
   /** Rewrite the `touched` buckets of `p` as `content` — ONE consolidated
-    * sorted slice each — and publish the result as `p`'s child, carrying
-    * `p`'s replay marker (`batchId`): a maintenance rewrite must not let a
+    * slice each — and publish the result as `p`'s child, carrying `p`'s
+    * replay marker (`batchId`): a maintenance rewrite must not let a
     * crash-replayed micro-batch re-append. Every other bucket's slices carry
     * over verbatim; a touched bucket left without rows disappears from the
-    * manifest. The new slices' stats come from one scan of the staged
-    * parquet, never of the untouched buckets.
+    * manifest. The new slices' stats are `stats` when given, else one scan
+    * of the staged parquet, never of the untouched buckets.
     */
   private def publishRewrite(root: String, p: Snapshot, touched: Set[Int],
-      content: DataFrame): Option[Long] = {
-    val stage = newStage(root, p.id + 1)
-    content.repartition(math.max(1, touched.size), col(BucketCol))
-      .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-    val staged = stagedSlices(content.sparkSession, stage, p.schema, p.timeCol)
+      content: DataFrame, stats: Option[Map[Int, Stats]] = None): Option[Long] = {
+    val staged = writeSlices(root, p.id + 1, content, p.entityCol, p.timeCol,
+      filesPerBucket = Some(math.max(1, touched.size)), stats = stats)
     val bySlices = p.buckets.groupBy(_.bucket)
     val newBuckets = (bySlices.keySet ++ touched).toSeq.sorted.flatMap { k =>
       if (touched.contains(k)) staged.get(k).toSeq else bySlices(k)
@@ -634,28 +640,19 @@ object SnapshotTable {
       val toCompact = bySlices.filter(_._2.size > maxSlices).keys.toSeq.sorted
       if (toCompact.isEmpty) Some(p.id)
       else {
-        val stage = newStage(root, p.id + 1)
         val folded = p.folded
+        // tmin folds by min — a slice without a claim (MinValue) keeps the
+        // compacted slice claim-free, same conservative semantics
+        val stats = toCompact.map { k =>
+          val (rows, wm, dg) = folded(k)
+          k -> ((rows, wm, dg, bySlices(k).map(_.tmin).min))
+        }.toMap
         // ONE job for all compacted buckets (not a driver loop of per-bucket
-        // jobs): one scan, one shuffle hash-partitioned by bucket, one sorted
-        // file per bucket out of partitionBy
-        readSlices(spark, toCompact.flatMap(k => bySlices(k)), p.schema)
-          .repartition(toCompact.size, col(BucketCol))
-          .sortWithinPartitions(col(BucketCol), col(p.entityCol), col(p.timeCol))
-          .write.partitionBy(BucketCol).mode("overwrite").parquet(stage.toString)
-        val files = stageFiles(stage)
-        val newBuckets = bySlices.toSeq.sortBy(_._1).flatMap { case (k, ss) =>
-          if (toCompact.contains(k)) {
-            val (rows, wm, dg) = folded(k)
-            // tmin folds by min — a slice without a claim (MinValue) keeps
-            // the compacted slice claim-free, same conservative semantics
-            Seq(sliceOf(stage, files, k, (rows, wm, dg, ss.map(_.tmin).min)))
-          } else ss
-        }
-        // batchId carries over: compaction must not defeat the replay-skip
-        // of the delta commit it follows (a crash between them would
-        // otherwise re-append the batch on restart)
-        publish(root, p.copy(id = p.id + 1, parent = p.id, buckets = newBuckets))
+        // jobs): one scan, one shuffle hash-partitioned by bucket, one file
+        // per bucket out of partitionBy; batchId carries over, so compaction
+        // cannot defeat the replay-skip of the delta commit it follows
+        publishRewrite(root, p, toCompact.toSet,
+          readSlices(spark, toCompact.flatMap(bySlices), p.schema), Some(stats))
       }
     }
 

@@ -82,15 +82,18 @@ class AsOfSkewSpec extends AnyFunSuite {
     }
   }
 
-  test("a null time matches nothing: null-time events attach to no probe, in both forms") {
+  test("a null time or a null entity matches nothing, in both forms") {
     val ev = Seq(("a", Option(100L), 0L), ("a", Option.empty[Long], 1L),
-      ("a", Option(300L), 2L), ("b", Option.empty[Long], 3L))
+      ("a", Option(300L), 2L), ("b", Option.empty[Long], 3L), (null, Option(190L), 4L))
       .toDF("entity_id", "event_ms", "seq")
     val pr = Seq(("a", Option(50L)), ("a", Option(200L)), ("a", Option.empty[Long]),
-      ("b", Option(10L)), ("b", Option.empty[Long])).toDF("entity_id", "probe_ms")
-    // DuckDB's ASOF LEFT JOIN: only a@200 finds an event (a@100, seq 0)
+      ("b", Option(10L)), ("b", Option.empty[Long]), (null, Option(200L)))
+      .toDF("entity_id", "probe_ms")
+    // DuckDB's ASOF LEFT JOIN: only a@200 finds an event (a@100, seq 0); the
+    // null-entity probe shares its time bucket with the null-entity event
     val want = Set(("a", Option(50L), None), ("a", Option(200L), Some(0L)),
-      ("a", None, None), ("b", Option(10L), None), ("b", None, None))
+      ("a", None, None), ("b", Option(10L), None), ("b", None, None),
+      (null, Option(200L), None))
     def got(df: DataFrame) = df.select("entity_id", "probe_ms", "asof_seq").collect()
       .map(r => (r.getString(0), Option(r.getAs[Any](1)).map(_.asInstanceOf[Long]),
         Option(r.getAs[Any](2)).map(_.asInstanceOf[Long]))).toSet

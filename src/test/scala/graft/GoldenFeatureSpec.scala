@@ -111,31 +111,39 @@ class GoldenFeatureSpec extends AnyFunSuite {
   }
 
   test("skew-safe features are equivalent to the plain-window features") {
-    val p = Corpus.Params(rows = 3000, entities = 8) // hot entity + many buckets
-    val ev = Corpus.events(spark, p)
-    val dim = Corpus.dimFeatures(spark, p.seed)
-    val ed = FeaturePipeline.entityDim(spark, p.entities)
-    def rows(df: org.apache.spark.sql.DataFrame): Map[(String, Long), org.apache.spark.sql.Row] =
-      df.collect().map(r => (r.getAs[String]("entity_id"), r.getAs[Long]("seq")) -> r).toMap
-    val plain = FeaturePipeline.features(ev, dim, ed)
-    val safe = FeaturePipeline.featuresSkewSafe(ev, dim, ed, timeBuckets = 13)
-    assert(plain.columns.sameElements(safe.columns),
-      s"columns differ: ${plain.columns.mkString(",")} vs ${safe.columns.mkString(",")}")
-    val a = rows(plain)
-    val b = rows(safe)
-    assert(a.keySet == b.keySet)
-    val exactCols = plain.columns.filterNot(c =>
-      c == "running_quality_mean" || c == "event_time").sorted
-    a.keys.foreach { k =>
-      exactCols.foreach { c =>
-        val (x, y) = (a(k).getAs[Any](c), b(k).getAs[Any](c))
-        assert(x == y, s"key=$k col=$c plain=$x skewSafe=$y")
+    val hot = Corpus.Params(rows = 3000, entities = 8) // hot entity + many buckets
+    // every 50th row's entity null: one timeline of its own in both forms
+    val nulls = Corpus.Params(seed = 3, rows = 400, entities = 8)
+    for ((p, nullEvery) <- Seq((hot, 0), (nulls, 50))) {
+      val ev0 = Corpus.events(spark, p)
+      val ev = if (nullEvery == 0) ev0 else ev0.withColumn("entity_id",
+        when(col("seq") % nullEvery =!= 0, col("entity_id")))
+      val dim = Corpus.dimFeatures(spark, p.seed)
+      val ed = FeaturePipeline.entityDim(spark, p.entities)
+      def rows(df: org.apache.spark.sql.DataFrame): Map[(String, Long), org.apache.spark.sql.Row] =
+        df.collect().map(r => (r.getAs[String]("entity_id"), r.getAs[Long]("seq")) -> r).toMap
+      val plain = FeaturePipeline.features(ev, dim, ed)
+      val safe = FeaturePipeline.featuresSkewSafe(ev, dim, ed, timeBuckets = 13)
+      assert(plain.columns.sameElements(safe.columns),
+        s"columns differ: ${plain.columns.mkString(",")} vs ${safe.columns.mkString(",")}")
+      val a = rows(plain)
+      val b = rows(safe)
+      assert(a.size == p.rows && a.keySet == b.keySet, s"${p.rows} rows: ${a.size} vs ${b.size}")
+      if (nullEvery > 0)
+        assert(a.keys.count(_._1 == null) == p.rows / nullEvery, "null-entity rows")
+      val exactCols = plain.columns.filterNot(c =>
+        c == "running_quality_mean" || c == "event_time").sorted
+      a.keys.foreach { k =>
+        exactCols.foreach { c =>
+          val (x, y) = (a(k).getAs[Any](c), b(k).getAs[Any](c))
+          assert(x == y, s"key=$k col=$c plain=$x skewSafe=$y")
+        }
+        // float summation order differs across bucket boundaries; values are
+        // rounded to 6dp, so a boundary case may flip by one grid step
+        val (qx, qy) = (a(k).getAs[Double]("running_quality_mean"),
+          b(k).getAs[Double]("running_quality_mean"))
+        assert(math.abs(qx - qy) <= 1.5e-6, s"key=$k running_quality_mean $qx vs $qy")
       }
-      // float summation order differs across bucket boundaries; values are
-      // rounded to 6dp, so a boundary case may flip by one grid step
-      val (qx, qy) = (a(k).getAs[Double]("running_quality_mean"),
-        b(k).getAs[Double]("running_quality_mean"))
-      assert(math.abs(qx - qy) <= 1.5e-6, s"key=$k running_quality_mean $qx vs $qy")
     }
   }
 
@@ -182,41 +190,49 @@ class GoldenFeatureSpec extends AnyFunSuite {
 
   test("incremental features from state equal the full recompute on the new slice") {
     import org.apache.spark.sql.functions._
-    val p = Corpus.Params(rows = 2400, entities = 10)
-    val ev = Corpus.events(spark, p)
-    val dim = Corpus.dimFeatures(spark, p.seed)
-    val ed = FeaturePipeline.entityDim(spark, p.entities)
-    val split = 1500L // append-only in seq AND per-entity time (events are
-                      // time-ordered by seq in the generator's global grid)
-    val full = FeaturePipeline.features(ev, dim, ed)
-    val state = FeaturePipeline.featureState(full.where(col("seq") < split))
-    val inc = FeaturePipeline.featuresIncremental(state,
-      ev.where(col("seq") >= split), dim, ed)
-    val want = full.where(col("seq") >= split)
-    assert(inc.columns.sameElements(want.columns),
-      s"columns differ: ${inc.columns.mkString(",")} vs ${want.columns.mkString(",")}")
-    def rows(df: org.apache.spark.sql.DataFrame): Map[(String, Long), org.apache.spark.sql.Row] =
-      df.collect().map(r => (r.getAs[String]("entity_id"), r.getAs[Long]("seq")) -> r).toMap
-    val a = rows(want)
-    val b = rows(inc)
-    assert(a.keySet == b.keySet)
-    val exactCols = want.columns.filterNot(_ == "running_quality_mean").sorted
-    a.keys.foreach { k =>
-      exactCols.foreach { c =>
-        val (x, y) = (a(k).getAs[Any](c), b(k).getAs[Any](c))
-        assert(x == y, s"key=$k col=$c full=$x incremental=$y")
+    // split: append-only in seq AND per-entity time (events are time-ordered
+    // by seq in the generator's global grid)
+    val base = Corpus.Params(rows = 2400, entities = 10)
+    // every 50th row's entity null: the null timeline continues across the split
+    val nulls = Corpus.Params(seed = 3, rows = 400, entities = 8)
+    for ((p, split, nullEvery) <- Seq((base, 1500L, 0), (nulls, 200L, 50))) {
+      val ev0 = Corpus.events(spark, p)
+      val ev = if (nullEvery == 0) ev0 else ev0.withColumn("entity_id",
+        when(col("seq") % nullEvery =!= 0, col("entity_id")))
+      val dim = Corpus.dimFeatures(spark, p.seed)
+      val ed = FeaturePipeline.entityDim(spark, p.entities)
+      val full = FeaturePipeline.features(ev, dim, ed)
+      val state = FeaturePipeline.featureState(full.where(col("seq") < split))
+      val inc = FeaturePipeline.featuresIncremental(state,
+        ev.where(col("seq") >= split), dim, ed)
+      val want = full.where(col("seq") >= split)
+      assert(inc.columns.sameElements(want.columns),
+        s"columns differ: ${inc.columns.mkString(",")} vs ${want.columns.mkString(",")}")
+      def rows(df: org.apache.spark.sql.DataFrame): Map[(String, Long), org.apache.spark.sql.Row] =
+        df.collect().map(r => (r.getAs[String]("entity_id"), r.getAs[Long]("seq")) -> r).toMap
+      val a = rows(want)
+      val b = rows(inc)
+      assert(a.keySet == b.keySet)
+      if (nullEvery > 0)
+        assert(a.keys.count(_._1 == null) == (p.rows - split) / nullEvery, "null-entity rows")
+      val exactCols = want.columns.filterNot(_ == "running_quality_mean").sorted
+      a.keys.foreach { k =>
+        exactCols.foreach { c =>
+          val (x, y) = (a(k).getAs[Any](c), b(k).getAs[Any](c))
+          assert(x == y, s"key=$k col=$c full=$x incremental=$y")
+        }
+        val (qx, qy) = (a(k).getAs[Double]("running_quality_mean"),
+          b(k).getAs[Double]("running_quality_mean"))
+        assert(math.abs(qx - qy) <= 1.5e-6, s"key=$k running_quality_mean $qx vs $qy")
       }
-      val (qx, qy) = (a(k).getAs[Double]("running_quality_mean"),
-        b(k).getAs[Double]("running_quality_mean"))
-      assert(math.abs(qx - qy) <= 1.5e-6, s"key=$k running_quality_mean $qx vs $qy")
+      // entities absent from the state (all-new) still work: nothing carried
+      val incFresh = FeaturePipeline.featuresIncremental(
+        state.where(col("entity_id") =!= "e00000"),
+        ev.where(col("seq") >= split), dim, ed)
+      val freshE0 = incFresh.where(col("entity_id") === "e00000")
+        .agg(min(col("session_idx")), min(col("session_pos"))).head
+      assert(freshE0.getLong(0) == 0L && freshE0.getInt(1) == 0)
     }
-    // entities absent from the state (all-new) still work: nothing carried
-    val incFresh = FeaturePipeline.featuresIncremental(
-      state.where(col("entity_id") =!= "e00000"),
-      ev.where(col("seq") >= split), dim, ed)
-    val freshE0 = incFresh.where(col("entity_id") === "e00000")
-      .agg(min(col("session_idx")), min(col("session_pos"))).head
-    assert(freshE0.getLong(0) == 0L && freshE0.getInt(1) == 0)
   }
 
   test("captions are byte-equal end to end (input_hint invariant)") {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.RDDScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
 import graft.operators.{AsOf, Caches}
@@ -150,6 +150,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(sorts <= 1, s"feature windows do not share a single sort (sorts=$sorts):\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
       s"entity dim join is not broadcast:\n$plan")
+  }
+
+  test("flagship: skew-safe features then as-of run a pinned set of shuffles") {
+    val f = graft.features.FeaturePipeline.flagship(spark,
+      Corpus.Params(rows = 2000, entities = 10))
+    f.collect()
+    val plan = f.queryExecution.executedPlan
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+    // phase 1's (entity, bucket) window, once per consumer; the summary's
+    // prefix scan by entity; the carries into the merge (the fact side keeps
+    // phase 1's partitioning); the as-of window by entity
+    assert(shuffles.size == 5, s"${shuffles.size} shuffles:\n${executed(f)}")
   }
 
   test("IVF: corpus never window-sorted before the cell join; one final rank only") {

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.Corpus
 import graft.tables.SnapshotTable
@@ -969,5 +973,66 @@ class SnapshotTableSpec extends AnyFunSuite {
     }
     assert(all.filter(col(SnapshotTable.BucketCol) =!= 0).count() ==
       hashed.filter(col("k") =!= 0).count())
+  }
+
+  /** Each data file the head's manifest records, as its rows' (entity,
+    * time) pairs in file order (a small file is one split, read in order). */
+  private def fileRows(root: String): Seq[(String, Seq[(String, Long)])] =
+    SnapshotTable.currentSnapshot(root).get.buckets.flatMap(s => s.files.keys.map { n =>
+      val f = Paths.get(s.dir, n).toString
+      f -> spark.read.parquet(f).select("entity_id", "event_ms").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    })
+
+  test("every verb writes each data file sorted by (entity, time)") {
+    import spark.implicits._
+    val root = tmpRoot("sorted")
+    // time runs opposite to row order: a file written in row order is unsorted
+    val df = (0L until 600L).map(i => (s"e${i % 9}", 10000L - i, s"v$i"))
+      .toDF("entity_id", "event_ms", "v")
+    def check(after: String): Unit = {
+      val files = fileRows(root)
+      assert(files.exists(_._2.size > 10), s"after $after: no file holds rows to order")
+      files.foreach { case (f, rows) =>
+        assert(rows == rows.sorted, s"after $after: $f holds ${rows.take(4)}...")
+      }
+    }
+    SnapshotTable.commit(df.filter(col("event_ms") > 9700L), root,
+      "entity_id", "event_ms", buckets = 4)
+    check("commit")
+    SnapshotTable.commitDelta(df.filter(col("event_ms") <= 9700L), root,
+      "entity_id", "event_ms", buckets = 4)
+    check("commitDelta")
+    SnapshotTable.commitUpsert(Seq(("e1", 9999L, "X"), ("e1", 1L, "Y"), ("new", 5L, "N"))
+      .toDF("entity_id", "event_ms", "v"), root, "entity_id", "event_ms", buckets = 4)
+    check("commitUpsert")
+    SnapshotTable.commitDelete[String](spark, root, Seq("e2"))
+    check("commitDelete")
+    SnapshotTable.compact(spark, root, maxSlices = 1)
+    check("compact")
+    // e1@9999 is replaced, e1@1 and new@5 come, e2's 67 rows go
+    assert(SnapshotTable.read(spark, root).count() == 600 + 2 - 67)
+  }
+
+  test("a commitDelta write runs one sort: the planned write adds none") {
+    import spark.implicits._
+    val root = tmpRoot("onesort")
+    val df = (0L until 200L).map(i => (s"e${i % 7}", 1000L - i)).toDF("entity_id", "event_ms")
+    SnapshotTable.commit(df.filter(col("event_ms") > 900L), root, "entity_id", "event_ms",
+      buckets = 4)
+    val writes = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.isInstanceOf[DataWritingCommandExec]) writes.put(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try SnapshotTable.commitDelta(df.filter(col("event_ms") <= 900L), root,
+      "entity_id", "event_ms", buckets = 4)
+    finally spark.listenerManager.unregister(listener)
+    val plan = writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    assert(plan != null, "the staging write never reached the listener")
+    val sorts = new AdaptiveSparkPlanHelper {}.collect(plan) { case s: SortExec => s }
+    assert(sorts.size == 1, s"${sorts.size} sorts:\n$plan")
   }
 }

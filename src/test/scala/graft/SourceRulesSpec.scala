@@ -26,6 +26,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * footer read per file at planning. Every table read plans through the
   * manifest's file index, so no `spark.read` appears under `graft/tables`:
   * one there lists the slice dirs again, in a job of its own past 32 dirs.
+  * Every slice is staged by one writer, so a DataFrame is written in one
+  * place under `graft/tables`: a second writer can lose the (entity, time)
+  * order each slice promises, as a sort the planned write overrides did.
   * An operator materializes an
   * intermediate one way, `graft.operators.Caches.cache` (over
   * `GraftBridge.materialize`): a `persist`, `cache()` or checkpoint
@@ -116,6 +119,12 @@ class SourceRulesSpec extends AnyFunSuite {
     val found = hits("""spark\.read|\.read\.""".r).filter(_.startsWith(s"$home/"))
     assert(found.isEmpty, found.mkString("\n"))
     assert(Files.isDirectory(Paths.get(home)))
+  }
+
+  test("table slices have one writer: one .write. in graft/tables") {
+    val home = "src/main/scala/graft/tables"
+    val found = hits("""\.write\.""".r).filter(_.startsWith(s"$home/"))
+    assert(found.size == 1, found.mkString("\n"))
   }
 
   test("materializations go through Caches: no persist, cache or checkpoint elsewhere") {

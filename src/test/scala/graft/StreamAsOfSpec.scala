@@ -30,13 +30,17 @@ class StreamAsOfSpec extends AnyFunSuite {
     val corpusEv = Corpus.events(spark, p)
       .select(col("entity_id"), col("event_ms"), col("seq"), col("phash"),
         col("caption"), col("event_time"))
-    // plus one null-time event and one null-time probe: a null time matches
-    // nothing (the probe is emitted unmatched), as in the batch join
-    val e0 = corpusEv.head().getString(0)
-    val ev = corpusEv.unionByName(Seq((e0, Option.empty[Long], -1L, 0L, "no time"))
+    // plus a null-time and a null-entity event and probe: a null time or a
+    // null entity matches nothing (the probe is emitted unmatched), as in
+    // the batch join and DuckDB's ASOF LEFT JOIN on entity equality
+    val first = corpusEv.head()
+    val (e0, t0) = (first.getString(0), first.getLong(1))
+    val ev = corpusEv.unionByName(Seq((e0, Option.empty[Long], -1L, 0L, "no time"),
+        (null, Option(t0), -2L, 0L, "no entity"))
       .toDF("entity_id", "event_ms", "seq", "phash", "caption")
       .withColumn("event_time", timestamp_millis(col("event_ms"))))
-    val pr = Corpus.probes(spark, p).unionByName(Seq((e0, Option.empty[Long]))
+    val pr = Corpus.probes(spark, p).unionByName(Seq((e0, Option.empty[Long]),
+        (null, Option(t0)))
       .toDF("entity_id", "probe_ms")
       .withColumn("probe_time", timestamp_millis(col("probe_ms"))))
 
@@ -76,7 +80,7 @@ class StreamAsOfSpec extends AnyFunSuite {
       StreamOps.asofAttach(evStream, prStream, watermark = "0 seconds").toDF(),
       "asof_out")
     val streamed = spark.table("asof_out")
-      .where(col("entity_id") =!= "zz_sentinel")
+      .where(col("entity_id").isNull || col("entity_id") =!= "zz_sentinel")
       .collect()
       .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
         Option(r.get(2)).map(_.asInstanceOf[Long]),
@@ -87,6 +91,7 @@ class StreamAsOfSpec extends AnyFunSuite {
 
     assert(streamed.nonEmpty, "streaming as-of emitted nothing")
     assert(batch.contains((e0, None, None, None, None, None)))
+    assert(batch.contains((null, Some(t0), None, None, None, None)))
     assert(streamed == batch,
       s"stream-only=${(streamed -- batch).take(3)} batch-only=${(batch -- streamed).take(3)}")
   }
@@ -142,7 +147,7 @@ class StreamAsOfSpec extends AnyFunSuite {
     runOnce()
 
     val streamed = spark.read.parquet(outDir)
-      .where(col("entity_id") =!= "zz_sentinel")
+      .where(col("entity_id").isNull || col("entity_id") =!= "zz_sentinel")
       .select(col("entity_id"), col("probe_ms"), col("asof_time"), col("asof_seq"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1),
@@ -188,7 +193,7 @@ class StreamAsOfSpec extends AnyFunSuite {
         watermark = "0 seconds").toDF(),
       "asof_out2")
     val got = spark.table("asof_out2")
-      .where(col("entity_id") =!= "zz_sentinel")
+      .where(col("entity_id").isNull || col("entity_id") =!= "zz_sentinel")
       .select(col("entity_id"), col("asof_time"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val want = ev.groupBy("entity_id").agg(max(col("event_ms")).as("t"))
